@@ -117,6 +117,7 @@ object Bench {
         graft.testgen.CorpusGen.gazetteer).finalPatterns
       s.stop()
       val p = java.nio.file.Files.createTempFile("graft_bench_patterns", ".bin")
+      p.toFile.deleteOnExit() // the children read it; nothing reads it after this JVM
       val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(p))
       try out.writeObject(pats) finally out.close()
       p.toString
@@ -273,10 +274,10 @@ object Bench {
     val total = results.map(_._2).sum + tN + t4N + rFull.sec
     val kg = f"""{"pages":$kgPages,"triples":${r4N.triples},""" +
       f""""levels":[$lowCores,$highCores,32],""" +
-      f""""sec_c$lowCores":$tN%.2f,"sec_c$highCores":$t4N%.2f,"sec_c32":${rFull.sec}%.2f,""" +
+      f""""sec_c$lowCores":$tN%.2f,"sec_c$highCores":$t4N%.2f,"sec_full_c32":${rFull.sec}%.2f,""" +
       f""""docs_per_sec_c$lowCores":${kgPages / tN}%.1f,"docs_per_sec_c$highCores":${kgPages / t4N}%.1f,""" +
-      f""""docs_per_sec_c32":${kgPages / rFull.sec}%.1f,""" +
-      f""""triples_per_sec_c32":${rFull.triples / rFull.sec}%.1f,""" +
+      f""""docs_per_sec_full_c32":${kgPages / rFull.sec}%.1f,""" +
+      f""""triples_per_sec_full_c32":${rFull.triples / rFull.sec}%.1f,""" +
       f""""scaling_efficiency":$eff%.3f,"eff_pairs":$effPairs,""" +
       f""""host_ceilings":$ceilings,"cpu_ceilings":$cpuCeils,""" +
       f""""membw_ceilings":$bwCeils,"eff_normalized_pairs":$norms,""" +

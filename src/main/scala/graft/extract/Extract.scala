@@ -18,6 +18,11 @@ import graft.model.{Mention, Pattern, SentenceAnnots, Triple}
  * back to the page host. Adjacent extracted spans that touch (end == next begin or +1)
  * merge into one larger entity (ref AutoAnnotate.java:929-1034) — the classic
  * sessionization window idiom, W4.
+ *
+ * These are the Dataset forms of the per-page steps in [[PageKernel]], for inputs
+ * that are stored tables (training sentences, oracle queries); the matcher passes,
+ * the prior veto, the dictionary pass and subject resolution call the kernel's
+ * per-sentence helpers. `KGPipeline`'s corpus pass runs the kernel itself.
  */
 object Extract {
 
@@ -27,12 +32,9 @@ object Extract {
       implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(finalPatterns))
-    sentences.mapPartitions { it =>
-      val index = idxB.value
-      it.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        if (PatternMatcher.isAllCapsSentence(grid)) Iterator.empty
-        else PatternMatcher.matchAllCascaded(grid, index, prm).iterator.map { h =>
+    sentences.flatMap { s =>
+      PageKernel.matchableGrid(s).toVector.flatMap { grid =>
+        PatternMatcher.matchAllCascaded(grid, idxB.value, prm).map { h =>
           Mention(s.url, h.pattern.annotType, h.targetBegin, h.targetEnd,
             PatternMatcher.trimTrailingPunct(h.value), h.pattern.profileId,
             h.pattern.score)
@@ -44,13 +46,17 @@ object Extract {
   /**
    * W4 adjacent-entity merge (sessionization): mentions of the same type in the same
    * page whose spans touch (gap ≤ 1 char) merge into one mention spanning both
-   * (ref AutoAnnotate.java:929-1034). lag → running group-id sum → group agg.
+   * (ref AutoAnnotate.java:929-1034). Running max end of the preceding rows → running
+   * group-id sum → group agg; the per-page twin is [[PageKernel.mergeAdjacent]]. The
+   * running max (not the previous row's end) keeps a span nested in an earlier one
+   * from splitting the group.
    */
   def mergeAdjacent(ms: Dataset[Mention])(implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
     val w = Window.partitionBy($"url", $"annotType").orderBy($"begin", $"end")
     ms.toDF()
-      .withColumn("prevEnd", lag($"end", 1).over(w))
+      .withColumn("prevEnd", max($"end").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("newGrp",
         when($"prevEnd".isNull || $"begin" > $"prevEnd" + 1, 1).otherwise(0))
       .withColumn("grp", sum($"newGrp").over(
@@ -75,12 +81,9 @@ object Extract {
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(relPatterns))
-    sentences.mapPartitions { it =>
-      val index = idxB.value
-      it.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        if (PatternMatcher.isAllCapsSentence(grid)) Iterator.empty
-        else PatternMatcher.matchAllCascaded(grid, index, prm).iterator
+    sentences.flatMap { s =>
+      PageKernel.matchableGrid(s).toVector.flatMap { grid =>
+        PatternMatcher.matchAllCascaded(grid, idxB.value, prm)
           .filter(_.subjBegin >= 0)
           .map { h =>
             Triple(h.subjValue, h.pattern.annotType,
@@ -106,25 +109,11 @@ object Extract {
       implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(contextPatterns))
-    val tgtB = spark.sparkContext.broadcast(compileTargets(targetPatterns))
+    val tgtB = spark.sparkContext.broadcast(PageKernel.compileTargets(targetPatterns))
     val pairsB = spark.sparkContext.broadcast(allowedPairs)
-    val exclB = spark.sparkContext.broadcast(excludedPairs)
-    sentences.mapPartitions { it =>
-      val index = idxB.value
-      val targets = tgtB.value
-      val pairs = pairsB.value
-      it.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        if (PatternMatcher.isAllCapsSentence(grid)) Iterator.empty
-        else PatternMatcher.matchPairsCascaded(grid, index, targets, prm,
-          allowedPairs = Some(pairs.keySet), excludedPairs = exclB.value).iterator
-          .filter(_.subjBegin < 0)
-          .map { h =>
-            val prec = pairs((h.context.profileId, h.target.profileId))
-            Mention(s.url, h.context.annotType, h.targetBegin, h.targetEnd,
-              PatternMatcher.trimTrailingPunct(h.value), h.context.profileId, prec)
-          }
-      }
+    sentences.flatMap { s =>
+      PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairMentions(s, grid,
+        idxB.value, tgtB.value, pairsB.value, prm, excludedPairs))
     }
   }
 
@@ -138,27 +127,11 @@ object Extract {
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(relPatterns))
-    val tgtB = spark.sparkContext.broadcast(compileTargets(targetPatterns))
+    val tgtB = spark.sparkContext.broadcast(PageKernel.compileTargets(targetPatterns))
     val pairsB = spark.sparkContext.broadcast(allowedPairs)
-    val exclB = spark.sparkContext.broadcast(excludedPairs)
-    sentences.mapPartitions { it =>
-      val index = idxB.value
-      val targets = tgtB.value
-      val pairs = pairsB.value
-      it.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        if (PatternMatcher.isAllCapsSentence(grid)) Iterator.empty
-        else PatternMatcher.matchPairsCascaded(grid, index, targets, prm,
-          allowedPairs = Some(pairs.keySet), excludedPairs = exclB.value).iterator
-          .filter(_.subjBegin >= 0)
-          .map { h =>
-            val prec = pairs((h.context.profileId, h.target.profileId))
-            Triple(h.subjValue, h.context.annotType,
-              PatternMatcher.trimTrailingPunct(h.value),
-              s.url, h.targetBegin, h.targetEnd, h.context.profileId, prec,
-              graft.model.Provenance.Auto)
-          }
-      }
+    sentences.flatMap { s =>
+      PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairRelations(s, grid,
+        idxB.value, tgtB.value, pairsB.value, prm, excludedPairs))
     }
   }
 
@@ -173,7 +146,7 @@ object Extract {
     if (priors.isEmpty) ms
     else {
       val b = spark.sparkContext.broadcast(priors)
-      ms.filter(m => b.value.getOrElse((m.annotType, m.value.toLowerCase), 0L) != -1L)
+      ms.filter(m => !PageKernel.vetoed(b.value)(m))
     }
 
   /**
@@ -187,21 +160,8 @@ object Extract {
       implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
     if (entries.isEmpty) return spark.emptyDataset[Mention]
-    val dict = entries.sortBy(e => (e._1, e._2)).toIndexedSeq
-    val acB = spark.sparkContext.broadcast(
-      graft.nlp.AhoCorasick.build(dict.map(_._2.toLowerCase.split("\\s+").toSeq)))
-    val dictB = spark.sparkContext.broadcast(dict)
-    sentences.flatMap { s =>
-      val toks = s.annots.filter(_.annotType == "Token").sortBy(_.begin).toIndexedSeq
-      val stream = toks.map(_.value.toLowerCase)
-      acB.value.findAll(stream).map { case (b0, e0, dictId) =>
-        val (annotType, _, priorBp) = dictB.value(dictId)
-        val begin = toks(b0).begin
-        val end = toks(e0 - 1).end
-        val value = toks.slice(b0, e0).map(_.value).mkString(" ")
-        Mention(s.url, annotType, begin, end, value, -2L, priorBp / 10000.0)
-      }
-    }
+    val dictB = spark.sparkContext.broadcast(PageKernel.Dictionary(entries))
+    sentences.flatMap(s => dictB.value.mentions(s))
   }
 
   /** Deterministic mention dedup on (url, annotType, begin, end) — required before
@@ -211,7 +171,8 @@ object Extract {
     * independent per-column aggregates: a span matched by both a pattern and the
     * dictionary pass (profileId −2) must keep ONE mention's (score, profileId, value)
     * intact — independent min/max would emit a chimera (e.g. the dictionary's id with
-    * the pattern's precision), misattributing evidence downstream. */
+    * the pattern's precision), misattributing evidence downstream. The per-page twin
+    * is [[PageKernel.dedupMentions]]. */
   def dedupMentions(ms: Dataset[Mention])(implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
     ms.toDF()
@@ -224,14 +185,6 @@ object Extract {
         $"w.profileId".as("profileId"), $"w.score".as("score"))
       .as[Mention]
   }
-
-  /** Compiled target profiles grouped by annotType, longest-first. */
-  private def compileTargets(
-      targetPatterns: Seq[Pattern]): Map[String, IndexedSeq[PatternMatcher.Compiled]] =
-    targetPatterns.groupBy(_.annotType).map { case (t, ps) =>
-      t -> ps.sortBy(p => (-p.toks.size, p.toks.mkString("")))
-        .map(PatternMatcher.compile).toIndexedSeq
-    }
 
   /**
    * Upgrade a learned single-slot pattern to a two-slot relation pattern: the first
@@ -252,7 +205,8 @@ object Extract {
    * subject; otherwise the url host does.
    *
    * Scale shape: one cogroup of mentions and subject spans on url — ONLY the (small)
-   * mention and subject rows shuffle, and the per-page argmin runs in memory. The
+   * mention and subject rows shuffle, and the per-page argmin runs in memory
+   * ([[PageKernel.Subjects]], the kernel's own resolver). The
    * equivalent join+window formulation ([[triplesViaJoin]], parity-tested) shuffles
    * the mentions × subjects PRODUCT into the window — on a mega-page (thousands of
    * entities × mentions) that product is the blow-up this shape avoids; here the
@@ -269,31 +223,11 @@ object Extract {
         .map(a => (s.url, s.sentBegin, s.sentEnd, a.begin, a.end, a.value))
     }
     ms.groupByKey(_.url).cogroup(subjects.groupByKey(_._1)) { (url, mIt, sIt) =>
-      val subs = sIt.toVector
-      val host = {
-        val m = "^[a-z]+://([^/]+)".r.findFirstMatchIn(url)
-        m.map(_.group(1)).getOrElse("")
-      }
-      mIt.map { m =>
-        // candidates in the mention's sentence, excluding the mention's own span;
-        // nearest preceding wins, else first following (penalized), else host —
-        // identical ordering to the window formulation: min (dist, ab)
-        val cands = subs.iterator.filter { case (_, sb, se, ab, ae, _) =>
-          m.begin >= sb && m.begin < se && !(ab == m.begin && ae == m.end)
-        }
-        var bestDist = Long.MaxValue
-        var bestAb = Int.MaxValue
-        var bestVal: String = null
-        cands.foreach { case (_, _, _, ab, ae, v) =>
-          val dist: Long = if (ae <= m.begin) (m.begin - ae).toLong
-                           else 1000000L + (ab - m.begin)
-          if (dist < bestDist || (dist == bestDist && ab < bestAb)) {
-            bestDist = dist; bestAb = ab; bestVal = v
-          }
-        }
-        Triple(if (bestVal != null) bestVal else host, m.annotType, m.value,
-          url, m.begin, m.end, m.profileId, m.score, provenance)
-      }
+      // nearest preceding wins, else first following (penalized), else host —
+      // identical ordering to the window formulation: min (dist, ab)
+      val subs = PageKernel.Subjects.fromRows(url,
+        sIt.map { case (_, sb, se, ab, ae, v) => (sb, se, ab, ae, v) })
+      mIt.map(subs.resolve(_, provenance))
     }
   }
 

@@ -35,18 +35,25 @@ object Sentences {
     val rest = all.filter(_.annotType != "Sentence").sortBy(a => (a.begin, a.end))
     if (sents.isEmpty) return Vector.empty
     // merge sentences whose span is overrun by a multi-token annotation
-    // (ref GenSentences.java:351-366)
+    // (ref GenSentences.java:351-366). `rest` is sorted by begin, so the annotations
+    // beginning in [cb, ce) are one run of it: binary-search its start when a new
+    // sentence opens, then extend it as ce grows (cb is fixed within a merge)
     val merged = Vector.newBuilder[(Int, Int)]
     var cb = sents.head.begin
     var ce = sents.head.end
+    var ri = firstAtOrAfter(rest, cb)
+    var runMaxEnd = ce
     var i = 1
     while (i < sents.length) {
-      val maxAnnotEnd = rest.iterator
-        .filter(a => a.begin >= cb && a.begin < ce).map(_.end).foldLeft(ce)(math.max)
+      while (ri < rest.length && rest(ri).begin < ce) {
+        runMaxEnd = math.max(runMaxEnd, rest(ri).end); ri += 1
+      }
+      val maxAnnotEnd = math.max(runMaxEnd, ce)
       if (maxAnnotEnd > ce && sents(i).begin < maxAnnotEnd) {
         ce = math.max(maxAnnotEnd, sents(i).end)
       } else {
         merged += ((cb, ce)); cb = sents(i).begin; ce = sents(i).end
+        ri = firstAtOrAfter(rest, cb); runMaxEnd = ce
       }
       i += 1
     }
@@ -65,5 +72,16 @@ object Sentences {
       ai = k
     }
     out.result()
+  }
+
+  /** Index of the first annotation of `sorted` (ascending begin) with begin ≥ `b`. */
+  private def firstAtOrAfter(sorted: Vector[Annotation], b: Int): Int = {
+    var lo = 0
+    var hi = sorted.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sorted(mid).begin < b) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 }

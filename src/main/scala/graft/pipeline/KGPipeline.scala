@@ -3,8 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.canon.ConnectedComponents
-import graft.extract.Extract
-import graft.learn.{GenMSA, PatternStats}
+import graft.extract.{Extract, PageKernel}
+import graft.learn.{GenMSA, PatternStats, ValueProbs}
 import graft.link.EntityLink
 import graft.mention.Sentences
 import graft.model.{Annotation, Page, Pattern, SentenceAnnots, Triple}
@@ -16,20 +16,23 @@ import graft.sink.Materialize
  * reference's IEDriver loop (/root/reference/src/msa/IEDriver.java:527-1363), with each
  * stage a declarative Dataset transformation instead of a JDBC status machine:
  *
- *   pages ─ annotate + sentence-group (html→text, tokens, gazetteer Lookups, grid
- *           grouping — ONE fused narrow stage, zero shuffle: a page's annotations are
- *           born co-located, so the url re-shuffle of the annotation set is gone)
- *         ─ learn: blocked all-pairs MSA on the gold slice → patterns (tiny)
- *         ─ stats: match + precision gates → final patterns (broadcast)
- *         ─ extract: mentions on ALL pages (narrow; patterns broadcast)
- *         ─ triples: sentence-local subject resolution (window argmin)
- *         ─ link + CC: blocking-join edges, large-star/small-star canonicalization
- *         ─ materialize: dedup, subject-bucketed partitioned write + checkpoints
+ *   gold slice ─ annotate + sentence-group (one fused narrow stage)
+ *              ─ learn: blocked all-pairs MSA → patterns (tiny)
+ *              ─ stats: match + per-pair precision gates → final patterns
+ *              ─ priors: value priors → veto table + dictionary entries
+ *   all pages  ─ ONE narrow mapPartitions per page: html→text → tokens + gazetteer
+ *                Lookups → sentence grouping → [[graft.extract.PageKernel]] (pair
+ *                matching, prior veto, dictionary pass, same-span dedup, W4 merge,
+ *                sentence-local subject resolution) → raw triples; the model is
+ *                broadcast
+ *              ─ link + CC: blocking-join edges, large-star/small-star canonicalization
+ *              ─ materialize: dedup, subject-bucketed partitioned write + checkpoints
  *
- * Total shuffle budget on the big (all-pages) path: one cogroup of the (small)
- * mention/subject rows for subject resolution, one groupBy for dedup — the
- * learning path only ever touches the validated slice (exactly the reference's design:
- * learning on status-1 docs, extraction on status-0, SURVEY.md §7.4.2).
+ * The corpus pass does not shuffle before link: every extraction step is local to a
+ * page (the reference's per-document AutoAnnotate → PopulateFrame), so no annotation,
+ * sentence or mention row leaves the task that read its page. The learning path only
+ * ever touches the validated slice (exactly the reference's design: learning on
+ * status-1 docs, extraction on status-0, SURVEY.md §7.4.2).
  */
 object KGPipeline {
 
@@ -47,7 +50,7 @@ object KGPipeline {
   def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
       msaCfg: GenMSA.Config = GenMSA.Config(),
       statsCfg: PatternStats.Config = PatternStats.Config(),
-      priorsCfg: graft.learn.ValueProbs.Config = graft.learn.ValueProbs.Config(),
+      priorsCfg: ValueProbs.Config = ValueProbs.Config(),
       // which provenances count as training gold: human-validated plus spans
       // propagated onto near-duplicate docs by propagateGold (ref dupFlag pipeline)
       goldProvenances: Set[String] = Set("gold", "dup-propagated"))(
@@ -94,66 +97,55 @@ object KGPipeline {
       .select($"profileId", $"targetId", $"prec")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     pairStats.unpersist()
-    val keptCtxIds = allowedPairs.keySet.map(_._1)
-    val finalPatterns = ctxPatterns.filter(p => keptCtxIds.contains(p.profileId)).map { p =>
-      val pairPrecs = allowedPairs.collect { case ((c, _), prec) if c == p.profileId => prec }
-      p.copy(score = pairPrecs.max)
-    }
+    val finalPatterns = gated(ctxPatterns, allowedPairs)
 
-    // 5. extract on ALL pages via pair matching. Patterns whose learned context
-    // contains an entity literal before the target upgrade to two-slot relation
-    // patterns — their subject is bound by the match itself (exact Lookup extent); the
+    // 5. extract on ALL pages: one narrow pass, page → raw triples through the page
+    // kernel. Patterns whose learned context contains an entity literal before the
+    // target upgrade to two-slot relation patterns (subject bound by the match); the
     // rest go through mention extraction + sentence-local nearest-entity resolution.
-    // allSents feeds both the matcher and the subject resolution join; rawTriples feeds
-    // both the CC edge derivation and the final canonical output — persist both or
-    // every downstream action recomputes the whole extraction (observed 7× wall-clock
-    // without these. The corpus-wide pass chunks only when a surviving pattern can
-    // actually match syntax labels — learning always chunks (trainSents), extraction
-    // pays the per-page chunk scan only when it buys recall.
+    // Value-probability priors (A6) veto mentions the validated corpus distrusts and
+    // feed the dictionary pass for values it trusts. The corpus pass chunks only when
+    // a surviving pattern can actually match syntax labels — learning always chunks
+    // (trainSents), extraction pays the per-page chunk scan only when it buys recall.
     val needSyntax = (finalPatterns ++ tgtPatterns)
       .exists(_.toks.exists(_.startsWith(":syntaxtreenode")))
-    val allSents = Annotate.annotateSentences(pages, gaz, withChunks = needSyntax)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val upgraded = finalPatterns.map(p => p -> Extract.toRelationPattern(p))
-    val relPatterns = upgraded.collect { case (_, Some(rel)) => rel }
-    val plainPatterns = upgraded.collect { case (p, None) => p }
-    val relTriples = Extract.relationTriplesPaired(allSents, relPatterns, tgtPatterns,
-      allowedPairs, statsCfg.matcher)
-    // value-probability priors (A6): veto mentions the validated corpus distrusts, and
-    // run the dictionary single-entity pass for values it trusts
-    val priorRows = graft.learn.ValueProbs.compute(trainSents, goldAnnots.toDF(), priorsCfg)
-      .collect()
-    val priorVeto = priorRows.map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
-    val dictEntries = priorRows.toSeq
-      .filter(_.getLong(4) >= math.round(priorsCfg.dictThreshold * 10000))
-      .map(r => (r.getString(0), r.getString(1), r.getLong(4)))
-    val patMentions = Extract.applyPriors(
-      Extract.mentionsPaired(allSents, plainPatterns, tgtPatterns, allowedPairs,
-        statsCfg.matcher), priorVeto)
-    val mentions = Extract.mergeAdjacent(Extract.dedupMentions(
-      patMentions.unionByName(Extract.dictionaryMentions(allSents, dictEntries))))
+    val kernelB = spark.sparkContext.broadcast(kernelOf(finalPatterns, tgtPatterns,
+      allowedPairs, trainSents, goldAnnots, statsCfg, priorsCfg))
+    val gazB = spark.sparkContext.broadcast(gaz)
+    val pageTriples = Annotate.extractText(pages).mapPartitions { it =>
+      val (g, kernel) = (gazB.value, kernelB.value)
+      it.flatMap { case (url, text) =>
+        kernel(url, Sentences.group(url, Annotate.annotateOne(url, text, g, needSyntax)))
+      }
+    }
     // validated gold spans ALSO materialize triples (ref PopulateFrame scans
     // validated + auto annotations, /root/reference/src/msa/PopulateFrame.java:144-192);
     // their provenance outranks auto rows at the same site in Materialize's
     // precedence dedup. One small cogroup per provenance class over the train slice.
-    val goldTriples = goldTriplesOf(trainSents, goldAnnots, goldProvenances)
-    val rawTriples = Extract.triples(allSents, mentions).unionByName(relTriples)
-      .unionByName(goldTriples)
+    // rawTriples feeds both the CC edge derivation and the final canonical output —
+    // persist it or every downstream action recomputes the whole extraction.
+    val rawTriples = pageTriples
+      .unionByName(goldTriplesOf(trainSents, goldAnnots, goldProvenances))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // 6. canonicalize subjects: blocking-join edges + connected components
+    Result(patterns, finalPatterns, rawTriples, canonicalOf(rawTriples))
+  }
+
+  /** Canonicalize subjects: blocking-join edges + connected components; a subject in
+    * a component is replaced by the component's representative. */
+  private def canonicalOf(rawTriples: Dataset[Triple])(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
     val forms = rawTriples.select($"subj".as("form"))
     val edges = EntityLink.candidateEdges(forms, minJaccard = 0.6)
       .select($"src", $"dst")
     val comp = ConnectedComponents.runAdaptive(edges)
-    val canonical = rawTriples.toDF()
+    rawTriples.toDF()
       .join(comp, rawTriples("subj") === comp("node"), "left")
       .withColumn("subj2", coalesce(col("component"), col("subj")))
       .select(col("subj2").as("subj"), col("pred"), col("obj"), col("url"),
         col("begin"), col("end"), col("profileId"), col("score"), col("provenance"))
       .as[Triple]
-
-    Result(patterns, finalPatterns, rawTriples, canonical)
   }
 
   /** Triples from the validated gold spans themselves (ref PopulateFrame's
@@ -176,6 +168,35 @@ object KGPipeline {
       }
       .reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[Triple])
+  }
+
+  /** Context patterns that keep at least one gated pair, scored with their best
+    * pair's precision. */
+  private def gated(ctxPatterns: Seq[Pattern],
+      allowedPairs: Map[(Long, Long), Double]): Seq[Pattern] = {
+    val keptCtxIds = allowedPairs.keySet.map(_._1)
+    ctxPatterns.filter(p => keptCtxIds.contains(p.profileId)).map { p =>
+      val pairPrecs = allowedPairs.collect { case ((c, _), prec) if c == p.profileId => prec }
+      p.copy(score = pairPrecs.max)
+    }
+  }
+
+  /** The corpus pass's page kernel: final patterns split into two-slot relation and
+    * plain patterns, the pair gate, and the value priors of the training slice (the
+    * veto table, and the dictionary of values trusted at ≥ dictThreshold). */
+  private def kernelOf(finalPatterns: Seq[Pattern], tgtPatterns: Seq[Pattern],
+      allowedPairs: Map[(Long, Long), Double], trainSents: Dataset[SentenceAnnots],
+      goldAnnots: Dataset[Annotation], statsCfg: PatternStats.Config,
+      priorsCfg: ValueProbs.Config)(implicit spark: SparkSession): PageKernel = {
+    val upgraded = finalPatterns.map(p => p -> Extract.toRelationPattern(p))
+    val priorRows = ValueProbs.compute(trainSents, goldAnnots.toDF(), priorsCfg).collect()
+    val priorVeto = priorRows.map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
+    val dictEntries = priorRows.toSeq
+      .filter(_.getLong(4) >= math.round(priorsCfg.dictThreshold * 10000))
+      .map(r => (r.getString(0), r.getString(1), r.getLong(4)))
+    PageKernel(upgraded.collect { case (_, Some(rel)) => rel },
+      upgraded.collect { case (p, None) => p }, tgtPatterns, allowedPairs, priorVeto,
+      dictEntries, statsCfg.matcher)
   }
 
   /**
@@ -228,7 +249,7 @@ object KGPipeline {
       nBuckets: Int = 16,
       msaCfg: GenMSA.Config = GenMSA.Config(),
       statsCfg: PatternStats.Config = PatternStats.Config(),
-      priorsCfg: graft.learn.ValueProbs.Config = graft.learn.ValueProbs.Config(),
+      priorsCfg: ValueProbs.Config = ValueProbs.Config(),
       goldProvenances: Set[String] = Set("gold", "dup-propagated"),
       // whether the MATERIALIZED corpus sentence table carries chunk labels. It is
       // written before patterns exist (it is the resume anchor), so the caller
@@ -245,11 +266,18 @@ object KGPipeline {
     val allSentsDF = cp.materialize("sentences", fingerprint) {
       Annotate.annotateSentences(pages, gaz, withChunks = chunkCorpus).toDF()
     }
-    val goldByUrl: Map[String, Seq[Annotation]] =
-      goldAnnots.collect().toSeq.groupBy(_.url)
-    val goldUrls = goldAnnots.select($"url").distinct()
-    def trainSents = Annotate.annotateSentences(
-      pages.join(goldUrls, Seq("url"), "left_semi").as[Page], gaz, goldByUrl)
+    // the training slice, annotated at most once and only when a stage computes: a
+    // fully resumed run annotates nothing
+    var trainCache: Option[Dataset[SentenceAnnots]] = None
+    def trainSents: Dataset[SentenceAnnots] = trainCache.getOrElse {
+      val goldByUrl = goldAnnots.collect().toSeq.groupBy(_.url)
+      val goldUrls = goldAnnots.select($"url").distinct()
+      val ts = Annotate.annotateSentences(
+        pages.join(goldUrls, Seq("url"), "left_semi").as[Page], gaz, goldByUrl)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      trainCache = Some(ts)
+      ts
+    }
 
     val learned = cp.materialize("patterns", fingerprint) {
       GenMSA.learn(trainSents, goldProvenances, msaCfg).toDF()
@@ -260,10 +288,9 @@ object KGPipeline {
 
     // per-pair gate table (the reference's `final` read, per-pair + A3 active check)
     val allowedPairs = cp.materialize("pair_stats", fingerprint) {
-      val ts = trainSents.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val matches = PatternStats.applyPatternsPaired(ts, ctxPatterns,
+      val matches = PatternStats.applyPatternsPaired(trainSents, ctxPatterns,
         tgtPatterns, statsCfg)
-      val tokenSpans = ts.flatMap(s =>
+      val tokenSpans = trainSents.flatMap(s =>
           s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
         .toDF("url", "begin", "end")
       val gold = PatternStats.snapGoldToTokens(
@@ -271,53 +298,25 @@ object KGPipeline {
       val pairStats = PatternStats.scorePairs(matches, gold,
         spark.createDataset(learned), statsCfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = PatternStats.keptPairs(pairStats, statsCfg)
+      PatternStats.keptPairs(pairStats, statsCfg)
         .join(PatternStats.activeProfiles(pairStats, statsCfg),
           Seq("profileId"), "left_semi")
         .select($"profileId", $"targetId", $"prec")
-      ts.unpersist()
-      out
     }.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val finalPatterns = gated(ctxPatterns, allowedPairs)
 
-    val keptCtxIds = allowedPairs.keySet.map(_._1)
-    val finalPatterns = ctxPatterns.filter(p => keptCtxIds.contains(p.profileId)).map { p =>
-      val pairPrecs = allowedPairs.collect { case ((c, _), prec) if c == p.profileId => prec }
-      p.copy(score = pairPrecs.max)
-    }
-
+    // the corpus pass of run() over the materialized sentence table: its rows are
+    // regrouped per page, then the same page kernel runs
     val rawTriples = cp.materialize("raw_triples", fingerprint) {
-      val allSents = allSentsDF.as[graft.model.SentenceAnnots]
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val upgraded = finalPatterns.map(p => p -> Extract.toRelationPattern(p))
-      val relPatterns = upgraded.collect { case (_, Some(rel)) => rel }
-      val plainPatterns = upgraded.collect { case (p, None) => p }
-      val relTriples = Extract.relationTriplesPaired(allSents, relPatterns, tgtPatterns,
-        allowedPairs, statsCfg.matcher)
-      val priorRows = graft.learn.ValueProbs.compute(trainSents, goldAnnots.toDF(),
-        priorsCfg).collect()
-      val priorVeto = priorRows.map(r =>
-        ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
-      val dictEntries = priorRows.toSeq
-        .filter(_.getLong(4) >= math.round(priorsCfg.dictThreshold * 10000))
-        .map(r => (r.getString(0), r.getString(1), r.getLong(4)))
-      val patMentions = Extract.applyPriors(
-        Extract.mentionsPaired(allSents, plainPatterns, tgtPatterns, allowedPairs,
-          statsCfg.matcher), priorVeto)
-      val mentions = Extract.mergeAdjacent(Extract.dedupMentions(
-        patMentions.unionByName(Extract.dictionaryMentions(allSents, dictEntries))))
-      Extract.triples(allSents, mentions).unionByName(relTriples)
+      val kernelB = spark.sparkContext.broadcast(kernelOf(finalPatterns, tgtPatterns,
+        allowedPairs, trainSents, goldAnnots, statsCfg, priorsCfg))
+      allSentsDF.as[SentenceAnnots].groupByKey(_.url)
+        .flatMapGroups((url, sents) => kernelB.value(url, sents.toVector))
         .unionByName(goldTriplesOf(trainSents, goldAnnots, goldProvenances)).toDF()
     }.as[Triple]
+    trainCache.foreach(_.unpersist())
 
-    val forms = rawTriples.select($"subj".as("form"))
-    val edges = EntityLink.candidateEdges(forms, minJaccard = 0.6).select($"src", $"dst")
-    val comp = ConnectedComponents.runAdaptive(edges)
-    val canonical = rawTriples.toDF()
-      .join(comp, rawTriples("subj") === comp("node"), "left")
-      .withColumn("subj2", coalesce(col("component"), col("subj")))
-      .select(col("subj2").as("subj"), col("pred"), col("obj"), col("url"),
-        col("begin"), col("end"), col("profileId"), col("score"), col("provenance"))
-      .as[Triple]
+    val canonical = canonicalOf(rawTriples)
     Materialize.writeResumable(canonical, outPath, nBuckets, Some(CanonicalMetric))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.align.Grid
-import graft.extract.PatternMatcher
+import graft.extract.{PageKernel, PatternMatcher}
 import graft.mention.Sentences
 import graft.model.{Mention, Page, Pattern, Triple}
 import graft.nlp.{Annotate, Gazetteer}
@@ -65,10 +64,7 @@ object StreamExtract {
     // the per-column label streams is the page kernel's single largest allocation —
     // building them twice cost ~a third of the whole extractPage budget); all-caps
     // sentences are skipped for both passes, as before
-    val grids = sents.flatMap { s =>
-      val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-      if (PatternMatcher.isAllCapsSentence(grid)) None else Some((s, grid))
-    }
+    val grids = sents.flatMap(s => PageKernel.matchableGrid(s).map((s, _)))
 
     // two-slot relation patterns: subject bound by the match, emitted directly
     // (local mirror of Extract.relationTriples)
@@ -88,51 +84,16 @@ object StreamExtract {
       }
     }
 
-    // W4 adjacent merge, local mirror of Extract.mergeAdjacent (same page ⇒ same result)
-    val merged = mergeAdjacentLocal(mentions)
-
-    // sentence-local subject resolution, local mirror of Extract.triples
-    val host = "^[a-z]+://([^/]+)".r.findFirstMatchIn(url).map(_.group(1)).getOrElse("")
-    val resolved = merged.sortBy(m => (m.annotType, m.begin, m.end)).map { m =>
-      val sent = sents.find(s => m.begin >= s.sentBegin && m.begin < s.sentEnd)
-      val cand = sent.toVector.flatMap(_.annots.filter(a =>
-        a.annotType == "Lookup" &&
-          a.features.getOrElse("majorType", "") == subjectMajorType &&
-          !(a.begin == m.begin && a.end == m.end)))
-      val best = cand
-        .map { a =>
-          val dist = if (a.end <= m.begin) m.begin - a.end
-                     else 1000000 + (a.begin - m.begin)
-          (dist, a.begin, a.value)
-        }
-        .sortBy(t => (t._1, t._2)).headOption
-      Triple(best.map(_._3).getOrElse(host), m.annotType, m.value,
-        url, m.begin, m.end, m.profileId, m.score)
-    }
+    // W4 adjacent merge and sentence-local subject resolution, shared with the batch
+    // kernel
+    val subjects = PageKernel.Subjects(url, sents, subjectMajorType)
+    val resolved = PageKernel.mergeAdjacent(mentions)
+      .sortBy(m => (m.annotType, m.begin, m.end)).map(subjects.resolve(_))
     resolved ++ relTriples
   }
 
   /** Shared empty pattern index (no-op relation pass). */
   val EmptyIndex: PatternMatcher.Index = PatternMatcher.buildIndex(Nil)
-
-  /** W4 adjacent merge on one page's mentions (pure; mirrors Extract.mergeAdjacent). */
-  def mergeAdjacentLocal(mentions: Vector[Mention]): Vector[Mention] =
-    mentions.groupBy(_.annotType).toVector.flatMap { case (_, ms) =>
-      val sorted = ms.sortBy(m => (m.begin, m.end))
-      val out = Vector.newBuilder[Mention]
-      var cur: Mention = null
-      sorted.foreach { m =>
-        if (cur == null) cur = m
-        else if (m.begin <= cur.end + 1)
-          cur = cur.copy(end = math.max(cur.end, m.end),
-            value = cur.value + " " + m.value,
-            profileId = math.min(cur.profileId, m.profileId),
-            score = math.max(cur.score, m.score))
-        else { out += cur; cur = m }
-      }
-      if (cur != null) out += cur
-      out.result()
-    }
 
   /** Stateless streaming-legal extraction: Dataset[Page] → Dataset[TimedTriple].
     * Works identically on a batch Dataset (used by StreamingSpec for parity). */

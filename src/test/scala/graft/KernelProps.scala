@@ -99,13 +99,77 @@ object KernelProps extends Properties("kernels") {
       Prop(got == want) :| s"got=$got want=$want n=$n text=${s.take(40)}"
     }
 
+  /** `Sentences.group` as it was before its merge loop became a binary search: every
+    * sentence rescans every annotation. Kept as the oracle of the linear version. */
+  private def groupOracle(url: String, all: Vector[graft.model.Annotation]) = {
+    val sents = all.filter(_.annotType == "Sentence").sortBy(_.begin)
+    val rest = all.filter(_.annotType != "Sentence").sortBy(a => (a.begin, a.end))
+    if (sents.isEmpty) Vector.empty
+    else {
+      val merged = Vector.newBuilder[(Int, Int)]
+      var cb = sents.head.begin
+      var ce = sents.head.end
+      var i = 1
+      while (i < sents.length) {
+        val maxAnnotEnd = rest.iterator
+          .filter(a => a.begin >= cb && a.begin < ce).map(_.end).foldLeft(ce)(math.max)
+        if (maxAnnotEnd > ce && sents(i).begin < maxAnnotEnd) {
+          ce = math.max(maxAnnotEnd, sents(i).end)
+        } else {
+          merged += ((cb, ce)); cb = sents(i).begin; ce = sents(i).end
+        }
+        i += 1
+      }
+      merged += ((cb, ce))
+      val out = Vector.newBuilder[graft.model.SentenceAnnots]
+      var ai = 0
+      merged.result().foreach { case (sb, se) =>
+        while (ai < rest.length && rest(ai).begin < sb) ai += 1
+        val buf = Vector.newBuilder[graft.model.Annotation]
+        var k = ai
+        while (k < rest.length && rest(k).begin < se) { buf += rest(k); k += 1 }
+        val annots = buf.result()
+        if (annots.nonEmpty) out += graft.model.SentenceAnnots(url, sb, se, annots)
+        ai = k
+      }
+      out.result()
+    }
+  }
+
+  private def annot(t: String, b: Int, e: Int) =
+    graft.model.Annotation("u", 0, t, b, e, s"$t$b", Map.empty, "p", 1.0)
+
+  // tokenizer-like sentences (ascending, disjoint) or arbitrary overlapping ones
+  private val sentencesGen: Gen[Vector[graft.model.Annotation]] = Gen.oneOf(
+    Gen.listOf(Gen.zip(Gen.choose(1, 30), Gen.choose(0, 4))).map { lens =>
+      lens.foldLeft((0, Vector.empty[graft.model.Annotation])) { case ((at, acc), (len, gap)) =>
+        (at + len + gap, acc :+ annot("Sentence", at, at + len))
+      }._2
+    },
+    Gen.listOf(Gen.zip(Gen.choose(0, 150), Gen.choose(1, 30)))
+      .map(_.map { case (b, len) => annot("Sentence", b, b + len) }.toVector))
+
+  // tokens, and longer spans (gold, lookups) that overrun sentence boundaries
+  private val othersGen: Gen[Vector[graft.model.Annotation]] = Gen.listOf(Gen.zip(
+      Gen.oneOf("Token", "Lookup", "gold"), Gen.choose(0, 160), Gen.choose(1, 60)))
+    .map(_.map { case (t, b, len) => annot(t, b, b + len) }.toVector)
+
+  property("sentence grouping == full-rescan oracle, overrunning annotations included") =
+    forAll(sentencesGen, othersGen) { (sents, others) =>
+      val all = others ++ sents
+      val got = graft.mention.Sentences.group("u", all)
+      val want = groupOracle("u", all)
+      Prop(got == want) :| s"got=${got.map(s => (s.sentBegin, s.sentEnd))} " +
+        s"want=${want.map(s => (s.sentBegin, s.sentEnd))}"
+    }
+
   property("adjacent-mention merge emits non-overlapping, ordered spans per type") =
     forAll(Gen.listOf(Gen.zip(Gen.choose(0, 50), Gen.choose(1, 5)))) { spans =>
       val mentions = spans.map { case (b, len) =>
         graft.model.Mention("u", "t", b, b + len, "v", 1L, 1.0)
       }.toVector
-      // local merge mirror used by the streaming path
-      val merged = graft.streaming.StreamExtract.mergeAdjacentLocal(mentions)
+      // per-page merge of the page kernel (batch and streaming)
+      val merged = graft.extract.PageKernel.mergeAdjacent(mentions)
       merged.sortBy(_.begin).sliding(2).forall {
         case Vector(a, b) => a.end + 1 < b.begin // merged spans can't be adjacent
         case _ => true
