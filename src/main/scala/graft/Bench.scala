@@ -16,20 +16,6 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -52,7 +38,7 @@ object Bench {
     // times only the named queries (never set by the driver's full runs)
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(_.split(",").toSet)
     val results: Seq[(String, Double, String)] = if (scalingOnly) Seq.empty else {
-      val spark = session(cpus)
+      val spark = graft.util.Sessions.local(cpus, "graft-bench")
       val r = SparkEntry.queries.toSeq
         .filter(q => only.forall(_.contains(q._1)))
         .sortBy(_._1).map { case (name, fn) =>
@@ -108,7 +94,7 @@ object Bench {
     // each child's setup narrows the wall-clock gap between a pair's two timed
     // windows — the gap is exactly where a host-phase change poisons the ratio.
     val patternsPath = {
-      implicit val s: SparkSession = session(highCores)
+      implicit val s: SparkSession = graft.util.Sessions.local(highCores, "graft-bench")
       import s.implicits._
       val train = graft.testgen.CorpusGen.pages(200)
       val pats = graft.pipeline.KGPipeline.run(

@@ -9,13 +9,17 @@ import org.apache.spark.sql.SparkSession
  * Usage: RunKG [nPages] [outDir] [cores] [stageDir]
  * Synthesizes the deterministic corpus (seed 42), runs the full pipeline
  * (annotate → learn → gate → extract → link → canonicalize), materializes
- * subject-bucketed triples + checkpoints under outDir, prints one JSON metrics line.
+ * 16-bucket subject-partitioned triples + checkpoints under outDir (a full write: a
+ * previous table there is replaced), prints one JSON metrics line. The job takes no
+ * configuration beyond these arguments: KGPipeline fixes the learning configs and
+ * the bucket count.
  *
  * With a 4th arg `stageDir`, runs the RESUMABLE production path instead
  * ([[graft.pipeline.KGPipeline.runCheckpointed]]): every stage materializes through
  * [[graft.runtime.StageCheckpoint]] under stageDir with per-partition lineage +
- * counters, and a re-submitted run resumes at its first incomplete stage — the north
- * rule's long-corpus spark-submit shape.
+ * counters, and a re-submitted run resumes at its first incomplete stage and rewrites
+ * only the output buckets not yet committed — the north rule's long-corpus
+ * spark-submit shape.
  */
 object RunKG {
   def main(args: Array[String]): Unit = {

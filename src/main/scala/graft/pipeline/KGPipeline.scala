@@ -9,6 +9,7 @@ import graft.link.EntityLink
 import graft.mention.Sentences
 import graft.model.{Annotation, Page, Pattern, SentenceAnnots, Triple}
 import graft.nlp.{Annotate, Gazetteer}
+import graft.runtime.StageCheckpoint
 import graft.sink.Materialize
 
 /**
@@ -33,71 +34,35 @@ import graft.sink.Materialize
  * sentence or mention row leaves the task that read its page. The learning path only
  * ever touches the validated slice (exactly the reference's design: learning on
  * status-1 docs, extraction on status-0, SURVEY.md §7.4.2).
+ *
+ * [[run]] and [[runCheckpointed]] share one learn → gate body; only the corpus pass
+ * differs. The job has no knobs: default MSA, stats and prior configs, training gold
+ * of provenance `gold` or `dup-propagated`, 16 output buckets.
  */
 object KGPipeline {
 
-  final case class Result(
-      patterns: Dataset[Pattern],
-      finalPatterns: Seq[Pattern],
-      triples: Dataset[Triple],
-      canonical: Dataset[Triple])
+  final case class Result(finalPatterns: Seq[Pattern], canonical: Dataset[Triple])
+
+  /** Subject buckets of the committed triple table. */
+  private val Buckets = 16
+  private val StatsCfg = PatternStats.Config()
+  private val PriorsCfg = ValueProbs.Config()
+  /** Training-gold provenance classes: human-validated spans plus spans propagated
+    * onto near-duplicate docs by propagateGold (ref dupFlag pipeline). Each also
+    * materializes triples at its own precedence rank (see goldTriplesOf). */
+  private val GoldClasses = Seq("gold" -> graft.model.Provenance.Gold,
+    "dup-propagated" -> graft.model.Provenance.Propagated)
 
   /**
    * @param pages      full corpus
    * @param goldAnnots gold target-span annotations for the training slice
    * @param gaz        gazetteer for Lookup annotations (broadcast)
    */
-  def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
-      msaCfg: GenMSA.Config = GenMSA.Config(),
-      statsCfg: PatternStats.Config = PatternStats.Config(),
-      priorsCfg: ValueProbs.Config = ValueProbs.Config(),
-      // which provenances count as training gold: human-validated plus spans
-      // propagated onto near-duplicate docs by propagateGold (ref dupFlag pipeline)
-      goldProvenances: Set[String] = Set("gold", "dup-propagated"))(
+  def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
       implicit spark: SparkSession): Result = {
     import spark.implicits._
-
-    // 1+2. fused annotate→sentence pass: tokenize + gazetteer + sentence grouping in
-    // ONE narrow stage per slice — a page's annotations are born co-located, so no
-    // url shuffle of the (10× text-sized) annotation set ever happens. The training
-    // slice = pages having gold annotations, with the gold spans (small,
-    // broadcastable by design — the reference trains on the validated sample only)
-    // merged in per page before grouping.
-    val goldByUrl: Map[String, Seq[Annotation]] =
-      goldAnnots.collect().toSeq.groupBy(_.url)
-    val goldUrls = goldAnnots.select($"url").distinct()
-    val trainPages = pages.join(goldUrls, Seq("url"), "left_semi").as[Page]
-    val trainSents = Annotate.annotateSentences(trainPages, gaz, goldByUrl)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // 3. learn patterns on the gold slice: context profiles (profileType 0) AND target
-    // profiles (profileType 1) — the reference's pair model
-    val patterns = GenMSA.learn(trainSents, goldProvenances, msaCfg)
-    val learned = patterns.collect().toSeq // small by construction (post minRows gate)
-    // subsumption filter (ref BestPatterns.readProfiles): drop context profiles whose
-    // token sequence contains a shorter surviving profile - redundant at match time
-    val ctxPatterns = GenMSA.subsumptionFilter(
-      learned.filter(p => p.profileType == 0 || p.profileType == 3))
-    val tgtPatterns = learned.filter(_.profileType == 1)
-
-    // 4. per-PAIR precision gates against the gold slice (ref `final` table +
-    // ProfileReader per-pair gates + A3 active check)
-    val matches = PatternStats.applyPatternsPaired(trainSents, ctxPatterns, tgtPatterns,
-      statsCfg)
-    // J5: snap ragged human-validated boundaries outward to token extents first
-    val tokenSpans = trainSents.flatMap(s =>
-        s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
-      .toDF("url", "begin", "end")
-    val gold = PatternStats.snapGoldToTokens(
-      goldAnnots.toDF().select($"url", $"annotType", $"begin", $"end"), tokenSpans)
-    val pairStats = PatternStats.scorePairs(matches, gold, patterns, statsCfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allowedPairs = PatternStats.keptPairs(pairStats, statsCfg)
-      .join(PatternStats.activeProfiles(pairStats, statsCfg), Seq("profileId"), "left_semi")
-      .select($"profileId", $"targetId", $"prec")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    pairStats.unpersist()
-    val finalPatterns = gated(ctxPatterns, allowedPairs)
+    val train = new TrainingSlice(pages, goldAnnots, gaz)
+    val m = learn(train, goldAnnots, checkpoint = None)
 
     // 5. extract on ALL pages: one narrow pass, page → raw triples through the page
     // kernel. Patterns whose learned context contains an entity literal before the
@@ -106,11 +71,11 @@ object KGPipeline {
     // Value-probability priors (A6) veto mentions the validated corpus distrusts and
     // feed the dictionary pass for values it trusts. The corpus pass chunks only when
     // a surviving pattern can actually match syntax labels — learning always chunks
-    // (trainSents), extraction pays the per-page chunk scan only when it buys recall.
-    val needSyntax = (finalPatterns ++ tgtPatterns)
+    // (the training slice), extraction pays the per-page chunk scan only when it buys
+    // recall.
+    val needSyntax = (m.finalPatterns ++ m.tgtPatterns)
       .exists(_.toks.exists(_.startsWith(":syntaxtreenode")))
-    val kernelB = spark.sparkContext.broadcast(kernelOf(finalPatterns, tgtPatterns,
-      allowedPairs, trainSents, goldAnnots, statsCfg, priorsCfg))
+    val kernelB = spark.sparkContext.broadcast(kernelOf(m, train.sents, goldAnnots))
     val gazB = spark.sparkContext.broadcast(gaz)
     val pageTriples = Annotate.extractText(pages).mapPartitions { it =>
       val (g, kernel) = (gazB.value, kernelB.value)
@@ -125,10 +90,87 @@ object KGPipeline {
     // rawTriples feeds both the CC edge derivation and the final canonical output —
     // persist it or every downstream action recomputes the whole extraction.
     val rawTriples = pageTriples
-      .unionByName(goldTriplesOf(trainSents, goldAnnots, goldProvenances))
+      .unionByName(goldTriplesOf(train.sents, goldAnnots))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    Result(patterns, finalPatterns, rawTriples, canonicalOf(rawTriples))
+    Result(m.finalPatterns, canonicalOf(rawTriples))
+  }
+
+  /** The training slice: pages having gold annotations, with the gold spans (small,
+    * broadcastable by design — the reference trains on the validated sample only)
+    * merged in per page before grouping, annotated in one fused narrow pass (no url
+    * shuffle of the annotation set). Built at most once and only when a stage
+    * computes: a fully resumed run annotates nothing. */
+  private final class TrainingSlice(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
+      gaz: Gazetteer)(implicit spark: SparkSession) {
+    private var cache: Option[Dataset[SentenceAnnots]] = None
+    def sents: Dataset[SentenceAnnots] = cache.getOrElse {
+      import spark.implicits._
+      val goldByUrl = goldAnnots.collect().toSeq.groupBy(_.url)
+      val goldUrls = goldAnnots.select($"url").distinct()
+      val ts = Annotate.annotateSentences(
+        pages.join(goldUrls, Seq("url"), "left_semi").as[Page], gaz, goldByUrl)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cache = Some(ts)
+      ts
+    }
+    def unpersist(): Unit = cache.foreach(_.unpersist())
+  }
+
+  /** What learning on the training slice yields: the target patterns, the gated
+    * (context, target) pairs with their precision, and the surviving context
+    * patterns. */
+  private final case class Learned(tgtPatterns: Seq[Pattern],
+      allowedPairs: Map[(Long, Long), Double], finalPatterns: Seq[Pattern])
+
+  /** A learning stage's output: as computed, or through a [[StageCheckpoint]] under
+    * the run's fingerprint. */
+  private def staged(checkpoint: Option[(StageCheckpoint, String)], name: String)(
+      stage: => DataFrame): DataFrame =
+    checkpoint.fold(stage) { case (cp, fingerprint) =>
+      cp.materialize(name, fingerprint)(stage)
+    }
+
+  /** Learn → gate, the steps both entry points share. */
+  private def learn(train: TrainingSlice, goldAnnots: Dataset[Annotation],
+      checkpoint: Option[(StageCheckpoint, String)])(
+      implicit spark: SparkSession): Learned = {
+    import spark.implicits._
+    // 3. learn patterns on the gold slice: context profiles (profileType 0) AND target
+    // profiles (profileType 1) — the reference's pair model
+    val learned = staged(checkpoint, "patterns") {
+      GenMSA.learn(train.sents, GoldClasses.map(_._1).toSet, GenMSA.Config()).toDF()
+    }.as[Pattern].collect().toSeq // small by construction (post minRows gate)
+    // subsumption filter (ref BestPatterns.readProfiles): drop context profiles whose
+    // token sequence contains a shorter surviving profile - redundant at match time
+    val ctxPatterns = GenMSA.subsumptionFilter(
+      learned.filter(p => p.profileType == 0 || p.profileType == 3))
+    val tgtPatterns = learned.filter(_.profileType == 1)
+
+    // 4. per-PAIR precision gates against the gold slice (ref `final` table +
+    // ProfileReader per-pair gates + A3 active check). Pairs are judged against the
+    // collected pattern set, so the MSA never runs again inside the stats job.
+    var pairStats: Option[DataFrame] = None
+    val allowedPairs = staged(checkpoint, "pair_stats") {
+      val trainSents = train.sents
+      val matches = PatternStats.applyPatternsPaired(trainSents, ctxPatterns, tgtPatterns,
+        StatsCfg)
+      // J5: snap ragged human-validated boundaries outward to token extents first
+      val tokenSpans = trainSents.flatMap(s =>
+          s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
+        .toDF("url", "begin", "end")
+      val gold = PatternStats.snapGoldToTokens(
+        goldAnnots.toDF().select($"url", $"annotType", $"begin", $"end"), tokenSpans)
+      val ps = PatternStats.scorePairs(matches, gold, spark.createDataset(learned),
+          StatsCfg)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pairStats = Some(ps)
+      PatternStats.keptPairs(ps, StatsCfg)
+        .join(PatternStats.activeProfiles(ps, StatsCfg), Seq("profileId"), "left_semi")
+        .select($"profileId", $"targetId", $"prec")
+    }.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    pairStats.foreach(_.unpersist())
+    Learned(tgtPatterns, allowedPairs, gated(ctxPatterns, allowedPairs))
   }
 
   /** Canonicalize subjects: blocking-join edges + connected components; a subject in
@@ -152,22 +194,14 @@ object KGPipeline {
     * targetProvenance scan): each gold annotation becomes a mention, subject-resolved
     * sentence-locally like any extraction, stamped with its provenance class so the
     * materialization precedence rule can rank it above auto evidence. */
-  private def goldTriplesOf(trainSents: Dataset[graft.model.SentenceAnnots],
-      goldAnnots: Dataset[Annotation], goldProvenances: Set[String])(
-      implicit spark: SparkSession): Dataset[Triple] = {
+  private def goldTriplesOf(trainSents: Dataset[SentenceAnnots],
+      goldAnnots: Dataset[Annotation])(implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
-    val provClasses = Seq(
-      "gold" -> graft.model.Provenance.Gold,
-      "dup-propagated" -> graft.model.Provenance.Propagated)
-    provClasses
-      .filter { case (src, _) => goldProvenances.contains(src) }
-      .map { case (src, prov) =>
-        val ms = goldAnnots.filter(_.provenance == src).map(a =>
-          graft.model.Mention(a.url, a.annotType, a.begin, a.end, a.value, -1L, a.score))
-        Extract.triples(trainSents, ms, provenance = prov)
-      }
-      .reduceOption(_ unionByName _)
-      .getOrElse(spark.emptyDataset[Triple])
+    GoldClasses.map { case (src, prov) =>
+      val ms = goldAnnots.filter(_.provenance == src).map(a =>
+        graft.model.Mention(a.url, a.annotType, a.begin, a.end, a.value, -1L, a.score))
+      Extract.triples(trainSents, ms, provenance = prov)
+    }.reduce(_ unionByName _)
   }
 
   /** Context patterns that keep at least one gated pair, scored with their best
@@ -184,19 +218,17 @@ object KGPipeline {
   /** The corpus pass's page kernel: final patterns split into two-slot relation and
     * plain patterns, the pair gate, and the value priors of the training slice (the
     * veto table, and the dictionary of values trusted at ≥ dictThreshold). */
-  private def kernelOf(finalPatterns: Seq[Pattern], tgtPatterns: Seq[Pattern],
-      allowedPairs: Map[(Long, Long), Double], trainSents: Dataset[SentenceAnnots],
-      goldAnnots: Dataset[Annotation], statsCfg: PatternStats.Config,
-      priorsCfg: ValueProbs.Config)(implicit spark: SparkSession): PageKernel = {
-    val upgraded = finalPatterns.map(p => p -> Extract.toRelationPattern(p))
-    val priorRows = ValueProbs.compute(trainSents, goldAnnots.toDF(), priorsCfg).collect()
+  private def kernelOf(m: Learned, trainSents: Dataset[SentenceAnnots],
+      goldAnnots: Dataset[Annotation])(implicit spark: SparkSession): PageKernel = {
+    val upgraded = m.finalPatterns.map(p => p -> Extract.toRelationPattern(p))
+    val priorRows = ValueProbs.compute(trainSents, goldAnnots.toDF(), PriorsCfg).collect()
     val priorVeto = priorRows.map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
     val dictEntries = priorRows.toSeq
-      .filter(_.getLong(4) >= math.round(priorsCfg.dictThreshold * 10000))
+      .filter(_.getLong(4) >= math.round(PriorsCfg.dictThreshold * 10000))
       .map(r => (r.getString(0), r.getString(1), r.getLong(4)))
     PageKernel(upgraded.collect { case (_, Some(rel)) => rel },
-      upgraded.collect { case (p, None) => p }, tgtPatterns, allowedPairs, priorVeto,
-      dictEntries, statsCfg.matcher)
+      upgraded.collect { case (p, None) => p }, m.tgtPatterns, m.allowedPairs, priorVeto,
+      dictEntries, StatsCfg.matcher)
   }
 
   /**
@@ -228,95 +260,50 @@ object KGPipeline {
     * through a [[graft.runtime.MetricsCollector]]. */
   val CanonicalMetric = "graft.kg.canonical"
 
-  /** Run + materialize to a subject-bucketed parquet table with checkpoints. */
+  /** Run + materialize to a 16-bucket subject-partitioned parquet table with
+    * checkpoints. */
   def runAndWrite(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
-      outPath: String, nBuckets: Int = 16)(implicit spark: SparkSession): DataFrame = {
-    val r = run(pages, goldAnnots, gaz)
-    Materialize.write(r.canonical, outPath, nBuckets, Some(CanonicalMetric))
-  }
+      outPath: String)(implicit spark: SparkSession): DataFrame =
+    Materialize.write(run(pages, goldAnnots, gaz).canonical, outPath, Buckets,
+      Some(CanonicalMetric))
 
   /**
-   * Fully resumable variant: every stage (annotations → patterns → raw triples →
-   * canonical triples) is materialized through [[graft.runtime.StageCheckpoint]] with
+   * Fully resumable variant: every stage (sentences → patterns → pair stats → raw
+   * triples) is materialized through [[graft.runtime.StageCheckpoint]] with
    * per-partition lineage, keyed by the caller's `fingerprint` (input + config
    * identity). A restarted run resumes at its first incomplete stage; the final write
    * goes through [[Materialize.writeResumable]] (per-bucket checkpoints). This is the
    * production `spark-submit` path for long corpus runs (north rule: resumable from
-   * checkpoint with per-partition lineage + metrics).
+   * checkpoint with per-partition lineage + metrics). Learning and gating are
+   * [[run]]'s; only the corpus pass differs: it reads the materialized sentence table.
    */
   def runCheckpointed(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
-      gaz: Gazetteer, stageDir: String, fingerprint: String, outPath: String,
-      nBuckets: Int = 16,
-      msaCfg: GenMSA.Config = GenMSA.Config(),
-      statsCfg: PatternStats.Config = PatternStats.Config(),
-      priorsCfg: ValueProbs.Config = ValueProbs.Config(),
-      goldProvenances: Set[String] = Set("gold", "dup-propagated"),
-      // whether the MATERIALIZED corpus sentence table carries chunk labels. It is
-      // written before patterns exist (it is the resume anchor), so the caller
-      // decides: true (default) keeps syntax-anchored patterns matchable on resume;
-      // false skips the per-page chunk scan when the pattern space is known not to
-      // need it (run() decides this automatically from the surviving pattern set)
-      chunkCorpus: Boolean = true)(
+      gaz: Gazetteer, stageDir: String, fingerprint: String, outPath: String)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val cp = graft.runtime.StageCheckpoint(stageDir)
+    val cp = StageCheckpoint(stageDir)
 
-    // fused annotate→sentence stage (see run()): one narrow pass, no annotation
-    // shuffle; the materialized sentence table is the resume point
+    // fused annotate→sentence stage (see TrainingSlice): one narrow pass, no
+    // annotation shuffle; the materialized sentence table is the resume point. It is
+    // written before patterns exist, so it always carries chunk labels: a
+    // syntax-anchored pattern stays matchable on resume
     val allSentsDF = cp.materialize("sentences", fingerprint) {
-      Annotate.annotateSentences(pages, gaz, withChunks = chunkCorpus).toDF()
+      Annotate.annotateSentences(pages, gaz, withChunks = true).toDF()
     }
-    // the training slice, annotated at most once and only when a stage computes: a
-    // fully resumed run annotates nothing
-    var trainCache: Option[Dataset[SentenceAnnots]] = None
-    def trainSents: Dataset[SentenceAnnots] = trainCache.getOrElse {
-      val goldByUrl = goldAnnots.collect().toSeq.groupBy(_.url)
-      val goldUrls = goldAnnots.select($"url").distinct()
-      val ts = Annotate.annotateSentences(
-        pages.join(goldUrls, Seq("url"), "left_semi").as[Page], gaz, goldByUrl)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      trainCache = Some(ts)
-      ts
-    }
-
-    val learned = cp.materialize("patterns", fingerprint) {
-      GenMSA.learn(trainSents, goldProvenances, msaCfg).toDF()
-    }.as[graft.model.Pattern].collect().toSeq
-    val ctxPatterns = GenMSA.subsumptionFilter(
-      learned.filter(p => p.profileType == 0 || p.profileType == 3))
-    val tgtPatterns = learned.filter(_.profileType == 1)
-
-    // per-pair gate table (the reference's `final` read, per-pair + A3 active check)
-    val allowedPairs = cp.materialize("pair_stats", fingerprint) {
-      val matches = PatternStats.applyPatternsPaired(trainSents, ctxPatterns,
-        tgtPatterns, statsCfg)
-      val tokenSpans = trainSents.flatMap(s =>
-          s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
-        .toDF("url", "begin", "end")
-      val gold = PatternStats.snapGoldToTokens(
-        goldAnnots.toDF().select($"url", $"annotType", $"begin", $"end"), tokenSpans)
-      val pairStats = PatternStats.scorePairs(matches, gold,
-        spark.createDataset(learned), statsCfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      PatternStats.keptPairs(pairStats, statsCfg)
-        .join(PatternStats.activeProfiles(pairStats, statsCfg),
-          Seq("profileId"), "left_semi")
-        .select($"profileId", $"targetId", $"prec")
-    }.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val finalPatterns = gated(ctxPatterns, allowedPairs)
+    val train = new TrainingSlice(pages, goldAnnots, gaz)
+    val m = learn(train, goldAnnots, Some((cp, fingerprint)))
 
     // the corpus pass of run() over the materialized sentence table: its rows are
     // regrouped per page, then the same page kernel runs
     val rawTriples = cp.materialize("raw_triples", fingerprint) {
-      val kernelB = spark.sparkContext.broadcast(kernelOf(finalPatterns, tgtPatterns,
-        allowedPairs, trainSents, goldAnnots, statsCfg, priorsCfg))
+      val kernelB = spark.sparkContext.broadcast(kernelOf(m, train.sents, goldAnnots))
       allSentsDF.as[SentenceAnnots].groupByKey(_.url)
         .flatMapGroups((url, sents) => kernelB.value(url, sents.toVector))
-        .unionByName(goldTriplesOf(trainSents, goldAnnots, goldProvenances)).toDF()
+        .unionByName(goldTriplesOf(train.sents, goldAnnots)).toDF()
     }.as[Triple]
-    trainCache.foreach(_.unpersist())
+    train.unpersist()
 
-    val canonical = canonicalOf(rawTriples)
-    Materialize.writeResumable(canonical, outPath, nBuckets, Some(CanonicalMetric))
+    Materialize.writeResumable(canonicalOf(rawTriples), outPath, Buckets,
+      Some(CanonicalMetric))
   }
 }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Triple
 
@@ -20,11 +20,11 @@ import graft.model.Triple
  * metrics per the north rule.
  *
  * NOTE: this is the PLAIN-DIRECTORY variant (hive layout readable by any engine, no
- * manifest indirection). [[TripleStore]] routes the same resumable-write and
- * compaction semantics through [[SnapshotStore]]'s manifest commit protocol — ONE
- * commit path adding snapshot isolation, time travel, and vacuum — and is the store
- * a concurrent/production deployment should use; the dedup/bucket kernels here are
- * shared by both.
+ * manifest indirection). [[TripleStore]] commits the same bucketed output through
+ * [[SnapshotStore]]'s manifest protocol (snapshot isolation, time travel, vacuum,
+ * compaction). Both stores share this object's kernels: the bucket kernel
+ * ([[bucketed]]), the per-bucket lineage aggregate ([[bucketLineage]]) and the
+ * latest-row-per-bucket view ([[latestPerBucket]]).
  */
 object Materialize {
 
@@ -52,28 +52,53 @@ object Materialize {
       approx_count_distinct(col("url")).as("docs_approx"),
       min(col("score")).as("min_score")))
 
-  /** Site precedence + graph dedup, then write. Two aligned shuffles: the site pass
-    * is url-keyed, the graph pass subj-keyed — both reduce before the exchange. */
+  /** The bucket kernel every triple writer shares: site precedence dedup, graph
+    * dedup, the bucket column, then (when named) the observed counters. Two aligned
+    * shuffles: the site pass is url-keyed, the graph pass subj-keyed — both reduce
+    * before the exchange. */
+  private[sink] def bucketed(triples: Dataset[Triple], nBuckets: Int,
+      observeName: Option[String])(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    withCounters(withBucket(dedup(dedupPrecedence(triples.toDF()).as[Triple]), nBuckets),
+      observeName)
+  }
+
+  /** Order-insensitive identity of a fact set: bit_xor of xxhash64(subj, pred, obj),
+    * 0 when empty — the `output_hash` of every lineage row. */
+  private[sink] def factHash: Column =
+    coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L))
+
+  /** Per-bucket lineage of a bucketed write: (bucket, rows_out, output_hash). */
+  private[sink] def bucketLineage(bucketed: DataFrame): DataFrame =
+    bucketed.groupBy(col("bucket"))
+      .agg(count(lit(1)).as("rows_out"), factHash.as("output_hash"))
+
+  /** Lineage rows stamped with the stage that wrote them and when. */
+  private[sink] def stamped(lineage: DataFrame, stage: String): DataFrame =
+    lineage.withColumn("stage", lit(stage)).withColumn("completed_at", current_timestamp())
+
+  /** The lineage reader view: one row per bucket, the one latest by `order`. */
+  private[sink] def latestPerBucket(tbl: DataFrame, order: Column): DataFrame = {
+    val rest = tbl.columns.filterNot(_ == "bucket")
+    tbl.groupBy(col("bucket"))
+      .agg(max_by(struct(rest.map(col): _*), order).as("w"))
+      .select(col("bucket") +: rest.map(c => col(s"w.$c").as(c)): _*)
+  }
+
+  /** A lineage table with no rows. */
+  private[sink] def emptyLineage(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Int, Long, Long, String, java.sql.Timestamp)]
+      .toDF("bucket", "rows_out", "output_hash", "stage", "completed_at")
+  }
+
+  /** Full write: every bucket of `triples` replaces the table at `path` (buckets
+    * the new set does not touch are gone too), and its lineage replaces the
+    * `_checkpoints` table. */
   def write(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val deduped = dedup(dedupPrecedence(triples.toDF()).as[Triple])
-    // persist: the bucketed result feeds two actions (data write + checkpoint agg);
-    // without it the whole upstream pipeline recomputes per action
-    val bucketed = withCounters(withBucket(deduped, nBuckets), observeName)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    val cps = bucketed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("rows_out"),
-        coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L)).as("output_hash"))
-      .withColumn("stage", lit("materialize"))
-      .withColumn("completed_at", current_timestamp())
-    cps.write.mode("overwrite").parquet(path + "_checkpoints")
-    val out = cps.sparkSession.read.parquet(path + "_checkpoints")
-    bucketed.unpersist()
-    out
-  }
+      implicit spark: SparkSession): DataFrame =
+    commit(triples, path, nBuckets, observeName, resume = false)
 
   /** Order-insensitive dedup: one row per (subj, pred, obj); the surviving evidence
     * row is picked ATOMICALLY (one ordered struct — strongest provenance first, then
@@ -154,162 +179,44 @@ object Materialize {
    */
   def writeResumable(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
+      implicit spark: SparkSession): DataFrame =
+    commit(triples, path, nBuckets, observeName, resume = true)
+
+  /** The one plain-layout commit. A full write and a resume differ only in which
+    * buckets they write and whether the lineage is replaced or appended to. Returns
+    * the latest lineage row per bucket. */
+  private def commit(triples: Dataset[Triple], path: String, nBuckets: Int,
+      observeName: Option[String], resume: Boolean)(
       implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
+    val checkpoints = path + "_checkpoints"
     // counters observe the FULL canonical set (before the pending-bucket filter), so
-    // a resumed run still reports what the job represents, not just what it rewrote
-    val bucketed = withCounters(
-        withBucket(dedup(dedupPrecedence(triples.toDF()).as[Triple]), nBuckets),
-        observeName)
+    // a resumed run still reports what the job represents, not just what it rewrote.
+    // persist: the bucketed result feeds the data write and the lineage aggregate;
+    // without it the whole upstream pipeline recomputes per action
+    val all = bucketed(triples, nBuckets, observeName)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pending = pendingBuckets(bucketed, path + "_checkpoints", Some(path))
-      .collect().map(_.getInt(0)) // ≤ nBuckets rows — driver-safe
-    if (pending.nonEmpty) {
-      val todo = bucketed.filter(col("bucket").isin(pending.map(Integer.valueOf): _*))
-      todo.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+    val todo = if (!resume) Some(all) else {
+      val pending = pendingBuckets(all, checkpoints, Some(path))
+        .collect().map(_.getInt(0)) // ≤ nBuckets rows — driver-safe
+      if (pending.isEmpty) None
+      else Some(all.filter(col("bucket").isin(pending.map(Integer.valueOf): _*)))
+    }
+    todo.foreach { df =>
+      df.write.mode("overwrite")
+        .option("partitionOverwriteMode", if (resume) "dynamic" else "static")
         .partitionBy("bucket").parquet(path)
-      todo.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("rows_out"),
-          coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L)).as("output_hash"))
-        .withColumn("stage", lit("materialize"))
-        .withColumn("completed_at", current_timestamp())
-        .write.mode("append").parquet(path + "_checkpoints")
+      stamped(bucketLineage(df), "materialize")
+        .write.mode(if (resume) "append" else "overwrite").parquet(checkpoints)
     }
-    bucketed.unpersist()
-    // first run over an EMPTY triple set: nothing pending, checkpoint dir never
-    // created — return an empty checkpoint table instead of PATH_NOT_FOUND. Only that
-    // legitimate case is absorbed: a transient FS error or corrupt checkpoint file
-    // must PROPAGATE, not masquerade as "nothing completed" and trigger silent rewrites.
-    if (checkpointExists(path + "_checkpoints")) {
-      // the FILE is append-only lineage (a re-verified bucket appends a fresh row);
-      // the RETURNED view is one row per bucket — the latest — so downstream sums
-      // never double-count a rewritten bucket
-      val tbl = spark.read.parquet(path + "_checkpoints")
-      tbl.groupBy(col("bucket"))
-        .agg(max_by(struct(tbl.columns.filterNot(_ == "bucket").map(col): _*),
-          col("completed_at")).as("w"))
-        .select(col("bucket") +: tbl.columns.filterNot(_ == "bucket")
-          .map(c => col(s"w.$c").as(c)): _*)
-    } else {
-      import spark.implicits._
-      Seq.empty[(Int, Long, Long, String, java.sql.Timestamp)]
-        .toDF("bucket", "rows_out", "output_hash", "stage", "completed_at")
-    }
-  }
-
-  /** Committed-data probe, shared with StageCheckpoint — see
-    * [[graft.util.Fs.parquetDataExists]]. */
-  private def checkpointExists(checkpointPath: String)(
-      implicit spark: SparkSession): Boolean =
-    graft.util.Fs.parquetDataExists(checkpointPath)
-
-  /**
-   * Compaction — the Iceberg `rewrite_data_files` analog for the parquet stand-in:
-   * bin-packing rewrite of fragmented bucket partitions. Small-file buildup is what
-   * kills a 100 TB store that is appended/resumed in many increments; this rewrites
-   * each bucket whose file count exceeds `ceil(bytes / targetFileBytes)` down to that
-   * packed count, with
-   *  - content-identity verification: the order-insensitive FULL-ROW hash
-   *    (bit_xor of xxhash64 over every data column) must match before/after, or the
-   *    bucket is left untouched and the job fails loudly;
-   *  - atomic-enough swap: rewrite lands in an underscore-hidden temp dir (invisible
-   *    to readers), the live dir moves to a trash dir, temp renames into place, trash
-   *    drops — a crash leaves either the old or the new complete directory, never a
-   *    mix, and `pendingBuckets`' vanished-data probe re-queues the bucket in the
-   *    worst case;
-   *  - lineage: one appended `_checkpoints` row per rewritten bucket
-   *    (stage = "compact", same (subj, pred, obj) output_hash contract as the write
-   *    stages), so the latest-row-per-bucket resume view stays coherent.
-   *
-   * Driver loop over ≤ nBuckets partitions (each a small job) — the bucket IS the
-   * rewrite unit, exactly like Iceberg's per-partition file groups.
-   *
-   * @return one row per REWRITTEN bucket: (bucket, files_before, files_after,
-   *         rows_out, output_hash).
-   */
-  def compact(path: String, targetFileBytes: Long = 128L * 1024 * 1024)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery FIRST: a crash between the swap's two renames leaves no live
-    // bucket=N directory while _compact_trash/bucket=N (the old copy) and/or
-    // _compact_tmp/bucket=N (the new, verified-content-identical copy) survive.
-    // Restore a missing bucket from trash first (the previously live data), else
-    // tmp — before this run's own rewrites and the end-of-run blanket temp-dir
-    // deletes, which would otherwise destroy the only surviving copies while
-    // _checkpoints still marks the bucket committed.
-    if (fs.exists(root)) for (tdir <- Seq("_compact_trash", "_compact_tmp")) {
-      val d = new org.apache.hadoop.fs.Path(root, tdir)
-      if (fs.exists(d)) fs.listStatus(d)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-        .foreach { s =>
-          val live = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-          if (!fs.exists(live))
-            require(fs.rename(s.getPath, live),
-              s"compact: could not recover ${s.getPath} to $live")
-        }
-    }
-    val buckets =
-      if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-        .sortBy(_.getPath.getName)
-    val rewritten = buckets.toSeq.flatMap { st =>
-      val bucketDir = st.getPath
-      val bucketId = bucketDir.getName.stripPrefix("bucket=").toInt
-      val files = fs.listStatus(bucketDir).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val totalBytes = files.map(_.getLen).sum
-      val packed = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      if (files.length <= packed) None
-      else {
-        // (rows, full-row hash over name-sorted columns, lineage-contract hash)
-        def identity(dir: String): (Long, Long, Long) = {
-          val df = spark.read.parquet(dir)
-          val r = df.agg(count(lit(1)),
-            coalesce(expr(s"bit_xor(xxhash64(${df.columns.sorted.mkString(", ")}))"),
-              lit(0L)),
-            coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L))).head()
-          (r.getLong(0), r.getLong(1), r.getLong(2))
-        }
-        val before = identity(bucketDir.toString)
-        val tmp = new org.apache.hadoop.fs.Path(root,
-          s"_compact_tmp/${bucketDir.getName}")
-        fs.delete(tmp, true)
-        spark.read.parquet(bucketDir.toString).coalesce(packed)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val after = identity(tmp.toString)
-        require(before == after,
-          s"compact: content identity changed for bucket $bucketId " +
-            s"(before=$before after=$after) — rewrite aborted, original intact")
-        val trash = new org.apache.hadoop.fs.Path(root,
-          s"_compact_trash/${bucketDir.getName}")
-        fs.delete(trash, true)
-        fs.mkdirs(trash.getParent)
-        require(fs.rename(bucketDir, trash), s"compact: could not stage bucket $bucketId")
-        require(fs.rename(tmp, bucketDir), s"compact: could not swap bucket $bucketId")
-        fs.delete(trash, true)
-        val filesAfter = fs.listStatus(bucketDir).count { f =>
-          val n = f.getPath.getName
-          f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }
-        Some((bucketId, files.length, filesAfter, before._1, before._3))
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_compact_tmp"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_compact_trash"), true)
-    val out = rewritten
-      .toDF("bucket", "files_before", "files_after", "rows_out", "output_hash")
-    if (rewritten.nonEmpty)
-      out.select(col("bucket").cast("int").as("bucket"), col("rows_out"),
-          col("output_hash"), lit("compact").as("stage"),
-          current_timestamp().as("completed_at"))
-        .write.mode("append").parquet(path + "_checkpoints")
-    out
+    all.unpersist()
+    // the FILE is append-only lineage on resume (a re-verified bucket appends a fresh
+    // row); the RETURNED view is one row per bucket — the latest — so downstream sums
+    // never double-count a rewritten bucket. Only a never-written table (an EMPTY
+    // first resume) reads as empty: a transient FS error or corrupt checkpoint file
+    // must PROPAGATE, not masquerade as "nothing completed"
+    if (graft.util.Fs.parquetDataExists(checkpoints))
+      latestPerBucket(spark.read.parquet(checkpoints), col("completed_at"))
+    else emptyLineage
   }
 
   /** Resume: which buckets still need writing given an existing checkpoint table.
@@ -322,7 +229,7 @@ object Materialize {
       dataPath: Option[String] = None)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val committed: Seq[Int] = if (checkpointExists(checkpointPath))
+    val committed: Seq[Int] = if (graft.util.Fs.parquetDataExists(checkpointPath))
       spark.read.parquet(checkpointPath).select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows — driver-safe
     else Seq.empty

@@ -38,9 +38,11 @@ object Stores {
   def upsertPatterns(newPatterns: Dataset[Pattern], path: String)(
       implicit spark: SparkSession): Dataset[Pattern] = {
     import spark.implicits._
+    // only a store never written reads as empty: a failed read of an existing store
+    // propagates before the rewrite below could replace it
     val existing: DataFrame =
-      try spark.read.parquet(path).withColumn("gen", lit(0))
-      catch { case _: Throwable => spark.emptyDataset[Pattern].toDF().withColumn("gen", lit(0)) }
+      (if (graft.util.Fs.parquetDataExists(path)) spark.read.parquet(path)
+       else spark.emptyDataset[Pattern].toDF()).withColumn("gen", lit(0))
     val merged = existing.unionByName(newPatterns.toDF().withColumn("gen", lit(1)))
       // partition the window by the key columns directly: no string-built merge key,
       // so distinct (annotType, toks, group) tuples can never collide

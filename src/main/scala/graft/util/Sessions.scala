@@ -22,7 +22,6 @@ object Sessions {
       // scaling gate's hash_equal check — pin it (a real-cluster deploy that
       // re-enables speculation must verify identity with a read-back instead).
       .config("spark.speculation", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -64,6 +64,23 @@ class PipelineSpec extends AnyFunSuite with SparkTest {
     assert(prec >= 0.95 && rec >= 0.95, f"gate failed with propagation: P=$prec%.3f R=$rec%.3f")
   }
 
+  test("runAndWrite and runCheckpointed commit the same facts") {
+    import spark.implicits._
+    val all = CorpusGen.pages(80)
+    val pages = spark.createDataset(all.map(_.page))
+    val goldAnnots = spark.createDataset(all.take(30).flatMap(CorpusGen.goldAnnotations))
+    val dir = java.nio.file.Files.createTempDirectory("graft_parity").toString
+    def facts(path: String): Set[(String, String, String)] =
+      spark.read.parquet(path).select("subj", "pred", "obj").as[(String, String, String)]
+        .collect().toSet
+    KGPipeline.runAndWrite(pages, goldAnnots, CorpusGen.gazetteer, s"$dir/plain")(spark)
+    KGPipeline.runCheckpointed(pages, goldAnnots, CorpusGen.gazetteer, s"$dir/stages",
+      "parity-80-v1", s"$dir/checkpointed")(spark)
+    val plain = facts(s"$dir/plain")
+    assert(plain.nonEmpty)
+    assert(facts(s"$dir/checkpointed") === plain)
+  }
+
   test("byte-identity: per-url normalized text hashes are frozen (golden)") {
     val p = CorpusGen.pages(3)
     val hashes = p.map(gp => graft.ingest.Normalize.sha256(

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.model.{Pattern, Triple}
@@ -64,6 +66,27 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
       spark.createDataset(Seq(p(9, ":a", 99), p(3, ":c", 30))), path)
       .collect().map(x => (x.toks.head, x.truePos)).toMap
     assert(after === Map(":a" -> 99L, ":b" -> 20L, ":c" -> 30L))
+  }
+
+  test("S7: pattern upsert over an unreadable store throws and leaves it untouched") {
+    import spark.implicits._
+    val path = tmpDir() + "/patterns"
+    val p = Pattern(1, Seq(":a", ":target"), "t", 0, "msa", 0.5, 10, 0, 1)
+    Stores.upsertPatterns(spark.createDataset(Seq(p)), path)
+    val dir = java.nio.file.Paths.get(path)
+    def files(): Map[String, Seq[Byte]] = {
+      val s = java.nio.file.Files.list(dir)
+      try s.iterator().asScala.toSeq.map(f =>
+        f.getFileName.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally s.close()
+    }
+    // a torn write: the store's part file is no longer parquet
+    val part = files().keys.find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
+    java.nio.file.Files.write(dir.resolve(part), "not a parquet file".getBytes)
+    val before = files()
+    assertThrows[Exception](Stores.upsertPatterns(
+      spark.createDataset(Seq(p.copy(profileId = 2, toks = Seq(":b", ":target")))), path))
+    assert(files() === before, "a failed read replaced the pattern store")
   }
 
   test("S6/S8: annotation and match sinks append, partition-pruned by annotType") {
@@ -237,101 +260,20 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(spark.read.parquet(path + "_checkpoints").count() === nB + 1)
   }
 
-  test("compact: file count drops, content identical, resume lineage intact") {
+  test("write: a rewrite with fewer buckets leaves exactly the new table") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val path = tmpDir() + "/triples"
-    val nB = 4
-    // fragment the store: three incremental writes into the same buckets
-    (0 until 3).foreach { g =>
-      val triples = spark.createDataset((0 until 60).map(i =>
-        Triple(s"subj${g * 60 + i}", "p", s"o${g * 60 + i}",
-          s"https://x/${g * 60 + i}", 0, 1, 1L, 1.0)))
-      Materialize.withBucket(triples, nB)
-        .write.mode("append").partitionBy("bucket").parquet(path)
-    }
-    def dataFiles(b: Int): Int =
-      new java.io.File(s"$path/bucket=$b").listFiles()
-        .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    def contentHash(): Long = spark.read.parquet(path)
-      .agg(expr("bit_xor(xxhash64(subj, pred, obj, url, begin, end))"))
-      .head.getLong(0)
-    val filesBefore = (0 until nB).map(dataFiles)
-    assert(filesBefore.forall(_ >= 3), s"fixture not fragmented: $filesBefore")
-    val hashBefore = contentHash()
-    // seed a lineage table so compaction's appended rows join an existing trail
-    spark.read.parquet(path).groupBy("bucket")
-      .agg(count(lit(1)).as("rows_out"),
-        expr("bit_xor(xxhash64(subj, pred, obj))").as("output_hash"))
-      .withColumn("stage", lit("materialize"))
-      .withColumn("completed_at", current_timestamp())
-      .write.mode("overwrite").parquet(path + "_checkpoints")
-
-    val out = Materialize.compact(path, targetFileBytes = 1L << 30)(spark)
-      .collect().map(r => r.getInt(0) ->
-        ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
-    assert(out.keySet == (0 until nB).toSet, s"not all buckets rewritten: $out")
-    (0 until nB).foreach { b =>
-      val (fb, fa, _) = out(b)
-      assert(fb >= 3 && fa == 1, s"bucket $b: $fb -> $fa files")
-      assert(dataFiles(b) == 1)
-    }
-    assert(contentHash() === hashBefore, "compaction changed the store contents")
-    assert(spark.read.parquet(path).count() === 180)
-    // lineage: one appended compact row per bucket; resume sees nothing pending
-    val cpsTbl = spark.read.parquet(path + "_checkpoints")
-    assert(cpsTbl.filter(col("stage") === "compact").count() === nB.toLong)
-    val pending = Materialize.pendingBuckets(
-      Materialize.withBucket(spark.read.parquet(path).drop("bucket")
-        .as[Triple], nB), path + "_checkpoints", Some(path))
-    assert(pending.count() === 0L, "compaction broke resume lineage")
-    // idempotence: an already-packed store rewrites nothing
-    assert(Materialize.compact(path, targetFileBytes = 1L << 30)(spark).count() === 0L)
-  }
-
-  test("compact: recovers a bucket stranded mid-swap by a crash (no data loss)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val path = tmpDir() + "/triples_crash"
-    val nB = 4
-    (0 until 2).foreach { g =>
-      val triples = spark.createDataset((0 until 60).map(i =>
-        Triple(s"subj${g * 60 + i}", "p", s"o${g * 60 + i}",
-          s"https://x/${g * 60 + i}", 0, 1, 1L, 1.0)))
-      Materialize.withBucket(triples, nB)
-        .write.mode("append").partitionBy("bucket").parquet(path)
-    }
-    def contentHash(): Long = spark.read.parquet(path)
-      .agg(expr("bit_xor(xxhash64(subj, pred, obj, url, begin, end))"))
-      .head.getLong(0)
-    val hashBefore = contentHash()
-    def mv(from: String, to: String): Unit = {
-      val f = new java.io.File(from); val t = new java.io.File(to)
-      t.getParentFile.mkdirs()
-      assert(f.renameTo(t), s"fixture move failed: $from -> $to")
-    }
-    // crash #1: bucket=1 staged to trash, tmp never swapped in (live dir GONE,
-    // only the trash copy survives)
-    mv(s"$path/bucket=1", s"$path/_compact_trash/bucket=1")
-    // crash #2: bucket=2 staged to trash AND deleted after the tmp copy was
-    // verified, but the tmp->live rename never happened (only the tmp copy
-    // survives). Simulated by moving the live dir to tmp.
-    mv(s"$path/bucket=2", s"$path/_compact_tmp/bucket=2")
-    // plus a STALE tmp leftover for a bucket whose live dir is intact — must be
-    // discarded (cleaned), never restored over live data
-    spark.read.parquet(s"$path/bucket=0").limit(1)
-      .write.parquet(s"$path/_compact_tmp/bucket=0")
-    assert(spark.read.parquet(path).count() < 120, "fixture did not strand buckets")
-
-    // a fresh compact() run must FIRST restore the stranded buckets, then proceed
-    val out = Materialize.compact(path, targetFileBytes = 1L << 30)(spark)
-    assert(contentHash() === hashBefore,
-      "crash recovery lost or duplicated rows")
-    assert(spark.read.parquet(path).count() === 120)
-    assert(!new java.io.File(s"$path/_compact_tmp").exists())
-    assert(!new java.io.File(s"$path/_compact_trash").exists())
-    // recovered buckets are again eligible for (and got) compaction this run
-    assert(out.filter(col("bucket").isin(1, 2)).count() === 2L)
+    val path = tmpDir() + "/rewrite"
+    def triples(n: Int) = spark.createDataset((0 until n).map(i =>
+      Triple(s"subj$i", "p", s"o$i", s"https://x/$i", 0, 1, 1L, 1.0)))
+    def facts() = spark.read.parquet(path).select("subj", "pred", "obj").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    Materialize.write(triples(64), path, 16)
+    assert(facts().size === 64)
+    // the second table touches one bucket: a full write must still drop the other 15
+    val cps = Materialize.write(triples(1), path, 16)
+    assert(facts() === Set(("subj0", "p", "o0")), "buckets of the first write survived")
+    assert(cps.count() === 1L)
+    assert(spark.read.parquet(path + "_checkpoints").count() === 1L)
   }
 
   test("TripleStore: resumable write + vanished-bucket rewrite through ONE manifest path") {
