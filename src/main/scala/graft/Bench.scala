@@ -8,11 +8,14 @@ import org.apache.spark.sql.SparkSession
  *  1. Operator battery: every SparkEntry query timed (count()) on
  *     SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS].
  *  2. Scaling evidence (BASELINE.md protocol): the production extraction pipeline
- *     (ExtractJob) on an identical deterministic corpus at local[8] then local[32];
- *     reports docs/sec at both, output-hash equality, and scaling efficiency
- *     (T8/T32)/4 — the sandbox stand-in for the north rule's N vs 4N executors gate.
- *     Pattern learning runs once, untimed, on the fixed-size gold sample (learning is
- *     sample-scale by design; extraction is the corpus-scale path).
+ *     (ExtractJob: the KG job's page kernel, mention-level triples) on an identical
+ *     deterministic corpus at local[N] then local[4N]; reports docs/sec at both,
+ *     output-hash equality, and scaling efficiency (T_N/T_4N)/4 — the sandbox
+ *     stand-in for the north rule's N vs 4N executors gate. The kernel is learned
+ *     once, untimed, on the fixed-size gold sample (learning is sample-scale by
+ *     design; extraction is the corpus-scale path).
+ *
+ * A battery query that throws fails the bench, naming the query.
  */
 object Bench {
 
@@ -39,26 +42,29 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(_.split(",").toSet)
     val results: Seq[(String, Double, String)] = if (scalingOnly) Seq.empty else {
       val spark = graft.util.Sessions.local(cpus, "graft-bench")
-      val r = SparkEntry.queries.toSeq
+      try SparkEntry.queries.toSeq
         .filter(q => only.forall(_.contains(q._1)))
         .sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
         // toRdd.count() forces full row materialization — a bare count() would let
-        // Catalyst prune every computed column and time an empty scan.
+        // Catalyst prune every computed column and time an empty scan. A query that
+        // throws fails the bench: a timing of a failed query means nothing.
         val fp = try {
           val df = fn(spark, sfDir)
           val planStr = df.queryExecution.executedPlan.canonicalized.toString
           df.queryExecution.toRdd.count()
           java.security.MessageDigest.getInstance("MD5")
             .digest(planStr.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+        } catch {
+          case e: Exception =>
+            throw new RuntimeException(s"battery query $name failed: $e", e)
         }
-        catch { case _: Throwable => "err" }
         (name, (System.nanoTime() - t0) / 1e9, fp)
+      } finally {
+        graft.extract.DocExtract.clearSentenceCache()
+        SparkEntry.clearKgTriplesCache()
+        spark.stop()
       }
-      graft.extract.DocExtract.clearSentenceCache()
-      SparkEntry.clearKgTriplesCache()
-      spark.stop()
-      r
     }
     def qsJson: String = results.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
@@ -89,23 +95,23 @@ object Bench {
     val lowCores = sys.env.getOrElse("SPARK_GRAFT_KG_N", "3").toInt
     val highCores = lowCores * 4
     case class ScaleResult(sec: Double, triples: Long, hash: Long)
-    // Patterns are learned ONCE here and shipped to every child as a serialized file:
-    // learning is untimed either way, but removing the sample-scale learning job from
-    // each child's setup narrows the wall-clock gap between a pair's two timed
-    // windows — the gap is exactly where a host-phase change poisons the ratio.
-    val patternsPath = {
+    // The page kernel is learned ONCE here and shipped to every child as a serialized
+    // file: learning is untimed either way, but removing the sample-scale learning
+    // job from each child's setup narrows the wall-clock gap between a pair's two
+    // timed windows — the gap is exactly where a host-phase change poisons the ratio.
+    val kernelPath = {
       implicit val s: SparkSession = graft.util.Sessions.local(highCores, "graft-bench")
       import s.implicits._
       val train = graft.testgen.CorpusGen.pages(200)
-      val pats = graft.pipeline.KGPipeline.run(
+      val kernel = graft.pipeline.KGPipeline.run(
         s.createDataset(train.map(_.page)),
         s.createDataset(train.flatMap(graft.testgen.CorpusGen.goldAnnotations)),
-        graft.testgen.CorpusGen.gazetteer).finalPatterns
+        graft.testgen.CorpusGen.gazetteer).kernel
       s.stop()
-      val p = java.nio.file.Files.createTempFile("graft_bench_patterns", ".bin")
+      val p = java.nio.file.Files.createTempFile("graft_bench_kernel", ".bin")
       p.toFile.deleteOnExit() // the children read it; nothing reads it after this JVM
       val out = new java.io.ObjectOutputStream(java.nio.file.Files.newOutputStream(p))
-      try out.writeObject(pats) finally out.close()
+      try out.writeObject(kernel) finally out.close()
       p.toString
     }
     def childRun(cores: Int, reps: Int = 3): ScaleResult = {
@@ -131,7 +137,7 @@ object Bench {
         "-Xmx24g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", System.getProperty("java.class.path"),
         "graft.ScalingRun", cores.toString, kgPages.toString, reps.toString,
-        patternsPath)).toArray
+        kernelPath)).toArray
       // INHERIT stderr: Spark logs on an unread pipe would fill the 64 KB buffer and
       // deadlock the child; stdout (one JSON line) is all we parse.
       val proc = new ProcessBuilder(cmd: _*)

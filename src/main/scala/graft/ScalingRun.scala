@@ -11,12 +11,16 @@ import org.apache.spark.sql.SparkSession
  * between the two parallelism levels and dominate the measurement (observed 2.5×
  * drift on identical work within one long-lived JVM).
  *
- * Usage: ScalingRun <cores> <nPages> [reps=3] [patternsFile]
- *   patternsFile: java-serialized Seq[Pattern] precomputed by the parent (graft.Bench)
- *   so every child of a bench run extracts with the IDENTICAL pattern set without
- *   paying the sample-scale learning job per child — learning is untimed either way,
- *   but a shorter setup narrows the wall-clock gap between the two timed windows of
- *   a scaling pair, which is what keeps both windows in the same host phase.
+ * The timed job is [[pipeline.ExtractJob]]: the KG job's page kernel over the corpus,
+ * counting mention-level triples.
+ *
+ * Usage: ScalingRun <cores> <nPages> [reps=3] [kernelFile]
+ *   kernelFile: java-serialized [[extract.PageKernel]] learned by the parent
+ *   (graft.Bench) so every child of a bench run extracts with the IDENTICAL model
+ *   without paying the sample-scale learning job per child — learning is untimed
+ *   either way, but a shorter setup narrows the wall-clock gap between the two timed
+ *   windows of a scaling pair, which is what keeps both windows in the same host
+ *   phase.
  * Prints: {"cores":N,"pages":P,"sec":best,"docs_per_sec":...,"triples":T,"hash":H}
  *
  * Warmup is TIME-bounded (≥10 s cumulative, ≥2 passes), not size-bounded: the round-5
@@ -32,14 +36,14 @@ object ScalingRun {
     val cores = args(0).toInt
     val nPages = args(1).toInt
     val reps = if (args.length > 2) args(2).toInt else 3
-    val patternsFile = if (args.length > 3) Some(args(3)) else None
+    val kernelFile = if (args.length > 3) Some(args(3)) else None
 
     implicit val spark: SparkSession = util.Sessions.local(cores, s"graft-scale-c$cores")
 
-    val patterns: Seq[model.Pattern] = patternsFile match {
+    val kernel: extract.PageKernel = kernelFile match {
       case Some(path) =>
         val in = new java.io.ObjectInputStream(new java.io.FileInputStream(path))
-        try in.readObject().asInstanceOf[Seq[model.Pattern]] finally in.close()
+        try in.readObject().asInstanceOf[extract.PageKernel] finally in.close()
       case None =>
         // standalone usage: learn on the fixed gold sample (untimed; learning is
         // sample-scale by design — extraction is the corpus-scale path)
@@ -48,7 +52,7 @@ object ScalingRun {
         pipeline.KGPipeline.run(
           spark.createDataset(train.map(_.page)),
           spark.createDataset(train.flatMap(testgen.CorpusGen.goldAnnotations)),
-          testgen.CorpusGen.gazetteer).finalPatterns
+          testgen.CorpusGen.gazetteer).kernel
     }
 
     val pages = testgen.CorpusGen.pagesDS(nPages, partitions = 128)
@@ -65,8 +69,7 @@ object ScalingRun {
     val wt0 = System.nanoTime()
     var wpass = 0
     while (wpass < 2 || (System.nanoTime() - wt0) / 1e9 < 10.0) {
-      pipeline.ExtractJob.run(warm, patterns,
-        testgen.CorpusGen.gazetteer, s"/tmp/graft_scale_warmup_c$cores")
+      pipeline.ExtractJob.run(warm, kernel, s"/tmp/graft_scale_warmup_c$cores")
       wpass += 1
     }
     System.err.println(
@@ -82,8 +85,7 @@ object ScalingRun {
     }
     (1 to reps).foreach { i =>
       val (g0, t0) = (gcMillis, System.nanoTime())
-      val r = pipeline.ExtractJob.run(pages, patterns,
-        testgen.CorpusGen.gazetteer, s"/tmp/graft_scale_out_c${cores}_r$i")
+      val r = pipeline.ExtractJob.run(pages, kernel, s"/tmp/graft_scale_out_c${cores}_r$i")
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[scale] c$cores rep$i ${sec}%.2fs gc=${(gcMillis - g0) / 1000.0}%.1fs")
       if (sec < best) { best = sec; result = r }

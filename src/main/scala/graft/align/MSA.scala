@@ -71,9 +71,4 @@ object MSA {
       case Grid.Gap => "-"
       case t => t
     }.mkString(" ")
-
-  /** Canonical key for deterministic profile-id derivation (ids must be derived, not
-    * assigned — SURVEY.md §7.4.4). */
-  def canonicalKey(annotType: String, toks: Seq[String]): String =
-    annotType + "\u0001" + toks.mkString("\u0001")
 }

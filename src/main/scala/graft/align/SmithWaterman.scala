@@ -68,23 +68,6 @@ object SmithWaterman {
         else 1.0
     }
 
-  /** Most specific shared label between two columns and its weight; None if no match.
-    * Span-blind single-column variant kept for external callers. */
-  def matchLabel(a: GridCol, b: GridCol, p: Params): Option[(String, Double)] = {
-    var best: String = null
-    var bestW = 0.0
-    var i = 0
-    while (i < a.labels.length) {
-      val la = a.labels(i)
-      if (b.has(la)) {
-        val w = weight(la, p)
-        if (w > bestW) { best = la; bestW = w }
-      }
-      i += 1
-    }
-    if (best == null) None else Some((best, bestW))
-  }
-
   private val RelationMark = ":relation."
 
   /** Strip the trailing `|idx` of a relation label; (base, idx). Non-relation labels

@@ -62,6 +62,15 @@ object DocExtract {
       .select("term", "n_docs", "n_occ")
   }
 
+  /** One document's sentences: its text normalized, annotated and grouped under the
+    * url `synth://doc/<id>` (none when the text fails the normalize gate). */
+  private def docSentences(id: Long, text: String, gaz: Gazetteer,
+      withChunks: Boolean): Seq[SentenceAnnots] =
+    graft.ingest.Normalize.normalize(text).toSeq.flatMap { norm =>
+      val url = s"synth://doc/$id"
+      graft.mention.Sentences.group(url, Annotate.annotateOne(url, norm, gaz, withChunks))
+    }
+
   /** A hand-seeded two-slot relation pattern: gazetteer `:subject` immediately before
     * the trigger token, `:target` immediately after — minimal-span ⇒ single tokens. */
   def relationPattern(trigger: String, pred: String): Pattern =
@@ -86,15 +95,11 @@ object DocExtract {
         val index = idxB.value
         val g = gazB.value
         it.flatMap { case (id, text) =>
-          graft.ingest.Normalize.normalize(text).toSeq.flatMap { norm =>
-            val annots = Annotate.annotateOne(s"synth://doc/$id", norm, g,
-              withChunks = index.needsSyntax)
-            graft.mention.Sentences.group(s"synth://doc/$id", annots).flatMap { s =>
-              val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-              PatternMatcher.matchAll(grid, index)
-                .filter(_.subjBegin >= 0)
-                .map(h => (id, h.subjValue, h.pattern.annotType, h.value))
-            }
+          docSentences(id, text, g, index.needsSyntax).flatMap { s =>
+            val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
+            PatternMatcher.matchAll(grid, index)
+              .filter(_.subjBegin >= 0)
+              .map(h => (id, h.subjValue, h.pattern.annotType, h.value))
           }
         }
       }.toDF("doc_id", "subj", "pred", "obj")
@@ -117,15 +122,9 @@ object DocExtract {
       .as[(Long, String)]
       .mapPartitions { it =>
         val g = gazB.value
-        it.flatMap { case (id, text) =>
-          graft.ingest.Normalize.normalize(text).toSeq.flatMap { norm =>
-            // the statistics consumers match seeded token/lookup patterns only —
-            // chunk labels could never match, so skip the per-doc chunk scan
-            val annots = Annotate.annotateOne(s"synth://doc/$id", norm, g,
-              withChunks = false)
-            graft.mention.Sentences.group(s"synth://doc/$id", annots)
-          }
-        }
+        // the statistics consumers match seeded token/lookup patterns only — chunk
+        // labels could never match, so skip the per-doc chunk scan
+        it.flatMap { case (id, text) => docSentences(id, text, g, withChunks = false) }
       }
   }
 
@@ -327,14 +326,9 @@ object DocExtract {
         val index = idxB.value
         val g = gazB.value
         it.flatMap { case (id, text) =>
-          graft.ingest.Normalize.normalize(text).toSeq.flatMap { norm =>
-            val annots = Annotate.annotateOne(s"synth://doc/$id", norm, g,
-              withChunks = index.needsSyntax)
-            graft.mention.Sentences.group(s"synth://doc/$id", annots).flatMap { s =>
-              val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-              PatternMatcher.matchAll(grid, index).map(h =>
-                (id, h.pattern.annotType, h.value))
-            }
+          docSentences(id, text, g, index.needsSyntax).flatMap { s =>
+            val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
+            PatternMatcher.matchAll(grid, index).map(h => (id, h.pattern.annotType, h.value))
           }
         }
       }.toDF("id", "pred", "obj")

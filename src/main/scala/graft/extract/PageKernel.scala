@@ -3,16 +3,20 @@ package graft.extract
 import scala.collection.mutable
 import org.apache.spark.unsafe.types.UTF8String
 import graft.align.Grid
+import graft.mention.Sentences
 import graft.model.{Mention, Pattern, Provenance, SentenceAnnots, Triple}
-import graft.nlp.AhoCorasick
+import graft.nlp.{AhoCorasick, Annotate, Gazetteer}
 
 /**
- * One page → raw triples: the whole corpus-extraction pass of
- * [[graft.pipeline.KGPipeline]] for one page, as a pure function — the reference's
- * per-document AutoAnnotate → PopulateFrame (ref AutoAnnotate.java,
- * PopulateFrame.java:60-314), where every step is local to the page.
+ * One page → raw triples: the whole corpus-extraction pass for one page, as a pure
+ * function — the reference's per-document AutoAnnotate → PopulateFrame (ref
+ * AutoAnnotate.java, PopulateFrame.java:60-314), where every step is local to the page.
+ * Every corpus job runs it: [[graft.pipeline.KGPipeline]], [[graft.pipeline.ExtractJob]]
+ * (the scaling gate) and [[graft.streaming.StreamExtract]].
  *
- * Per sentence, ONE grid serves every matcher step:
+ * Per page, [[extract]] annotates the normalized text (tokens, gazetteer Lookups, and
+ * chunks only when a compiled pattern can match a syntax label) and groups it into
+ * sentences. Per sentence, ONE grid serves every matcher step:
  *  - two-slot relation patterns → triples with the subject bound by the match;
  *  - plain context patterns → mentions (subject resolved below), pair-gated, scored by
  *    the pair's precision, then the value-prior veto;
@@ -33,7 +37,17 @@ final class PageKernel(
     allowedPairs: Map[(Long, Long), Double],
     priorVeto: Map[(String, String), Long],
     dictionary: PageKernel.Dictionary,
+    gaz: Gazetteer,
     prm: PatternMatcher.Params) extends Serializable {
+
+  /** Chunk the page only when some relation, context or target pattern can match a
+    * syntax label: otherwise the per-page chunk scan buys nothing. */
+  private val withChunks = relIndex.needsSyntax || ctxIndex.needsSyntax ||
+    targets.valuesIterator.exists(PatternMatcher.needsSyntax)
+
+  /** Raw auto triples of one page from its url and normalized text. */
+  def extract(url: String, text: String): Vector[Triple] =
+    apply(url, Sentences.group(url, Annotate.annotateOne(url, text, gaz, withChunks)))
 
   /** Raw auto triples of one page from its sentences (any order). */
   def apply(url: String, sentences: Seq[SentenceAnnots]): Vector[Triple] = {
@@ -56,14 +70,15 @@ final class PageKernel(
 
 object PageKernel {
 
-  /** Compile the extraction model. `dictEntries` are (annotType, value, priorBp). */
+  /** Compile the extraction model. `dictEntries` are (annotType, value, priorBp);
+    * `gaz` annotates the Lookups of every page [[PageKernel.extract]] reads. */
   def apply(relPatterns: Seq[Pattern], plainPatterns: Seq[Pattern],
       targetPatterns: Seq[Pattern], allowedPairs: Map[(Long, Long), Double],
       priorVeto: Map[(String, String), Long], dictEntries: Seq[(String, String, Long)],
-      prm: PatternMatcher.Params): PageKernel =
+      gaz: Gazetteer, prm: PatternMatcher.Params): PageKernel =
     new PageKernel(PatternMatcher.buildIndex(relPatterns),
       PatternMatcher.buildIndex(plainPatterns), compileTargets(targetPatterns),
-      allowedPairs, priorVeto, Dictionary(dictEntries), prm)
+      allowedPairs, priorVeto, Dictionary(dictEntries), gaz, prm)
 
   /** Compiled target profiles grouped by annotType, longest-first. */
   def compileTargets(

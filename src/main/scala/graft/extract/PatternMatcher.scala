@@ -82,8 +82,7 @@ object PatternMatcher {
 
     /** Does any pattern reference a chunker/parser label? When false, extraction-time
       * grids can skip the chunking pass entirely (its labels could never match). */
-    lazy val needsSyntax: Boolean =
-      compiled.exists(_.pattern.toks.exists(_.startsWith(":syntaxtreenode")))
+    lazy val needsSyntax: Boolean = PatternMatcher.needsSyntax(compiled)
 
     /** @param missSlack lenient-mode slack: forward candidates missing up to this
       *        many literals (ref `hits >= size − maxGaps − 3`,
@@ -104,6 +103,10 @@ object PatternMatcher {
       out.result()
     }
   }
+
+  /** Does any of `cs` reference a chunker/parser label? */
+  def needsSyntax(cs: Iterable[Compiled]): Boolean =
+    cs.exists(_.pattern.toks.exists(_.startsWith(":syntaxtreenode")))
 
   def buildIndex(patterns: Seq[Pattern]): Index = {
     // longest-pattern-first match priority (ref ProfileReader.java:354-383), ties by
@@ -321,8 +324,7 @@ object PatternMatcher {
    * patterns tried longest-first; a hit whose target span is contained within an
    * already-accepted hit's span is dropped (ref ProfileMatcher.java:705-730).
    */
-  def matchAll(grid: Grid, index: Index, prm: Params = Params(),
-      suppressOverlaps: Boolean = true): Vector[Hit] = {
+  def matchAll(grid: Grid, index: Index, prm: Params = Params()): Vector[Hit] = {
     val cands = index.candidates(grid.labelSet, prm.maxMissedLiterals)
     val accepted = mutable.ArrayBuffer.empty[Hit]
     cands.foreach { c =>
@@ -333,9 +335,7 @@ object PatternMatcher {
           // (longer) patterns own their sites (ref targetRangeList,
           // ProfileMatcher.java:527-540); collision = overlap by default, exact
           // containment in reference-faithful mode (prm.containmentSuppression)
-          val overlaps = suppressOverlaps &&
-            accepted.exists(h => collides(prm, h.targetBegin, h.targetEnd, s.tb, s.te))
-          if (!overlaps) {
+          if (!accepted.exists(h => collides(prm, h.targetBegin, h.targetEnd, s.tb, s.te))) {
             val value = coveredText(grid, s.tb, s.te)
             val subjValue = if (s.sb >= 0) coveredText(grid, s.sb, s.se) else ""
             accepted += Hit(c.pattern, s.tb, s.te, value, s.sb, s.se, subjValue)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.align.Grid
-import graft.extract.PatternMatcher
+import graft.extract.{PageKernel, PatternMatcher}
 import graft.model.{Pattern, PatternMatch, SentenceAnnots}
 
 /**
@@ -12,9 +12,9 @@ import graft.model.{Pattern, PatternMatch, SentenceAnnots}
  * BestPatterns (/root/reference/src/msa/BestPatterns.java:417-567, ProfileStats.java)
  * as declarative Spark aggregations:
  *
- *  A1  TP/FP counting per pattern with a per-doc cap of 50 counted matches
- *      (ref BestPatterns.java:441-443,468-470) — pre-aggregate per (pattern, url) with
- *      least(count, 50) so the cap is map-side and skew-proof.
+ *  A1  TP/FP counting per (context, target) pair with a per-doc cap of 50 counted
+ *      matches (ref BestPatterns.java:441-443,468-470) — pre-aggregate per (pair, url)
+ *      with least(count, 50) so the cap is map-side and skew-proof.
  *  A2  precision = tp / (tp + max(fp−1, 0)) — the reference subtracts 1 from the
  *      NEGATIVE count only, "to correct for human errors or unannotated retrospective
  *      cases" (BestPatterns.java:525-531) — promote at prec ≥ posThreshold ∧
@@ -36,27 +36,6 @@ object PatternStats {
       activeThreshold: Double = 0.8,
       matcher: PatternMatcher.Params = PatternMatcher.Params())
 
-  /** Apply a pattern set to sentences → match occurrences (the `index` table analog). */
-  def applyPatterns(sentences: Dataset[SentenceAnnots], patterns: Seq[Pattern],
-      cfg: Config = Config())(implicit spark: SparkSession): Dataset[PatternMatch] = {
-    import spark.implicits._
-    val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(patterns))
-    sentences.mapPartitions { it =>
-      val index = idxB.value
-      it.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        if (PatternMatcher.isAllCapsSentence(grid)) Iterator.empty
-        // stats count RAW per-pattern matches: the reference computes precision before
-        // overlap filtering (BestPatterns.filterOverlapping runs after the stats pass)
-        else PatternMatcher.matchAll(grid, index, cfg.matcher,
-          suppressOverlaps = false).iterator.map { h =>
-          PatternMatch(h.pattern.profileId, h.pattern.profileId, s.url,
-            h.targetBegin, h.targetEnd, PatternMatcher.trimTrailingPunct(h.value))
-        }
-      }
-    }
-  }
-
   /**
    * Pair-model match collection — the faithful reference semantics: context profiles
    * (profileType 0) enumerate candidate spans, target profiles (profileType 1) decide
@@ -70,11 +49,7 @@ object PatternStats {
       implicit spark: SparkSession): Dataset[PatternMatch] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(contextPatterns))
-    val tgtB = spark.sparkContext.broadcast(
-      targetPatterns.groupBy(_.annotType).map { case (t, ps) =>
-        t -> ps.sortBy(p => (-p.toks.size, p.toks.mkString("")))
-          .map(PatternMatcher.compile).toIndexedSeq
-      })
+    val tgtB = spark.sparkContext.broadcast(PageKernel.compileTargets(targetPatterns))
     val allowedB = spark.sparkContext.broadcast(allowedPairs)
     val excludedB = spark.sparkContext.broadcast(excludedPairs)
     sentences.mapPartitions { it =>
@@ -228,47 +203,6 @@ object PatternStats {
       .join(goldKeys,
         $"url" === $"g_url" && $"gb" === $"g_begin" && $"ge" === $"g_end" &&
           $"p_type" === $"g_type", "left")
-  }
-
-  /**
-   * Score matches against gold spans with ±tolerance boundary matching
-   * (ref MSAUtils.matchAnswer, /root/reference/src/msa/MSAUtils.java:705-763: the
-   * predicted key is probed at {-1,0,+1}² offsets). Implemented scale-first: the
-   * predicted side explodes its (begin,end) key into the 9 tolerant variants and
-   * equi-joins gold — no O(n²) theta join.
-   */
-  def score(matches: Dataset[PatternMatch], gold: DataFrame, patterns: Dataset[Pattern],
-      cfg: Config = Config())(implicit spark: SparkSession): Dataset[Pattern] = {
-    import spark.implicits._
-    val judged = judgeMatches(matches, gold, patterns, cfg)
-      .groupBy($"profileId", $"url", $"begin", $"end")
-      .agg(max(when($"g_url".isNotNull, 1).otherwise(0)).as("isTp"))
-
-    // A1 with per-doc cap 50 (map-side, skew-proof)
-    val perDoc = judged.groupBy($"profileId", $"url")
-      .agg(least(sum($"isTp"), lit(50L)).as("tp"),
-           least(sum(lit(1) - $"isTp"), lit(50L)).as("fp"))
-    val counts = perDoc.groupBy($"profileId")
-      .agg(sum($"tp").as("tp"), sum($"fp").as("fp"))
-
-    // A2 precision with the reference's neg-only −1 correction
-    // (ref BestPatterns.java:525-531: if (negCount > 0) negCount--)
-    val stats = counts
-      .withColumn("total", $"tp" + $"fp")
-      .withColumn("fpAdj", greatest($"fp" - 1, lit(0L)))
-      .withColumn("prec",
-        when($"tp" + $"fpAdj" > 0, $"tp".cast("double") / ($"tp" + $"fpAdj"))
-          .otherwise(lit(0.0)))
-      .drop("fpAdj")
-
-    val kept = stats.filter($"prec" >= cfg.posThreshold && $"total" >= cfg.minCount)
-
-    patterns.toDF().drop("score", "truePos", "falsePos")
-      .join(kept.select($"profileId", $"prec".as("score"), $"tp".as("truePos"),
-        $"fp".as("falsePos")), Seq("profileId"), "inner")
-      .select($"profileId", $"toks", $"annotType", $"profileType", $"group",
-        $"score", $"truePos", $"falsePos", $"rows")
-      .as[Pattern]
   }
 
   /**

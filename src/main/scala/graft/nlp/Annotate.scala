@@ -15,15 +15,20 @@ import graft.ingest.HtmlText
  */
 object Annotate {
 
-  /** Extract + normalize text for each page; pages failing the alnum gate are dropped,
-    * exactly like the reference's regex gate (src/gate/GateBatch.java:346). */
+  /** One page's normalized text: its `text` column when set, else the text of its
+    * html; None when it fails the alnum gate, exactly like the reference's regex gate
+    * (src/gate/GateBatch.java:346). Every corpus job reads its pages through this. */
+  def pageText(p: Page): Option[String] = {
+    val raw = if (p.text != null && p.text.nonEmpty) Option(p.text)
+              else Option(HtmlText.extract(p.html))
+    raw.flatMap(graft.ingest.Normalize.normalize)
+  }
+
+  /** (url, normalized text) per page ([[pageText]]); gated pages are dropped. */
   def extractText(pages: Dataset[Page])(implicit spark: SparkSession): Dataset[(String, String)] = {
     import spark.implicits._
-    pages.flatMap { p =>
-      val raw = if (p.text != null && p.text.nonEmpty) Option(p.text)
-                else Option(HtmlText.extract(p.html))
-      raw.flatMap(graft.ingest.Normalize.normalize).map(t => (p.url, t))
-    }.toDF("url", "text").as[(String, String)]
+    pages.flatMap(p => pageText(p).map(t => (p.url, t)))
+      .toDF("url", "text").as[(String, String)]
   }
 
   /** Full annotation pass. Gazetteer is broadcast once (north-rule "automata broadcast
@@ -66,15 +71,6 @@ object Annotate {
         graft.mention.Sentences.group(url, annots)
       }
     }
-  }
-
-  /** P2: drop punctuation Token annotations — the reference's `punctuation=false` mode
-    * (/root/reference/src/msa/db/MySQLDBInterface.java:326-329). Declarative column
-    * filter → stays inside whole-stage codegen, pushes past the scan where possible. */
-  def dropPunctuation(annots: Dataset[Annotation]): Dataset[Annotation] = {
-    import org.apache.spark.sql.functions.col
-    annots.filter(!(col("annotType") === "Token" &&
-      col("features").getItem("kind") === "punctuation"))
   }
 
   /** Deterministic per-page annotation: tokens/sentences/numbers, gazetteer Lookups,

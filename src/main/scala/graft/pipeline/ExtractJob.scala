@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.{Page, Pattern, Triple}
+import graft.extract.PageKernel
+import graft.model.Page
 
 /**
  * The production extraction path in isolation: the job that runs over the full
@@ -10,44 +11,22 @@ import graft.model.{Page, Pattern, Triple}
  * exactly the reference's split: learning on status-1 docs only, extraction on status-0,
  * /root/reference/src/msa/IEDriver.java:441-450; SURVEY.md §7.4.2).
  *
- * Plan shape: pages → fused per-page extraction (normalize → tokenize → gazetteer →
- * sentence grouping → broadcast-automaton pattern match → W4 merge → subject
- * resolution), all inside ONE narrow mapPartitions — annotations never leave the page
- * that produced them, so the big path has ZERO shuffles before the final (tiny) triple
- * dedup + write. This is [[graft.streaming.StreamExtract.extractPage]], the same kernel
- * the streaming path runs; StreamingSpec proves it emits byte-identical triples to the
- * relational join/window formulation in [[graft.extract.Extract]] (which remains the
- * path of choice when annotations come from a stored annotations table rather than
- * inline extraction).
- *
- * Wall-clock therefore scales ~linearly with cores — this is the job the
- * two-parallelism scaling evidence runs.
+ * It is `KGPipeline`'s corpus pass ([[KGPipeline.pageTriples]]: the learned
+ * [[graft.extract.PageKernel]] — pair gate, prior veto, dictionary pass, same-span
+ * dedup, W4 merge, subject resolution — inside ONE narrow mapPartitions), followed by a
+ * dedup on the mention site (subj, pred, obj, url, begin) and a parquet write. There
+ * is no shuffle before that dedup, so wall-clock scales ~linearly with cores: this is
+ * the job the N-vs-4N scaling gate times. Its triples are mention-level rows, not the
+ * distinct facts `RunKG` commits after linking and canonicalization.
  */
 object ExtractJob {
 
   final case class Result(nTriples: Long, outputHash: Long)
 
-  def run(pages: Dataset[Page], patterns: Seq[Pattern], gaz: graft.nlp.Gazetteer,
-      outPath: String)(implicit spark: SparkSession): Result = {
-    import spark.implicits._
-    // same pattern split as KGPipeline/StreamExtract: two-slot upgrades bind subjects
-    val upgraded = patterns.map(p => p -> graft.extract.Extract.toRelationPattern(p))
-    val gazB = spark.sparkContext.broadcast(gaz)
-    val idxB = spark.sparkContext.broadcast(
-      graft.extract.PatternMatcher.buildIndex(upgraded.collect { case (p, None) => p }))
-    val relB = spark.sparkContext.broadcast(
-      graft.extract.PatternMatcher.buildIndex(upgraded.collect { case (_, Some(r)) => r }))
-    val triples: Dataset[Triple] = pages.mapPartitions { it =>
-      val (g, idx, rel) = (gazB.value, idxB.value, relB.value)
-      it.flatMap { p =>
-        val raw = if (p.text != null && p.text.nonEmpty) Option(p.text)
-                  else Option(graft.ingest.HtmlText.extract(p.html))
-        raw.flatMap(graft.ingest.Normalize.normalize).toVector.flatMap { t =>
-          graft.streaming.StreamExtract.extractPage(p.url, t, g, idx, relIndex = rel)
-        }
-      }
-    }
-    val out = triples.toDF().dropDuplicates("subj", "pred", "obj", "url", "begin")
+  def run(pages: Dataset[Page], kernel: PageKernel, outPath: String)(
+      implicit spark: SparkSession): Result = {
+    val out = KGPipeline.pageTriples(pages, kernel).toDF()
+      .dropDuplicates("subj", "pred", "obj", "url", "begin")
     // count + order-insensitive hash ride the WRITE itself via Dataset.observe —
     // zero extra jobs, zero read-back scan (the job used to re-read the parquet it
     // just wrote only to aggregate identity, a whole extra job inside every timed

@@ -6,7 +6,6 @@ import graft.canon.ConnectedComponents
 import graft.extract.{Extract, PageKernel}
 import graft.learn.{GenMSA, PatternStats, ValueProbs}
 import graft.link.EntityLink
-import graft.mention.Sentences
 import graft.model.{Annotation, Page, Pattern, SentenceAnnots, Triple}
 import graft.nlp.{Annotate, Gazetteer}
 import graft.runtime.StageCheckpoint
@@ -41,7 +40,8 @@ import graft.sink.Materialize
  */
 object KGPipeline {
 
-  final case class Result(finalPatterns: Seq[Pattern], canonical: Dataset[Triple])
+  /** The learned page kernel and the canonical triples it yields over the corpus. */
+  final case class Result(kernel: PageKernel, canonical: Dataset[Triple])
 
   /** Subject buckets of the committed triple table. */
   private val Buckets = 16
@@ -69,31 +69,33 @@ object KGPipeline {
     // target upgrade to two-slot relation patterns (subject bound by the match); the
     // rest go through mention extraction + sentence-local nearest-entity resolution.
     // Value-probability priors (A6) veto mentions the validated corpus distrusts and
-    // feed the dictionary pass for values it trusts. The corpus pass chunks only when
-    // a surviving pattern can actually match syntax labels — learning always chunks
-    // (the training slice), extraction pays the per-page chunk scan only when it buys
-    // recall.
-    val needSyntax = (m.finalPatterns ++ m.tgtPatterns)
-      .exists(_.toks.exists(_.startsWith(":syntaxtreenode")))
-    val kernelB = spark.sparkContext.broadcast(kernelOf(m, train.sents, goldAnnots))
-    val gazB = spark.sparkContext.broadcast(gaz)
-    val pageTriples = Annotate.extractText(pages).mapPartitions { it =>
-      val (g, kernel) = (gazB.value, kernelB.value)
-      it.flatMap { case (url, text) =>
-        kernel(url, Sentences.group(url, Annotate.annotateOne(url, text, g, needSyntax)))
-      }
-    }
+    // feed the dictionary pass for values it trusts.
+    val kernel = kernelOf(m, train.sents, goldAnnots, gaz)
     // validated gold spans ALSO materialize triples (ref PopulateFrame scans
     // validated + auto annotations, /root/reference/src/msa/PopulateFrame.java:144-192);
     // their provenance outranks auto rows at the same site in Materialize's
     // precedence dedup. One small cogroup per provenance class over the train slice.
     // rawTriples feeds both the CC edge derivation and the final canonical output —
     // persist it or every downstream action recomputes the whole extraction.
-    val rawTriples = pageTriples
+    val rawTriples = pageTriples(pages, kernel)
       .unionByName(goldTriplesOf(train.sents, goldAnnots))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    Result(m.finalPatterns, canonicalOf(rawTriples))
+    Result(kernel, canonicalOf(rawTriples))
+  }
+
+  /** The corpus pass every batch job runs: ONE narrow mapPartitions, each page read
+    * ([[Annotate.pageText]]) and mapped to raw auto triples by the broadcast kernel
+    * ([[PageKernel.extract]]). No annotation, sentence or mention row leaves the task
+    * that read its page. */
+  def pageTriples(pages: Dataset[Page], kernel: PageKernel)(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    val kernelB = spark.sparkContext.broadcast(kernel)
+    Annotate.extractText(pages).mapPartitions { it =>
+      val k = kernelB.value
+      it.flatMap { case (url, text) => k.extract(url, text) }
+    }
   }
 
   /** The training slice: pages having gold annotations, with the gold spans (small,
@@ -219,7 +221,8 @@ object KGPipeline {
     * plain patterns, the pair gate, and the value priors of the training slice (the
     * veto table, and the dictionary of values trusted at ≥ dictThreshold). */
   private def kernelOf(m: Learned, trainSents: Dataset[SentenceAnnots],
-      goldAnnots: Dataset[Annotation])(implicit spark: SparkSession): PageKernel = {
+      goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
+      implicit spark: SparkSession): PageKernel = {
     val upgraded = m.finalPatterns.map(p => p -> Extract.toRelationPattern(p))
     val priorRows = ValueProbs.compute(trainSents, goldAnnots.toDF(), PriorsCfg).collect()
     val priorVeto = priorRows.map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
@@ -228,7 +231,7 @@ object KGPipeline {
       .map(r => (r.getString(0), r.getString(1), r.getLong(4)))
     PageKernel(upgraded.collect { case (_, Some(rel)) => rel },
       upgraded.collect { case (p, None) => p }, m.tgtPatterns, m.allowedPairs, priorVeto,
-      dictEntries, StatsCfg.matcher)
+      dictEntries, gaz, StatsCfg.matcher)
   }
 
   /**
@@ -296,7 +299,7 @@ object KGPipeline {
     // the corpus pass of run() over the materialized sentence table: its rows are
     // regrouped per page, then the same page kernel runs
     val rawTriples = cp.materialize("raw_triples", fingerprint) {
-      val kernelB = spark.sparkContext.broadcast(kernelOf(m, train.sents, goldAnnots))
+      val kernelB = spark.sparkContext.broadcast(kernelOf(m, train.sents, goldAnnots, gaz))
       allSentsDF.as[SentenceAnnots].groupByKey(_.url)
         .flatMapGroups((url, sents) => kernelB.value(url, sents.toVector))
         .unionByName(goldTriplesOf(train.sents, goldAnnots)).toDF()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.extract.{PageKernel, PatternMatcher}
 import graft.mention.Sentences
-import graft.model.{Mention, Page, Pattern, Triple}
+import graft.model.{Mention, Page, Triple}
 import graft.nlp.{Annotate, Gazetteer}
 
 /** A triple carrying its page's event time (warc_ts), for watermarked windowed aggs. */
@@ -26,11 +26,13 @@ final case class TimedTriple(
  *
  * The reference "streams" by polling a status table every 5 s
  * (/root/reference/src/msa/IEDriver.java:887,1340-1353); this module is the native
- * replacement: `readStream` over the pages source → the SAME deterministic per-page
- * kernels (normalize → tokenize → gazetteer → pattern match → local subject resolution)
- * as the batch path, re-shaped so every operator is narrow (no joins, no windows) and
- * therefore legal and efficient in a streaming plan. Parity with the batch path is
- * asserted by StreamingSpec (same corpus → byte-identical triple set).
+ * replacement: `readStream` over the pages source → the SAME per-page read
+ * ([[graft.nlp.Annotate.pageText]]) and learned page kernel
+ * ([[graft.extract.PageKernel]]: pair-gated matching, prior veto, dictionary pass,
+ * same-span dedup, W4 merge, subject resolution) as the batch corpus pass, every
+ * operator narrow (no joins, no windows) and therefore legal in a streaming plan.
+ * StreamingSpec asserts the streaming path equals the relational paired chain in
+ * [[graft.extract.Extract]] on the same corpus.
  *
  * Three capabilities:
  *  - [[triples]]: stateless per-page extraction, works on batch AND streaming Datasets;
@@ -46,11 +48,12 @@ final case class TimedTriple(
  */
 object StreamExtract {
 
-  /** Pure per-page extraction: the whole batch pipeline (annotate → sentences → match →
-    * W4 adjacent merge → sentence-local subject resolution, plus direct two-slot
-    * relation matches) run locally for one page. Mirrors
-    * Extract.mentions/mergeAdjacent/triples ∪ Extract.relationTriples semantics
-    * without joins/windows. */
+  /** Unpaired per-page extraction (annotate → sentences → `matchAll` → W4 adjacent
+    * merge → sentence-local subject resolution, plus direct two-slot relation
+    * matches): no pair gate, no prior veto, no dictionary pass. No job runs it; it is
+    * the per-page mirror of Extract.mentions/mergeAdjacent/triples ∪
+    * Extract.relationTriples, kept for that parity test and the benchmark's kernel
+    * table. Jobs run [[graft.extract.PageKernel.extract]]. */
   def extractPage(url: String, text: String, gaz: Gazetteer,
       index: PatternMatcher.Index, prm: PatternMatcher.Params = PatternMatcher.Params(),
       subjectMajorType: String = "entity",
@@ -95,30 +98,19 @@ object StreamExtract {
   /** Shared empty pattern index (no-op relation pass). */
   val EmptyIndex: PatternMatcher.Index = PatternMatcher.buildIndex(Nil)
 
-  /** Stateless streaming-legal extraction: Dataset[Page] → Dataset[TimedTriple].
-    * Works identically on a batch Dataset (used by StreamingSpec for parity). */
-  def triples(pages: Dataset[Page], patterns: Seq[Pattern], gaz: Gazetteer,
-      prm: PatternMatcher.Params = PatternMatcher.Params())(
+  /** Stateless streaming-legal extraction: Dataset[Page] → Dataset[TimedTriple], each
+    * page read by [[Annotate.pageText]] and mapped by the broadcast `kernel`. Works
+    * identically on a batch Dataset (used by StreamingSpec for parity). */
+  def triples(pages: Dataset[Page], kernel: PageKernel)(
       implicit spark: SparkSession): Dataset[TimedTriple] = {
     import spark.implicits._
-    // same pattern split as KGPipeline: upgradable patterns bind their subject
-    // in-match (two-slot), the rest resolve subjects sentence-locally
-    val upgraded = patterns.map(p => p -> graft.extract.Extract.toRelationPattern(p))
-    val gazB = spark.sparkContext.broadcast(gaz)
-    val idxB = spark.sparkContext.broadcast(
-      PatternMatcher.buildIndex(upgraded.collect { case (p, None) => p }))
-    val relB = spark.sparkContext.broadcast(
-      PatternMatcher.buildIndex(upgraded.collect { case (_, Some(r)) => r }))
+    val kernelB = spark.sparkContext.broadcast(kernel)
     pages.mapPartitions { it =>
-      val (g, idx, rel) = (gazB.value, idxB.value, relB.value)
+      val k = kernelB.value
       it.flatMap { p =>
-        val raw = if (p.text != null && p.text.nonEmpty) Option(p.text)
-                  else Option(graft.ingest.HtmlText.extract(p.html))
-        raw.flatMap(graft.ingest.Normalize.normalize).toVector.flatMap { t =>
-          extractPage(p.url, t, g, idx, prm, relIndex = rel).map(tr =>
-            TimedTriple(tr.subj, tr.pred, tr.obj, tr.url, tr.begin, tr.end,
-              tr.profileId, tr.score, p.warc_ts, tr.provenance))
-        }
+        Annotate.pageText(p).toVector.flatMap(t => k.extract(p.url, t)).map(tr =>
+          TimedTriple(tr.subj, tr.pred, tr.obj, tr.url, tr.begin, tr.end,
+            tr.profileId, tr.score, p.warc_ts, tr.provenance))
       }
     }
   }
@@ -264,10 +256,10 @@ object StreamExtract {
   /** Launch the continuous ingest job: stream → extract → dedup → parquet append with
     * exactly-once checkpointing. Trigger.AvailableNow drains what exists then stops —
     * the batch-backfill mode; omit for continuous micro-batches. */
-  def run(pages: Dataset[Page], patterns: Seq[Pattern], gaz: Gazetteer,
-      outPath: String, checkpointPath: String, availableNow: Boolean = true)(
+  def run(pages: Dataset[Page], kernel: PageKernel, outPath: String,
+      checkpointPath: String, availableNow: Boolean = true)(
       implicit spark: SparkSession): StreamingQuery = {
-    val out = dedupedTriples(triples(pages, patterns, gaz))
+    val out = dedupedTriples(triples(pages, kernel))
     val writer = out.writeStream
       .format("parquet")
       .option("path", outPath)

@@ -6,10 +6,8 @@ import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.align.Grid
 import graft.extract.{Extract, PageKernel}
-import graft.learn.{GenMSA, PatternStats, ValueProbs}
-import graft.model.{Mention, Page, Pattern, SentenceAnnots, Triple}
+import graft.model.{Mention, Page, SentenceAnnots, Triple}
 import graft.nlp.Annotate
 import graft.pipeline.KGPipeline
 import graft.testgen.CorpusGen
@@ -23,73 +21,10 @@ import graft.testgen.CorpusGen
 class PageKernelSpec extends AnyFunSuite with SparkTest {
   import PageKernelSpec._
 
-  /** Model learned on a CorpusGen slice through the public calls `KGPipeline.run`
-    * makes, plus hand-set priors: a veto on a city the patterns extract, and
-    * dictionary entries that hit pattern sites (score ties broken on profileId),
-    * the vetoed city (the dictionary pass is not vetoed) and adjacent filler words
-    * (W4 merges). */
-  private lazy val model: Model = {
-    import spark.implicits._
-    val train = CorpusGen.pages(40)
-    val goldRows = train.flatMap(CorpusGen.goldAnnotations)
-    val gold = spark.createDataset(goldRows)
-    val ts = Annotate.annotateSentences(spark.createDataset(train.map(_.page)),
-      CorpusGen.gazetteer, goldRows.groupBy(_.url)).cache()
-    val statsCfg = PatternStats.Config()
-    val patterns = GenMSA.learn(ts, Set("gold"))
-    val learned = patterns.collect().toSeq
-    val ctx = GenMSA.subsumptionFilter(
-      learned.filter(p => p.profileType == 0 || p.profileType == 3))
-    val tgt = learned.filter(_.profileType == 1)
-    val tokenSpans = ts.flatMap(s =>
-        s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
-      .toDF("url", "begin", "end")
-    val snapped = PatternStats.snapGoldToTokens(
-      gold.toDF().select($"url", $"annotType", $"begin", $"end"), tokenSpans)
-    val pairStats = PatternStats.scorePairs(
-      PatternStats.applyPatternsPaired(ts, ctx, tgt, statsCfg), snapped, patterns, statsCfg)
-    val allowed = PatternStats.keptPairs(pairStats, statsCfg)
-      .join(PatternStats.activeProfiles(pairStats, statsCfg), Seq("profileId"), "left_semi")
-      .select($"profileId", $"targetId", $"prec")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val kept = allowed.keySet.map(_._1)
-    val finalPatterns = ctx.filter(p => kept.contains(p.profileId)).map { p =>
-      p.copy(score = allowed.collect { case ((c, _), prec) if c == p.profileId => prec }.max)
-    }
-    val priorRows = ValueProbs.compute(ts, gold.toDF()).collect()
-    ts.unpersist()
-    val upgraded = finalPatterns.map(p => p -> Extract.toRelationPattern(p))
-    // two-slot relation patterns, paired with every learned target profile of their type
-    val seededRel = Seq(
-      Pattern(9001L, Seq(Grid.Subject, ":token|string|employs", Grid.Target),
-        "employee-count", 0, "seed", 1.0, 0, 0, 0),
-      Pattern(9002L, Seq(Grid.Subject, ":token|string|was", ":token|string|founded",
-        ":token|string|in", Grid.Target), "founded-year", 0, "seed", 1.0, 0, 0, 0))
-    val seededPairs = for (r <- seededRel; t <- tgt if t.annotType == r.annotType)
-      yield (r.profileId, t.profileId) -> 0.875
-    Model(upgraded.collect { case (_, Some(r)) => r } ++ seededRel,
-      upgraded.collect { case (p, None) => p }, tgt, allowed ++ seededPairs,
-      priorRows.map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap +
-        (("hq-city", "gotham") -> -1L),
-      Seq(("hq-city", "metropolis", 10000L), ("hq-city", "springfield", 9000L),
-        ("hq-city", "gotham", 9000L), ("filler", "the", 5000L), ("filler", "market", 5000L),
-        ("filler", "report", 5000L)))
-  }
+  private def model: LearnedModel = LearnedModel.model
 
-  /** `KGPipeline`'s corpus pass before the kernel: one Dataset operator per step. */
-  private def relational(sents: Dataset[SentenceAnnots], m: Model): Seq[Triple] = {
-    val prm = PatternStats.Config().matcher
-    val relTriples = Extract.relationTriplesPaired(sents, m.rel, m.tgt, m.allowed, prm)
-    val patMentions = Extract.applyPriors(
-      Extract.mentionsPaired(sents, m.plain, m.tgt, m.allowed, prm), m.veto)
-    val mentions = Extract.mergeAdjacent(Extract.dedupMentions(
-      patMentions.unionByName(Extract.dictionaryMentions(sents, m.dict))))
-    Extract.triples(sents, mentions).unionByName(relTriples).collect().toSeq
-  }
-
-  private def viaKernel(sents: Dataset[SentenceAnnots], m: Model): Seq[Triple] = {
-    val kernel = PageKernel(m.rel, m.plain, m.tgt, m.allowed, m.veto, m.dict,
-      PatternStats.Config().matcher)
+  private def viaKernel(sents: Dataset[SentenceAnnots]): Seq[Triple] = {
+    val kernel = model.kernel
     sents.collect().toSeq.groupBy(_.url).toSeq
       .flatMap { case (url, ss) => kernel(url, ss.reverse) } // any sentence order
   }
@@ -98,8 +33,8 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val sents = Annotate.annotateSentences(spark.createDataset(pages), CorpusGen.gazetteer)
       .cache()
-    val want = sorted(relational(sents, model))
-    val got = sorted(viaKernel(sents, model))
+    val want = sorted(model.relational(sents))
+    val got = sorted(viaKernel(sents))
     sents.unpersist()
     assert(want.nonEmpty)
     assert(got.size === want.size)
@@ -194,10 +129,6 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
 }
 
 object PageKernelSpec {
-  final case class Model(rel: Seq[Pattern], plain: Seq[Pattern], tgt: Seq[Pattern],
-      allowed: Map[(Long, Long), Double], veto: Map[(String, String), Long],
-      dict: Seq[(String, String, Long)])
-
   val TripleCols: Seq[String] =
     Seq("subj", "pred", "obj", "url", "begin", "end", "profileId", "score", "provenance")
 

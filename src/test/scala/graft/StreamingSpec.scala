@@ -4,7 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
-import graft.model.{Page, Pattern}
+import graft.align.Grid
+import graft.extract.{Extract, PatternMatcher}
+import graft.model.{Page, Pattern, Triple}
 import graft.streaming.{StreamExtract, TimedTriple}
 import graft.testgen.CorpusGen
 
@@ -16,48 +18,75 @@ import graft.testgen.CorpusGen
  */
 class StreamingSpec extends AnyFunSuite with SparkTest {
 
-  // hand-seeded patterns matching the CorpusGen grammar (no learning needed here —
-  // learning parity is PipelineSpec's job)
-  private val seedPatterns: Seq[Pattern] = Seq(
-    Pattern(1L, Seq(":token|string|founded", ":token|string|in", graft.align.Grid.Target),
-      "founded-year", 0, "seed", 1.0, 0, 0, 0),
-    Pattern(2L, Seq(":token|string|headquartered", ":token|string|in", graft.align.Grid.Target),
-      "hq-city", 0, "seed", 1.0, 0, 0, 0),
-    Pattern(3L, Seq(":token|string|employs", graft.align.Grid.Target,
-      ":token|string|people"), "employee-count", 0, "seed", 1.0, 0, 0, 0),
-    // entity literal before target → auto-upgrades to a two-slot relation pattern,
-    // exercising the relation path on BOTH sides of the parity test
-    Pattern(4L, Seq(":lookup|majortype|org", ":token|string|employs",
-      graft.align.Grid.Target), "employer-rel", 0, "seed", 1.0, 0, 0, 0))
-
-  private def tripleKey(t: TimedTriple) = (t.subj, t.pred, t.obj, t.url, t.begin, t.end)
+  /** The learned extraction model every corpus job runs (relation patterns, pair
+    * gate, veto, dictionary). */
+  private def kernel = LearnedModel.model.kernel
 
   test("parity: streaming per-page path == batch join/window path on the same corpus") {
     import spark.implicits._
+    val m = LearnedModel.model
+    val pages = spark.createDataset(CorpusGen.pages(120).map(_.page))
+
+    // batch path: the relational paired chain (joins + windows) over the sentence table,
+    // annotated as the kernel annotates
+    val sents = graft.nlp.Annotate.annotateSentences(pages, CorpusGen.gazetteer,
+      withChunks = m.withChunks).cache()
+    val batch = PageKernelSpec.sorted(m.relational(sents))
+    sents.unpersist()
+
+    // streaming-legal path (narrow ops only), run on the same batch Dataset
+    val streamShaped = PageKernelSpec.sorted(StreamExtract.triples(pages, m.kernel)
+      .collect().toSeq.map(t => Triple(t.subj, t.pred, t.obj, t.url, t.begin, t.end,
+        t.profileId, t.score, t.provenance)))
+
+    val relIds = m.rel.map(_.profileId).toSet
+    def gotham(t: Triple) = t.pred == "hq-city" && t.obj == "Gotham"
+    assert(batch.exists(t => relIds(t.profileId)), "no relation triple")
+    assert(batch.exists(t => gotham(t) && t.profileId == -2L), "no dictionary triple")
+    assert(!batch.exists(t => gotham(t) && t.profileId >= 0), "the veto did not apply")
+    assert(streamShaped === batch,
+      s"paths diverged; only-batch=${batch.diff(streamShaped).take(3)} " +
+        s"only-stream=${streamShaped.diff(batch).take(3)}")
+  }
+
+  test("extractPage per page == the unpaired relational chain on the same corpus") {
+    import spark.implicits._
+    // hand-seeded patterns matching the CorpusGen grammar; the last has an entity
+    // literal before its target, so it upgrades to a two-slot relation pattern
+    val seedPatterns = Seq(
+      Pattern(1L, Seq(":token|string|founded", ":token|string|in", Grid.Target),
+        "founded-year", 0, "seed", 1.0, 0, 0, 0),
+      Pattern(2L, Seq(":token|string|headquartered", ":token|string|in", Grid.Target),
+        "hq-city", 0, "seed", 1.0, 0, 0, 0),
+      Pattern(3L, Seq(":token|string|employs", Grid.Target, ":token|string|people"),
+        "employee-count", 0, "seed", 1.0, 0, 0, 0),
+      Pattern(4L, Seq(":lookup|majortype|org", ":token|string|employs", Grid.Target),
+        "employer-rel", 0, "seed", 1.0, 0, 0, 0))
     val gen = CorpusGen.pages(40)
     val pages = spark.createDataset(gen.map(_.page))
 
-    // batch path (joins + windows), with the same plain/relation pattern split
+    // batch path (joins + windows), with the plain/relation pattern split
     val annots = graft.nlp.Annotate.annotate(pages, CorpusGen.gazetteer)
     val sents = graft.mention.Sentences.fromAnnotations(annots)
-    val upgraded = seedPatterns.map(p => p -> graft.extract.Extract.toRelationPattern(p))
+    val upgraded = seedPatterns.map(p => p -> Extract.toRelationPattern(p))
     val plain = upgraded.collect { case (p, None) => p }
     val rel = upgraded.collect { case (_, Some(r)) => r }
     assert(rel.nonEmpty, "parity test must exercise the relation path")
-    val batchMentions = graft.extract.Extract.mergeAdjacent(
-      graft.extract.Extract.mentions(sents, plain))
-    val batch = graft.extract.Extract.triples(sents, batchMentions)
-      .unionByName(graft.extract.Extract.relationTriples(sents, rel))
+    val batch = Extract.triples(sents, Extract.mergeAdjacent(Extract.mentions(sents, plain)))
+      .unionByName(Extract.relationTriples(sents, rel))
       .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.begin, t.end)).toSet
 
-    // streaming-legal path (narrow ops only), run on the same batch Dataset
-    val streamShaped = StreamExtract.triples(pages, seedPatterns, CorpusGen.gazetteer)
-      .collect().map(tripleKey).toSet
+    val (index, relIndex) = (PatternMatcher.buildIndex(plain), PatternMatcher.buildIndex(rel))
+    val perPage = gen.flatMap { gp =>
+      graft.nlp.Annotate.pageText(gp.page).toSeq.flatMap(t =>
+        StreamExtract.extractPage(gp.page.url, t, CorpusGen.gazetteer, index,
+          relIndex = relIndex))
+    }.map(t => (t.subj, t.pred, t.obj, t.url, t.begin, t.end)).toSet
 
     assert(batch.nonEmpty, "no triples extracted at all")
-    assert(streamShaped === batch,
-      s"paths diverged; only-batch=${(batch -- streamShaped).take(3)} " +
-        s"only-stream=${(streamShaped -- batch).take(3)}")
+    assert(perPage === batch,
+      s"paths diverged; only-batch=${(batch -- perPage).take(3)} " +
+        s"only-page=${(perPage -- batch).take(3)}")
   }
 
   test("decontamination flag composes with streaming ingest (append mode, no state)") {
@@ -94,7 +123,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[Page]
     val out = StreamExtract.dedupedTriples(
-      StreamExtract.triples(input.toDS(), seedPatterns, CorpusGen.gazetteer))
+      StreamExtract.triples(input.toDS(), kernel))
     val q = out.writeStream.format("memory").queryName("dedup_t")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -357,14 +386,14 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
       .parquet(srcDir).as[Page]
 
-    val q1 = StreamExtract.run(stream, seedPatterns, CorpusGen.gazetteer, outDir, cpDir)
+    val q1 = StreamExtract.run(stream, kernel, outDir, cpDir)
     q1.awaitTermination()
     val n1 = spark.read.parquet(outDir).count()
     assert(n1 > 0)
 
     // second run, same checkpoint: only the newly appended files are processed
     spark.createDataset(gen.drop(10).map(_.page)).write.mode("append").parquet(srcDir)
-    val q2 = StreamExtract.run(stream, seedPatterns, CorpusGen.gazetteer, outDir, cpDir)
+    val q2 = StreamExtract.run(stream, kernel, outDir, cpDir)
     q2.awaitTermination()
     val out = spark.read.parquet(outDir)
     val n2 = out.count()
