@@ -15,11 +15,11 @@ import org.apache.spark.sql.SparkSession
  * the bucket count.
  *
  * With a 4th arg `stageDir`, runs the RESUMABLE production path instead
- * ([[graft.pipeline.KGPipeline.runCheckpointed]]): every stage materializes through
- * [[graft.runtime.StageCheckpoint]] under stageDir with per-partition lineage +
- * counters, and a re-submitted run resumes at its first incomplete stage and rewrites
- * only the output buckets not yet committed — the north rule's long-corpus
- * spark-submit shape.
+ * ([[graft.pipeline.KGPipeline.runCheckpointed]]): the patterns, pair_stats and
+ * raw_triples stages materialize through [[graft.runtime.StageCheckpoint]] under
+ * stageDir with per-partition lineage + counters, and a re-submitted run resumes at
+ * its first incomplete stage and rewrites only the output buckets not yet committed —
+ * the north rule's long-corpus spark-submit shape.
  */
 object RunKG {
   def main(args: Array[String]): Unit = {

@@ -49,7 +49,8 @@ final class PageKernel(
   def extract(url: String, text: String): Vector[Triple] =
     apply(url, Sentences.group(url, Annotate.annotateOne(url, text, gaz, withChunks)))
 
-  /** Raw auto triples of one page from its sentences (any order). */
+  /** Raw auto triples of one page from its sentences (any order): [[extract]] after
+    * grouping, public so PageKernelSpec can compare it with the relational chain. */
   def apply(url: String, sentences: Seq[SentenceAnnots]): Vector[Triple] = {
     val sents = sentences.sortBy(_.sentBegin)
     val rel = Vector.newBuilder[Triple]

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.canon.ConnectedComponents
 import graft.extract.{Extract, PageKernel}
 import graft.learn.{GenMSA, PatternStats, ValueProbs}
@@ -34,9 +35,11 @@ import graft.sink.Materialize
  * ever touches the validated slice (exactly the reference's design: learning on
  * status-1 docs, extraction on status-0, SURVEY.md §7.4.2).
  *
- * [[run]] and [[runCheckpointed]] share one learn → gate body; only the corpus pass
- * differs. The job has no knobs: default MSA, stats and prior configs, training gold
- * of provenance `gold` or `dup-propagated`, 16 output buckets.
+ * [[run]] and [[runCheckpointed]] share one body: learn → gate, the corpus pass and
+ * canonicalization. They differ only in whether the `patterns`, `pair_stats` and
+ * `raw_triples` stages are checkpointed and in the final write (`Materialize.write`
+ * or `writeResumable`). The job has no knobs: default MSA, stats and prior configs,
+ * training gold of provenance `gold` or `dup-propagated`, 16 output buckets.
  */
 object KGPipeline {
 
@@ -60,9 +63,21 @@ object KGPipeline {
    */
   def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
       implicit spark: SparkSession): Result = {
-    import spark.implicits._
+    val (rawTriples, kernel) = extracted(pages, goldAnnots, gaz, checkpoint = None)
+    // rawTriples feeds both the CC edge derivation and the final canonical output —
+    // persist it or every downstream action recomputes the whole extraction
+    Result(kernel(), canonicalOf(rawTriples.persist(MEMORY_AND_DISK)))
+  }
+
+  /** Learn → gate → corpus pass, the body both entry points share; a `checkpoint`
+    * materializes the `patterns`, `pair_stats` and `raw_triples` stages. Returns the
+    * raw triples and the page kernel, built on first use: a resumed `raw_triples`
+    * stage builds no kernel and annotates nothing. */
+  private def extracted(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
+      gaz: Gazetteer, checkpoint: Option[(StageCheckpoint, String)])(
+      implicit spark: SparkSession): (DataFrame, () => PageKernel) = {
     val train = new TrainingSlice(pages, goldAnnots, gaz)
-    val m = learn(train, goldAnnots, checkpoint = None)
+    val m = learn(train, goldAnnots, checkpoint)
 
     // 5. extract on ALL pages: one narrow pass, page → raw triples through the page
     // kernel. Patterns whose learned context contains an entity literal before the
@@ -70,18 +85,17 @@ object KGPipeline {
     // rest go through mention extraction + sentence-local nearest-entity resolution.
     // Value-probability priors (A6) veto mentions the validated corpus distrusts and
     // feed the dictionary pass for values it trusts.
-    val kernel = kernelOf(m, train.sents, goldAnnots, gaz)
+    lazy val kernel = kernelOf(m, train.sents, goldAnnots, gaz)
     // validated gold spans ALSO materialize triples (ref PopulateFrame scans
     // validated + auto annotations, /root/reference/src/msa/PopulateFrame.java:144-192);
     // their provenance outranks auto rows at the same site in Materialize's
     // precedence dedup. One small cogroup per provenance class over the train slice.
-    // rawTriples feeds both the CC edge derivation and the final canonical output —
-    // persist it or every downstream action recomputes the whole extraction.
-    val rawTriples = pageTriples(pages, kernel)
-      .unionByName(goldTriplesOf(train.sents, goldAnnots))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    Result(kernel, canonicalOf(rawTriples))
+    val rawTriples = staged(checkpoint, "raw_triples") {
+      pageTriples(pages, kernel).unionByName(goldTriplesOf(train.sents, goldAnnots)).toDF()
+    }
+    // a materialized stage is read back from its files: the slice is no longer needed
+    if (checkpoint.isDefined) train.unpersist()
+    (rawTriples, () => kernel)
   }
 
   /** The corpus pass every batch job runs: ONE narrow mapPartitions, each page read
@@ -112,7 +126,7 @@ object KGPipeline {
       val goldUrls = goldAnnots.select($"url").distinct()
       val ts = Annotate.annotateSentences(
         pages.join(goldUrls, Seq("url"), "left_semi").as[Page], gaz, goldByUrl)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       cache = Some(ts)
       ts
     }
@@ -125,7 +139,7 @@ object KGPipeline {
   private final case class Learned(tgtPatterns: Seq[Pattern],
       allowedPairs: Map[(Long, Long), Double], finalPatterns: Seq[Pattern])
 
-  /** A learning stage's output: as computed, or through a [[StageCheckpoint]] under
+  /** A stage's output: as computed, or through a [[StageCheckpoint]] under
     * the run's fingerprint. */
   private def staged(checkpoint: Option[(StageCheckpoint, String)], name: String)(
       stage: => DataFrame): DataFrame =
@@ -164,8 +178,7 @@ object KGPipeline {
       val gold = PatternStats.snapGoldToTokens(
         goldAnnots.toDF().select($"url", $"annotType", $"begin", $"end"), tokenSpans)
       val ps = PatternStats.scorePairs(matches, gold, spark.createDataset(learned),
-          StatsCfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          StatsCfg).persist(MEMORY_AND_DISK)
       pairStats = Some(ps)
       PatternStats.keptPairs(ps, StatsCfg)
         .join(PatternStats.activeProfiles(ps, StatsCfg), Seq("profileId"), "left_semi")
@@ -177,14 +190,14 @@ object KGPipeline {
 
   /** Canonicalize subjects: blocking-join edges + connected components; a subject in
     * a component is replaced by the component's representative. */
-  private def canonicalOf(rawTriples: Dataset[Triple])(
+  private def canonicalOf(rawTriples: DataFrame)(
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     val forms = rawTriples.select($"subj".as("form"))
     val edges = EntityLink.candidateEdges(forms, minJaccard = 0.6)
       .select($"src", $"dst")
     val comp = ConnectedComponents.runAdaptive(edges)
-    rawTriples.toDF()
+    rawTriples
       .join(comp, rawTriples("subj") === comp("node"), "left")
       .withColumn("subj2", coalesce(col("component"), col("subj")))
       .select(col("subj2").as("subj"), col("pred"), col("obj"), col("url"),
@@ -271,41 +284,20 @@ object KGPipeline {
       Some(CanonicalMetric))
 
   /**
-   * Fully resumable variant: every stage (sentences → patterns → pair stats → raw
-   * triples) is materialized through [[graft.runtime.StageCheckpoint]] with
-   * per-partition lineage, keyed by the caller's `fingerprint` (input + config
-   * identity). A restarted run resumes at its first incomplete stage; the final write
-   * goes through [[Materialize.writeResumable]] (per-bucket checkpoints). This is the
-   * production `spark-submit` path for long corpus runs (north rule: resumable from
-   * checkpoint with per-partition lineage + metrics). Learning and gating are
-   * [[run]]'s; only the corpus pass differs: it reads the materialized sentence table.
+   * Fully resumable variant: the `patterns`, `pair_stats` and `raw_triples` stages are
+   * materialized through [[graft.runtime.StageCheckpoint]] with per-partition lineage,
+   * keyed by the caller's `fingerprint` (input + config identity). A restarted run
+   * resumes at its first incomplete stage; the final write goes through
+   * [[Materialize.writeResumable]] (per-bucket checkpoints). This is the production
+   * `spark-submit` path for long corpus runs (north rule: resumable from checkpoint
+   * with per-partition lineage + metrics). Learning, gating and the corpus pass are
+   * [[run]]'s: `raw_triples` checkpoints exactly the raw triples `run` computes.
    */
   def runCheckpointed(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer, stageDir: String, fingerprint: String, outPath: String)(
       implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val cp = StageCheckpoint(stageDir)
-
-    // fused annotate→sentence stage (see TrainingSlice): one narrow pass, no
-    // annotation shuffle; the materialized sentence table is the resume point. It is
-    // written before patterns exist, so it always carries chunk labels: a
-    // syntax-anchored pattern stays matchable on resume
-    val allSentsDF = cp.materialize("sentences", fingerprint) {
-      Annotate.annotateSentences(pages, gaz, withChunks = true).toDF()
-    }
-    val train = new TrainingSlice(pages, goldAnnots, gaz)
-    val m = learn(train, goldAnnots, Some((cp, fingerprint)))
-
-    // the corpus pass of run() over the materialized sentence table: its rows are
-    // regrouped per page, then the same page kernel runs
-    val rawTriples = cp.materialize("raw_triples", fingerprint) {
-      val kernelB = spark.sparkContext.broadcast(kernelOf(m, train.sents, goldAnnots, gaz))
-      allSentsDF.as[SentenceAnnots].groupByKey(_.url)
-        .flatMapGroups((url, sents) => kernelB.value(url, sents.toVector))
-        .unionByName(goldTriplesOf(train.sents, goldAnnots)).toDF()
-    }.as[Triple]
-    train.unpersist()
-
+    val (rawTriples, _) = extracted(pages, goldAnnots, gaz,
+      Some((StageCheckpoint(stageDir), fingerprint)))
     Materialize.writeResumable(canonicalOf(rawTriples), outPath, Buckets,
       Some(CanonicalMetric))
   }

@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions._
  *
  * The fingerprint is caller-supplied (input path + config rendering); content hashes
  * of big inputs are the caller's choice of rigor. Writes are atomic at stage
- * granularity: lineage (with the fingerprint) is committed only AFTER the data write
- * succeeds, so a half-written stage is recomputed on resume.
+ * granularity: the old lineage is dropped BEFORE the data is overwritten and the new
+ * one (with the fingerprint) committed only AFTER the data write succeeds, so a
+ * half-written stage is recomputed on resume, whichever fingerprint resumes it.
  */
 final class StageCheckpoint(base: String)(implicit spark: SparkSession) {
 
@@ -48,6 +49,10 @@ final class StageCheckpoint(base: String)(implicit spark: SparkSession) {
     } else {
       val t0 = System.nanoTime()
       val df = stage
+      // the overwrite deletes the old data first: drop the old lineage before it, so a
+      // crash mid-write leaves the stage "never ran", not committed over deleted data
+      val lineageDir = new org.apache.hadoop.fs.Path(lineagePath(name))
+      lineageDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(lineageDir, true)
       df.write.mode("overwrite").parquet(dataPath(name))
       val written = spark.read.parquet(dataPath(name))
       // per-partition lineage + stage counters (rows_total, wall_ms): the north rule's

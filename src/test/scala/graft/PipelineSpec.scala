@@ -73,15 +73,17 @@ class PipelineSpec extends AnyFunSuite with SparkTest {
     val pages = spark.createDataset(all.map(_.page))
     val goldAnnots = spark.createDataset(all.take(30).flatMap(CorpusGen.goldAnnotations))
     val dir = java.nio.file.Files.createTempDirectory("graft_parity").toString
-    def facts(path: String): Set[(String, String, String)] =
-      spark.read.parquet(path).select("subj", "pred", "obj").as[(String, String, String)]
-        .collect().toSet
+    // every committed row with all its columns, as a sorted multiset
+    def rows(path: String) = {
+      val df = spark.read.parquet(path)
+      (df.columns.toSeq, df.collect().toSeq.sortBy(_.toString))
+    }
     KGPipeline.runAndWrite(pages, goldAnnots, CorpusGen.gazetteer, s"$dir/plain")(spark)
     KGPipeline.runCheckpointed(pages, goldAnnots, CorpusGen.gazetteer, s"$dir/stages",
       "parity-80-v1", s"$dir/checkpointed")(spark)
-    val plain = facts(s"$dir/plain")
-    assert(plain.nonEmpty)
-    assert(facts(s"$dir/checkpointed") === plain)
+    val plain = rows(s"$dir/plain")
+    assert(plain._2.nonEmpty)
+    assert(rows(s"$dir/checkpointed") === plain)
   }
 
   test("byte-identity: per-url normalized text hashes are frozen (golden)") {

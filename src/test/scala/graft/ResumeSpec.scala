@@ -58,21 +58,49 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assertThrows[Exception](cp2.committedFingerprint("s9"))
   }
 
-  test("runCheckpointed: crash after stage 1 resumes without recomputing annotations") {
+  test("a crashed rewrite under a new fingerprint leaves the stage to recompute") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, udf}
+    val cp = graft.runtime.StageCheckpoint(tmp())
+    var computed = 0
+    def stage = { computed += 1; Seq((1L, "a"), (2L, "b")).toDF("k", "v") }
+    cp.materialize("s1", "fp-A")(stage)
+    // the fp-B rewrite throws inside its write job, after the overwrite deleted fp-A's
+    // data (a range input, so the optimizer cannot fold the throwing UDF away)
+    val crash = udf { (i: Long) =>
+      if (i == 3L) throw new IllegalStateException("crash mid-write") else i }
+    intercept[Exception](cp.materialize("s1", "fp-B")(
+      spark.range(0, 4, 1, 2).select(crash($"id").as("k"), lit("x").as("v"))))
+    val r = cp.materialize("s1", "fp-A")(stage)
+    assert(computed === 2, "fp-A must recompute over the crashed rewrite")
+    assert(r.as[(Long, String)].collect().sorted.toSeq === Seq((1L, "a"), (2L, "b")))
+    assert(cp.wouldResume("s1", "fp-A"))
+  }
+
+  test("runCheckpointed: a crash after the learning stages resumes them and commits " +
+      "the same facts") {
     import spark.implicits._
     val (stageDir, outDir) = (tmp(), tmp() + "/triples")
     val gen = CorpusGen.pages(60)
     val pages = spark.createDataset(gen.map(_.page))
     val gold = spark.createDataset(gen.take(30).flatMap(CorpusGen.goldAnnotations))
     val fp = "corpus-60-v1"
+    def facts(): Set[(String, String, String)] =
+      spark.read.parquet(outDir).select("subj", "pred", "obj").as[(String, String, String)]
+        .collect().toSet
 
     val cps = graft.pipeline.KGPipeline.runCheckpointed(
       pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
     val total = spark.read.parquet(outDir).count()
+    val first = facts()
     assert(total > 0 && cps.count() > 0)
+    val stages = Seq("patterns", "pair_stats", "raw_triples")
+    assert(new java.io.File(stageDir).list().toSet ===
+      stages.flatMap(s => Seq(s, s + "__lineage")).toSet,
+      "the stage dir must hold exactly the three stages and their lineage")
 
-    // simulate a crash AFTER sentences+patterns but before triples: delete the
-    // raw_triples stage and the final output, keep earlier stage checkpoints
+    // simulate a crash AFTER patterns + pair_stats but before triples: delete the
+    // raw_triples stage and the final output, keep the learning stages' checkpoints
     def rmrf(p: String): Unit = {
       val f = new java.io.File(p)
       if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
@@ -81,12 +109,63 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     rmrf(s"$stageDir/raw_triples"); rmrf(s"$stageDir/raw_triples__lineage")
     rmrf(outDir); rmrf(outDir + "_checkpoints")
 
-    val annotsMtime = new java.io.File(s"$stageDir/sentences").lastModified()
-    val resumed = graft.pipeline.KGPipeline.runCheckpointed(
+    def written(stage: String) = {
+      val dir = new java.io.File(s"$stageDir/$stage")
+      (dir.lastModified(), dir.list().toSet)
+    }
+    val learned = Seq("patterns", "pair_stats").map(s => s -> written(s))
+    graft.pipeline.KGPipeline.runCheckpointed(
       pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    learned.foreach { case (s, w) =>
+      assert(written(s) === w, s"$s stage was rewritten on resume") }
     assert(spark.read.parquet(outDir).count() === total,
       "resumed run must reproduce the identical output")
-    assert(new java.io.File(s"$stageDir/sentences").lastModified() === annotsMtime,
-      "sentences stage was recomputed on resume")
+    assert(facts() === first, "resumed run must commit the same facts")
+  }
+
+  test("runCheckpointed: crash after stage 1 resumes without recomputing annotations") {
+    import spark.implicits._
+    val (stageDir, outDir) = (tmp(), tmp() + "/triples")
+    val gen = CorpusGen.pages(60)
+    val pages = spark.createDataset(gen.map(_.page))
+    val gold = spark.createDataset(gen.take(30).flatMap(CorpusGen.goldAnnotations))
+    val fp = "corpus-60-v1"
+    def facts(): Set[(String, String, String)] =
+      spark.read.parquet(outDir).select("subj", "pred", "obj").as[(String, String, String)]
+        .collect().toSet
+
+    val cps = graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    val total = spark.read.parquet(outDir).count()
+    val first = facts()
+    assert(total > 0 && cps.count() > 0)
+
+    // simulate a crash AFTER stage 1, the checkpointed extraction (patterns, pair_stats,
+    // raw_triples), but before stage 2 commits the output: delete the final output, keep
+    // every stage checkpoint. The annotated corpus lives only inside raw_triples.
+    def rmrf(p: String): Unit = {
+      val f = new java.io.File(p)
+      if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
+      f.delete()
+    }
+    rmrf(outDir); rmrf(outDir + "_checkpoints")
+
+    def written(stage: String) = {
+      val dir = new java.io.File(s"$stageDir/$stage")
+      (dir.lastModified(), dir.list().toSet)
+    }
+    val stages = Seq("patterns", "pair_stats", "raw_triples").map(s => s -> written(s))
+    // any page read throws: the resumed run may annotate neither the corpus nor the
+    // training slice
+    val unreadable = pages.map[graft.model.Page] { p =>
+      throw new IllegalStateException(s"resumed run read page ${p.url}")
+    }
+    graft.pipeline.KGPipeline.runCheckpointed(
+      unreadable, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    stages.foreach { case (s, w) =>
+      assert(written(s) === w, s"$s stage was recomputed on resume") }
+    assert(spark.read.parquet(outDir).count() === total,
+      "resumed run must reproduce the identical output")
+    assert(facts() === first, "resumed run must commit the same facts")
   }
 }
