@@ -208,7 +208,7 @@ object DocExtract {
       kws: Seq[String], cacheKey: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
     withSentences(docs, idCol, textCol, kws, cacheKey) { sents =>
-      import graft.learn.PatternStats
+      import graft.learn.{LearnKernel, PatternStats}
       import spark.implicits._
       val pred = s"after_$trigger"
       val ctx = Pattern(1L, Seq(s":token|string|${trigger.toLowerCase}", Grid.Target),
@@ -226,12 +226,10 @@ object DocExtract {
       val cfg = PatternStats.Config(evalTolerance = 0)
       val matches = PatternStats.applyPatternsPaired(sents, Seq(ctx), Seq(tKw, tWord), cfg)
       PatternStats.scorePairs(matches, gold, spark.createDataset(Seq(ctx, tKw, tWord)), cfg)
-        .withColumn("fpAdj", greatest(col("fp") - 1, lit(0L)))
-        .select(col("profileId").as("profile_id"), col("targetId").as("target_id"),
-          col("tp"), col("fp"), col("total"),
-          when(col("tp") + col("fpAdj") > 0,
-            floor(col("tp") * 10000.0 / (col("tp") + col("fpAdj"))))
-            .otherwise(lit(0)).cast("long").as("prec_bp"))
+        .as[LearnKernel.PairStat]
+        .map(st => (st.profileId, st.targetId, st.tp, st.fp, st.total,
+          LearnKernel.precisionBp(st.tp, st.fp)))
+        .toDF("profile_id", "target_id", "tp", "fp", "total", "prec_bp")
     }
 
   /**

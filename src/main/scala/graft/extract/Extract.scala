@@ -206,11 +206,11 @@ object Extract {
    *
    * Scale shape: one cogroup of mentions and subject spans on url — ONLY the (small)
    * mention and subject rows shuffle, and the per-page argmin runs in memory
-   * ([[PageKernel.Subjects]], the kernel's own resolver). The
-   * equivalent join+window formulation ([[triplesViaJoin]], parity-tested) shuffles
-   * the mentions × subjects PRODUCT into the window — on a mega-page (thousands of
-   * entities × mentions) that product is the blow-up this shape avoids; here the
-   * quadratic is bounded per sentence, the reference's own bound.
+   * ([[PageKernel.Subjects]], the kernel's own resolver). An equivalent join+window
+   * formulation (RelationSpec's oracle) shuffles the mentions × subjects PRODUCT into
+   * the window — on a mega-page (thousands of entities × mentions) that product is the
+   * blow-up this shape avoids; here the quadratic is bounded per sentence, the
+   * reference's own bound.
    */
   def triples(sentences: Dataset[SentenceAnnots], ms: Dataset[Mention],
       subjectMajorType: String = "entity",
@@ -229,41 +229,5 @@ object Extract {
         sIt.map { case (_, sb, se, ab, ae, v) => (sb, se, ab, ae, v) })
       mIt.map(subs.resolve(_, provenance))
     }
-  }
-
-  /** Join+window formulation of [[triples]] — kept as the declarative parity twin
-    * (cross-checked in RelationSpec/e2e); shuffles the mention×subject product. */
-  def triplesViaJoin(sentences: Dataset[SentenceAnnots], ms: Dataset[Mention],
-      subjectMajorType: String = "entity",
-      provenance: String = graft.model.Provenance.Auto)(
-      implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    // candidate subjects per page: entity Lookup spans
-    val subjects = sentences.flatMap { s =>
-      s.annots.filter(a => a.annotType == "Lookup" &&
-          a.features.getOrElse("majorType", "") == subjectMajorType)
-        .map(a => (s.url, s.sentBegin, s.sentEnd, a.begin, a.end, a.value))
-    }.toDF("url", "sb", "se", "ab", "ae", "subjVal")
-
-    val m = ms.toDF()
-    // subject = nearest preceding (or first following) entity lookup in the sentence
-    // containing the mention; one window argmin after a per-page equi-join.
-    val joined = m.join(subjects, Seq("url"), "left")
-      .withColumn("inSent",
-        $"sb".isNotNull && $"begin" >= $"sb" && $"begin" < $"se" &&
-          !($"ab" === $"begin" && $"ae" === $"end")) // a mention is not its own subject
-      .withColumn("dist",
-        when(!$"inSent", lit(2000000))
-          .when($"ae" <= $"begin", $"begin" - $"ae")         // preceding: distance
-          .otherwise(lit(1000000) + ($"ab" - $"begin")))     // following: penalized
-    val w = Window.partitionBy($"url", $"annotType", $"begin", $"end")
-      .orderBy($"dist".asc, $"ab".asc)
-    joined.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select(
-        when($"inSent", $"subjVal")
-          .otherwise(regexp_extract($"url", "^[a-z]+://([^/]+)", 1)).as("subj"),
-        $"annotType".as("pred"), $"value".as("obj"), $"url", $"begin", $"end",
-        $"profileId", $"score", lit(provenance).as("provenance"))
-      .as[Triple]
   }
 }

@@ -130,9 +130,15 @@ object PageKernel {
           pairs((h.context.profileId, h.target.profileId)), Provenance.Auto)
       }
 
+  /** The lowercasing of every value-prior key, dictionary entry and token stream:
+    * locale-independent, as Spark's `lower`. The JVM default locale must not decide
+    * whether a corpus token meets its gold value (under `tr`, "TITAN" would lower to
+    * "tıtan"). */
+  def lowered(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
+
   /** Value-prior veto predicate: prior −1 for (annotType, lowercased value). */
   def vetoed(priors: Map[(String, String), Long])(m: Mention): Boolean =
-    priors.getOrElse((m.annotType, m.value.toLowerCase), 0L) == -1L
+    priors.getOrElse((m.annotType, lowered(m.value)), 0L) == -1L
 
   /** Dictionary single-entity pass (see [[Extract.dictionaryMentions]]): entries are
     * (annotType, value, priorBp), matched case-insensitively on token streams. */
@@ -142,7 +148,7 @@ object PageKernel {
       if (entries.isEmpty) Vector.empty
       else {
         val toks = s.annots.filter(_.annotType == "Token").sortBy(_.begin).toIndexedSeq
-        ac.findAll(toks.map(_.value.toLowerCase)).map { case (b0, e0, dictId) =>
+        ac.findAll(toks.map(a => lowered(a.value))).map { case (b0, e0, dictId) =>
           val (annotType, _, priorBp) = entries(dictId)
           Mention(s.url, annotType, toks(b0).begin, toks(e0 - 1).end,
             toks.slice(b0, e0).map(_.value).mkString(" "), -2L, priorBp / 10000.0)
@@ -153,7 +159,7 @@ object PageKernel {
   object Dictionary {
     def apply(entries: Seq[(String, String, Long)]): Dictionary = {
       val dict = entries.sortBy(e => (e._1, e._2)).toIndexedSeq
-      new Dictionary(dict, AhoCorasick.build(dict.map(_._2.toLowerCase.split("\\s+").toSeq)))
+      new Dictionary(dict, AhoCorasick.build(dict.map(e => lowered(e._2).split("\\s+").toSeq)))
     }
   }
 

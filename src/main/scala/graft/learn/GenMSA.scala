@@ -1,8 +1,6 @@
 package graft.learn
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import graft.align.{Grid, MSA, SmithWaterman}
 import graft.model.{Pattern, SentenceAnnots}
 
@@ -19,11 +17,10 @@ import graft.model.{Pattern, SentenceAnnots}
  * sequences, identical sequences counted ("rows"), and patterns with rows >= minRows
  * kept (ref GenMSA.java:636).
  *
- * Scale shape: block assignment is one window rank over the (small, validated) training
- * slice; the O(B²·L²) kernel runs inside flatMapGroups per block, embarrassingly
- * parallel across blocks. Profile ids are a content hash (xxhash64) of the canonical
- * pattern key — never auto-assigned, no global sort — so ids are identical at any
- * parallelism (SURVEY.md §7.4.4).
+ * Blocking, counting and profile ids are [[LearnKernel]]'s: blocks are ranked by (url
+ * in UTF-8 byte order, sentBegin) per annotType, and a profile id is a content hash
+ * (xxhash64) of the canonical pattern key — never auto-assigned, no global sort — so
+ * ids are identical at any parallelism (SURVEY.md §7.4.4).
  */
 object GenMSA {
 
@@ -41,65 +38,33 @@ object GenMSA {
       fullSentence: Boolean = false,
       swParams: SmithWaterman.Params = SmithWaterman.Params())
 
-  /** One target-centred training grid, keyed for blocking. */
-  private final case class TrainRow(annotType: String, url: String, sentBegin: Int,
-      sentEnd: Int)
-
   /**
    * Learn patterns from sentences whose annotations include gold target spans with
    * provenance in `goldProvenances` (human-validated plus e.g. `dup-propagated`
    * spans from [[Propagate]]). Gold target annotations define both the target type
    * (annotType) and its span.
+   *
+   * The Dataset form of [[LearnKernel.patterns]]: one group per annotType cut into
+   * [[LearnKernel.blocks]], the blocks spread over the cluster and each aligned by
+   * [[alignBlock]], identical sequences counted, then [[LearnKernel.pattern]] (minRows
+   * gate and content-hash id).
    */
   def learn(sentences: Dataset[SentenceAnnots],
       goldProvenances: Set[String] = Set("gold"),
       cfg: Config = Config())(implicit spark: SparkSession): Dataset[Pattern] = {
     import spark.implicits._
-
-    // (annotType, sentence) pairs that contain a gold target of that type
-    val train = sentences.flatMap { s =>
-      s.annots.filter(a => goldProvenances(a.provenance)).map(_.annotType).distinct
-        .map(t => (t, s))
-    }.toDF("annotType", "sent")
-
-    // deterministic block id: rank within annotType ordered by (url, sentBegin)
-    val w = Window.partitionBy($"annotType").orderBy($"sent.url", $"sent.sentBegin")
-    val blocked = train
-      .withColumn("blockId", ((row_number().over(w) - lit(1)) / lit(cfg.blockSize)).cast("int"))
-
-    val rawPatterns = blocked
-      .select($"annotType".as("_1"), $"sent".as("_2"), $"blockId".as("_3"))
-      .as[(String, SentenceAnnots, Int)]
-      .groupByKey { case (t, _, b) => (t, b) }
-      .flatMapGroups { (key: (String, Int), it: Iterator[(String, SentenceAnnots, Int)]) =>
-        val sents = it.map(_._2).toVector.sortBy(s => (s.url, s.sentBegin))
-        alignBlock(key._1, sents, goldProvenances, cfg).iterator
+    sentences
+      .flatMap(s => LearnKernel.trainingTypes(s, goldProvenances).map(t => (t, s)))
+      .groupByKey(_._1)
+      .flatMapGroups { (t: String, it: Iterator[(String, SentenceAnnots)]) =>
+        LearnKernel.blocks(it.map(_._2).toVector, cfg.blockSize).map(b => (t, b))
       }
-      .toDF("annotType", "toks", "profileType")
-
-    // multiplicity + minRows gate + derived profile ids. The id is a content hash of
-    // the canonical (annotType, toks) key: deterministic across runs AND parallelism
-    // levels, and unlike a dense_rank over an unpartitioned window it never funnels
-    // every learned pattern through a single-partition global sort.
-    val counted = rawPatterns
-      .groupBy($"annotType", $"toks", $"profileType")
-      .agg(count(lit(1)).as("rows"))
-      .filter($"rows" >= cfg.minRows)
-      .withColumn("profileId",
-        xxhash64(concat_ws("\u0001", $"annotType", $"profileType",
-          concat_ws("\u0001", $"toks"))))
-
-    counted.select(
-      $"profileId",
-      $"toks",
-      $"annotType",
-      $"profileType",
-      lit("msa").as("group"),
-      lit(0.0).as("score"),
-      lit(0L).as("truePos"),
-      lit(0L).as("falsePos"),
-      $"rows"
-    ).as[Pattern]
+      .repartition(spark.sparkContext.defaultParallelism)
+      .flatMap { case (t, block) => alignBlock(t, block.toVector, goldProvenances, cfg) }
+      .groupByKey(identity).count()
+      .flatMap { case ((t, toks, pType), rows) =>
+        LearnKernel.pattern(t, toks, pType, rows, cfg.minRows)
+      }
   }
 
   /**

@@ -1,9 +1,8 @@
 package graft.learn
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.align.Grid
 import graft.extract.{PageKernel, PatternMatcher}
 import graft.model.{Pattern, PatternMatch, SentenceAnnots}
 
@@ -13,8 +12,8 @@ import graft.model.{Pattern, PatternMatch, SentenceAnnots}
  * as declarative Spark aggregations:
  *
  *  A1  TP/FP counting per (context, target) pair with a per-doc cap of 50 counted
- *      matches (ref BestPatterns.java:441-443,468-470) — pre-aggregate per (pair, url)
- *      with least(count, 50) so the cap is map-side and skew-proof.
+ *      matches (ref BestPatterns.java:441-443,468-470) — judged per (pair, url), so the
+ *      cap is applied before any per-pair aggregate.
  *  A2  precision = tp / (tp + max(fp−1, 0)) — the reference subtracts 1 from the
  *      NEGATIVE count only, "to correct for human errors or unannotated retrospective
  *      cases" (BestPatterns.java:525-531) — promote at prec ≥ posThreshold ∧
@@ -23,7 +22,9 @@ import graft.model.{Pattern, PatternMatch, SentenceAnnots}
  *      best (min score = patternLen − freq normalization, max total) via one window
  *      (BestPatterns.java:865-935).
  *
- * Matching itself runs executor-side with the compiled pattern index broadcast.
+ * Matching itself runs executor-side with the compiled pattern index broadcast. The
+ * matching, snap, judge, cap, precision and gate rules are [[LearnKernel]]'s; these
+ * operators group rows per sentence, per url or per pair and call them.
  */
 object PatternStats {
 
@@ -57,52 +58,9 @@ object PatternStats {
       val targets = tgtB.value
       val allowed = allowedB.value
       val excluded = excludedB.value
-      it.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        if (PatternMatcher.isAllCapsSentence(grid)) Iterator.empty
-        // stats count RAW pair matches (no overlap suppression): the reference computes
-        // precision before overlap filtering
-        else PatternMatcher.matchPairs(grid, index, targets, cfg.matcher,
-          allowedPairs = allowed, suppressOverlaps = false,
-          excludedPairs = excluded).iterator.map { h =>
-          PatternMatch(h.context.profileId, h.target.profileId, s.url,
-            h.targetBegin, h.targetEnd, PatternMatcher.trimTrailingPunct(h.value))
-        }
-      }
+      it.flatMap(s => LearnKernel.sentenceMatches(s, index, targets, cfg.matcher, allowed,
+        excluded))
     }
-  }
-
-  /**
-   * Staged pair scoring — the reference's internalBlockSize staged filtering
-   * (/root/reference/src/msa/ProfileStats.java:270-375: hopeless patterns are killed
-   * mid-run so later sentences skip them) re-expressed as a two-pass sample-then-full
-   * design: pass 1 scores pairs on a deterministic url-hash sample and KILLS pairs
-   * with enough evidence of hopeless precision; pass 2 matches the full slice with
-   * only the surviving pairs. At web scale the sample pass costs `sampleFraction` of
-   * one matching pass and removes the dominant cost of matching junk patterns
-   * everywhere. Returns pass-2 pair stats (same shape as [[scorePairs]]).
-   */
-  def scorePairsStaged(sentences: Dataset[SentenceAnnots],
-      contextPatterns: Seq[Pattern], targetPatterns: Seq[Pattern], gold: DataFrame,
-      patterns: Dataset[Pattern], cfg: Config = Config(),
-      sampleFraction: Double = 0.1, killPrec: Double = 0.1, killMinTotal: Long = 10)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val pct = math.max(1, math.round(sampleFraction * 100).toInt)
-    val sample = sentences.filter(s =>
-      math.floorMod(scala.util.hashing.MurmurHash3.stringHash(s.url), 100) < pct)
-    val m1 = applyPatternsPaired(sample, contextPatterns, targetPatterns, cfg)
-    val s1 = scorePairs(m1, gold, patterns, cfg)
-    val killed = s1.filter($"prec" < killPrec && $"total" >= killMinTotal)
-      .select($"profileId", $"targetId").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val allPairs = (for {
-      c <- contextPatterns; t <- targetPatterns if t.annotType == c.annotType
-    } yield (c.profileId, t.profileId)).toSet
-    val survivors = allPairs -- killed
-    val m2 = applyPatternsPaired(sentences, contextPatterns, targetPatterns, cfg,
-      allowedPairs = Some(survivors))
-    scorePairs(m2, gold, patterns, cfg)
   }
 
   /**
@@ -116,23 +74,17 @@ object PatternStats {
       patterns: Dataset[Pattern], cfg: Config = Config())(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val judged = judgeMatches(matches, gold, patterns, cfg)
-      .groupBy($"profileId", $"targetId", $"url", $"begin", $"end")
-      .agg(max(when($"g_url".isNotNull, 1).otherwise(0)).as("isTp"))
-    val perDoc = judged.groupBy($"profileId", $"targetId", $"url")
-      .agg(least(sum($"isTp"), lit(50L)).as("tp"),
-           least(sum(lit(1) - $"isTp"), lit(50L)).as("fp"))
-    perDoc.groupBy($"profileId", $"targetId")
-      .agg(sum($"tp").as("tp"), sum($"fp").as("fp"))
-      .withColumn("total", $"tp" + $"fp")
-      // the reference's correction subtracts 1 from the NEGATIVE count only (and only
-      // when fp > 0): prec = tp / (tp + max(fp−1, 0)) — never exceeds 1.0
-      // (ref BestPatterns.java:525-531)
-      .withColumn("fpAdj", greatest($"fp" - 1, lit(0L)))
-      .withColumn("prec",
-        when($"tp" + $"fpAdj" > 0, $"tp".cast("double") / ($"tp" + $"fpAdj"))
-          .otherwise(lit(0.0)))
-      .drop("fpAdj")
+    val typesB = spark.sparkContext.broadcast(LearnKernel.profileTypes(patterns.collect()))
+    val goldKeys = gold.select($"url", $"annotType", $"begin", $"end")
+      .as[(String, String, Int, Int)]
+    matches.groupByKey(_.url).cogroup(goldKeys.groupByKey(_._1)) { (_, ms, gs) =>
+        val keys = gs.map { case (_, t, b, e) => (t, b, e) }.toSet
+        LearnKernel.judgeDoc(ms, keys, typesB.value, cfg.evalTolerance)
+          .map { case ((c, t), (tp, fp)) => (c, t, tp, fp) }
+      }
+      .groupByKey(r => (r._1, r._2))
+      .mapGroups((pair, it) => LearnKernel.pairStat(pair, it.map(r => (r._3, r._4))))
+      .toDF()
   }
 
   /** Pairs passing the promotion gate (ref ProfileReader.readFinal per-pair gates,
@@ -141,68 +93,48 @@ object PatternStats {
     * ProfileReader.java:411-437): an excluded pair never promotes, whatever its
     * precision. */
   def keptPairs(pairStats: DataFrame, cfg: Config = Config(),
-      excludedPairs: Set[(Long, Long)] = Set.empty): DataFrame = {
-    val gated = pairStats.filter(col("prec") >= cfg.posThreshold &&
-      col("total") >= cfg.minCount)
-    if (excludedPairs.isEmpty) gated
-    else {
-      val excl = excludedPairs.toSeq.map(p => s"${p._1}${p._2}")
-      gated.filter(!concat_ws("", col("profileId"), col("targetId"))
-        .isInCollection(excl))
+      excludedPairs: Set[(Long, Long)] = Set.empty): DataFrame =
+    pairStats.filter { (r: Row) =>
+      LearnKernel.kept((r.getAs[Long]("profileId"), r.getAs[Long]("targetId")),
+        r.getAs[Long]("total"), r.getAs[Double]("prec"), cfg, excludedPairs)
     }
-  }
 
   /** A3 profile-active check: context profiles where some target combo reaches
     * activeThreshold precision (ref BestPatterns.java:561-565,612-620). */
-  def activeProfiles(pairStats: DataFrame, cfg: Config = Config()): DataFrame =
-    pairStats.groupBy(col("profileId"))
-      .agg(max(col("prec")).as("bestPrec"))
-      .filter(col("bestPrec") >= cfg.activeThreshold)
-      .select(col("profileId"))
+  def activeProfiles(pairStats: DataFrame, cfg: Config = Config()): DataFrame = {
+    val spark = pairStats.sparkSession
+    import spark.implicits._
+    pairStats.select(col("profileId"), col("prec")).as[(Long, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups { (id, it) =>
+        if (LearnKernel.active(it.map(_._2).max, cfg)) Iterator(id) else Iterator.empty
+      }
+      .toDF("profileId")
+  }
 
   /**
    * J5 gold-span boundary snap (ref BestPatterns.java:1332-1358): human-validated
-   * spans need not start/end on token boundaries; snap each gold span outward to the
-   * tokens it intersects — begin = min(begin) and end = max(end) of intersecting
-   * Token rows — so gold keys compare exactly against tokenizer-aligned predictions.
-   * Range join per url on the (small) gold slice + one min/max aggregation; spans
-   * intersecting no token pass through unchanged.
+   * spans need not start/end on token boundaries; each distinct gold row's span is
+   * snapped outward to the tokens it intersects by [[LearnKernel.snap]], so gold keys
+   * compare exactly against tokenizer-aligned predictions. One cogroup of gold rows
+   * and token spans per url; spans intersecting no token pass through unchanged.
+   * The output has gold's columns with `begin` and `end` moved last.
    */
   def snapGoldToTokens(gold: DataFrame, tokens: DataFrame)(
       implicit spark: SparkSession): DataFrame = {
-    val t = tokens.select(col("url").as("t_url"), col("begin").as("t_begin"),
-      col("end").as("t_end"))
-    gold.join(t, col("url") === col("t_url") &&
-        col("t_begin") < col("end") && col("t_end") > col("begin"), "left")
-      .groupBy(gold.columns.map(col): _*)
-      .agg(min(col("t_begin")).as("s_begin"), max(col("t_end")).as("s_end"))
-      .withColumn("begin2", coalesce(col("s_begin"), col("begin")))
-      .withColumn("end2", coalesce(col("s_end"), col("end")))
-      .drop("begin", "end", "s_begin", "s_end")
-      .withColumnRenamed("begin2", "begin")
-      .withColumnRenamed("end2", "end")
-  }
-
-  /** Shared ±tolerance gold join: exploded {−tol..+tol}² boundary variants equi-joined
-    * to gold on (url, span, annotType). */
-  private def judgeMatches(matches: Dataset[PatternMatch], gold: DataFrame,
-      patterns: Dataset[Pattern], cfg: Config)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val tol = (-cfg.evalTolerance to cfg.evalTolerance).toSeq
-    val variants = tol.flatMap(db => tol.map(de => (db, de)))
-    val exploded = matches.toDF()
-      .withColumn("v", explode(typedLit(variants.map(v => v._1 + ":" + v._2))))
-      .withColumn("gb", $"begin" + split($"v", ":")(0).cast("int"))
-      .withColumn("ge", $"end" + split($"v", ":")(1).cast("int"))
-    val goldKeys = gold.select($"url".as("g_url"), $"annotType".as("g_type"),
-      $"begin".as("g_begin"), $"end".as("g_end")).distinct()
-    val pTypes = patterns.toDF().select($"profileId".as("p_id"), $"annotType".as("p_type"))
-      .distinct()
-    exploded
-      .join(pTypes, $"profileId" === $"p_id", "left")
-      .join(goldKeys,
-        $"url" === $"g_url" && $"gb" === $"g_begin" && $"ge" === $"g_end" &&
-          $"p_type" === $"g_type", "left")
+    val rest = gold.columns.toSeq.filterNot(c => c == "begin" || c == "end")
+    val g = gold.select((rest ++ Seq("begin", "end")).map(col): _*).distinct()
+    val urlAt = rest.indexOf("url")
+    val n = rest.length
+    val spans = tokens.select($"url", $"begin", $"end").as[(String, Int, Int)]
+    g.groupByKey(_.getString(urlAt)).cogroup(spans.groupByKey(_._1)) { (_, rows, toks) =>
+      val ts = toks.map(t => (t._2, t._3)).toVector
+      rows.map { r =>
+        val (b, e) = LearnKernel.snap(r.getInt(n), r.getInt(n + 1), ts)
+        Row.fromSeq(r.toSeq.take(n) ++ Seq(b, e))
+      }
+    }(Encoders.row(g.schema))
   }
 
   /**

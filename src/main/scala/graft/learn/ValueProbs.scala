@@ -1,9 +1,8 @@
 package graft.learn
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import graft.model.SentenceAnnots
-import graft.nlp.AhoCorasick
 
 /**
  * A6 global value-probability map — the reference's genValProbMap
@@ -15,9 +14,12 @@ import graft.nlp.AhoCorasick
  *   total ≥ minGlobalCount ∧ prob <  minGlobalPrec  →  −1    (veto: value is usually NOT a T)
  *   total <  minGlobalCount                          →  0     (neutral: too rare to judge)
  *
- * Scale shape: the gold value vocabulary is small by construction (validated slice) and
- * is broadcast as an Aho-Corasick automaton; corpus occurrence counting is one narrow
- * pass over sentences + one aggregation — never a join against the corpus by value.
+ * The ladder, the vocabulary cap and the occurrence stream are [[LearnKernel]]'s
+ * ([[LearnKernel.valuePriors]] runs them over a collected slice). Scale shape here: the
+ * gold counts per value are collected (the validated slice is small by construction),
+ * the capped vocabulary is broadcast as an Aho-Corasick automaton, and corpus
+ * occurrence counting is one narrow pass over sentences + one aggregation per value —
+ * never a join against the corpus by value.
  */
 object ValueProbs {
 
@@ -27,10 +29,10 @@ object ValueProbs {
       // values with prior ≥ this enter the dictionary single-entity pass
       // (ref addSingleEntities, AutoAnnotateNER.java:2294-2460)
       dictThreshold: Double = 0.9,
-      // hard bound on the gold value vocabulary pulled to the driver (the broadcast
-      // automaton must fit in executor memory anyway): top-N by gold count, ties by
-      // value. The validated slice keeps this small by design; the cap makes the
-      // bound EXPLICIT in the API contract. Overflow is logged, never silent.
+      // hard bound on the gold value vocabulary (the broadcast automaton must fit in
+      // executor memory, and the prior table is built on the driver): top-N by gold
+      // count, ties by value. The validated slice keeps this small by design; the cap
+      // makes the bound EXPLICIT in the API contract. Overflow is logged, never silent.
       maxVocabulary: Int = 100000)
 
   /**
@@ -41,47 +43,19 @@ object ValueProbs {
   def compute(sentences: Dataset[SentenceAnnots], gold: DataFrame, cfg: Config = Config())(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val goldCnt = gold.select(col("annotType").as("annot_type"),
-        lower(col("value")).as("value"))
-      .groupBy("annot_type", "value").agg(count(lit(1)).as("gold_cnt"))
-    // capped driver funnel: the top-maxVocabulary values by gold count (ties by value
-    // for determinism), then re-sorted lexically for the automaton build
-    val topVals = goldCnt.groupBy("value").agg(sum("gold_cnt").as("g"))
-      .orderBy(col("g").desc, col("value"))
-      .limit(cfg.maxVocabulary + 1)
-      .select("value").as[String].collect()
-    if (topVals.length > cfg.maxVocabulary)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ValueProbs: gold vocabulary exceeds maxVocabulary=${cfg.maxVocabulary}; " +
-          "lowest-gold-count values are DROPPED from the prior table (no silent cap)")
-    val values = topVals.take(cfg.maxVocabulary).sorted.toIndexedSeq
-    if (values.isEmpty) return goldCnt.withColumn("total_cnt", lit(0L))
-      .withColumn("prior_bp", lit(0L))
-    val acB = spark.sparkContext.broadcast(
-      AhoCorasick.build(values.map(_.split("\\s+").toSeq)))
-    val valuesB = spark.sparkContext.broadcast(values)
-    val occ = sentences.flatMap { s =>
-        val stream = s.annots.filter(_.annotType == "Token").sortBy(_.begin)
-          .map(_.value.toLowerCase).toIndexedSeq
-        acB.value.findAll(stream).map { case (_, _, dictId) => valuesB.value(dictId) }
-      }.groupByKey(identity).count().toDF("value", "total_cnt")
-    // vocabulary membership via broadcast semi-join — an isInCollection over up to
-    // maxVocabulary literals would inline a ~100k-element In predicate into the plan
-    val inVocab = goldCnt.join(
-      broadcast(values.toDF("value")), Seq("value"), "left_semi")
-    inVocab.join(occ, Seq("value"), "left")
-      .withColumn("occ_cnt", coalesce(col("total_cnt"), lit(0L)))
-      .withColumn("total_cnt", greatest(col("occ_cnt"), col("gold_cnt")))
-      .withColumn("prior_bp",
-        // an occurrence count BELOW the gold count means the AC pass failed to find
-        // the value in the corpus stream (e.g. tokenization mismatch on punctuated
-        // multi-word values) — the measurement is broken for this value, so emit the
-        // NEUTRAL prior 0, never a minted trusted/dictionary-grade 1.0
-        when(col("occ_cnt") < col("gold_cnt"), lit(0L))
-          .when(col("total_cnt") < cfg.minGlobalCount, lit(0L))
-          .when(col("gold_cnt") * 10000L / col("total_cnt") >= cfg.minGlobalPrec * 10000,
-            floor(col("gold_cnt") * 10000L / col("total_cnt")).cast("long"))
-          .otherwise(lit(-1L)))
-      .select("annot_type", "value", "gold_cnt", "total_cnt", "prior_bp")
+    val goldCnt = gold.select(col("annotType"), col("value")).as[(String, String)]
+      .map { case (t, v) => LearnKernel.goldKey(t, v) }
+      .groupByKey(identity).count().collect().toMap
+    val values = LearnKernel.vocabulary(goldCnt, cfg.maxVocabulary)
+    val occ =
+      if (values.isEmpty) Map.empty[String, Long]
+      else {
+        val acB = spark.sparkContext.broadcast(LearnKernel.automaton(values))
+        val valuesB = spark.sparkContext.broadcast(values)
+        sentences.flatMap(s => LearnKernel.occurrences(s, acB.value, valuesB.value))
+          .groupByKey(identity).count().collect().toMap
+      }
+    LearnKernel.priors(goldCnt, values, occ.getOrElse(_, 0L), cfg)
+      .toDF("annot_type", "value", "gold_cnt", "total_cnt", "prior_bp")
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.canon.ConnectedComponents
 import graft.extract.{Extract, PageKernel}
-import graft.learn.{GenMSA, PatternStats, ValueProbs}
+import graft.learn.{GenMSA, LearnKernel, PatternStats, ValueProbs}
 import graft.link.EntityLink
 import graft.model.{Annotation, Page, Pattern, SentenceAnnots, Triple}
 import graft.nlp.{Annotate, Gazetteer}
@@ -17,10 +17,12 @@ import graft.sink.Materialize
  * reference's IEDriver loop (/root/reference/src/msa/IEDriver.java:527-1363), with each
  * stage a declarative Dataset transformation instead of a JDBC status machine:
  *
- *   gold slice ─ annotate + sentence-group (one fused narrow stage)
- *              ─ learn: blocked all-pairs MSA → patterns (tiny)
- *              ─ stats: match + per-pair precision gates → final patterns
- *              ─ priors: value priors → veto table + dictionary entries
+ *   gold slice ─ ONE collect: the training pages annotated + sentence-grouped in one
+ *                fused narrow stage, pulled to the driver (bounded by
+ *                MaxTrainingPages, loud when over)
+ *              ─ learn, on the driver ([[graft.learn.LearnKernel]]): blocked all-pairs
+ *                MSA → patterns; match + per-pair precision gates → final patterns;
+ *                value priors → veto table + dictionary entries; gold-span triples
  *   all pages  ─ ONE narrow mapPartitions per page: html→text → tokens + gazetteer
  *                Lookups → sentence grouping → [[graft.extract.PageKernel]] (pair
  *                matching, prior veto, dictionary pass, same-span dedup, W4 merge,
@@ -31,9 +33,11 @@ import graft.sink.Materialize
  *
  * The corpus pass does not shuffle before link: every extraction step is local to a
  * page (the reference's per-document AutoAnnotate → PopulateFrame), so no annotation,
- * sentence or mention row leaves the task that read its page. The learning path only
- * ever touches the validated slice (exactly the reference's design: learning on
- * status-1 docs, extraction on status-0, SURVEY.md §7.4.2).
+ * sentence or mention row leaves the task that read its page. Learning only ever
+ * touches the validated slice, and runs as plain Scala over it — exactly the
+ * reference's design: learning single-threaded on status-1 docs, extraction on
+ * status-0 (SURVEY.md §7.4.2). Between the slice's collect and the corpus pass [[run]]
+ * starts no Spark job.
  *
  * [[run]] and [[runCheckpointed]] share one body: learn → gate, the corpus pass and
  * canonicalization. They differ only in whether the `patterns`, `pair_stats` and
@@ -52,9 +56,19 @@ object KGPipeline {
   private val PriorsCfg = ValueProbs.Config()
   /** Training-gold provenance classes: human-validated spans plus spans propagated
     * onto near-duplicate docs by propagateGold (ref dupFlag pipeline). Each also
-    * materializes triples at its own precedence rank (see goldTriplesOf). */
+    * materializes triples at its own precedence rank (see LearnKernel.goldTriples). */
   private val GoldClasses = Seq("gold" -> graft.model.Provenance.Gold,
     "dup-propagated" -> graft.model.Provenance.Propagated)
+  /** Most training pages (distinct gold urls) the driver collects and learns on. The
+    * validated slice is small by design; a larger one fails the job before any page is
+    * read rather than exhausting the driver. */
+  private val MaxTrainingPages = 5000
+
+  /** Fails loudly when a training slice of `pages` pages exceeds `limit`. */
+  private[graft] def checkSliceSize(pages: Int, limit: Int = MaxTrainingPages): Unit =
+    if (pages > limit) throw new IllegalArgumentException(
+      s"training slice of $pages pages exceeds the limit of $limit pages: learning " +
+        "collects the validated slice to the driver, so train on a smaller gold sample")
 
   /**
    * @param pages      full corpus
@@ -76,8 +90,9 @@ object KGPipeline {
   private def extracted(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer, checkpoint: Option[(StageCheckpoint, String)])(
       implicit spark: SparkSession): (DataFrame, () => PageKernel) = {
+    import spark.implicits._
     val train = new TrainingSlice(pages, goldAnnots, gaz)
-    val m = learn(train, goldAnnots, checkpoint)
+    val m = learn(train, checkpoint)
 
     // 5. extract on ALL pages: one narrow pass, page → raw triples through the page
     // kernel. Patterns whose learned context contains an entity literal before the
@@ -85,16 +100,15 @@ object KGPipeline {
     // rest go through mention extraction + sentence-local nearest-entity resolution.
     // Value-probability priors (A6) veto mentions the validated corpus distrusts and
     // feed the dictionary pass for values it trusts.
-    lazy val kernel = kernelOf(m, train.sents, goldAnnots, gaz)
+    lazy val kernel = kernelOf(m, train, gaz)
     // validated gold spans ALSO materialize triples (ref PopulateFrame scans
     // validated + auto annotations, /root/reference/src/msa/PopulateFrame.java:144-192);
     // their provenance outranks auto rows at the same site in Materialize's
-    // precedence dedup. One small cogroup per provenance class over the train slice.
+    // precedence dedup. Resolved on the driver over the collected slice.
     val rawTriples = staged(checkpoint, "raw_triples") {
-      pageTriples(pages, kernel).unionByName(goldTriplesOf(train.sents, goldAnnots)).toDF()
+      pageTriples(pages, kernel).unionByName(
+        LearnKernel.goldTriples(train.sents, train.gold, GoldClasses).toDS()).toDF()
     }
-    // a materialized stage is read back from its files: the slice is no longer needed
-    if (checkpoint.isDefined) train.unpersist()
     (rawTriples, () => kernel)
   }
 
@@ -112,25 +126,19 @@ object KGPipeline {
     }
   }
 
-  /** The training slice: pages having gold annotations, with the gold spans (small,
-    * broadcastable by design — the reference trains on the validated sample only)
-    * merged in per page before grouping, annotated in one fused narrow pass (no url
-    * shuffle of the annotation set). Built at most once and only when a stage
-    * computes: a fully resumed run annotates nothing. */
+  /** The training slice, collected to the driver: the gold annotations, and the
+    * pages having them annotated and sentence-grouped with the gold spans merged in per
+    * page ([[Annotate.annotateSentences]], one narrow pass). Each is collected at most
+    * once and only when a stage computes: a fully resumed run reads nothing. */
   private final class TrainingSlice(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer)(implicit spark: SparkSession) {
-    private var cache: Option[Dataset[SentenceAnnots]] = None
-    def sents: Dataset[SentenceAnnots] = cache.getOrElse {
-      import spark.implicits._
-      val goldByUrl = goldAnnots.collect().toSeq.groupBy(_.url)
-      val goldUrls = goldAnnots.select($"url").distinct()
-      val ts = Annotate.annotateSentences(
-        pages.join(goldUrls, Seq("url"), "left_semi").as[Page], gaz, goldByUrl)
-        .persist(MEMORY_AND_DISK)
-      cache = Some(ts)
-      ts
+    lazy val gold: Seq[Annotation] = goldAnnots.collect().toSeq
+    lazy val sents: Seq[SentenceAnnots] = {
+      val goldByUrl = gold.groupBy(_.url)
+      checkSliceSize(goldByUrl.size)
+      Annotate.annotateSentences(pages.filter(col("url").isInCollection(goldByUrl.keys)),
+        gaz, goldByUrl).collect().toSeq
     }
-    def unpersist(): Unit = cache.foreach(_.unpersist())
   }
 
   /** What learning on the training slice yields: the target patterns, the gated
@@ -147,15 +155,16 @@ object KGPipeline {
       cp.materialize(name, fingerprint)(stage)
     }
 
-  /** Learn → gate, the steps both entry points share. */
-  private def learn(train: TrainingSlice, goldAnnots: Dataset[Annotation],
-      checkpoint: Option[(StageCheckpoint, String)])(
+  /** Learn → gate, the steps both entry points share, on the driver over the collected
+    * slice. Without a checkpoint the stage tables are local: collecting them starts no
+    * Spark job. */
+  private def learn(train: TrainingSlice, checkpoint: Option[(StageCheckpoint, String)])(
       implicit spark: SparkSession): Learned = {
     import spark.implicits._
     // 3. learn patterns on the gold slice: context profiles (profileType 0) AND target
     // profiles (profileType 1) — the reference's pair model
     val learned = staged(checkpoint, "patterns") {
-      GenMSA.learn(train.sents, GoldClasses.map(_._1).toSet, GenMSA.Config()).toDF()
+      LearnKernel.patterns(train.sents, GoldClasses.map(_._1).toSet, GenMSA.Config()).toDF()
     }.as[Pattern].collect().toSeq // small by construction (post minRows gate)
     // subsumption filter (ref BestPatterns.readProfiles): drop context profiles whose
     // token sequence contains a shorter surviving profile - redundant at match time
@@ -164,27 +173,15 @@ object KGPipeline {
     val tgtPatterns = learned.filter(_.profileType == 1)
 
     // 4. per-PAIR precision gates against the gold slice (ref `final` table +
-    // ProfileReader per-pair gates + A3 active check). Pairs are judged against the
-    // collected pattern set, so the MSA never runs again inside the stats job.
-    var pairStats: Option[DataFrame] = None
+    // ProfileReader per-pair gates + A3 active check), gold spans snapped to token
+    // extents first (J5). Pairs are judged against the collected pattern set, so the
+    // MSA never runs again inside the stats step.
     val allowedPairs = staged(checkpoint, "pair_stats") {
-      val trainSents = train.sents
-      val matches = PatternStats.applyPatternsPaired(trainSents, ctxPatterns, tgtPatterns,
-        StatsCfg)
-      // J5: snap ragged human-validated boundaries outward to token extents first
-      val tokenSpans = trainSents.flatMap(s =>
-          s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
-        .toDF("url", "begin", "end")
-      val gold = PatternStats.snapGoldToTokens(
-        goldAnnots.toDF().select($"url", $"annotType", $"begin", $"end"), tokenSpans)
-      val ps = PatternStats.scorePairs(matches, gold, spark.createDataset(learned),
-          StatsCfg).persist(MEMORY_AND_DISK)
-      pairStats = Some(ps)
-      PatternStats.keptPairs(ps, StatsCfg)
-        .join(PatternStats.activeProfiles(ps, StatsCfg), Seq("profileId"), "left_semi")
-        .select($"profileId", $"targetId", $"prec")
+      val stats = LearnKernel.pairStats(train.sents, ctxPatterns, tgtPatterns, learned,
+        train.gold, StatsCfg)
+      LearnKernel.allowedPairs(stats, StatsCfg).toSeq
+        .map { case ((c, t), prec) => (c, t, prec) }.toDF("profileId", "targetId", "prec")
     }.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    pairStats.foreach(_.unpersist())
     Learned(tgtPatterns, allowedPairs, gated(ctxPatterns, allowedPairs))
   }
 
@@ -205,20 +202,6 @@ object KGPipeline {
       .as[Triple]
   }
 
-  /** Triples from the validated gold spans themselves (ref PopulateFrame's
-    * targetProvenance scan): each gold annotation becomes a mention, subject-resolved
-    * sentence-locally like any extraction, stamped with its provenance class so the
-    * materialization precedence rule can rank it above auto evidence. */
-  private def goldTriplesOf(trainSents: Dataset[SentenceAnnots],
-      goldAnnots: Dataset[Annotation])(implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    GoldClasses.map { case (src, prov) =>
-      val ms = goldAnnots.filter(_.provenance == src).map(a =>
-        graft.model.Mention(a.url, a.annotType, a.begin, a.end, a.value, -1L, a.score))
-      Extract.triples(trainSents, ms, provenance = prov)
-    }.reduce(_ unionByName _)
-  }
-
   /** Context patterns that keep at least one gated pair, scored with their best
     * pair's precision. */
   private def gated(ctxPatterns: Seq[Pattern],
@@ -233,15 +216,14 @@ object KGPipeline {
   /** The corpus pass's page kernel: final patterns split into two-slot relation and
     * plain patterns, the pair gate, and the value priors of the training slice (the
     * veto table, and the dictionary of values trusted at ≥ dictThreshold). */
-  private def kernelOf(m: Learned, trainSents: Dataset[SentenceAnnots],
-      goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
-      implicit spark: SparkSession): PageKernel = {
+  private def kernelOf(m: Learned, train: TrainingSlice, gaz: Gazetteer): PageKernel = {
     val upgraded = m.finalPatterns.map(p => p -> Extract.toRelationPattern(p))
-    val priorRows = ValueProbs.compute(trainSents, goldAnnots.toDF(), PriorsCfg).collect()
-    val priorVeto = priorRows.map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
-    val dictEntries = priorRows.toSeq
-      .filter(_.getLong(4) >= math.round(PriorsCfg.dictThreshold * 10000))
-      .map(r => (r.getString(0), r.getString(1), r.getLong(4)))
+    val priors = LearnKernel.valuePriors(train.sents,
+      train.gold.map(a => (a.annotType, a.value)), PriorsCfg)
+    val priorVeto = priors.map(p => ((p.annotType, p.value), p.priorBp)).toMap
+    val dictEntries = priors
+      .filter(_.priorBp >= math.round(PriorsCfg.dictThreshold * 10000))
+      .map(p => (p.annotType, p.value, p.priorBp))
     PageKernel(upgraded.collect { case (_, Some(rel)) => rel },
       upgraded.collect { case (p, None) => p }, m.tgtPatterns, m.allowedPairs, priorVeto,
       dictEntries, gaz, StatsCfg.matcher)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.align.Grid
 import graft.extract.{Extract, PageKernel}
 import graft.learn.{GenMSA, PatternStats, ValueProbs}
-import graft.model.{Pattern, SentenceAnnots, Triple}
+import graft.model.{Annotation, Pattern, SentenceAnnots, Triple}
 import graft.nlp.Annotate
 import graft.testgen.CorpusGen
 
@@ -43,19 +43,30 @@ final case class LearnedModel(rel: Seq[Pattern], plain: Seq[Pattern], tgt: Seq[P
 
 object LearnedModel {
 
-  /** Model learned on a CorpusGen slice through the public calls `KGPipeline.run`
-    * makes, plus hand-set parts: two seeded relation patterns, a veto on a city the
-    * patterns extract, and dictionary entries that hit pattern sites (score ties
-    * broken on profileId), the vetoed city (the dictionary pass is not vetoed) and
-    * adjacent filler words (W4 merges). Learned once per test JVM. */
-  lazy val model: LearnedModel = {
+  /** The training slice the model is learned on: 40 CorpusGen pages annotated and
+    * sentence-grouped with their gold spans merged in, and those gold spans. */
+  lazy val slice: (Seq[SentenceAnnots], Seq[Annotation]) = {
     implicit val spark: SparkSession = SparkTestBase.spark
     import spark.implicits._
     val train = CorpusGen.pages(40)
     val goldRows = train.flatMap(CorpusGen.goldAnnotations)
+    val sents = Annotate.annotateSentences(spark.createDataset(train.map(_.page)),
+      CorpusGen.gazetteer, goldRows.groupBy(_.url)).collect().toSeq
+    (sents, goldRows)
+  }
+
+  /** Model learned on [[slice]] through the public Dataset operators (wrappers over the
+    * [[graft.learn.LearnKernel]] functions `KGPipeline.run` calls), plus hand-set
+    * parts: two seeded relation patterns, a veto on a city the patterns extract, and
+    * dictionary entries that hit pattern sites (score ties broken on profileId), the
+    * vetoed city (the dictionary pass is not vetoed) and adjacent filler words (W4
+    * merges). Learned once per test JVM. */
+  lazy val model: LearnedModel = {
+    implicit val spark: SparkSession = SparkTestBase.spark
+    import spark.implicits._
+    val (sents, goldRows) = slice
     val gold = spark.createDataset(goldRows)
-    val ts = Annotate.annotateSentences(spark.createDataset(train.map(_.page)),
-      CorpusGen.gazetteer, goldRows.groupBy(_.url)).cache()
+    val ts = spark.createDataset(sents).cache()
     val statsCfg = PatternStats.Config()
     val patterns = GenMSA.learn(ts, Set("gold"))
     val learned = patterns.collect().toSeq

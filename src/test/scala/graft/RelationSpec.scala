@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.align.Grid
 import graft.extract.{DocExtract, Extract, PatternMatcher}
-import graft.model.Pattern
+import graft.model.{Mention, Pattern, SentenceAnnots, Triple}
 import graft.nlp.{GazEntry, Gazetteer, Tokenizer}
 
 /** Two-slot relation patterns: the `:subject` slot binds entity spans in the match. */
@@ -37,7 +40,7 @@ class RelationSpec extends AnyFunSuite with SparkTest {
       graft.model.Mention("https://nohost.example.org/p", "num", 0, 2, "42", 1L, 1.0))))
     def canon(t: graft.model.Triple) = (t.subj, t.pred, t.obj, t.url, t.begin, t.end)
     val local = Extract.triples(sents, mentions).collect().map(canon).sorted
-    val joined = Extract.triplesViaJoin(sents, mentions).collect().map(canon).sorted
+    val joined = RelationSpec.triplesViaJoin(sents, mentions).collect().map(canon).sorted
     assert(local.length > 40, s"too few triples: ${local.length}")
     assert(local.toSeq === joined.toSeq)
     sents.unpersist()
@@ -116,5 +119,40 @@ class RelationSpec extends AnyFunSuite with SparkTest {
     val ok = DocExtract.pairStats(docs, "doc_id", "text", "merge",
       Seq("alpha", "beta"))
     assert(ok.count() >= 2)
+  }
+}
+
+object RelationSpec {
+
+  /** Join+window formulation of `Extract.triples`: the parity oracle of its cogroup
+    * subject resolution. It shuffles the mention × subject product. */
+  def triplesViaJoin(sentences: Dataset[SentenceAnnots], ms: Dataset[Mention])(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    // candidate subjects per page: entity Lookup spans
+    val subjects = sentences.flatMap { s =>
+      s.annots.filter(a => a.annotType == "Lookup" &&
+          a.features.getOrElse("majorType", "") == "entity")
+        .map(a => (s.url, s.sentBegin, s.sentEnd, a.begin, a.end, a.value))
+    }.toDF("url", "sb", "se", "ab", "ae", "subjVal")
+    // subject = nearest preceding (or first following) entity lookup in the sentence
+    // containing the mention; one window argmin after a per-page equi-join.
+    val joined = ms.toDF().join(subjects, Seq("url"), "left")
+      .withColumn("inSent",
+        $"sb".isNotNull && $"begin" >= $"sb" && $"begin" < $"se" &&
+          !($"ab" === $"begin" && $"ae" === $"end")) // a mention is not its own subject
+      .withColumn("dist",
+        when(!$"inSent", lit(2000000))
+          .when($"ae" <= $"begin", $"begin" - $"ae")         // preceding: distance
+          .otherwise(lit(1000000) + ($"ab" - $"begin")))     // following: penalized
+    val w = Window.partitionBy($"url", $"annotType", $"begin", $"end")
+      .orderBy($"dist".asc, $"ab".asc)
+    joined.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+      .select(
+        when($"inSent", $"subjVal")
+          .otherwise(regexp_extract($"url", "^[a-z]+://([^/]+)", 1)).as("subj"),
+        $"annotType".as("pred"), $"value".as("obj"), $"url", $"begin", $"end",
+        $"profileId", $"score", lit(graft.model.Provenance.Auto).as("provenance"))
+      .as[Triple]
   }
 }
