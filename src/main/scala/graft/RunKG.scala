@@ -15,11 +15,13 @@ import org.apache.spark.sql.SparkSession
  * the bucket count.
  *
  * With a 4th arg `stageDir`, runs the RESUMABLE production path instead
- * ([[graft.pipeline.KGPipeline.runCheckpointed]]): the patterns, pair_stats and
- * raw_triples stages materialize through [[graft.runtime.StageCheckpoint]] under
- * stageDir with per-partition lineage + counters, and a re-submitted run resumes at
- * its first incomplete stage and rewrites only the output buckets not yet committed —
- * the north rule's long-corpus spark-submit shape.
+ * ([[graft.pipeline.KGPipeline.runCheckpointed]]): the raw_triples stage (learning
+ * runs inside it) materializes through [[graft.runtime.StageCheckpoint]] under
+ * stageDir with per-partition lineage + counters, and the output commit is keyed by
+ * the run's fingerprint (nPages and the training size): a re-submission over an
+ * output its fingerprint completely committed returns without work, a resumed one
+ * rewrites only the buckets it has not committed, and one with another nPages
+ * replaces the table — the north rule's long-corpus spark-submit shape.
  */
 object RunKG {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,6 @@
 package graft.align
 
+import graft.extract.PageKernel
 import graft.model.Annotation
 
 /**
@@ -15,7 +16,7 @@ import graft.model.Annotation
  * target (ref :376-396).
  *
  * Label format follows the reference exactly (AnnotationSequence.java:300-347):
- * ":" + type + "|" + feature + "|" + value.toLowerCase, spaces → dashes.
+ * ":" + type + "|" + feature + "|" + lowered value (Locale.ROOT), spaces → dashes.
  */
 /**
  * @param spans parallel to `labels`: the total column-span of the annotation that
@@ -60,19 +61,20 @@ object Grid {
   val Subject = ":subject"
 
   def label(annotType: String, feature: String, value: String): String =
-    ":" + annotType.toLowerCase + "|" + feature.toLowerCase + "|" + labelValue(value)
+    ":" + PageKernel.lowered(annotType) + "|" + PageKernel.lowered(feature) + "|" +
+      labelValue(value)
 
-  /** `value.toLowerCase.replace(' ', '-')` with an allocation-free fast path for the
-    * overwhelmingly common case (pure lowercase-ASCII token values): byte-identical
+  /** `PageKernel.lowered(value).replace(' ', '-')` with an allocation-free fast path
+    * for the overwhelmingly common case (pure lowercase-ASCII token values): byte-identical
     * to the slow path — any char that is uppercase-ASCII, a space, or non-ASCII
-    * (locale-sensitive lowercasing) routes to the original expression. */
+    * routes to the original expression. */
   private def labelValue(value: String): String = {
     var i = 0
     val n = value.length
     while (i < n) {
       val c = value.charAt(i)
       if (c >= 'A' && c <= 'Z' || c == ' ' || c >= 0x80)
-        return value.toLowerCase.replace(' ', '-')
+        return PageKernel.lowered(value).replace(' ', '-')
       i += 1
     }
     value
@@ -149,7 +151,7 @@ object Grid {
               // parser/chunker phrase node: ":syntaxtreenode|cat|np" — the label shape
               // the reference's syntax gates key on (MSAUtils.java:17-55)
               add(label("syntaxtreenode", "cat", a.features.getOrElse("cat", "")), lo, hi)
-            case other    => add(":" + other.toLowerCase, lo, hi)
+            case other    => add(":" + PageKernel.lowered(other), lo, hi)
           }
         }
       }

@@ -44,14 +44,14 @@ object DocExtract {
     import spark.implicits._
     val termsIdx = terms.toIndexedSeq
     val acB = spark.sparkContext.broadcast(
-      AhoCorasick.build(termsIdx.map(_.toLowerCase.split("\\s+").toSeq)))
+      AhoCorasick.build(termsIdx.map(t => PageKernel.lowered(t).split("\\s+").toSeq)))
     val hits = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val ac = acB.value
         it.flatMap { case (id, text) =>
           val toks = graft.nlp.Tokenizer.scan(text)
-          val stream = toks.map(t => text.substring(t.begin, t.end).toLowerCase)
+          val stream = toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
           ac.findAll(stream).map { case (_, _, dictId) => (id, dictId) }
         }
       }.toDF("id", "dict_id")
@@ -74,7 +74,8 @@ object DocExtract {
   /** A hand-seeded two-slot relation pattern: gazetteer `:subject` immediately before
     * the trigger token, `:target` immediately after — minimal-span ⇒ single tokens. */
   def relationPattern(trigger: String, pred: String): Pattern =
-    Pattern(1L, Seq(Grid.Subject, s":token|string|${trigger.toLowerCase}", Grid.Target),
+    Pattern(1L,
+      Seq(Grid.Subject, s":token|string|${PageKernel.lowered(trigger)}", Grid.Target),
       annotType = pred, profileType = 0, group = "seed",
       score = 1.0, truePos = 0, falsePos = 0, rows = 0)
 
@@ -211,11 +212,11 @@ object DocExtract {
       import graft.learn.{LearnKernel, PatternStats}
       import spark.implicits._
       val pred = s"after_$trigger"
-      val ctx = Pattern(1L, Seq(s":token|string|${trigger.toLowerCase}", Grid.Target),
+      val ctx = Pattern(1L, Seq(s":token|string|${PageKernel.lowered(trigger)}", Grid.Target),
         pred, 0, "seed", 1.0, 0, 0, 0)
       val tKw = Pattern(11L, Seq(":lookup|majortype|kw"), pred, 1, "seed", 1.0, 0, 0, 0)
       val tWord = Pattern(12L, Seq(":token|kind|word"), pred, 1, "seed", 1.0, 0, 0, 0)
-      val triggerLabel = s":token|string|${trigger.toLowerCase}"
+      val triggerLabel = s":token|string|${PageKernel.lowered(trigger)}"
       val gold = sents.flatMap { s =>
         val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
         grid.cols.sliding(2).collect {
@@ -244,7 +245,7 @@ object DocExtract {
       import graft.learn.ValueProbs
       import spark.implicits._
       val pred = s"after_$trigger"
-      val triggerLabel = s":token|string|${trigger.toLowerCase}"
+      val triggerLabel = s":token|string|${PageKernel.lowered(trigger)}"
       val gold = sents.flatMap { s =>
         val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
         grid.cols.sliding(2).collect {
@@ -276,7 +277,7 @@ object DocExtract {
       val tokens = sents.flatMap(s =>
           s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
         .toDF("url", "begin", "end")
-      val triggerLabel = s":token|string|${trigger.toLowerCase}"
+      val triggerLabel = s":token|string|${PageKernel.lowered(trigger)}"
       val kwLabel = ":lookup|majortype|kw"
       val predicted = sents.flatMap { s =>
         val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
@@ -302,7 +303,7 @@ object DocExtract {
   /** A hand-seeded single-anchor pattern: ":token|string|<trigger>" followed by a
     * one-token `:target` (minimal-span rule ⇒ exactly the next token). */
   def triggerPattern(trigger: String): Pattern =
-    Pattern(1L, Seq(s":token|string|${trigger.toLowerCase}", Grid.Target),
+    Pattern(1L, Seq(s":token|string|${PageKernel.lowered(trigger)}", Grid.Target),
       annotType = s"follows_$trigger", profileType = 0, group = "seed",
       score = 1.0, truePos = 0, falsePos = 0, rows = 0)
 

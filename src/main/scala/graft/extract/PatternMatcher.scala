@@ -353,7 +353,7 @@ object PatternMatcher {
     else g.copy(cols = g.cols.map { c =>
       val add = spans.collect {
         case (t, b, e) if b <= c.begin && e >= c.end && c.end > c.begin =>
-          ":" + t.toLowerCase
+          ":" + PageKernel.lowered(t)
       }.distinct.filterNot(c.has)
       if (add.isEmpty) c
       else c.copy(labels = c.labels ++ add,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.extract.PageKernel
 import graft.nlp.{AhoCorasick, Tokenizer}
 
 /**
@@ -41,7 +42,7 @@ final case class AhoCorasickMatches(child: Expression, terms: Seq[String])
   // compiled once per (planned) expression instance; serialized to executors with the
   // generated-code references, never rebuilt per row
   @transient private lazy val automaton: AhoCorasick =
-    AhoCorasick.build(terms.map(_.toLowerCase.split("\\s+").toSeq))
+    AhoCorasick.build(terms.map(t => PageKernel.lowered(t).split("\\s+").toSeq))
   @transient private lazy val termArr: Array[UTF8String] =
     terms.map(UTF8String.fromString).toArray
 
@@ -74,7 +75,7 @@ object AhoCorasickMatches {
   /** Executor-side kernel, called from both interpreted eval and generated code. */
   def run(ac: AhoCorasick, terms: Array[UTF8String], text: String): ArrayData = {
     val toks = Tokenizer.scan(text)
-    val stream = toks.map(t => text.substring(t.begin, t.end).toLowerCase)
+    val stream = toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
     val hits = ac.findAll(stream)
     val rows = new Array[Any](hits.length)
     var i = 0

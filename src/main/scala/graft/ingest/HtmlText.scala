@@ -2,6 +2,8 @@ package graft.ingest
 
 import scala.collection.mutable
 
+import graft.extract.PageKernel
+
 /**
  * Deterministic HTML → text extraction (no external parser; frozen by golden hashes).
  *
@@ -69,8 +71,9 @@ object HtmlText {
           if (end < 0) { i = n } // malformed tail: drop
           else {
             val body = html.substring(i + 1, end)
-            val name = body.takeWhile(ch => ch != ' ' && ch != '\t' && ch != '\n' && ch != '/')
-              .stripPrefix("/").toLowerCase
+            val name = PageKernel.lowered(body
+              .takeWhile(ch => ch != ' ' && ch != '\t' && ch != '\n' && ch != '/')
+              .stripPrefix("/"))
             if ((name == "script" || name == "style") && !body.startsWith("/") &&
                 !body.endsWith("/")) skipUntil = name
             if (BlockTags.contains(name)) emitChar('\n')

@@ -3,6 +3,7 @@ package graft.learn
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.align.SmithWaterman
+import graft.extract.PageKernel
 import graft.model.{Annotation, SentenceAnnots}
 
 /**
@@ -68,13 +69,13 @@ object Propagate {
     // gold spans inside THIS a-sentence only
     val local = goldSpans.filter(g => g._2 >= aSent.sentBegin && g._3 <= aSent.sentEnd)
     if (local.isEmpty) return Vector.empty
-    val aStream = aToks.map(_.value.toLowerCase).toIndexedSeq
-    val bStream = bToks.map(_.value.toLowerCase).toIndexedSeq
+    val aStream = aToks.map(t => PageKernel.lowered(t.value)).toIndexedSeq
+    val bStream = bToks.map(t => PageKernel.lowered(t.value)).toIndexedSeq
     val aligned = SmithWaterman.alignTokens(aStream, bStream)
     if (aligned < math.min(minAligned, aStream.length)) return Vector.empty
     val ratio = aligned.toDouble / math.max(aStream.length, bStream.length)
     local.flatMap { case (annotType, _, _, value) =>
-      val valToks = value.toLowerCase.split("\\s+").toIndexedSeq
+      val valToks = PageKernel.lowered(value).split("\\s+").toIndexedSeq
       // exact token-run search for the gold value in the duplicate sentence — the
       // deterministic equivalent of the reference's SW-backtrack span mapping
       bStream.indexOfSlice(valToks) match {

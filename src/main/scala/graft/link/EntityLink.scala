@@ -2,6 +2,7 @@ package graft.link
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.extract.PageKernel
 
 /**
  * Entity linking: blocking + Jaccard candidate scoring.
@@ -35,7 +36,7 @@ object EntityLink {
   /** Normalize a surface form for linking: lowercase, strip non-alnum to single spaces.
     * (Scala twin of the codegen column expression below — used by tests/callers.) */
   val normalizeForm: String => String = s =>
-    s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
+    PageKernel.lowered(s).replaceAll("[^a-z0-9]+", " ").trim
 
   /** The two block keys of a normalized form, as an array (exploded into one row per
     * family). All builtin codegen columns — no UDF at canonicalization time. */

@@ -1,5 +1,6 @@
 package graft.nlp
 
+import graft.extract.PageKernel
 import graft.model.Annotation
 
 /**
@@ -46,7 +47,7 @@ object Chunker {
     * content semantics; punctuation breaks every chunk). */
   def chunk(toks: IndexedSeq[Tokenizer.Tok], text: String): Vector[Chunk] = {
     val words: IndexedSeq[String] =
-      toks.map(t => text.substring(t.begin, t.end).toLowerCase)
+      toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
     val out = Vector.newBuilder[Chunk]
     val n = toks.size
     var i = 0

@@ -1,5 +1,6 @@
 package graft.nlp
 
+import graft.extract.PageKernel
 import graft.model.Annotation
 
 /**
@@ -21,7 +22,7 @@ final class Gazetteer private (
     * emitted, overlap resolution is downstream policy like the reference). */
   def annotate(url: String, text: String, toks: IndexedSeq[Tokenizer.Tok],
       firstId: Int, provenance: String = "gazetteer"): Vector[Annotation] = {
-    val stream = toks.map(t => text.substring(t.begin, t.end).toLowerCase)
+    val stream = toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
     var id = firstId
     automaton.findAll(stream).map { case (s, e, dictId) =>
       val entry = entries(dictId)
@@ -39,7 +40,7 @@ final class Gazetteer private (
 object Gazetteer {
   def build(entries: Seq[GazEntry]): Gazetteer = {
     val idx = entries.toIndexedSeq
-    val pats = idx.map(_.phrase.toLowerCase.split("\\s+").toSeq)
+    val pats = idx.map(e => PageKernel.lowered(e.phrase).split("\\s+").toSeq)
     new Gazetteer(idx, AhoCorasick.build(pats))
   }
 }

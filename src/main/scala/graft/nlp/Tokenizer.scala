@@ -1,6 +1,7 @@
 package graft.nlp
 
 import scala.collection.mutable
+import graft.extract.PageKernel
 import graft.model.Annotation
 
 /**
@@ -68,14 +69,14 @@ object Tokenizer {
     else "mixedCaps"
   }
 
-  /** `s.toLowerCase` with an allocation-free fast path for pure lowercase-ASCII
+  /** `PageKernel.lowered(s)` with an allocation-free fast path for pure lowercase-ASCII
     * input (the common case for web-corpus tokens); any uppercase-ASCII or
-    * non-ASCII char routes to the locale-correct slow path — byte-identical. */
+    * non-ASCII char routes to the slow path — byte-identical. */
   private[nlp] def lowerAscii(s: String): String = {
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c >= 'A' && c <= 'Z' || c >= 0x80) return s.toLowerCase
+      if (c >= 'A' && c <= 'Z' || c >= 0x80) return PageKernel.lowered(s)
       i += 1
     }
     s

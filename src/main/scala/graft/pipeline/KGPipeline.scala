@@ -40,10 +40,10 @@ import graft.sink.Materialize
  * starts no Spark job.
  *
  * [[run]] and [[runCheckpointed]] share one body: learn → gate, the corpus pass and
- * canonicalization. They differ only in whether the `patterns`, `pair_stats` and
- * `raw_triples` stages are checkpointed and in the final write (`Materialize.write`
- * or `writeResumable`). The job has no knobs: default MSA, stats and prior configs,
- * training gold of provenance `gold` or `dup-propagated`, 16 output buckets.
+ * canonicalization. They differ only in whether the `raw_triples` stage is
+ * checkpointed and in the final write (`Materialize.write`, or `writeResumable` keyed
+ * by the run's fingerprint). The job has no knobs: default MSA, stats and prior
+ * configs, training gold of provenance `gold` or `dup-propagated`, 16 output buckets.
  */
 object KGPipeline {
 
@@ -84,15 +84,15 @@ object KGPipeline {
   }
 
   /** Learn → gate → corpus pass, the body both entry points share; a `checkpoint`
-    * materializes the `patterns`, `pair_stats` and `raw_triples` stages. Returns the
-    * raw triples and the page kernel, built on first use: a resumed `raw_triples`
-    * stage builds no kernel and annotates nothing. */
+    * materializes the one `raw_triples` stage. Learning runs lazily inside that stage:
+    * a resumed `raw_triples` stage collects no training slice, builds no kernel and
+    * annotates nothing. Returns the raw triples and the page kernel, built on first
+    * use. */
   private def extracted(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer, checkpoint: Option[(StageCheckpoint, String)])(
       implicit spark: SparkSession): (DataFrame, () => PageKernel) = {
     import spark.implicits._
     val train = new TrainingSlice(pages, goldAnnots, gaz)
-    val m = learn(train, checkpoint)
 
     // 5. extract on ALL pages: one narrow pass, page → raw triples through the page
     // kernel. Patterns whose learned context contains an entity literal before the
@@ -100,16 +100,16 @@ object KGPipeline {
     // rest go through mention extraction + sentence-local nearest-entity resolution.
     // Value-probability priors (A6) veto mentions the validated corpus distrusts and
     // feed the dictionary pass for values it trusts.
-    lazy val kernel = kernelOf(m, train, gaz)
+    lazy val kernel = kernelOf(learn(train), train, gaz)
     // validated gold spans ALSO materialize triples (ref PopulateFrame scans
     // validated + auto annotations, /root/reference/src/msa/PopulateFrame.java:144-192);
     // their provenance outranks auto rows at the same site in Materialize's
     // precedence dedup. Resolved on the driver over the collected slice.
-    val rawTriples = staged(checkpoint, "raw_triples") {
-      pageTriples(pages, kernel).unionByName(
-        LearnKernel.goldTriples(train.sents, train.gold, GoldClasses).toDS()).toDF()
-    }
-    (rawTriples, () => kernel)
+    def rawTriples = pageTriples(pages, kernel).unionByName(
+      LearnKernel.goldTriples(train.sents, train.gold, GoldClasses).toDS()).toDF()
+    (checkpoint.fold(rawTriples) { case (cp, fingerprint) =>
+      cp.materialize("raw_triples", fingerprint)(rawTriples)
+    }, () => kernel)
   }
 
   /** The corpus pass every batch job runs: ONE narrow mapPartitions, each page read
@@ -147,25 +147,14 @@ object KGPipeline {
   private final case class Learned(tgtPatterns: Seq[Pattern],
       allowedPairs: Map[(Long, Long), Double], finalPatterns: Seq[Pattern])
 
-  /** A stage's output: as computed, or through a [[StageCheckpoint]] under
-    * the run's fingerprint. */
-  private def staged(checkpoint: Option[(StageCheckpoint, String)], name: String)(
-      stage: => DataFrame): DataFrame =
-    checkpoint.fold(stage) { case (cp, fingerprint) =>
-      cp.materialize(name, fingerprint)(stage)
-    }
-
   /** Learn → gate, the steps both entry points share, on the driver over the collected
-    * slice. Without a checkpoint the stage tables are local: collecting them starts no
-    * Spark job. */
-  private def learn(train: TrainingSlice, checkpoint: Option[(StageCheckpoint, String)])(
-      implicit spark: SparkSession): Learned = {
-    import spark.implicits._
+    * slice: plain Scala, no Spark job. */
+  private def learn(train: TrainingSlice): Learned = {
     // 3. learn patterns on the gold slice: context profiles (profileType 0) AND target
-    // profiles (profileType 1) — the reference's pair model
-    val learned = staged(checkpoint, "patterns") {
-      LearnKernel.patterns(train.sents, GoldClasses.map(_._1).toSet, GenMSA.Config()).toDF()
-    }.as[Pattern].collect().toSeq // small by construction (post minRows gate)
+    // profiles (profileType 1) — the reference's pair model; small by construction
+    // (post minRows gate)
+    val learned = LearnKernel.patterns(train.sents, GoldClasses.map(_._1).toSet,
+      GenMSA.Config())
     // subsumption filter (ref BestPatterns.readProfiles): drop context profiles whose
     // token sequence contains a shorter surviving profile - redundant at match time
     val ctxPatterns = GenMSA.subsumptionFilter(
@@ -176,12 +165,8 @@ object KGPipeline {
     // ProfileReader per-pair gates + A3 active check), gold spans snapped to token
     // extents first (J5). Pairs are judged against the collected pattern set, so the
     // MSA never runs again inside the stats step.
-    val allowedPairs = staged(checkpoint, "pair_stats") {
-      val stats = LearnKernel.pairStats(train.sents, ctxPatterns, tgtPatterns, learned,
-        train.gold, StatsCfg)
-      LearnKernel.allowedPairs(stats, StatsCfg).toSeq
-        .map { case ((c, t), prec) => (c, t, prec) }.toDF("profileId", "targetId", "prec")
-    }.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val allowedPairs = LearnKernel.allowedPairs(LearnKernel.pairStats(train.sents,
+      ctxPatterns, tgtPatterns, learned, train.gold, StatsCfg), StatsCfg)
     Learned(tgtPatterns, allowedPairs, gated(ctxPatterns, allowedPairs))
   }
 
@@ -266,21 +251,31 @@ object KGPipeline {
       Some(CanonicalMetric))
 
   /**
-   * Fully resumable variant: the `patterns`, `pair_stats` and `raw_triples` stages are
-   * materialized through [[graft.runtime.StageCheckpoint]] with per-partition lineage,
-   * keyed by the caller's `fingerprint` (input + config identity). A restarted run
-   * resumes at its first incomplete stage; the final write goes through
-   * [[Materialize.writeResumable]] (per-bucket checkpoints). This is the production
-   * `spark-submit` path for long corpus runs (north rule: resumable from checkpoint
-   * with per-partition lineage + metrics). Learning, gating and the corpus pass are
-   * [[run]]'s: `raw_triples` checkpoints exactly the raw triples `run` computes.
+   * Fully resumable variant, the production `spark-submit` path for long corpus runs
+   * (north rule: resumable from checkpoint with per-partition lineage + metrics),
+   * keyed by the caller's `fingerprint` (input + config identity):
+   *  - a re-submission whose output this fingerprint has completely committed (the
+   *    commit's completion record, each listed bucket still holding its data
+   *    partition and a lineage row of this fingerprint) returns the latest-per-bucket
+   *    lineage at once: it reads no page, no gold row and no stage, and runs no link,
+   *    CC or dedup;
+   *  - otherwise the one `raw_triples` stage materializes through
+   *    [[graft.runtime.StageCheckpoint]] with per-partition lineage (resumed when this
+   *    fingerprint committed it), and [[Materialize.writeResumable]] rewrites only the
+   *    buckets whose lineage this fingerprint did not write, replacing the whole table
+   *    when it wrote none — so facts another fingerprint committed never survive.
+   * Learning runs inside the `raw_triples` stage: a crash inside the corpus pass
+   * re-learns on the driver (seconds) before re-running the pass, which it had to redo
+   * anyway, and no learned table is checkpointed. Learning, gating and the corpus pass
+   * are [[run]]'s: `raw_triples` checkpoints exactly the raw triples `run` computes.
    */
   def runCheckpointed(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer, stageDir: String, fingerprint: String, outPath: String)(
-      implicit spark: SparkSession): DataFrame = {
-    val (rawTriples, _) = extracted(pages, goldAnnots, gaz,
-      Some((StageCheckpoint(stageDir), fingerprint)))
-    Materialize.writeResumable(canonicalOf(rawTriples), outPath, Buckets,
-      Some(CanonicalMetric))
-  }
+      implicit spark: SparkSession): DataFrame =
+    Materialize.committedLineage(outPath, fingerprint).getOrElse {
+      val (rawTriples, _) = extracted(pages, goldAnnots, gaz,
+        Some((StageCheckpoint(stageDir), fingerprint)))
+      Materialize.writeResumable(canonicalOf(rawTriples), outPath, Buckets,
+        Some(CanonicalMetric), fingerprint)
+    }
 }

@@ -1,7 +1,11 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.model.Triple
 
 /**
@@ -15,9 +19,11 @@ import graft.model.Triple
  * idempotent per bucket via dynamic partition overwrite (the parquet stand-in for
  * Iceberg's overwritePartitions; no Iceberg runtime ships in this sandbox).
  *
- * A `_checkpoints` side table records (stage, bucket, rows, hash): a resumed run
- * anti-joins completed buckets and rewrites only the rest — per-partition lineage +
- * metrics per the north rule.
+ * A `_checkpoints` side table records (bucket, rows, hash, stage, time, fingerprint):
+ * a resumed run anti-joins completed buckets and rewrites only the rest —
+ * per-partition lineage + metrics per the north rule. A fingerprinted commit trusts
+ * only its own fingerprint's rows and, once complete, leaves a completion record there
+ * ([[committedLineage]]) that lets a re-submission skip the job.
  *
  * NOTE: this is the PLAIN-DIRECTORY variant (hive layout readable by any engine, no
  * manifest indirection). [[TripleStore]] commits the same bucketed output through
@@ -85,6 +91,18 @@ object Materialize {
       .select(col("bucket") +: rest.map(c => col(s"w.$c").as(c)): _*)
   }
 
+  /** Schema of the `_checkpoints` table. Reads name it, so probing the table starts no
+    * schema-inference job; rows written without a fingerprint carry null. */
+  private val LineageSchema = StructType(Seq(StructField("bucket", IntegerType),
+    StructField("rows_out", LongType), StructField("output_hash", LongType),
+    StructField("stage", StringType), StructField("completed_at", TimestampType),
+    StructField("fingerprint", StringType)))
+
+  /** The completion record a fingerprinted commit leaves under `_checkpoints` (a `_`
+    * file, so parquet readers skip it): the buckets it covers on the first line, then
+    * the fingerprint. */
+  private val CompletionRecord = "_COMMITTED"
+
   /** A lineage table with no rows. */
   private[sink] def emptyLineage(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -94,11 +112,11 @@ object Materialize {
 
   /** Full write: every bucket of `triples` replaces the table at `path` (buckets
     * the new set does not touch are gone too), and its lineage replaces the
-    * `_checkpoints` table. */
+    * `_checkpoints` table, which is dropped before the data write. */
   def write(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
-    commit(triples, path, nBuckets, observeName, resume = false)
+    commit(triples, path, nBuckets, observeName, resume = false, fingerprint = None)
 
   /** Order-insensitive dedup: one row per (subj, pred, obj); the surviving evidence
     * row is picked ATOMICALLY (one ordered struct — strongest provenance first, then
@@ -180,13 +198,38 @@ object Materialize {
   def writeResumable(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
-    commit(triples, path, nBuckets, observeName, resume = true)
+    commit(triples, path, nBuckets, observeName, resume = true, fingerprint = None)
+
+  /** [[writeResumable]] keyed by the run's `fingerprint`: every lineage row records
+    * it, and only buckets whose latest row it wrote are trusted. A commit that trusts
+    * none replaces the table as [[write]] does, so facts another fingerprint committed
+    * never survive. Its last step writes the completion record [[committedLineage]]
+    * checks. */
+  private[graft] def writeResumable(triples: Dataset[Triple], path: String,
+      nBuckets: Int, observeName: Option[String], fingerprint: String)(
+      implicit spark: SparkSession): DataFrame =
+    commit(triples, path, nBuckets, observeName, resume = true, Some(fingerprint))
+
+  /** The latest-per-bucket lineage of a table `fingerprint` has completely committed:
+    * its completion record names `fingerprint`, and every bucket it lists still has
+    * its data partition and a latest lineage row of `fingerprint`. None otherwise.
+    * Starts one small Spark job (the lineage probe); the view it returns is lazy. */
+  private[graft] def committedLineage(path: String, fingerprint: String)(
+      implicit spark: SparkSession): Option[DataFrame] = {
+    val checkpoints = path + "_checkpoints"
+    completionRecord(checkpoints).collect {
+      case (fp, buckets) if fp == fingerprint &&
+          buckets.toSet.subsetOf(trustedBuckets(checkpoints, Some(path), Some(fp)).toSet) =>
+        lineageView(checkpoints)
+    }
+  }
 
   /** The one plain-layout commit. A full write and a resume differ only in which
-    * buckets they write and whether the lineage is replaced or appended to. Returns
-    * the latest lineage row per bucket. */
+    * buckets they write and whether the lineage is replaced or appended to; a
+    * fingerprinted resume that trusts no bucket replaces, as a full write does.
+    * Returns the latest lineage row per bucket. */
   private def commit(triples: Dataset[Triple], path: String, nBuckets: Int,
-      observeName: Option[String], resume: Boolean)(
+      observeName: Option[String], resume: Boolean, fingerprint: Option[String])(
       implicit spark: SparkSession): DataFrame = {
     val checkpoints = path + "_checkpoints"
     // counters observe the FULL canonical set (before the pending-bucket filter), so
@@ -195,29 +238,39 @@ object Materialize {
     // without it the whole upstream pipeline recomputes per action
     val all = bucketed(triples, nBuckets, observeName)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val todo = if (!resume) Some(all) else {
-      val pending = pendingBuckets(all, checkpoints, Some(path))
-        .collect().map(_.getInt(0)) // ≤ nBuckets rows — driver-safe
-      if (pending.isEmpty) None
+    val trusted = if (resume) trustedBuckets(checkpoints, Some(path), fingerprint) else Nil
+    val replace = !resume || (fingerprint.isDefined && trusted.isEmpty)
+    val pending = if (!resume) Nil
+      else pendingOf(all, trusted).collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows
+    val todo = if (replace) Some(all) else if (pending.isEmpty) None
       else Some(all.filter(col("bucket").isin(pending.map(Integer.valueOf): _*)))
-    }
     todo.foreach { df =>
+      // the lineage that no longer holds goes BEFORE the data it describes: a crash
+      // mid-write leaves nothing trusted over rewritten data
+      if (replace) delete(checkpoints) else delete(s"$checkpoints/$CompletionRecord")
       df.write.mode("overwrite")
-        .option("partitionOverwriteMode", if (resume) "dynamic" else "static")
+        .option("partitionOverwriteMode", if (replace) "static" else "dynamic")
         .partitionBy("bucket").parquet(path)
       stamped(bucketLineage(df), "materialize")
-        .write.mode(if (resume) "append" else "overwrite").parquet(checkpoints)
+        .withColumn("fingerprint", lit(fingerprint.orNull).cast(StringType))
+        .write.mode(if (replace) "overwrite" else "append").parquet(checkpoints)
     }
+    fingerprint.foreach(fp =>
+      writeCompletionRecord(checkpoints, fp, (trusted ++ pending).distinct.sorted))
     all.unpersist()
-    // the FILE is append-only lineage on resume (a re-verified bucket appends a fresh
-    // row); the RETURNED view is one row per bucket — the latest — so downstream sums
-    // never double-count a rewritten bucket. Only a never-written table (an EMPTY
-    // first resume) reads as empty: a transient FS error or corrupt checkpoint file
-    // must PROPAGATE, not masquerade as "nothing completed"
-    if (graft.util.Fs.parquetDataExists(checkpoints))
-      latestPerBucket(spark.read.parquet(checkpoints), col("completed_at"))
-    else emptyLineage
+    lineageView(checkpoints)
   }
+
+  /** The FILE is append-only lineage on resume (a re-verified bucket appends a fresh
+    * row); the view is one row per bucket — the latest — so downstream sums never
+    * double-count a rewritten bucket. Only a never-written table (an EMPTY first
+    * resume) reads as empty: a transient FS error or corrupt checkpoint file must
+    * PROPAGATE, not masquerade as "nothing completed". */
+  private def lineageView(checkpoints: String)(implicit spark: SparkSession): DataFrame =
+    if (graft.util.Fs.parquetDataExists(checkpoints))
+      latestPerBucket(spark.read.schema(LineageSchema).parquet(checkpoints),
+        col("completed_at"))
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), LineageSchema)
 
   /** Resume: which buckets still need writing given an existing checkpoint table.
     *
@@ -227,15 +280,70 @@ object Materialize {
     * only as far as the data it describes, never instead of it. ≤ nBuckets FS probes. */
   def pendingBuckets(all: DataFrame, checkpointPath: String,
       dataPath: Option[String] = None)(
+      implicit spark: SparkSession): DataFrame =
+    pendingOf(all, trustedBuckets(checkpointPath, dataPath, None))
+
+  private def pendingOf(all: DataFrame, trusted: Seq[Int])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val committed: Seq[Int] = if (graft.util.Fs.parquetDataExists(checkpointPath))
-      spark.read.parquet(checkpointPath).select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows — driver-safe
-    else Seq.empty
-    val verified = dataPath.fold(committed)(dp =>
+    all.select(col("bucket")).distinct().join(trusted.toDF("bucket"), Seq("bucket"),
+      "left_anti")
+  }
+
+  /** Buckets a resume trusts, each verified against its data partition when
+    * `dataPath` is given: without a fingerprint every bucket with a lineage row, with
+    * one the buckets whose latest row that fingerprint wrote. */
+  private def trustedBuckets(checkpointPath: String, dataPath: Option[String],
+      fingerprint: Option[String])(implicit spark: SparkSession): Seq[Int] = {
+    val committed: Seq[Int] = if (!graft.util.Fs.parquetDataExists(checkpointPath)) Nil
+    else {
+      // a few rows per commit — driver-safe
+      val rows = spark.read.schema(LineageSchema).parquet(checkpointPath)
+        .select(col("bucket"), col("fingerprint"), unix_micros(col("completed_at")))
+        .collect().toSeq
+      val byBucket = rows.groupBy(_.getInt(0))
+      fingerprint.fold(byBucket.keys.toSeq)(fp => byBucket.collect {
+        case (b, rs) if rs.maxBy(_.getLong(2)).getString(1) == fp => b
+      }.toSeq)
+    }
+    dataPath.fold(committed)(dp =>
       committed.filter(b => graft.util.Fs.parquetDataExists(s"$dp/bucket=$b")))
-    all.select(col("bucket")).distinct()
-      .join(verified.toDF("bucket"), Seq("bucket"), "left_anti")
+  }
+
+  /** The (fingerprint, buckets) of the completion record under `checkpoints`, if
+    * any. */
+  private def completionRecord(checkpoints: String)(
+      implicit spark: SparkSession): Option[(String, Seq[Int])] = {
+    val (fs, p) = fsPath(s"$checkpoints/$CompletionRecord")
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val nl = text.indexOf('\n')
+      Some(text.substring(nl + 1) ->
+        text.substring(0, nl).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
+    }
+  }
+
+  /** Writes the completion record whole: to a `_` temp file, then renamed. */
+  private def writeCompletionRecord(checkpoints: String, fingerprint: String,
+      buckets: Seq[Int])(implicit spark: SparkSession): Unit = {
+    val (fs, p) = fsPath(s"$checkpoints/$CompletionRecord")
+    val tmp = new Path(s"$checkpoints/$CompletionRecord.inprogress")
+    val out = fs.create(tmp, true)
+    try out.write((buckets.mkString(",") + "\n" + fingerprint).getBytes(UTF_8))
+    finally out.close()
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p)) throw new java.io.IOException(s"cannot commit $p")
+  }
+
+  private def delete(path: String)(implicit spark: SparkSession): Unit = {
+    val (fs, p) = fsPath(path)
+    fs.delete(p, true)
+  }
+
+  private def fsPath(path: String)(implicit spark: SparkSession): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 }

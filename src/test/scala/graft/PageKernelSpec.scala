@@ -126,6 +126,28 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
     assert(one.nonEmpty)
     assert(committed(8) === one)
   }
+
+  test("grid labels, gazetteer lookups, link keys and html tags lowercase alike under " +
+      "any default locale") {
+    // under a Turkish default locale a default-locale toLowerCase maps "TITAN" to
+    // "tıtan" and "SCRIPT" to "scrıpt" (dotless i)
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      val text = "TITAN sails"
+      val annots = graft.nlp.Tokenizer.annotate("u", text)
+      val grid = graft.align.Grid.build("u", 0, text.length, annots)
+      assert(grid.labelSet.contains(":token|string|titan"), grid.labelSet)
+      val gaz = graft.nlp.Gazetteer.build(Seq(graft.nlp.GazEntry("titan", "ship", "ship")))
+      val lookups = gaz.annotate("u", text, graft.nlp.Tokenizer.scan(text), 0)
+      assert(lookups.map(a => (a.begin, a.end)) === Seq((0, 5)))
+      assert(graft.link.EntityLink.normalizeForm("TITAN") === "titan")
+      val page = graft.ingest.HtmlText.extract(
+        "<P>before</P><SCRIPT>var hidden = 1;</SCRIPT><P>after</P>")
+      assert(!page.contains("hidden") && page.contains("before") && page.contains("after"),
+        page)
+    } finally java.util.Locale.setDefault(saved)
+  }
 }
 
 object PageKernelSpec {

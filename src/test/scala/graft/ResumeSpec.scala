@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
+import graft.model.{Annotation, Page}
 import graft.testgen.CorpusGen
 
 /** StageCheckpoint semantics + end-to-end resumable pipeline. */
@@ -77,95 +79,142 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(cp.wouldResume("s1", "fp-A"))
   }
 
-  test("runCheckpointed: a crash after the learning stages resumes them and commits " +
-      "the same facts") {
+  private def rmrf(p: String): Unit = {
+    val f = new java.io.File(p)
+    if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
+    f.delete()
+  }
+
+  private def facts(outDir: String): Set[(String, String, String)] = {
     import spark.implicits._
+    spark.read.parquet(outDir).select("subj", "pred", "obj").as[(String, String, String)]
+      .collect().toSet
+  }
+
+  /** `pages` and `gold` as Datasets that throw on any read of a row. */
+  private def unreadable(pages: Dataset[Page], gold: Dataset[Annotation]) = {
+    import spark.implicits._
+    (pages.map[Page](p => throw new IllegalStateException(s"read page ${p.url}")),
+      gold.map[Annotation](a => throw new IllegalStateException(s"read gold of ${a.url}")))
+  }
+
+  /** A corpus of `n` CorpusGen pages with the gold of its first 30. */
+  private def corpus(n: Int) = {
+    import spark.implicits._
+    val gen = CorpusGen.pages(n)
+    (spark.createDataset(gen.map(_.page)),
+      spark.createDataset(gen.take(30).flatMap(CorpusGen.goldAnnotations)))
+  }
+
+  test("runCheckpointed: a crash inside the corpus pass re-learns and commits the " +
+      "same facts") {
     val (stageDir, outDir) = (tmp(), tmp() + "/triples")
-    val gen = CorpusGen.pages(60)
-    val pages = spark.createDataset(gen.map(_.page))
-    val gold = spark.createDataset(gen.take(30).flatMap(CorpusGen.goldAnnotations))
+    val (pages, gold) = corpus(60)
     val fp = "corpus-60-v1"
-    def facts(): Set[(String, String, String)] =
-      spark.read.parquet(outDir).select("subj", "pred", "obj").as[(String, String, String)]
-        .collect().toSet
 
     val cps = graft.pipeline.KGPipeline.runCheckpointed(
       pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
     val total = spark.read.parquet(outDir).count()
-    val first = facts()
+    val first = facts(outDir)
     assert(total > 0 && cps.count() > 0)
-    val stages = Seq("patterns", "pair_stats", "raw_triples")
-    assert(new java.io.File(stageDir).list().toSet ===
-      stages.flatMap(s => Seq(s, s + "__lineage")).toSet,
-      "the stage dir must hold exactly the three stages and their lineage")
+    assert(new java.io.File(stageDir).list().toSet === Set("raw_triples",
+      "raw_triples__lineage"), "the stage dir must hold exactly raw_triples and its lineage")
 
-    // simulate a crash AFTER patterns + pair_stats but before triples: delete the
-    // raw_triples stage and the final output, keep the learning stages' checkpoints
-    def rmrf(p: String): Unit = {
-      val f = new java.io.File(p)
-      if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
-      f.delete()
-    }
+    // simulate a crash inside the corpus pass: no stage and no output committed, so the
+    // resumed run learns again and re-runs the pass
     rmrf(s"$stageDir/raw_triples"); rmrf(s"$stageDir/raw_triples__lineage")
     rmrf(outDir); rmrf(outDir + "_checkpoints")
 
-    def written(stage: String) = {
-      val dir = new java.io.File(s"$stageDir/$stage")
-      (dir.lastModified(), dir.list().toSet)
-    }
-    val learned = Seq("patterns", "pair_stats").map(s => s -> written(s))
     graft.pipeline.KGPipeline.runCheckpointed(
       pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
-    learned.foreach { case (s, w) =>
-      assert(written(s) === w, s"$s stage was rewritten on resume") }
     assert(spark.read.parquet(outDir).count() === total,
       "resumed run must reproduce the identical output")
-    assert(facts() === first, "resumed run must commit the same facts")
+    assert(facts(outDir) === first, "resumed run must commit the same facts")
   }
 
   test("runCheckpointed: crash after stage 1 resumes without recomputing annotations") {
-    import spark.implicits._
     val (stageDir, outDir) = (tmp(), tmp() + "/triples")
-    val gen = CorpusGen.pages(60)
-    val pages = spark.createDataset(gen.map(_.page))
-    val gold = spark.createDataset(gen.take(30).flatMap(CorpusGen.goldAnnotations))
+    val (pages, gold) = corpus(60)
     val fp = "corpus-60-v1"
-    def facts(): Set[(String, String, String)] =
-      spark.read.parquet(outDir).select("subj", "pred", "obj").as[(String, String, String)]
-        .collect().toSet
 
     val cps = graft.pipeline.KGPipeline.runCheckpointed(
       pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
     val total = spark.read.parquet(outDir).count()
-    val first = facts()
+    val first = facts(outDir)
     assert(total > 0 && cps.count() > 0)
 
-    // simulate a crash AFTER stage 1, the checkpointed extraction (patterns, pair_stats,
-    // raw_triples), but before stage 2 commits the output: delete the final output, keep
-    // every stage checkpoint. The annotated corpus lives only inside raw_triples.
-    def rmrf(p: String): Unit = {
-      val f = new java.io.File(p)
-      if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
-      f.delete()
-    }
+    // simulate a crash AFTER stage 1, the checkpointed extraction (raw_triples), but
+    // before stage 2 commits the output: delete the final output, keep the stage
+    // checkpoint. The annotated corpus lives only inside raw_triples.
     rmrf(outDir); rmrf(outDir + "_checkpoints")
 
     def written(stage: String) = {
       val dir = new java.io.File(s"$stageDir/$stage")
       (dir.lastModified(), dir.list().toSet)
     }
-    val stages = Seq("patterns", "pair_stats", "raw_triples").map(s => s -> written(s))
-    // any page read throws: the resumed run may annotate neither the corpus nor the
-    // training slice
-    val unreadable = pages.map[graft.model.Page] { p =>
-      throw new IllegalStateException(s"resumed run read page ${p.url}")
-    }
+    val stages = Seq("raw_triples", "raw_triples__lineage").map(s => s -> written(s))
+    // any page or gold read throws: the resumed run may annotate neither the corpus
+    // nor the training slice, and learns nothing
+    val (noPages, noGold) = unreadable(pages, gold)
     graft.pipeline.KGPipeline.runCheckpointed(
-      unreadable, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+      noPages, noGold, CorpusGen.gazetteer, stageDir, fp, outDir)
     stages.foreach { case (s, w) =>
       assert(written(s) === w, s"$s stage was recomputed on resume") }
     assert(spark.read.parquet(outDir).count() === total,
       "resumed run must reproduce the identical output")
-    assert(facts() === first, "resumed run must commit the same facts")
+    assert(facts(outDir) === first, "resumed run must commit the same facts")
+  }
+
+  test("runCheckpointed: a re-submission over a committed output reads nothing and " +
+      "starts at most 2 Spark jobs") {
+    val (stageDir, outDir) = (tmp(), tmp() + "/triples")
+    val (pages, gold) = corpus(60)
+    val fp = "corpus-60-v1"
+    val first = graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir).collect().toSet
+    assert(first.nonEmpty)
+
+    val (noPages, noGold) = unreadable(pages, gold)
+    val (again, jobs) = SparkTestBase.jobsStarted("resume-committed") {
+      graft.pipeline.KGPipeline.runCheckpointed(
+        noPages, noGold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    }
+    assert(jobs <= 2, s"a committed re-submission started $jobs Spark jobs")
+    assert(again.collect().toSet === first, "the lineage rows must be the first run's")
+  }
+
+  test("runCheckpointed: a bucket partition deleted after completion is rewritten on " +
+      "re-submission") {
+    val (stageDir, outDir) = (tmp(), tmp() + "/triples")
+    val (pages, gold) = corpus(60)
+    val fp = "corpus-60-v1"
+    graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    val first = facts(outDir)
+    val victim = new java.io.File(outDir).list().filter(_.startsWith("bucket=")).min
+    rmrf(s"$outDir/$victim")
+    assert(facts(outDir) !== first)
+
+    graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    assert(new java.io.File(s"$outDir/$victim").isDirectory, s"$victim was not rewritten")
+    assert(facts(outDir) === first, "the re-submission must commit the first run's facts")
+  }
+
+  test("runCheckpointed: a re-submission under a new fingerprint commits only its own " +
+      "facts") {
+    val (stageDir, outDir) = (tmp(), tmp() + "/triples")
+    val (pages60, gold60) = corpus(60)
+    val (pages160, gold160) = corpus(160)
+    graft.pipeline.KGPipeline.runCheckpointed(
+      pages60, gold60, CorpusGen.gazetteer, stageDir, "fp-60", outDir)
+    graft.pipeline.KGPipeline.runCheckpointed(
+      pages160, gold160, CorpusGen.gazetteer, stageDir, "fp-160", outDir)
+
+    val fullOut = tmp() + "/full"
+    graft.pipeline.KGPipeline.runAndWrite(pages160, gold160, CorpusGen.gazetteer, fullOut)
+    val want = facts(fullOut)
+    assert(want.nonEmpty)
+    assert(facts(outDir) === want, "facts committed under fp-60 survived the fp-160 run")
   }
 }
