@@ -114,7 +114,7 @@ object Bench {
       try out.writeObject(kernel) finally out.close()
       p.toString
     }
-    def childRun(cores: Int, reps: Int = 3): ScaleResult = {
+    def childRun(cores: Int, reps: Int): ScaleResult = {
       val java = System.getProperty("java.home") + "/bin/java"
       val addOpens = Seq(
         "java.base/java.lang", "java.base/java.lang.invoke",

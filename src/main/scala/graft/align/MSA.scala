@@ -64,11 +64,4 @@ object MSA {
     }
     Some(out.result())
   }
-
-  /** Human-readable profile string: labels joined, `:gap` rendered "-". */
-  def render(toks: Seq[String]): String =
-    toks.map {
-      case Grid.Gap => "-"
-      case t => t
-    }.mkString(" ")
 }

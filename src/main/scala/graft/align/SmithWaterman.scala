@@ -213,36 +213,4 @@ object SmithWaterman {
     }
     Alignment(best, anchors.toVector)
   }
-
-  /**
-   * Plain token-list variant (the reference's SmithWatermanMSA,
-   * /root/reference/src/align/SmithWatermanMSA.java:10-321) used for duplicate-sentence
-   * detection: returns the aligned token count between two string sequences.
-   */
-  def alignTokens(a: IndexedSeq[String], b: IndexedSeq[String],
-      matchScore: Double = 2.0, gapPenalty: Double = 1.0): Int = {
-    val n = a.length; val m = b.length
-    val h = Array.ofDim[Double](n + 1, m + 1)
-    val cnt = Array.ofDim[Int](n + 1, m + 1)
-    var best = 0.0; var bestCnt = 0
-    var i = 1
-    while (i <= n) {
-      var j = 1
-      while (j <= m) {
-        val isM = a(i - 1) == b(j - 1)
-        val diag = h(i - 1)(j - 1) + (if (isM) matchScore else -gapPenalty)
-        val up = h(i - 1)(j) - gapPenalty
-        val left = h(i)(j - 1) - gapPenalty
-        var v = 0.0; var c = 0
-        if (diag > v) { v = diag; c = cnt(i - 1)(j - 1) + (if (isM) 1 else 0) }
-        if (up > v) { v = up; c = cnt(i - 1)(j) }
-        if (left > v) { v = left; c = cnt(i)(j - 1) }
-        h(i)(j) = v; cnt(i)(j) = c
-        if (v > best) { best = v; bestCnt = c }
-        j += 1
-      }
-      i += 1
-    }
-    bestCnt
-  }
 }

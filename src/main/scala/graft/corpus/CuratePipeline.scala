@@ -158,8 +158,4 @@ object CuratePipeline {
       count(lit(1))).head()
     s"${java.lang.Long.toHexString(r.getLong(0))}:${r.getLong(1)}"
   }
-
-  /** The checkpointed stage names in order (for lineage/metrics readers). */
-  val StageNames: Seq[String] =
-    Seq("c1_quality", "c2_dedup", "c3_decontaminate", "c4_redact", "c5_mix")
 }

@@ -209,33 +209,6 @@ object Dedup {
         count_distinct(col("eval_id")).as("n_eval_docs"))
   }
 
-  /**
-   * Streaming-compatible decontamination flag: a boolean COLUMN marking rows whose
-   * text shares any word n-gram with the eval set — a narrow per-row predicate
-   * (shingle-set overlap against a plan-time literal array), so it composes with
-   * Structured Streaming's append mode (no aggregation, no state), continuous-ingest
-   * filters, and plain batch projections alike.
-   *
-   * The eval shingle vocabulary is collected to the driver ONCE — bounded by contract
-   * (benchmark suites are megabytes against a 100 TB corpus, the same
-   * bounded-broadcast argument as the gazetteer automaton); the size is logged per
-   * the no-silent-caps rule. The probe itself is the native
-   * [[graft.functions.ArrayAnyInSet]] kernel: the vocabulary rides along as ONE
-   * reference object per plan (never a plan literal — a 100k-shingle set must not
-   * bloat every explain/canonicalized plan), and each row costs O(|doc shingles|)
-   * hash-set probes inside whole-stage codegen instead of the
-   * O(|doc shingles| × |eval|) scan `arrays_overlap(…, typedLit(…))` paid. For
-   * corpus-scale "eval" sets use the relational [[contaminatedDocs]] instead.
-   */
-  def contaminationFlag(evalSet: DataFrame, textCol: String, n: Int = 8): Column = {
-    val evalShingles: Array[String] = evalSet
-      .select(explode(shingles(col(textCol), n)).as("g")).distinct()
-      .collect().map(_.getString(0)).sorted
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"contaminationFlag: ${evalShingles.length} distinct eval ${n}-gram shingles embedded")
-    graft.functions.ArrayAnyInSet.column(shingles(col(textCol), n), evalShingles)
-  }
-
   /** SimHash signature width: 60 bits — the first 15 hex chars of md5(token) parsed as
     * an integer, which both Spark (conv) and any md5-capable SQL engine (hex cast) can
     * compute identically; 4 bands × 15 bits. */

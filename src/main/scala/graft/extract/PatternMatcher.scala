@@ -115,10 +115,6 @@ object PatternMatcher {
     new Index(sorted.map(compile).toIndexedSeq)
   }
 
-  /** All raw target spans (char offsets) for one compiled pattern on one grid. */
-  def matchOne(grid: Grid, c: Compiled, prm: Params = Params()): Vector[(Int, Int)] =
-    matchOneFull(grid, c, prm).map(s => (s.tb, s.te))
-
   /** Full matches incl. the subject span of two-slot relation patterns.
     * @param minimalTarget apply the minimal-target/maximal-subject collapse (single-
     *        pattern mode). Pair matching passes false: the target EXTENT is decided by

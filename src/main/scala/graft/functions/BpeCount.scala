@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Opaque, plan-friendly holder for a BPE merge table (the [[StringSet]] idiom):
-  * renders as a count in plan dumps, compares by content, rebuilds its rank map
-  * lazily per JVM. Keys are `"a b"` (symbols never contain whitespace — words are
-  * whitespace-split before segmentation). */
+/** Opaque, plan-friendly holder for a BPE merge table: renders as a count in plan
+  * dumps (never its contents), compares by content so plan canonicalization treats
+  * equal tables as equal, rebuilds its rank map lazily per JVM. Keys are `"a b"`
+  * (symbols never contain whitespace — words are whitespace-split before
+  * segmentation). */
 final class MergeRanks(val pairs: Array[String]) extends Serializable {
   @transient lazy val ranks: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](pairs.length * 2)
@@ -121,7 +122,8 @@ object BpeCount {
   }
 
   /** Column wrapper (merge table is runtime data — bypasses the literal-only
-    * FunctionRegistry path, the [[ArrayAnyInSet]] idiom). */
+    * FunctionRegistry path: the table rides along as one reference object, never a
+    * plan literal). */
   def column(text: Column, merges: Seq[(String, String)]): Column =
     org.apache.spark.sql.graftshim.ColumnBridge.column(
       BpeCount(org.apache.spark.sql.graftshim.ColumnBridge.expression(text),

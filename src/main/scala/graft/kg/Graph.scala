@@ -12,12 +12,12 @@ import org.apache.spark.sql.functions._
  * The reference stops at writing `frame_instance_data` rows
  * (/root/reference/src/msa/PopulateFrame.java:247-268) and reports coverage counts per
  * pattern (/root/reference/src/analysis/PatternCoverage.java:24-115); at web scale the
- * same store needs degree statistics (hub/mega-entity detection), deterministic
- * per-entity fact caps (the north rule's mega-entity skew guard, applied to the OUTPUT
- * side), per-predicate functionality profiles (KG quality: is this predicate
- * one-to-one or one-to-many in practice?), and packed per-entity fact cards for
- * serving. All four are single-pass declarative shapes: one aggregation or one
- * partitioned window; nothing collects to the driver.
+ * same store needs degree statistics (hub/mega-entity detection), per-predicate
+ * functionality profiles (KG quality: is this predicate one-to-one or one-to-many in
+ * practice?), and packed per-entity fact cards for serving, capped per entity (the
+ * north rule's mega-entity skew guard, applied to the OUTPUT side). All three are
+ * single-pass declarative shapes: one aggregation or one partitioned window; nothing
+ * collects to the driver.
  */
 object Graph {
 
@@ -33,29 +33,6 @@ object Graph {
       .agg(count(lit(1)).as("degree"),
         count_distinct(col(predCol)).as("n_pred"),
         count_distinct(col(objCol)).as("n_obj"))
-
-  /**
-   * Mega-entity fact cap: keep at most `maxDeg` triples per subject in a fully
-   * deterministic order (pred asc, obj asc — byte order, engine-portable), and attach
-   * the subject's TRUE degree so the drop count (`degree - maxDeg`) stays auditable
-   * per the no-silent-caps rule.
-   *
-   * Scale shape: the rank filter plans as a partitioned window with WindowGroupLimit
-   * pushdown — a mega-entity's partitions are pruned to maxDeg rows per task BEFORE
-   * the full per-subject sort, so one 10^8-degree hub cannot OOM a task. The true
-   * degree comes from a separate map-side-partial aggregation joined back AFTER the
-   * cap (at most maxDeg rows per subject on the probe side), deliberately not from a
-   * count() window over the same partition, which would defeat the group-limit prune.
-   */
-  def capHubs(triples: DataFrame, subjCol: String, predCol: String, objCol: String,
-      maxDeg: Int): DataFrame = {
-    val w = Window.partitionBy(subjCol).orderBy(asc(predCol), asc(objCol))
-    val capped = triples
-      .withColumn("fact_rank", row_number().over(w).cast("long"))
-      .filter(col("fact_rank") <= maxDeg)
-    val degrees = triples.groupBy(col(subjCol)).agg(count(lit(1)).as("degree"))
-    capped.join(degrees, Seq(subjCol))
-  }
 
   /**
    * Per-predicate functionality profile: triple count, distinct subjects/objects, and
@@ -76,9 +53,9 @@ object Graph {
   /**
    * Packed entity cards: per subject, the `k` first facts in deterministic
    * (pred, obj) byte order, rendered `pred=obj` and joined with "; " — the serving
-   * artifact a KG materializes per entity. The cap runs first (WindowGroupLimit, same
-   * shape as [[capHubs]]) so a mega-entity contributes at most `k` facts to its card;
-   * the surviving facts are sorted INSIDE the aggregate (`array_sort` over the
+   * artifact a KG materializes per entity. The cap runs first (a partitioned rank
+   * filter that plans with WindowGroupLimit pushdown) so a mega-entity contributes at
+   * most `k` facts to its card; the surviving facts are sorted INSIDE the aggregate (`array_sort` over the
    * rendered strings), so the card bytes never depend on shuffle arrival order.
    */
   def entityCards(triples: DataFrame, subjCol: String, predCol: String,

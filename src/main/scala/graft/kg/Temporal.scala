@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -40,7 +40,7 @@ object Temporal {
    * Fact observation history: per (subj, pred, obj), when the fact was first and last
    * observed and how many captures assert it. The serving-side inputs for fact
    * freshness/decay scoring and for expiring facts no crawl has asserted since a
-   * watermark (see [[staleFacts]]).
+   * watermark.
    */
   def factHistory(triples: DataFrame, subjCol: String, predCol: String,
       objCol: String, tsCol: String): DataFrame =
@@ -48,9 +48,4 @@ object Temporal {
         col(objCol).as("obj"))
       .agg(min(col(tsCol)).as("first_seen"), max(col(tsCol)).as("last_seen"),
         count(lit(1)).as("n_observations"))
-
-  /** Facts whose newest observation predates the watermark — the expiry candidate set
-    * a KG store compacts away. A narrow filter over [[factHistory]]'s output. */
-  def staleFacts(history: DataFrame, watermark: Column): DataFrame =
-    history.filter(col("last_seen") < watermark)
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /**
  * Standalone annotation scorer — the reference's EvalProfilesSimple
  * (/root/reference/src/msa/EvalProfilesSimple.java:21-170): token-level and
- * entity-level precision/recall/F1 of predicted annotations versus gold (e.g. the
- * CoNLL-2003 import of graft.sources.Ingest), per annotation type plus an ALL rollup.
+ * entity-level precision/recall/F1 of predicted annotations versus gold, per
+ * annotation type plus an ALL rollup.
  *
  * All ratios are basis-point integers (floor), so results are engine- and
  * parallelism-exact. Both inputs need (url, annotType, begin, end); token-level

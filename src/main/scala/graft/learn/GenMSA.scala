@@ -40,9 +40,8 @@ object GenMSA {
 
   /**
    * Learn patterns from sentences whose annotations include gold target spans with
-   * provenance in `goldProvenances` (human-validated plus e.g. `dup-propagated`
-   * spans from [[Propagate]]). Gold target annotations define both the target type
-   * (annotType) and its span.
+   * provenance in `goldProvenances` (human-validated spans). Gold target annotations
+   * define both the target type (annotType) and its span.
    *
    * The Dataset form of [[LearnKernel.patterns]]: one group per annotType cut into
    * [[LearnKernel.blocks]], the blocks spread over the cluster and each aligned by

@@ -1,7 +1,6 @@
 package graft.learn
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.extract.{PageKernel, PatternMatcher}
 import graft.model.{Pattern, PatternMatch, SentenceAnnots}
@@ -135,39 +134,5 @@ object PatternStats {
         Row.fromSeq(r.toSeq.take(n) ++ Seq(b, e))
       }
     }(Encoders.row(g.schema))
-  }
-
-  /**
-   * Reference site score for overlap resolution:
-   * `patternLen − freq / 10^⌈log10 maxFreq⌉` (ref BestPatterns.java:849-862) — shorter
-   * patterns win ties-in-length by higher corpus frequency (the freq term is scaled
-   * into (0,1] so it only breaks length ties). freq = observed match total (tp+fp).
-   * Returns (profileId, siteScore).
-   */
-  def siteScores(patterns: Dataset[Pattern])(implicit spark: SparkSession): DataFrame = {
-    val withFreq = patterns.toDF()
-      .withColumn("freq", (col("truePos") + col("falsePos")).cast("double"))
-    val maxFreq = withFreq.agg(max(col("freq"))).head().getDouble(0) max 1.0
-    val denom = math.pow(10.0, math.ceil(math.log10(maxFreq)) max 1.0)
-    withFreq.select(col("profileId"),
-      (size(col("toks")).cast("double") - col("freq") / lit(denom)).as("siteScore"))
-  }
-
-  /**
-   * W1 overlap resolution on match sites: among all (pattern, site) rows sharing
-   * (url, begin), keep the single best by (siteScore asc, total desc, profileId asc) —
-   * the reference's argmin with its site-score formula
-   * (ref BestPatterns.java:865-935; score :849-862). `matches` needs (url, begin,
-   * profileId, total) columns; the site score is joined in from `patterns` (broadcast —
-   * the pattern table is small post-gate).
-   */
-  def resolveOverlaps(matches: DataFrame, patterns: Dataset[Pattern])(
-      implicit spark: SparkSession): DataFrame = {
-    val scored = matches.join(broadcast(siteScores(patterns)), Seq("profileId"), "left")
-      .withColumn("siteScore", coalesce(col("siteScore"), lit(Double.MaxValue)))
-    val w = Window.partitionBy("url", "begin")
-      .orderBy(col("siteScore").asc, col("total").desc, col("profileId").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn", "siteScore")
   }
 }

@@ -2,7 +2,6 @@ package graft.link
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.PageKernel
 
 /**
  * Entity linking: blocking + Jaccard candidate scoring.
@@ -32,11 +31,6 @@ import graft.extract.PageKernel
 object EntityLink {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Normalize a surface form for linking: lowercase, strip non-alnum to single spaces.
-    * (Scala twin of the codegen column expression below — used by tests/callers.) */
-  val normalizeForm: String => String = s =>
-    PageKernel.lowered(s).replaceAll("[^a-z0-9]+", " ").trim
 
   /** The two block keys of a normalized form, as an array (exploded into one row per
     * family). All builtin codegen columns — no UDF at canonicalization time. */

@@ -12,7 +12,7 @@ import graft.model.{Annotation, SentenceAnnots}
  * then linear in-group work; url is a high-cardinality key so partitions stay balanced
  * (a url's group is one page's annotations — hot DOMAINS don't concentrate here, and a
  * pathological mega-page is a single group by semantic necessity). Keyed stages where a
- * genuinely hot key must be split use [[graft.scale.Skew]] salted repartition/agg/join;
+ * genuinely hot key must be split use [[graft.scale.Skew]] salted agg/join;
  * AQE skew splitting handles residual runtime imbalance.
  *
  * Sentences overrunning into later annotations are merged with following sentences,

@@ -113,13 +113,3 @@ object Provenance {
   /** Gold propagated onto a near-duplicate doc (ref `duplicate-sentences-util`). */
   val Propagated = "dup-propagated"
 }
-
-/** Per-stage/partition checkpoint row (replaces the reference's document_status state
-  * machine, sql/utilities-sqlserver.sql:1-2). */
-final case class Checkpoint(
-    stage: String,
-    partitionKey: String,
-    rowsIn: Long,
-    rowsOut: Long,
-    outputHash: String,
-    completedAt: java.sql.Timestamp)

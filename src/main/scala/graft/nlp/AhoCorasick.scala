@@ -30,7 +30,7 @@ final class AhoCorasick private (
       var s = state
       while (s != 0 && !goto_(s).contains(sym)) s = fail(s)
       state = goto_(s).getOrElse(sym, 0)
-      var o = state
+      val o = state
       // outputs are pre-merged through fail links at build time
       outputs(o).foreach { case (dictId, len) => out += ((i + 1 - len, i + 1, dictId)) }
       i += 1

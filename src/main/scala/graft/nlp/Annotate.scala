@@ -16,11 +16,12 @@ import graft.ingest.HtmlText
 object Annotate {
 
   /** One page's normalized text: its `text` column when set, else the text of its
-    * html; None when it fails the alnum gate, exactly like the reference's regex gate
-    * (src/gate/GateBatch.java:346). Every corpus job reads its pages through this. */
+    * html; None when it has neither or fails the alnum gate, exactly like the
+    * reference's regex gate (src/gate/GateBatch.java:346). Every corpus job reads its
+    * pages through this. */
   def pageText(p: Page): Option[String] = {
-    val raw = if (p.text != null && p.text.nonEmpty) Option(p.text)
-              else Option(HtmlText.extract(p.html))
+    val raw = if (p.text != null && p.text.nonEmpty) Some(p.text)
+              else Option(p.html).map(HtmlText.extract)
     raw.flatMap(graft.ingest.Normalize.normalize)
   }
 

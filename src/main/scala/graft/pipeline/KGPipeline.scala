@@ -43,7 +43,7 @@ import graft.sink.Materialize
  * canonicalization. They differ only in whether the `raw_triples` stage is
  * checkpointed and in the final write (`Materialize.write`, or `writeResumable` keyed
  * by the run's fingerprint). The job has no knobs: default MSA, stats and prior
- * configs, training gold of provenance `gold` or `dup-propagated`, 16 output buckets.
+ * configs, training gold of provenance `gold`, 16 output buckets.
  */
 object KGPipeline {
 
@@ -54,11 +54,9 @@ object KGPipeline {
   private val Buckets = 16
   private val StatsCfg = PatternStats.Config()
   private val PriorsCfg = ValueProbs.Config()
-  /** Training-gold provenance classes: human-validated spans plus spans propagated
-    * onto near-duplicate docs by propagateGold (ref dupFlag pipeline). Each also
-    * materializes triples at its own precedence rank (see LearnKernel.goldTriples). */
-  private val GoldClasses = Seq("gold" -> graft.model.Provenance.Gold,
-    "dup-propagated" -> graft.model.Provenance.Propagated)
+  /** Training-gold provenance classes: human-validated spans, which also materialize
+    * triples at the validated precedence rank (see LearnKernel.goldTriples). */
+  private val GoldClasses = Seq("gold" -> graft.model.Provenance.Gold)
   /** Most training pages (distinct gold urls) the driver collects and learns on. The
     * validated slice is small by design; a larger one fails the job before any page is
     * read rather than exhausting the driver. */
@@ -212,30 +210,6 @@ object KGPipeline {
     PageKernel(upgraded.collect { case (_, Some(rel)) => rel },
       upgraded.collect { case (p, None) => p }, m.tgtPatterns, m.allowedPairs, priorVeto,
       dictEntries, gaz, StatsCfg.matcher)
-  }
-
-  /**
-   * Optional pre-learning stage (the reference's dupFlag → AnnotateDuplicate,
-   * /root/reference/src/msa/IEDriver.java:1015-1019): augment the gold slice by
-   * propagating validated spans onto near-duplicate documents. Near-dups come from
-   * MinHash-LSH blocking over the page text (never all-pairs); span mapping runs in
-   * [[graft.learn.Propagate]]. Returns gold ∪ propagated — feed the result to run().
-   */
-  def propagateGold(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
-      gaz: Gazetteer, minJaccardBp: Long = 7000L)(
-      implicit spark: SparkSession): Dataset[Annotation] = {
-    import spark.implicits._
-    val texts = Annotate.extractText(pages).toDF("url", "text")
-    val p0 = graft.dedup.Dedup.minhashLshPairs(texts, "url", "text",
-      minJaccardBp = minJaccardBp)
-    // symmetric propagation: validated spans flow both directions of each pair
-    val pairs = p0.select(col("id_a").as("url_a"), col("id_b").as("url_b"))
-      .unionByName(p0.select(col("id_b").as("url_a"), col("id_a").as("url_b")))
-    // Propagate aligns plain TOKEN streams (K6) — chunk labels are unused here,
-    // so the corpus-wide pass skips the per-page chunk scan
-    val sents = Annotate.annotateSentences(pages, gaz, withChunks = false)
-    goldAnnots.unionByName(
-      graft.learn.Propagate.propagate(sents, goldAnnots, pairs))
   }
 
   /** Observed-metric name of the canonical-triple counters attached by the write

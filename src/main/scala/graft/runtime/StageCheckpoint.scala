@@ -32,7 +32,7 @@ final class StageCheckpoint(base: String)(implicit spark: SparkSession) {
   private def lineagePath(name: String) = s"$base/${name}__lineage"
 
   /** The fingerprint last committed for a stage, if any. The not-yet-created lineage
-    * dir is probed explicitly (same discipline as Materialize.pendingBuckets): only
+    * dir is probed explicitly (same discipline as Materialize's lineage reads): only
     * the legitimate "never ran" state reads as None — a transient FS error or a
     * corrupt lineage file PROPAGATES instead of silently forcing a full recompute. */
   def committedFingerprint(name: String): Option[String] =

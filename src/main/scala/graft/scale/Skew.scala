@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Explicit skew handling for hot keys — salted repartitioning / aggregation / join
- * splitting for the corpus shapes the north rule names (hot domains owning a large
- * share of all pages; mega-entities appearing as the subject of millions of triples).
+ * Explicit skew handling for hot keys — salted aggregation / join splitting for the
+ * corpus shapes the north rule names (hot domains owning a large share of all pages;
+ * mega-entities appearing as the subject of millions of triples).
  * AQE skew-join splitting stays enabled in every session ([[graft.util.Sessions]]) and
  * handles residual runtime imbalance; these helpers are for the keyed operations where
  * the skew is KNOWN ahead of planning and the fix must be part of the plan itself.
@@ -29,14 +29,6 @@ object Skew {
   /** Deterministic salt in `[0, buckets)` derived from high-cardinality columns. */
   def salt(buckets: Int, from: Column*): Column =
     pmod(xxhash64(from: _*), lit(buckets.toLong))
-
-  /** Salted repartition: co-partition by `(keys…, salt)` so a hot key's rows spread
-    * over up to `buckets` partitions instead of funneling into one. Use before heavy
-    * per-group work where downstream logic does NOT need all rows of a key in one
-    * partition (per-row kernels, partial aggregation, bucketed writes). */
-  def saltedRepartition(df: DataFrame, numPartitions: Int, keys: Seq[Column],
-      saltFrom: Seq[Column], buckets: Int): DataFrame =
-    df.repartition(numPartitions, keys :+ salt(buckets, saltFrom: _*): _*)
 
   /** One aggregate expressed as a two-phase (partial per `(key, salt)`, merge per
     * `key`) pair, so a salted aggregation can be assembled declaratively. */

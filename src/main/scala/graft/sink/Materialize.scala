@@ -21,9 +21,10 @@ import graft.model.Triple
  *
  * A `_checkpoints` side table records (bucket, rows, hash, stage, time, fingerprint):
  * a resumed run anti-joins completed buckets and rewrites only the rest —
- * per-partition lineage + metrics per the north rule. A fingerprinted commit trusts
- * only its own fingerprint's rows and, once complete, leaves a completion record there
- * ([[committedLineage]]) that lets a re-submission skip the job.
+ * per-partition lineage + metrics per the north rule. A resume trusts only the rows
+ * its own fingerprint (or, without one, no fingerprint) wrote; a fingerprinted commit,
+ * once complete, leaves a completion record there ([[committedLineage]]) that lets a
+ * re-submission skip the job.
  *
  * NOTE: this is the PLAIN-DIRECTORY variant (hive layout readable by any engine, no
  * manifest indirection). [[TripleStore]] commits the same bucketed output through
@@ -193,7 +194,8 @@ object Materialize {
    * rows intact; the resumed run overwrites just the missing partitions (dynamic
    * partition overwrite, the parquet stand-in for Iceberg overwritePartitions) and
    * appends their lineage rows. Idempotent: a second resume with a complete checkpoint
-   * table writes nothing.
+   * table writes nothing. Only lineage rows written without a fingerprint are
+   * trusted: a table a fingerprinted commit wrote is replaced as [[write]] does.
    */
   def writeResumable(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
@@ -219,18 +221,19 @@ object Materialize {
     val checkpoints = path + "_checkpoints"
     completionRecord(checkpoints).collect {
       case (fp, buckets) if fp == fingerprint &&
-          buckets.toSet.subsetOf(trustedBuckets(checkpoints, Some(path), Some(fp)).toSet) =>
+          buckets.toSet.subsetOf(trustedBuckets(checkpoints, path, Some(fp)).toSet) =>
         lineageView(checkpoints)
     }
   }
 
   /** The one plain-layout commit. A full write and a resume differ only in which
-    * buckets they write and whether the lineage is replaced or appended to; a
-    * fingerprinted resume that trusts no bucket replaces, as a full write does.
-    * Returns the latest lineage row per bucket. */
+    * buckets they write and whether the lineage is replaced or appended to; a resume
+    * that trusts no bucket replaces, as a full write does. Returns the latest lineage
+    * row per bucket. */
   private def commit(triples: Dataset[Triple], path: String, nBuckets: Int,
       observeName: Option[String], resume: Boolean, fingerprint: Option[String])(
       implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
     val checkpoints = path + "_checkpoints"
     // counters observe the FULL canonical set (before the pending-bucket filter), so
     // a resumed run still reports what the job represents, not just what it rewrote.
@@ -238,10 +241,12 @@ object Materialize {
     // without it the whole upstream pipeline recomputes per action
     val all = bucketed(triples, nBuckets, observeName)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trusted = if (resume) trustedBuckets(checkpoints, Some(path), fingerprint) else Nil
-    val replace = !resume || (fingerprint.isDefined && trusted.isEmpty)
+    val trusted = if (resume) trustedBuckets(checkpoints, path, fingerprint) else Nil
+    val replace = trusted.isEmpty
     val pending = if (!resume) Nil
-      else pendingOf(all, trusted).collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows
+      else all.select(col("bucket")).distinct()
+        .join(trusted.toDF("bucket"), Seq("bucket"), "left_anti")
+        .collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows
     val todo = if (replace) Some(all) else if (pending.isEmpty) None
       else Some(all.filter(col("bucket").isin(pending.map(Integer.valueOf): _*)))
     todo.foreach { df =>
@@ -272,43 +277,25 @@ object Materialize {
         col("completed_at"))
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), LineageSchema)
 
-  /** Resume: which buckets still need writing given an existing checkpoint table.
-    *
-    * When `dataPath` is given, a committed bucket whose data partition has VANISHED
-    * (external deletion, FS loss — the checkpoint row is written after the data, so a
-    * crash can't produce this) is treated as pending again: the checkpoint is trusted
-    * only as far as the data it describes, never instead of it. ≤ nBuckets FS probes. */
-  def pendingBuckets(all: DataFrame, checkpointPath: String,
-      dataPath: Option[String] = None)(
-      implicit spark: SparkSession): DataFrame =
-    pendingOf(all, trustedBuckets(checkpointPath, dataPath, None))
-
-  private def pendingOf(all: DataFrame, trusted: Seq[Int])(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    all.select(col("bucket")).distinct().join(trusted.toDF("bucket"), Seq("bucket"),
-      "left_anti")
-  }
-
-  /** Buckets a resume trusts, each verified against its data partition when
-    * `dataPath` is given: without a fingerprint every bucket with a lineage row, with
-    * one the buckets whose latest row that fingerprint wrote. */
-  private def trustedBuckets(checkpointPath: String, dataPath: Option[String],
-      fingerprint: Option[String])(implicit spark: SparkSession): Seq[Int] = {
-    val committed: Seq[Int] = if (!graft.util.Fs.parquetDataExists(checkpointPath)) Nil
+  /** Buckets a resume trusts: those whose latest lineage row `fingerprint` wrote (with
+    * None, a row written without one) and whose data partition under `dataPath` is
+    * still there. A bucket whose data VANISHED (external deletion, FS loss — the
+    * lineage row is written after the data, so a crash can't produce this) is not
+    * trusted: the lineage is trusted only as far as the data it describes, never
+    * instead of it. ≤ nBuckets FS probes. */
+  private def trustedBuckets(checkpointPath: String, dataPath: String,
+      fingerprint: Option[String])(implicit spark: SparkSession): Seq[Int] =
+    if (!graft.util.Fs.parquetDataExists(checkpointPath)) Nil
     else {
       // a few rows per commit — driver-safe
       val rows = spark.read.schema(LineageSchema).parquet(checkpointPath)
         .select(col("bucket"), col("fingerprint"), unix_micros(col("completed_at")))
         .collect().toSeq
-      val byBucket = rows.groupBy(_.getInt(0))
-      fingerprint.fold(byBucket.keys.toSeq)(fp => byBucket.collect {
-        case (b, rs) if rs.maxBy(_.getLong(2)).getString(1) == fp => b
-      }.toSeq)
+      rows.groupBy(_.getInt(0)).collect {
+        case (b, rs) if Option(rs.maxBy(_.getLong(2)).getString(1)) == fingerprint &&
+            graft.util.Fs.parquetDataExists(s"$dataPath/bucket=$b") => b
+      }.toSeq
     }
-    dataPath.fold(committed)(dp =>
-      committed.filter(b => graft.util.Fs.parquetDataExists(s"$dp/bucket=$b")))
-  }
 
   /** The (fingerprint, buckets) of the completion record under `checkpoints`, if
     * any. */

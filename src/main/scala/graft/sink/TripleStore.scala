@@ -51,7 +51,7 @@ final class TripleStore(val root: String, nBuckets: Int = 16)(
 
   /** Buckets the latest snapshot considers committed — verified against the data
     * they describe (a manifest entry whose dir vanished to external deletion is
-    * treated as NOT committed, the Materialize.pendingBuckets contract). */
+    * treated as NOT committed, as Materialize's resumable commit treats it). */
   def committedBuckets(version: Option[Long] = None): Set[Int] =
     entries(version).filter(e => Files.exists(Paths.get(store.stagePath(e))))
       .map(bucketOf).toSet

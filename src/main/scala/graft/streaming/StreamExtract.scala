@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.extract.{PageKernel, PatternMatcher}
@@ -8,7 +8,7 @@ import graft.mention.Sentences
 import graft.model.{Mention, Page, Triple}
 import graft.nlp.{Annotate, Gazetteer}
 
-/** A triple carrying its page's event time (warc_ts), for watermarked windowed aggs. */
+/** A triple carrying its page's event time (warc_ts), for watermarked state expiry. */
 final case class TimedTriple(
     subj: String,
     pred: String,
@@ -34,15 +34,13 @@ final case class TimedTriple(
  * StreamingSpec asserts the streaming path equals the relational paired chain in
  * [[graft.extract.Extract]] on the same corpus.
  *
- * Three capabilities:
+ * Two capabilities:
  *  - [[triples]]: stateless per-page extraction, works on batch AND streaming Datasets;
  *  - [[dedupedTriples]]: exactly-once (subj,pred,obj,url) emission via
- *    flatMapGroupsWithState (KeyValueGroupedDataset custom state);
- *  - [[windowedPredCounts]]: event-time tumbling-window counts with a watermark on
- *    warc_ts (late pages beyond the watermark are dropped, state is bounded).
+ *    flatMapGroupsWithState (KeyValueGroupedDataset custom state).
  *
  * At scale: the per-page path has no shuffle, so the micro-batch DAG is a single narrow
- * stage; state in dedup/window stages is partitioned by key across executors (RocksDB
+ * stage; state in dedup stages is partitioned by key across executors (RocksDB
  * state store in production); the parquet/file sink commits per micro-batch through the
  * checkpoint log → exactly-once, resumable from `checkpointLocation` after a crash.
  */
@@ -242,16 +240,6 @@ object StreamExtract {
           }
       }
   }
-
-  /** Event-time tumbling-window counts per predicate with a watermark: the streaming
-    * analog of the batch q12_hourly. Late data beyond `watermark` is dropped and window
-    * state is evicted — bounded state at unbounded input. */
-  def windowedPredCounts(ts: Dataset[TimedTriple], windowLen: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    ts.toDF()
-      .withWatermark("warcTs", watermark)
-      .groupBy(window(col("warcTs"), windowLen), col("pred"))
-      .agg(count(lit(1)).as("n_triples"), approx_count_distinct("subj").as("n_subjects"))
 
   /** Launch the continuous ingest job: stream → extract → dedup → parquet append with
     * exactly-once checkpointing. Trigger.AvailableNow drains what exists then stops —

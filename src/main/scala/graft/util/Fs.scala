@@ -9,7 +9,7 @@ object Fs {
     * `_temporary`/markers) — that is the legitimate "nothing committed" state, not a
     * readable table. The probe is explicit so genuine read failures on a real table
     * are NOT caught at any checkpoint/lineage/store call site (shared by
-    * [[graft.sink.Materialize]], [[graft.sink.TripleStore]], [[graft.sink.Stores]] and
+    * [[graft.sink.Materialize]], [[graft.sink.TripleStore]] and
     * [[graft.runtime.StageCheckpoint]]). */
   def parquetDataExists(path: String)(implicit spark: SparkSession): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

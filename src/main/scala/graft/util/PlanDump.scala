@@ -1,7 +1,6 @@
 package graft.util
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Generates PLANS.md: the physical-plan evidence for the headline queries — scan

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.kg.Graph
 
 /** Hand-computed fixtures for the graph-side finishing operators: degree statistics,
-  * mega-entity fact capping, predicate functionality profiles, and entity cards. */
+  * predicate functionality profiles, and capped entity cards. */
 class GraphSpec extends AnyFunSuite with SparkTest {
 
   private def triples = {
@@ -28,20 +28,6 @@ class GraphSpec extends AnyFunSuite with SparkTest {
       "e1" -> ((3L, 2L, 3L)),
       "e2" -> ((1L, 1L, 1L)),
       "hub" -> ((5L, 2L, 5L))))
-  }
-
-  test("capHubs: deterministic (pred, obj) head per subject, true degree attached") {
-    val out = Graph.capHubs(triples, "subj", "pred", "obj", maxDeg = 3)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
-        r.getLong(4)))
-      .sortBy(t => (t._1, t._4))
-    // hub keeps born_in=x, mentions=a, mentions=b (byte order); degree stays 5
-    assert(out.filter(_._1 == "hub").map(t => (t._2, t._3, t._5)).toSeq ==
-      Seq(("born_in", "x", 5L), ("mentions", "a", 5L), ("mentions", "b", 5L)))
-    // under-cap subjects keep everything
-    assert(out.count(_._1 == "e1") == 3)
-    assert(out.count(_._1 == "e2") == 1)
   }
 
   test("predicateProfile: fanout in exact basis points") {
@@ -176,19 +162,14 @@ class GraphSpec extends AnyFunSuite with SparkTest {
       "winner mixed columns from different captures")
   }
 
-  test("factHistory + staleFacts: first/last seen, support, expiry watermark") {
+  test("factHistory: first/last seen and support per fact") {
     import spark.implicits._
     val triples = Seq(
       ("s1", "p", "o1", 1L), ("s1", "p", "o1", 4L), ("s1", "p", "o1", 2L),
       ("s2", "p", "o2", 1L)).toDF("subj", "pred", "obj", "ts")
-    val hist = graft.kg.Temporal.factHistory(triples, "subj", "pred", "obj", "ts")
-    val out = hist.collect()
+    val out = graft.kg.Temporal.factHistory(triples, "subj", "pred", "obj", "ts").collect()
       .map(r => r.getString(0) -> ((r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     assert(out == Map("s1" -> ((1L, 4L, 3L)), "s2" -> ((1L, 1L, 1L))))
-    val stale = graft.kg.Temporal.staleFacts(hist,
-        org.apache.spark.sql.functions.lit(2L))
-      .collect().map(_.getString(0)).toSet
-    assert(stale == Set("s2"), "only facts unseen since the watermark expire")
   }
 
   test("vocabulary: min-count gate and deterministic topN head") {

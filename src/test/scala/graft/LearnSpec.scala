@@ -1,11 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.learn.{GenMSA, PatternStats}
 import graft.model.Pattern
 
-/** Learning-stage post-processing: subsumption filter + reference site scoring. */
+/** Learning-stage post-processing: subsumption filter, pair gates, value priors. */
 class LearnSpec extends AnyFunSuite with SparkTest {
 
   private def pat(id: Long, annot: String, tp: Long, fp: Long, toks: String*): Pattern =
@@ -134,28 +133,6 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     assert(dict.head.profileId === -2L)
   }
 
-  test("duplicate-doc propagation: gold span lands on the near-dup's sentence") {
-    import spark.implicits._
-    val aText = "Acme Corp was founded in 1959 by investors"
-    val bText = "Acme Corp was founded in 1959 near the lake" // near-dup variant
-    val cText = "completely unrelated words appear here today"
-    def sentsOf(url: String, t: String) = spark.createDataset(Seq(
-      graft.model.SentenceAnnots(url, 0, t.length,
-        graft.nlp.Tokenizer.annotate(url, t).filter(_.annotType == "Token"))))
-    val sentences = sentsOf("a", aText)
-      .unionByName(sentsOf("b", bText)).unionByName(sentsOf("c", cText))
-    val b = aText.indexOf("1959")
-    val gold = spark.createDataset(Seq(graft.model.Annotation(
-      "a", 1, "founded-year", b, b + 4, "1959", Map.empty, "gold", 1.0)))
-    val pairs = Seq(("a", "b"), ("a", "c")).toDF("url_a", "url_b")
-    val got = graft.learn.Propagate.propagate(sentences, gold, pairs).collect()
-    assert(got.length === 1, s"got ${got.toSeq}")
-    val p = got.head
-    assert(p.url === "b" && p.annotType === "founded-year" && p.value === "1959")
-    assert(bText.substring(p.begin, p.end) === "1959")
-    assert(p.provenance === "dup-propagated")
-  }
-
   test("eval scorer: entity and token P/R/F1 with tolerance") {
     import spark.implicits._
     // tokens: "Acme Corp won" → (0,4) (5,9) (10,13)
@@ -213,21 +190,5 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     val max0 = learned.filter(_.profileType == 0).map(_.toks.size).max
     val max3 = learned.filter(_.profileType == 3).map(_.toks.size).max
     assert(max3 > max0, s"full-sentence $max3 should exceed trimmed $max0")
-  }
-
-  test("resolveOverlaps keeps min site score: shorter pattern, freq breaks ties") {
-    import spark.implicits._
-    // len 3 freq 90 → 3 − 0.9 = 2.1; len 3 freq 10 → 2.9; len 4 → ≥3.x loses
-    val p1 = pat(1, "T", 90, 0, ":a", ":b", ":target")
-    val p2 = pat(2, "T", 10, 0, ":c", ":d", ":target")
-    val p3 = pat(3, "T", 99, 0, ":a", ":b", ":c", ":target")
-    val patterns = spark.createDataset(Seq(p1, p2, p3))
-    val matches = Seq(
-      (1L, "u1", 10, 100L), (2L, "u1", 10, 100L), (3L, "u1", 10, 100L),
-      (3L, "u2", 20, 100L)
-    ).toDF("profileId", "url", "begin", "total")
-    val kept = PatternStats.resolveOverlaps(matches, patterns).collect()
-      .map(r => (r.getAs[String]("url"), r.getAs[Long]("profileId"))).toSet
-    assert(kept === Set(("u1", 1L), ("u2", 3L)))
   }
 }

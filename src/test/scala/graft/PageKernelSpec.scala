@@ -127,6 +127,18 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
     assert(committed(8) === one)
   }
 
+  test("pageTriples drops a page with neither text nor html, as it drops a gated page") {
+    import spark.implicits._
+    val normal = CorpusGen.pages(20).map(_.page)
+    val blank = Page("https://x.example.org/blank",
+      java.sql.Timestamp.valueOf("2025-01-01 00:00:00"), null, null, "en")
+    def triplesOf(pages: Seq[Page]): Seq[Triple] =
+      sorted(KGPipeline.pageTriples(spark.createDataset(pages), model.kernel).collect().toSeq)
+    val want = triplesOf(normal)
+    assert(want.nonEmpty)
+    assert(triplesOf(normal.take(10) ++ Seq(blank) ++ normal.drop(10)) === want)
+  }
+
   test("grid labels, gazetteer lookups, link keys and html tags lowercase alike under " +
       "any default locale") {
     // under a Turkish default locale a default-locale toLowerCase maps "TITAN" to
@@ -141,7 +153,11 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
       val gaz = graft.nlp.Gazetteer.build(Seq(graft.nlp.GazEntry("titan", "ship", "ship")))
       val lookups = gaz.annotate("u", text, graft.nlp.Tokenizer.scan(text), 0)
       assert(lookups.map(a => (a.begin, a.end)) === Seq((0, 5)))
-      assert(graft.link.EntityLink.normalizeForm("TITAN") === "titan")
+      import spark.implicits._
+      val links = graft.link.EntityLink.candidateEdges(
+        Seq("TITAN", "Titan").toDF("form"))
+      assert(links.select("src", "dst").as[(String, String)].collect().toSeq ===
+        Seq(("TITAN", "Titan")))
       val page = graft.ingest.HtmlText.extract(
         "<P>before</P><SCRIPT>var hidden = 1;</SCRIPT><P>after</P>")
       assert(!page.contains("hidden") && page.contains("before") && page.contains("after"),

@@ -16,10 +16,15 @@ class PatternMatcherSpec extends AnyFunSuite {
   private def pat(id: Long, toks: String*): Pattern =
     Pattern(id, toks.toVector, "T", 0, "g", 1.0, 0, 0, 1)
 
+  /** All raw target spans (char offsets) for one compiled pattern on one grid. */
+  private def spans(g: Grid, c: PatternMatcher.Compiled,
+      prm: PatternMatcher.Params = PatternMatcher.Params()): Vector[(Int, Int)] =
+    PatternMatcher.matchOneFull(g, c, prm).map(s => (s.tb, s.te))
+
   test("exact adjacent match extracts the target span") {
     val g = gridOf("Acme was founded in 1997")
     val p = pat(1, ":token|string|founded", ":token|string|in", Grid.Target)
-    val hits = PatternMatcher.matchOne(g, PatternMatcher.compile(p))
+    val hits = spans(g, PatternMatcher.compile(p))
     // target candidates: "1997" (1 col) and "1997"+:end blocked (sentinel) → spans
     assert(hits.contains((20, 24)))
     assert(hits.forall { case (b, e) => b == 20 })
@@ -30,7 +35,7 @@ class PatternMatcherSpec extends AnyFunSuite {
     val g0 = gridOf("it was founded 2001")        // gap 0
     val g2 = gridOf("it was founded back in 2001") // gap 2
     def firstVals(g: Grid, text: String) =
-      PatternMatcher.matchOne(g, PatternMatcher.compile(p))
+      spans(g, PatternMatcher.compile(p))
         .map { case (b, e) => text.substring(b, e) }
     assert(firstVals(g0, "it was founded 2001").contains("2001"))
     assert(firstVals(g2, "it was founded back in 2001").contains("2001"))
@@ -39,7 +44,7 @@ class PatternMatcherSpec extends AnyFunSuite {
   test("target slot may span multiple tokens") {
     val g = gridOf("met with John Smith today")
     val p = pat(1, ":token|string|with", Grid.Target, ":token|string|today")
-    val hits = PatternMatcher.matchOne(g, PatternMatcher.compile(p))
+    val hits = spans(g, PatternMatcher.compile(p))
     assert(hits === Vector((9, 19))) // exactly "John Smith"
   }
 
@@ -146,16 +151,16 @@ class PatternMatcherSpec extends AnyFunSuite {
     val g = gridOf("Acme was founded in 1997")
     val c = PatternMatcher.compile(p)
     // strict: no match — recall 0 on this site
-    assert(PatternMatcher.matchOne(g, c, PatternMatcher.Params()).isEmpty)
+    assert(spans(g, c, PatternMatcher.Params()).isEmpty)
     // lenient budget 1: literal skipped (deletion), target extracted — the recall the
     // reference's hits >= size - maxGaps - 3 gate buys
-    val hits = PatternMatcher.matchOne(g, c,
+    val hits = spans(g, c,
       PatternMatcher.Params(maxMissedLiterals = 1))
     assert(hits.contains((20, 24)))
     // substitution variant: a different word in the pattern's slot position
     val gSub = gridOf("Acme was quietly founded in 1997")
-    assert(PatternMatcher.matchOne(gSub, c, PatternMatcher.Params()).isEmpty)
-    assert(PatternMatcher.matchOne(gSub, c,
+    assert(spans(gSub, c, PatternMatcher.Params()).isEmpty)
+    assert(spans(gSub, c,
       PatternMatcher.Params(maxMissedLiterals = 1)).contains((28, 32)))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.align.Grid
-import graft.nlp.{Annotate, Gazetteer, PosTagger, Tokenizer}
+import graft.nlp.{Annotate, Gazetteer, PosTagger}
 
 /** The rule/lexicon POS tagger: tag rules, the `category` Token feature and its
   * `:token|category|*` grid track, and — the point of its existence — a learned

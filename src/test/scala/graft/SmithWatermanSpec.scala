@@ -53,12 +53,6 @@ class SmithWatermanSpec extends AnyFunSuite {
     assert(SmithWaterman.align(g1, g2).score === SmithWaterman.align(g2, g1).score)
   }
 
-  test("token-list variant counts aligned tokens (duplicate-sentence kernel)") {
-    val a = Vector("the", "cat", "sat", "on", "the", "mat")
-    val b = Vector("a", "cat", "sat", "on", "a", "mat")
-    assert(SmithWaterman.alignTokens(a, b) === 4)
-  }
-
   // ---- K1 fidelity: multi-token advance, score map, relation-index consistency ----
   // (ref SmithWatermanDim.java:233-245, :116-138, :602-610; fixture shapes after the
   //  commented multi-token examples at :722-857, e.g. "metamap:anatomy" spanning

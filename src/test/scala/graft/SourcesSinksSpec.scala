@@ -1,109 +1,15 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.model.{Pattern, Triple}
-import graft.sink.{Materialize, Stores}
-import graft.sources.Ingest
+import graft.model.Triple
+import graft.sink.Materialize
 
-/** S4/S5 importers, S7 upsert sink, and the checkpointed resumable triple write. */
+/** The checkpointed resumable triple write, its stores, and the annotation caps. */
 class SourcesSinksSpec extends AnyFunSuite with SparkTest {
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_ss").toString
-
-  test("S4: text-file corpus import normalizes at import (trim + strip \\r)") {
-    import spark.implicits._
-    val dir = tmpDir()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/a.txt"),
-      "  Hello world.\r\nSecond line.\r\n ")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/b.txt"),
-      "Another doc.")
-    val pages = Ingest.fromTextFiles(dir).collect().sortBy(_.url)
-    assert(pages.length === 2)
-    val a = pages.find(_.url.endsWith("a.txt")).get
-    assert(a.text === "Hello world.\nSecond line.", "trim+strip-\\r not applied")
-    assert(!a.text.contains("\r"))
-  }
-
-  test("S5: CoNLL parse — tokens, sentences, IOB entity spans, exact offsets") {
-    val raw =
-      """-DOCSTART- -X- -X- O
-        |
-        |EU NNP B-NP B-ORG
-        |rejects VBZ B-VP O
-        |German JJ B-NP B-MISC
-        |call NN I-NP O
-        |. . O O
-        |
-        |Peter NNP B-NP B-PER
-        |Blackburn NNP I-NP I-PER
-        |""".stripMargin
-    val docs = Ingest.parseFile("f.txt", raw)
-    assert(docs.length === 1)
-    val d = docs.head
-    assert(d.text === "EU rejects German call . Peter Blackburn")
-    val ents = d.annots.filter(a => a.provenance == "gold")
-    assert(ents.map(a => (a.annotType, a.value)).toSet ===
-      Set(("ORG", "EU"), ("MISC", "German"), ("PER", "Peter Blackburn")))
-    // offsets must be exact against the reconstructed text
-    ents.foreach(a => assert(d.text.substring(a.begin, a.end) === a.value))
-    val sents = d.annots.filter(_.annotType == "Sentence")
-    assert(sents.length === 2)
-    assert(d.annots.count(_.annotType == "Token") === 7)
-  }
-
-  test("S7: pattern upsert — same key updates stats, new keys append") {
-    import spark.implicits._
-    val path = tmpDir() + "/patterns"
-    def p(id: Long, tok: String, tp: Long) =
-      Pattern(id, Seq(tok, ":target"), "t", 0, "msa", 0.5, tp, 0, 1)
-    Stores.upsertPatterns(spark.createDataset(Seq(p(1, ":a", 10), p(2, ":b", 20))), path)
-    // second generation: :a re-learned with new stats, :c is new
-    val after = Stores.upsertPatterns(
-      spark.createDataset(Seq(p(9, ":a", 99), p(3, ":c", 30))), path)
-      .collect().map(x => (x.toks.head, x.truePos)).toMap
-    assert(after === Map(":a" -> 99L, ":b" -> 20L, ":c" -> 30L))
-  }
-
-  test("S7: pattern upsert over an unreadable store throws and leaves it untouched") {
-    import spark.implicits._
-    val path = tmpDir() + "/patterns"
-    val p = Pattern(1, Seq(":a", ":target"), "t", 0, "msa", 0.5, 10, 0, 1)
-    Stores.upsertPatterns(spark.createDataset(Seq(p)), path)
-    val dir = java.nio.file.Paths.get(path)
-    def files(): Map[String, Seq[Byte]] = {
-      val s = java.nio.file.Files.list(dir)
-      try s.iterator().asScala.toSeq.map(f =>
-        f.getFileName.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
-      finally s.close()
-    }
-    // a torn write: the store's part file is no longer parquet
-    val part = files().keys.find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
-    java.nio.file.Files.write(dir.resolve(part), "not a parquet file".getBytes)
-    val before = files()
-    assertThrows[Exception](Stores.upsertPatterns(
-      spark.createDataset(Seq(p.copy(profileId = 2, toks = Seq(":b", ":target")))), path))
-    assert(files() === before, "a failed read replaced the pattern store")
-  }
-
-  test("S6/S8: annotation and match sinks append, partition-pruned by annotType") {
-    import spark.implicits._
-    val dir = tmpDir()
-    val a = graft.model.Annotation("u1", 0, "Token", 0, 3, "abc", Map("kind" -> "word"), "t", 1.0)
-    val b = a.copy(annotId = 1, annotType = "Sentence")
-    Stores.appendAnnotations(spark.createDataset(Seq(a)), s"$dir/annots")
-    Stores.appendAnnotations(spark.createDataset(Seq(b)), s"$dir/annots") // append, not overwrite
-    val back = spark.read.parquet(s"$dir/annots")
-    assert(back.count() === 2)
-    assert(new java.io.File(s"$dir/annots/annotType=Token").exists,
-      "annotType partitioning missing")
-    Stores.appendMatches(spark.createDataset(Seq(
-      graft.model.PatternMatch(1L, 1L, "u1", 0, 3, "abc"))), s"$dir/matches")
-    assert(spark.read.parquet(s"$dir/matches").count() === 1)
-  }
 
   test("P4: annotation value capped at 500 chars (ref GateBatch value cap)") {
     val long = "x" * 1200
@@ -223,12 +129,13 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     }
     assert(spark.read.parquet(path).count() < 200)
 
-    // resume: pendingBuckets sees exactly the lost buckets; write restores them
-    val bucketed = Materialize.withBucket(Materialize.dedup(triples), nB)
-    val pending = Materialize.pendingBuckets(bucketed, cpPath)
-      .collect().map(_.getInt(0)).sorted
-    assert(pending.toSeq === lost)
+    // resume: exactly the lost buckets are rewritten, the committed ones keep their files
+    def bucketFiles(b: Int): Map[String, Long] =
+      new java.io.File(s"$path/bucket=$b").listFiles().map(f => f.getName -> f.lastModified).toMap
+    val committed = (0 until nB).filterNot(lost.contains)
+    val before = committed.map(bucketFiles)
     Materialize.writeResumable(triples, path, nB)
+    assert(committed.map(bucketFiles) === before, "a committed bucket was rewritten")
     assert(spark.read.parquet(path).count() === 200)
     assert(spark.read.parquet(cpPath).count() === nB)
 
@@ -237,6 +144,23 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     Materialize.writeResumable(triples, path, nB)
     val mtimes2 = new java.io.File(path).listFiles().map(f => f.getName -> f.lastModified).toMap
     assert(mtimes === mtimes2, "complete checkpoint still rewrote partitions")
+  }
+
+  test("writeResumable without a fingerprint replaces a table a fingerprinted commit wrote") {
+    import spark.implicits._
+    val path = tmpDir() + "/triples"
+    def facts(obj: String) = spark.createDataset((0 until 200).map(i =>
+      Triple(s"subj$i", "p", s"$obj$i", s"https://x/$i", 0, 1, 1L, 1.0)))
+    val nB = 8
+    Materialize.writeResumable(facts("a"), path, nB, None, "fp-a")
+    assert(Materialize.committedLineage(path, "fp-a").isDefined)
+    // every bucket holds a lineage row, but fp-a wrote it: none may be trusted here
+    Materialize.writeResumable(facts("b"), path, nB)
+    val back = spark.read.parquet(path).select("subj", "pred", "obj").as[(String, String, String)]
+      .collect().toSet
+    assert(back === facts("b").collect().map(t => (t.subj, t.pred, t.obj)).toSet)
+    assert(Materialize.committedLineage(path, "fp-a").isEmpty,
+      "the replaced table still carries fp-a's completion record")
   }
 
   test("writeResumable: a committed bucket whose DATA vanished is rewritten") {

@@ -13,8 +13,8 @@ import graft.testgen.CorpusGen
 /**
  * Structured Streaming coverage (SURVEY.md §2.10): the per-page streaming path must be
  * byte-identical to the batch path (parity), dedup state must span micro-batches
- * (flatMapGroupsWithState), watermarked windows must aggregate by event time, and a
- * file-source run must resume from its checkpoint processing only new input.
+ * (flatMapGroupsWithState) and expire by event time, and a file-source run must
+ * resume from its checkpoint processing only new input.
  */
 class StreamingSpec extends AnyFunSuite with SparkTest {
 
@@ -87,35 +87,6 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(perPage === batch,
       s"paths diverged; only-batch=${(batch -- perPage).take(3)} " +
         s"only-page=${(perPage -- batch).take(3)}")
-  }
-
-  test("decontamination flag composes with streaming ingest (append mode, no state)") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val eval = Seq((100L, "one two three four five")).toDF("doc_id", "text")
-    val flag = graft.dedup.Dedup.contaminationFlag(eval, "text", n = 4)
-
-    val input = MemoryStream[(Long, String)]
-    val flagged = input.toDS().toDF("doc_id", "text")
-      .withColumn("contaminated", flag)
-    val q = flagged.writeStream.format("memory")
-      .queryName("decontam_stream").outputMode(OutputMode.Append()).start()
-    try {
-      input.addData((1L, "pre one two three four post"), (2L, "clean row here entirely"))
-      q.processAllAvailable()
-      input.addData((3L, "two three four five suffix"))
-      q.processAllAvailable()
-      val got = spark.table("decontam_stream")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-      assert(got == Map(1L -> true, 2L -> false, 3L -> true))
-      // the streaming flag must agree with the relational batch operator
-      val batchDocs = Seq((1L, "pre one two three four post"),
-        (2L, "clean row here entirely"), (3L, "two three four five suffix"))
-        .toDF("doc_id", "text")
-      val rel = graft.dedup.Dedup.contaminatedDocs(batchDocs, eval, "doc_id", "text", n = 4)
-        .collect().map(_.getLong(0)).toSet
-      assert(got.filter(_._2).keySet == rel)
-    } finally q.stop()
   }
 
   test("flatMapGroupsWithState dedup holds state across micro-batches") {
@@ -339,39 +310,6 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       assert(q.exception.isEmpty, s"query died: ${q.exception}")
       assert(spark.table("dedup_ttl").as[TimedTriple].collect()
         .map(_.subj).toSet === Set("k1", "k2"))
-    } finally q.stop()
-  }
-
-  test("watermarked tumbling window aggregates by event time and closes windows") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val input = MemoryStream[TimedTriple]
-    def tt(subj: String, hour: Int): TimedTriple =
-      TimedTriple(subj, "hq-city", "Gotham", s"https://x/$subj", 0, 1, 1L, 1.0,
-        java.sql.Timestamp.valueOf(f"2025-01-01 $hour%02d:15:00"))
-    val counts = StreamExtract.windowedPredCounts(input.toDS(),
-      windowLen = "1 hour", watermark = "1 hour")
-    val q = counts.writeStream.format("memory").queryName("win_t")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(tt("a", 1), tt("b", 1), tt("c", 2))
-      q.processAllAvailable()
-      // advance watermark past hour-1 and hour-2 windows
-      input.addData(tt("d", 5))
-      q.processAllAvailable()
-      input.addData(tt("e", 9))
-      q.processAllAvailable()
-      val rows = spark.table("win_t")
-        .selectExpr("hour(window.start) AS h", "n_triples").collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      assert(rows.get(1).contains(2L), s"hour-1 window wrong: $rows")
-      assert(rows.get(2).contains(1L), s"hour-2 window wrong: $rows")
-      // late row for an hour-1 window already behind the watermark must be dropped
-      input.addData(tt("late", 1))
-      q.processAllAvailable()
-      val again = spark.table("win_t")
-        .selectExpr("hour(window.start) AS h").where("h = 1").count()
-      assert(again === 1L, "late-beyond-watermark row re-opened a closed window")
     } finally q.stop()
   }
 
