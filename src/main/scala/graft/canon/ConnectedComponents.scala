@@ -79,38 +79,28 @@ object ConnectedComponents {
     })
   }
 
+  /** Round cap: the star rounds converge in O(log n), far below it. */
+  private val MaxIter = 25
+
   /** @param edges DataFrame with string columns (src, dst); undirected.
-    * @param reliableDir when set, per-round lineage truncation goes through a
-    *        write-read cycle on this (shared/HDFS) path instead of localCheckpoint —
-    *        localCheckpoint blocks live on executors and are LOST on executor failure,
-    *        which on a real cluster would abort a 20-round CC mid-flight; the
-    *        write-read cycle survives executor loss and lets a rerun resume from the
-    *        last completed round's edge set.
     * @return DataFrame(node STRING, component STRING = min node of its component). */
-  def run(edges: DataFrame, maxIter: Int = 25, reliableDir: Option[String] = None)(
-      implicit spark: SparkSession): DataFrame = {
-    def truncate(df: DataFrame, round: Int): DataFrame = reliableDir match {
-      case Some(dir) =>
-        val p = s"$dir/cc_round_$round"
-        df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      case None => df.localCheckpoint()
-    }
+  def run(edges: DataFrame): DataFrame = {
     // Materialize the input edge list ONCE: `nodes` and the iteration both derive from
     // it, and without this the entire upstream DAG (e.g. a full near-dup pairs pipeline)
     // recomputes per consumer — observed 3× wall-clock on q28.
-    val raw = truncate(edges.select(col("src").as("u"), col("dst").as("v")).distinct(), 0)
+    val raw = edges.select(col("src").as("u"), col("dst").as("v")).distinct()
+      .localCheckpoint()
     val nodes = raw.select(col("u").as("n"))
       .union(raw.select(col("v").as("n"))).distinct()
     var e = raw.filter(col("u") =!= col("v"))
     var prev = checksum(e)
     var converged = prev._1 == 0L
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       // the convergence checksum rides the truncation job as an observation —
       // one job per round, not two
       val (observed, readChecksum) = observedChecksum(smallStar(largeStar(e)))
-      e = truncate(observed, iter + 1)
+      e = observed.localCheckpoint()
       val cur = readChecksum()
       converged = cur == prev
       prev = cur
@@ -135,8 +125,7 @@ object ConnectedComponents {
    * list the CC pass needs anyway. Union-by-min keeps every tree root the component
    * minimum, so `find` at the end IS the canonical representative.
    */
-  def runAdaptive(edges: DataFrame, smallGraphMaxEdges: Long = 1L << 20,
-      maxIter: Int = 25, reliableDir: Option[String] = None)(
+  def runAdaptive(edges: DataFrame, smallGraphMaxEdges: Long = 1L << 20)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val raw = edges.select(col("src").as("u"), col("dst").as("v")).distinct()
@@ -149,8 +138,8 @@ object ConnectedComponents {
           .toDF("node", "component")
           .localCheckpoint() // eager: materialize before the cache below is dropped
       else
-        run(raw.select(col("u").as("src"), col("v").as("dst")), maxIter, reliableDir)
-    // safe either way: the small path just checkpointed; run()'s round-0 truncate
+        run(raw.select(col("u").as("src"), col("v").as("dst")))
+    // safe either way: the small path just checkpointed; run()'s round-0 checkpoint
     // already materialized its own copy of the edge list
     raw.unpersist(blocking = false)
     out

@@ -87,10 +87,9 @@ object EntityLink {
    *         deduplicated across blocking families.
    */
   def candidateEdges(forms: DataFrame, minJaccard: Double = 0.5,
-      maxBlockSize: Int = 1000, auditDrops: Boolean = true)(
-      implicit spark: SparkSession): DataFrame = {
+      maxBlockSize: Int = 1000)(implicit spark: SparkSession): DataFrame = {
     val normed = blocked(forms.select(col("form")).distinct())
-    if (auditDrops) logDrops("candidateEdges", normed, maxBlockSize)
+    logDrops("candidateEdges", normed, maxBlockSize)
     val capped = cap(normed, maxBlockSize)
     val a = capped.select(col("form").as("src"), col("toks").as("ta"), col("block"))
     val b = capped.select(col("form").as("dst"), col("toks").as("tb"), col("block"))
@@ -124,13 +123,12 @@ object EntityLink {
    *              (rows beyond the first per form are dropped deterministically).
    */
   def candidateEdgesEmbedding(forms: DataFrame, minCosBp: Long = 8000L,
-      maxBlockSize: Int = 1000, auditDrops: Boolean = true)(
-      implicit spark: SparkSession): DataFrame = {
+      maxBlockSize: Int = 1000)(implicit spark: SparkSession): DataFrame = {
     import graft.sim.Similarity.{qdot, qnorm2, quantize}
     val normed = blocked(forms.select(col("form"), col("vec"))
         .groupBy(col("form")).agg(min_by(col("vec"), col("vec")).as("vec")))
       .withColumn("qv", quantize(col("vec")))
-    if (auditDrops) logDrops("candidateEdgesEmbedding", normed, maxBlockSize)
+    logDrops("candidateEdgesEmbedding", normed, maxBlockSize)
     val capped = cap(normed, maxBlockSize) // form is distinct — deterministic under ties
     val a = capped.select(col("form").as("src"), col("qv").as("va"), col("block"))
     val b = capped.select(col("form").as("dst"), col("qv").as("vb"), col("block"))

@@ -34,11 +34,15 @@ final class StageCheckpoint(base: String)(implicit spark: SparkSession) {
   /** The fingerprint last committed for a stage, if any. The not-yet-created lineage
     * dir is probed explicitly (same discipline as Materialize's lineage reads): only
     * the legitimate "never ran" state reads as None — a transient FS error or a
-    * corrupt lineage file PROPAGATES instead of silently forcing a full recompute. */
+    * corrupt lineage file PROPAGATES instead of silently forcing a full recompute.
+    * The lineage is trusted only as far as the data it describes: a stage whose data
+    * files are gone reads as None too (an empty stage still writes a schema-only
+    * part file). */
   def committedFingerprint(name: String): Option[String] =
     if (!graft.util.Fs.parquetDataExists(lineagePath(name))) None
     else spark.read.parquet(lineagePath(name))
       .select(col("fingerprint")).head(1).headOption.map(_.getString(0))
+      .filter(_ => graft.util.Fs.parquetDataExists(dataPath(name)))
 
   /** Per-partition lineage rows of a completed stage. */
   def lineage(name: String): DataFrame = spark.read.parquet(lineagePath(name))

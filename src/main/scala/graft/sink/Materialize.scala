@@ -26,26 +26,21 @@ import graft.model.Triple
  * once complete, leaves a completion record there ([[committedLineage]]) that lets a
  * re-submission skip the job.
  *
- * NOTE: this is the PLAIN-DIRECTORY variant (hive layout readable by any engine, no
- * manifest indirection). [[TripleStore]] commits the same bucketed output through
- * [[SnapshotStore]]'s manifest protocol (snapshot isolation, time travel, vacuum,
- * compaction). Both stores share this object's kernels: the bucket kernel
- * ([[bucketed]]), the per-bucket lineage aggregate ([[bucketLineage]]) and the
- * latest-row-per-bucket view ([[latestPerBucket]]).
+ * The store is a plain directory (hive layout readable by any engine, no manifest
+ * indirection) and this object is its only commit path: the job has one writer that
+ * never appends, reads no older version, and rewrites every bucket it commits in
+ * full, so a bucket never accumulates files to compact.
  */
 object Materialize {
 
-  def withBucket(triples: Dataset[Triple], nBuckets: Int): DataFrame =
-    triples.toDF().withColumn("bucket", pmod(xxhash64(col("subj")), lit(nBuckets)).cast("int"))
-
-  /** Default provenance precedence (lower = stronger): human-validated beats auto,
+  /** Provenance precedence (lower = stronger): human-validated beats auto,
     * ref src/msa/PopulateFrame.java:168-192; unlisted provenances rank weakest. */
-  val DefaultProvenanceRank: Map[String, Int] =
+  private val ProvenanceRank: Map[String, Int] =
     Map(graft.model.Provenance.Gold -> 0, graft.model.Provenance.Propagated -> 1,
       graft.model.Provenance.Auto -> 2)
 
-  private def rankOf(provenanceRank: Map[String, Int]) =
-    provenanceRank.foldLeft(lit(Int.MaxValue)) { case (acc, (p, r)) =>
+  private def rank: Column =
+    ProvenanceRank.foldLeft(lit(Int.MaxValue)) { case (acc, (p, r)) =>
       when(col("provenance") === p, lit(r)).otherwise(acc)
     }
 
@@ -59,38 +54,27 @@ object Materialize {
       approx_count_distinct(col("url")).as("docs_approx"),
       min(col("score")).as("min_score")))
 
-  /** The bucket kernel every triple writer shares: site precedence dedup, graph
-    * dedup, the bucket column, then (when named) the observed counters. Two aligned
-    * shuffles: the site pass is url-keyed, the graph pass subj-keyed — both reduce
-    * before the exchange. */
-  private[sink] def bucketed(triples: Dataset[Triple], nBuckets: Int,
+  /** The bucket kernel: site precedence dedup, graph dedup, the bucket column
+    * `pmod(xxhash64(subj), nBuckets)`, then (when named) the observed counters. Two
+    * aligned shuffles: the site pass is url-keyed, the graph pass subj-keyed — both
+    * reduce before the exchange. */
+  private def bucketed(triples: Dataset[Triple], nBuckets: Int,
       observeName: Option[String])(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    withCounters(withBucket(dedup(dedupPrecedence(triples.toDF()).as[Triple]), nBuckets),
+    withCounters(dedup(dedupPrecedence(triples.toDF()).as[Triple]).toDF()
+      .withColumn("bucket", pmod(xxhash64(col("subj")), lit(nBuckets)).cast("int")),
       observeName)
   }
 
-  /** Order-insensitive identity of a fact set: bit_xor of xxhash64(subj, pred, obj),
-    * 0 when empty — the `output_hash` of every lineage row. */
-  private[sink] def factHash: Column =
-    coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L))
-
-  /** Per-bucket lineage of a bucketed write: (bucket, rows_out, output_hash). */
-  private[sink] def bucketLineage(bucketed: DataFrame): DataFrame =
+  /** Per-bucket lineage of a bucketed write, stamped with the stage that wrote it and
+    * when: (bucket, rows_out, output_hash, stage, completed_at). `output_hash` is the
+    * order-insensitive identity of the bucket's facts: bit_xor of
+    * xxhash64(subj, pred, obj), 0 when empty. */
+  private def bucketLineage(bucketed: DataFrame, stage: String): DataFrame =
     bucketed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("rows_out"), factHash.as("output_hash"))
-
-  /** Lineage rows stamped with the stage that wrote them and when. */
-  private[sink] def stamped(lineage: DataFrame, stage: String): DataFrame =
-    lineage.withColumn("stage", lit(stage)).withColumn("completed_at", current_timestamp())
-
-  /** The lineage reader view: one row per bucket, the one latest by `order`. */
-  private[sink] def latestPerBucket(tbl: DataFrame, order: Column): DataFrame = {
-    val rest = tbl.columns.filterNot(_ == "bucket")
-    tbl.groupBy(col("bucket"))
-      .agg(max_by(struct(rest.map(col): _*), order).as("w"))
-      .select(col("bucket") +: rest.map(c => col(s"w.$c").as(c)): _*)
-  }
+      .agg(count(lit(1)).as("rows_out"),
+        coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L)).as("output_hash"))
+      .withColumn("stage", lit(stage)).withColumn("completed_at", current_timestamp())
 
   /** Schema of the `_checkpoints` table. Reads name it, so probing the table starts no
     * schema-inference job; rows written without a fingerprint carry null. */
@@ -103,13 +87,6 @@ object Materialize {
     * file, so parquet readers skip it): the buckets it covers on the first line, then
     * the fingerprint. */
   private val CompletionRecord = "_COMMITTED"
-
-  /** A lineage table with no rows. */
-  private[sink] def emptyLineage(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long, String, java.sql.Timestamp)]
-      .toDF("bucket", "rows_out", "output_hash", "stage", "completed_at")
-  }
 
   /** Full write: every bucket of `triples` replaces the table at `path` (buckets
     * the new set does not touch are gone too), and its lineage replaces the
@@ -124,15 +101,13 @@ object Materialize {
     * best score, then a total tiebreak over every remaining field), so the emitted
     * (url, begin, end, profileId, score, provenance) always come from ONE input row —
     * never a per-column chimera — and the choice is identical at any parallelism. */
-  def dedup(triples: Dataset[Triple],
-      provenanceRank: Map[String, Int] = DefaultProvenanceRank)(
-      implicit spark: SparkSession): Dataset[Triple] = {
+  def dedup(triples: Dataset[Triple])(implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     triples.toDF()
       .groupBy($"subj", $"pred", $"obj")
       .agg(max_by(
         struct($"url", $"begin", $"end", $"profileId", $"score", $"provenance"),
-        struct(-rankOf(provenanceRank), $"score", $"url", $"begin", $"end",
+        struct(-rank, $"score", $"url", $"begin", $"end",
           $"profileId")).as("w"))
       .select($"subj", $"pred", $"obj", $"w.url".as("url"), $"w.begin".as("begin"),
         $"w.end".as("end"), $"w.profileId".as("profileId"), $"w.score".as("score"),
@@ -149,13 +124,10 @@ object Materialize {
    * come from the same row.
    *
    * @param triples a Triple-shaped DataFrame plus a `provenance` column
-   * @param provenanceRank lower = stronger; unlisted provenances rank weakest
    */
-  def dedupPrecedence(triples: DataFrame,
-      provenanceRank: Map[String, Int] = DefaultProvenanceRank)(
-      implicit spark: SparkSession): DataFrame = {
+  def dedupPrecedence(triples: DataFrame)(implicit spark: SparkSession): DataFrame = {
     triples
-      .withColumn("_rank", rankOf(provenanceRank))
+      .withColumn("_rank", rank)
       .groupBy(col("url"), col("pred"), col("begin"), col("end"))
       .agg(max_by(
         struct(col("subj"), col("obj"), col("profileId"), col("score"),
@@ -243,7 +215,8 @@ object Materialize {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val trusted = if (resume) trustedBuckets(checkpoints, path, fingerprint) else Nil
     val replace = trusted.isEmpty
-    val pending = if (!resume) Nil
+    // a replace writes every bucket: no pending-bucket job
+    val pending = if (replace) Nil
       else all.select(col("bucket")).distinct()
         .join(trusted.toDF("bucket"), Seq("bucket"), "left_anti")
         .collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows
@@ -256,12 +229,13 @@ object Materialize {
       df.write.mode("overwrite")
         .option("partitionOverwriteMode", if (replace) "static" else "dynamic")
         .partitionBy("bucket").parquet(path)
-      stamped(bucketLineage(df), "materialize")
+      bucketLineage(df, "materialize")
         .withColumn("fingerprint", lit(fingerprint.orNull).cast(StringType))
         .write.mode(if (replace) "overwrite" else "append").parquet(checkpoints)
     }
-    fingerprint.foreach(fp =>
-      writeCompletionRecord(checkpoints, fp, (trusted ++ pending).distinct.sorted))
+    // a replace lists the buckets its static overwrite left under `path`
+    fingerprint.foreach(fp => writeCompletionRecord(checkpoints, fp,
+      if (replace) bucketPartitions(path) else (trusted ++ pending).distinct.sorted))
     all.unpersist()
     lineageView(checkpoints)
   }
@@ -272,10 +246,12 @@ object Materialize {
     * resume) reads as empty: a transient FS error or corrupt checkpoint file must
     * PROPAGATE, not masquerade as "nothing completed". */
   private def lineageView(checkpoints: String)(implicit spark: SparkSession): DataFrame =
-    if (graft.util.Fs.parquetDataExists(checkpoints))
-      latestPerBucket(spark.read.schema(LineageSchema).parquet(checkpoints),
-        col("completed_at"))
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](), LineageSchema)
+    if (graft.util.Fs.parquetDataExists(checkpoints)) {
+      val rest = LineageSchema.fieldNames.toSeq.filterNot(_ == "bucket")
+      spark.read.schema(LineageSchema).parquet(checkpoints).groupBy(col("bucket"))
+        .agg(max_by(struct(rest.map(col): _*), col("completed_at")).as("w"))
+        .select(col("bucket") +: rest.map(c => col(s"w.$c").as(c)): _*)
+    } else spark.createDataFrame(java.util.Collections.emptyList[Row](), LineageSchema)
 
   /** Buckets a resume trusts: those whose latest lineage row `fingerprint` wrote (with
     * None, a row written without one) and whose data partition under `dataPath` is
@@ -296,6 +272,16 @@ object Materialize {
             graft.util.Fs.parquetDataExists(s"$dataPath/bucket=$b") => b
       }.toSeq
     }
+
+  /** The buckets whose `bucket=N` partition is under `dataPath`, sorted: one listing
+    * of ≤ nBuckets entries. */
+  private def bucketPartitions(dataPath: String)(implicit spark: SparkSession): Seq[Int] = {
+    val (fs, p) = fsPath(dataPath)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
+      case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt
+    }.sorted
+  }
 
   /** The (fingerprint, buckets) of the completion record under `checkpoints`, if
     * any. */

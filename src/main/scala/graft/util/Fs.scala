@@ -8,9 +8,8 @@ object Fs {
     * A crash during a first write can leave the directory present but empty (only
     * `_temporary`/markers) — that is the legitimate "nothing committed" state, not a
     * readable table. The probe is explicit so genuine read failures on a real table
-    * are NOT caught at any checkpoint/lineage/store call site (shared by
-    * [[graft.sink.Materialize]], [[graft.sink.TripleStore]] and
-    * [[graft.runtime.StageCheckpoint]]). */
+    * are NOT caught at any checkpoint/lineage call site (shared by
+    * [[graft.sink.Materialize]] and [[graft.runtime.StageCheckpoint]]). */
   def parquetDataExists(path: String)(implicit spark: SparkSession): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -46,6 +46,27 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(lin.length === 1 && lin.head.getAs[Long]("rows_total") === 0L)
   }
 
+  test("a committed stage whose data directory is gone recomputes") {
+    import spark.implicits._
+    val base = tmp()
+    val cp = graft.runtime.StageCheckpoint(base)
+    var computed = 0
+    def stage = { computed += 1; Seq((1, "a"), (2, "b")).toDF("k", "v") }
+    cp.materialize("s1", "fp-A")(stage)
+    // the data goes, its lineage stays: the lineage is trusted only as far as the
+    // data it describes
+    def rmTree(d: java.io.File): Unit = {
+      Option(d.listFiles()).foreach(_.foreach(rmTree)); d.delete()
+    }
+    rmTree(new java.io.File(s"$base/s1"))
+    assert(new java.io.File(s"$base/s1__lineage").exists())
+    assert(!cp.wouldResume("s1", "fp-A"))
+    val r = cp.materialize("s1", "fp-A")(stage)
+    assert(computed === 2, "fp-A must recompute over its vanished data")
+    assert(r.as[(Int, String)].collect().sorted.toSeq === Seq((1, "a"), (2, "b")))
+    assert(cp.wouldResume("s1", "fp-A"))
+  }
+
   test("committedFingerprint: absent lineage reads as None; corrupt lineage propagates") {
     val cp = graft.runtime.StageCheckpoint(tmp())
     assert(cp.committedFingerprint("never_ran").isEmpty)

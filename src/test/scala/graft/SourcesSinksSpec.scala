@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Triple
 import graft.sink.Materialize
 
-/** The checkpointed resumable triple write, its stores, and the annotation caps. */
+/** The checkpointed resumable triple write and the annotation caps. */
 class SourcesSinksSpec extends AnyFunSuite with SparkTest {
 
   private def tmpDir(): String =
@@ -200,128 +200,21 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(spark.read.parquet(path + "_checkpoints").count() === 1L)
   }
 
-  test("TripleStore: resumable write + vanished-bucket rewrite through ONE manifest path") {
+  test("a fresh fingerprinted writeResumable starts as many Spark jobs as write") {
     import spark.implicits._
-    import graft.sink.TripleStore
-    val ts = new TripleStore(tmpDir() + "/tstore", nBuckets = 4)
+    val dir = tmpDir()
     val triples = spark.createDataset((0 until 200).map(i =>
       Triple(s"subj$i", "p", s"o$i", s"https://x/$i", 0, 1, 1L, 1.0)))
-    ts.writeResumable(triples)
-    assert(ts.read().count() === 200)
-    assert(ts.committedBuckets() === Set(0, 1, 2, 3))
-    val v1 = ts.store.latestVersion.get
-    // resume with a complete store: nothing staged, no new version
-    ts.writeResumable(triples)
-    assert(ts.store.latestVersion.get === v1, "no-op resume committed a snapshot")
-    // vanished data: delete one bucket's staged dir → that bucket (only) rewrites
-    val victim = ts.store.snapshot(v1).head
-    def rmTree(d: java.io.File): Unit = {
-      Option(d.listFiles()).foreach(_.foreach(rmTree)); d.delete()
-    }
-    rmTree(new java.io.File(ts.store.stagePath(victim)))
-    assert(ts.read().count() < 200)
-    ts.writeResumable(triples)
-    assert(ts.read().count() === 200, "vanished bucket not rewritten")
-    val manifest = ts.store.snapshot(ts.store.latestVersion.get)
-    assert(manifest.size === 4 && !manifest.contains(victim),
-      s"stale entry not replaced: $manifest")
-    // lineage reader view: one latest row per bucket, rows sum to the store
-    val lin = ts.lineage()
-    assert(lin.count() === 4)
-    assert(lin.agg(sum("rows_out")).head.getLong(0) === 200L)
-  }
-
-  test("TripleStore: racing appender + compactor + readers — snapshot isolation, " +
-      "CAS conflict, time travel, vacuum") {
-    import spark.implicits._
-    import graft.sink.TripleStore
-    val ts = new TripleStore(tmpDir() + "/tstore_race", nBuckets = 2)
-    def batch(g: Int) = spark.createDataset((0 until 60).map(i =>
-      Triple(s"s${g * 60 + i}", "p", s"o${g * 60 + i}", s"https://x/${g * 60 + i}",
-        0, 1, 1L, 1.0)))
-    val v1 = ts.append(batch(0))
-    // appender thread: 4 more commits; compactor thread: bin-pack continuously;
-    // reader thread: every observed count must be a multiple of the batch size —
-    // a partial bucket or torn compaction would break that invariant
-    val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val reader = new Thread(() => {
-      while (!stop.get()) {
-        val n = ts.read().count()
-        if (n % 60 != 0 || n < 60 || n > 300)
-          bad.compareAndSet(null, s"reader observed partial state: $n rows")
-      }
-    })
-    val compactor = new Thread(() => {
-      while (!stop.get()) { ts.compact(targetFileBytes = 1L << 30); Thread.sleep(5) }
-    })
-    reader.start(); compactor.start()
-    (1 until 5).foreach(g => ts.append(batch(g)))
-    Thread.sleep(200) // let the compactor see the final fragmented state
-    stop.set(true); reader.join(30000); compactor.join(30000)
-    assert(bad.get() == null, String.valueOf(bad.get()))
-    assert(ts.read().count() === 300)
-    // content identical through all compactions
-    def h(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(subj, pred, obj, url))")).head.getLong(0)
-    assert(h(ts.read()) === h((0 until 5).map(batch).reduce(_ union _).toDF()
-      .withColumn("bucket", lit(0))))
-    // a final compact leaves each bucket one entry; idempotent afterwards
-    ts.compact(targetFileBytes = 1L << 30)
-    val finalEntries = ts.store.snapshot(ts.store.latestVersion.get)
-    assert(finalEntries.size === 2, s"not packed: $finalEntries")
-    assert(ts.compact(targetFileBytes = 1L << 30).count() === 0L)
-    // CAS: a compactor holding a stale read set must NOT clobber a newer commit
-    val stale = ts.store.snapshot(ts.store.latestVersion.get)
-      .filter(_.endsWith("bucket=0"))
-    val res = ts.store.commitPaths(Seq("phantom/bucket=0"),
-      drop = _.endsWith("bucket=0"),
-      validateReplaced = _.toSet == Set("some-older-entry/bucket=0"))
-    assert(res.isEmpty, "CAS accepted a stale replacement set")
-    assert(ts.store.snapshot(ts.store.latestVersion.get)
-      .filter(_.endsWith("bucket=0")) === stale)
-    // time travel: v1 still reads exactly the first batch, even after vacuum
-    // (old manifests keep their dirs referenced; only orphans are collected)
-    ts.store.vacuum()
-    assert(ts.read(Some(v1)).count() === 60)
-    assert(ts.read().count() === 300)
-  }
-
-  test("SnapshotStore: optimistic commits never lose updates; snapshot isolation") {
-    import spark.implicits._
-    import graft.sink.SnapshotStore
-    val storeRoot = tmpDir() + "/snapstore"
-    val store = new SnapshotStore(storeRoot)
-    // 8 concurrent appenders race on the manifest chain — every commit must land at
-    // a distinct version and the final snapshot must contain ALL rows (the
-    // lost-update anomaly optimistic concurrency exists to close)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futures = (0 until 8).map { w =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long =
-            store.commit(Seq((w.toLong, s"writer$w")).toDF("id", "who"))
-        })
-      }
-      val got = futures.map(_.get()).sorted
-      assert(got == (1L to 8L), s"versions not dense/distinct: $got")
-    } finally pool.shutdown()
-    assert(store.read()(spark).count() === 8L)
-    // the version chain is strictly growing: snapshot v contains exactly v dirs
-    store.versions.foreach(v => assert(store.snapshot(v).size === v.toInt))
-    // time travel: any historical snapshot reads exactly its own row count
-    assert(store.read(Some(3L))(spark).count() === 3L)
-    // snapshot isolation: a staged-but-uncommitted writer is invisible to readers
-    val staged = Seq((99L, "crashed")).toDF("id", "who")
-    staged.write.parquet(s"$storeRoot/data/crashed-writer")
-    assert(store.read()(spark).count() === 8L, "uncommitted staging leaked to readers")
-    // vacuum removes exactly the orphan; committed data is untouched
-    assert(store.vacuum() === Seq("crashed-writer"))
-    assert(store.read()(spark).count() === 8L)
-    // overwrite commit replaces the table at a new version
-    val v9 = store.commit(Seq((100L, "rebuild")).toDF("id", "who"), append = false)
-    assert(v9 === 9L && store.read()(spark).count() === 1L)
-    // and time travel still reaches the pre-overwrite snapshot
-    assert(store.read(Some(8L))(spark).count() === 8L)
+    val nB = 8
+    val (_, plain) = SparkTestBase.jobsStarted("ss.write") {
+      Materialize.write(triples, s"$dir/plain", nB) }
+    val (_, resumable) = SparkTestBase.jobsStarted("ss.resumable") {
+      Materialize.writeResumable(triples, s"$dir/resumable", nB, None, "fp-a") }
+    // the replace writes every bucket: it needs no pending-bucket job
+    assert(resumable === plain)
+    // its completion record lists every bucket the replace wrote
+    val cps = Materialize.committedLineage(s"$dir/resumable", "fp-a")
+    assert(cps.map(_.count()) === Some(nB.toLong))
+    assert(spark.read.parquet(s"$dir/resumable").count() === 200)
   }
 }
