@@ -13,26 +13,10 @@ package graft.align
  */
 object MSA {
 
-  /** Alignment quality gates — the reference's countGaps/countSyntax/countPhrase
-    * limits (/root/reference/src/msa/MSAUtils.java:17-55, applied GenMSA.java:514-541).
-    * maxSyntax bounds anchors that are ONLY syntax-level (`:syntaxtreenode…`);
-    * maxPhrase bounds phrase-node anchors — both unlimited by default (this pipeline
-    * produces no parser annotations unless a chunker stage adds them). */
-  final case class Gates(maxGaps: Int = 4, minAnchors: Int = 2, minScore: Double = 0.0,
-      maxSyntax: Int = Int.MaxValue, maxPhrase: Int = Int.MaxValue)
-
-  /** Anchors whose matched label is syntax-level — POS category, orth, or phrase
-    * shape (ref MSAUtils.countSyntax's class list, MSAUtils.java:41-55: a column is
-    * "syntax-only" when EVERY label is category/orth/syntaxtreenode/dependency; one
-    * anchor carries one matched label here, so the per-anchor test is prefix
-    * membership in that class). */
-  def countSyntax(al: SmithWaterman.Alignment): Int =
-    al.anchors.count(a => a.label.startsWith(":syntaxtreenode") ||
-      a.label.startsWith(":token|category|") || a.label.startsWith(":token|orth|"))
-
-  /** Phrase-node anchors (ref MSAUtils.countPhrase: `:syntaxtreenode|cat|…` phrases). */
-  def countPhrase(al: SmithWaterman.Alignment): Int =
-    al.anchors.count(_.label.startsWith(":syntaxtreenode|cat|"))
+  /** Alignment quality gates — the reference's countGaps limit and minimum anchor
+    * count (/root/reference/src/msa/MSAUtils.java:17-55, applied GenMSA.java:514-541).
+    * The reference's limits on syntax-only and phrase anchors are not carried. */
+  final case class Gates(maxGaps: Int = 4, minAnchors: Int = 2)
 
   /**
    * Render the pattern token sequence from an alignment: anchors in order; a single
@@ -46,8 +30,6 @@ object MSA {
   def toPattern(al: SmithWaterman.Alignment, gates: Gates = Gates(),
       requireTarget: Boolean = true): Option[Vector[String]] = {
     if (requireTarget && !al.coversTarget) return None
-    if (countSyntax(al) > gates.maxSyntax) return None
-    if (countPhrase(al) > gates.maxPhrase) return None
     if (al.anchors.length < gates.minAnchors) return None
     if (al.gapCount > gates.maxGaps) return None
     val out = Vector.newBuilder[String]

@@ -5,8 +5,8 @@ package graft.align
  * kernel, capability-equivalent to the reference's SmithWatermanDim
  * (/root/reference/src/align/SmithWatermanDim.java:155-625): a DP over grid columns
  * where a "match" is any pair of stacked labels that are equal (ref matchGridColumns2,
- * :550-625), per-label match weights from a configurable score map (ref setScoreMap
- * :116-138; a negative score FORBIDS the match, ref :268-269), `:target` matches
+ * :550-625), per-label match weights from a fixed ladder (the reference reads its
+ * scoreList from configuration, setScoreMap :116-138), `:target` matches
  * weighted overwhelmingly (ref 10^6 at :15,:270-271) so alignments always anchor on
  * the target slot, multi-token annotations advancing BOTH indices by their column span
  * and scoring weight × span (ref :233-245 — without this, alignments through
@@ -22,51 +22,28 @@ package graft.align
  */
 object SmithWaterman {
 
-  final case class Params(
-      gapPenalty: Double = 1.0,
-      mismatchPenalty: Double = 0.0, // SW: mismatch never taken when 0-floor applies
-      targetScore: Double = 1e6,
-      // per-label score overrides — the reference's configurable scoreList
-      // (setScoreMap :116-138). Keys are label prefixes up to the second '|'
-      // (":token|string") or the full label for feature-less labels (":number").
-      // A value overrides the built-in ladder; NEGATIVE forbids matching that track.
-      scoreMap: Map[String, Double] = Map.empty,
-      // advance i/j by a matched annotation's column span (ref :233-245);
-      // false restores per-column re-anchoring (pre-fidelity behavior)
-      multiTokenAdvance: Boolean = true)
+  private val GapPenalty = 1.0
 
-  /** Label prefix up to the second '|' — the reference's annotType key extraction
-    * (SmithWatermanDim.java:233-245). ":token|string|nodule" → ":token|string". */
-  def labelPrefix(label: String): String = {
-    val i = label.indexOf('|')
-    if (i < 0) label
-    else {
-      val j = label.indexOf('|', i + 1)
-      if (j < 0) label.substring(0, i) else label.substring(0, j)
-    }
-  }
+  private val TargetScore = 1e6
 
-  def weight(label: String, p: Params): Double =
-    p.scoreMap.get(labelPrefix(label)) match {
-      case Some(w) => if (label == Grid.Target) p.targetScore else w
-      case None =>
-        if (label == Grid.Target) p.targetScore
-        else if (label == Grid.Start || label == Grid.End) 3.0
-        else if (label.startsWith(":token|string|")) 10.0
-        else if (label.startsWith(":token|root|")) 9.0
-        else if (label.startsWith(":lookup|minortype|")) 8.0
-        else if (label.startsWith(":lookup|majortype|")) 7.0
-        else if (label == ":number" || label == ":date") 5.0
-        else if (label.startsWith(":token|orth|")) 2.0
-        else if (label.startsWith(":syntaxtreenode|")) 1.5 // phrase shape: weak
-        // POS generalization: the reference scores Token.category near-zero
-        // (ie.properties scoreList — string 10, root 9, category 0.01) but has no
-        // kind label at all; here it must outrank the bare :token|kind|word default
-        // (1.0) or a shared category could never become the anchor, while staying
-        // below orth/phrase so more specific shape labels still win
-        else if (label.startsWith(":token|category|")) 1.2
-        else 1.0
-    }
+  /** The match weight of one shared label. */
+  def weight(label: String): Double =
+    if (label == Grid.Target) TargetScore
+    else if (label == Grid.Start || label == Grid.End) 3.0
+    else if (label.startsWith(":token|string|")) 10.0
+    else if (label.startsWith(":token|root|")) 9.0
+    else if (label.startsWith(":lookup|minortype|")) 8.0
+    else if (label.startsWith(":lookup|majortype|")) 7.0
+    else if (label == ":number" || label == ":date") 5.0
+    else if (label.startsWith(":token|orth|")) 2.0
+    else if (label.startsWith(":syntaxtreenode|")) 1.5 // phrase shape: weak
+    // POS generalization: the reference scores Token.category near-zero
+    // (ie.properties scoreList — string 10, root 9, category 0.01) but has no
+    // kind label at all; here it must outrank the bare :token|kind|word default
+    // (1.0) or a shared category could never become the anchor, while staying
+    // below orth/phrase so more specific shape labels still win
+    else if (label.startsWith(":token|category|")) 1.2
+    else 1.0
 
   private val RelationMark = ":relation."
 
@@ -110,7 +87,7 @@ object SmithWaterman {
   }
 
   /** Smith-Waterman local alignment of two grids. O(|g1|·|g2|·stackHeight). */
-  def align(g1: Grid, g2: Grid, p: Params = Params()): Alignment = {
+  def align(g1: Grid, g2: Grid): Alignment = {
     val n = g1.cols.size
     val m = g2.cols.size
     val h = Array.ofDim[Double](n + 1, m + 1)
@@ -140,16 +117,14 @@ object SmithWaterman {
           // a multi-column label anchors the alignment at the annotation's LAST
           // column, pulling from before its first column (ref :233-245); interior
           // occurrences never anchor
-          val okA = !p.multiTokenAdvance || colA.offOf(k) == colA.spanOf(k) - 1
-          val sa = if (p.multiTokenAdvance) colA.spanOf(k) else 1
-          if (okA && sa <= i) {
+          val sa = colA.spanOf(k)
+          if (colA.offOf(k) == sa - 1 && sa <= i) {
             val (baseA, relA) = relationParts(la)
             var k2 = 0
             while (k2 < colB.labels.length) {
               val lb = colB.labels(k2)
-              val okB = !p.multiTokenAdvance || colB.offOf(k2) == colB.spanOf(k2) - 1
-              val sb = if (p.multiTokenAdvance) colB.spanOf(k2) else 1
-              if (okB && sb <= j) {
+              val sb = colB.spanOf(k2)
+              if (colB.offOf(k2) == sb - 1 && sb <= j) {
                 val (baseB, relB) = relationParts(lb)
                 if (baseA == baseB) {
                   val consistent = relA == 0 || (relMap.get(relA) match {
@@ -157,14 +132,10 @@ object SmithWaterman {
                     case None => true
                   })
                   if (consistent) {
-                    val w = weight(la, p)
-                    if (w >= 0) {
-                      val step = math.max(sa, sb)
-                      val cand = h(i - sa)(j - sb) + w * step
-                      if (cand > dV) {
-                        dV = cand; dL = la; dSi = sa; dSj = sb
-                        dRel1 = relA; dRel2 = relB
-                      }
+                    val cand = h(i - sa)(j - sb) + weight(la) * math.max(sa, sb)
+                    if (cand > dV) {
+                      dV = cand; dL = la; dSi = sa; dSj = sb
+                      dRel1 = relA; dRel2 = relB
                     }
                   }
                 }
@@ -174,12 +145,9 @@ object SmithWaterman {
           }
           k += 1
         }
-        val diag =
-          if (dL != null) dV
-          else h(i - 1)(j - 1) -
-            (if (p.mismatchPenalty > 0) p.mismatchPenalty else p.gapPenalty)
-        val up = h(i - 1)(j) - p.gapPenalty
-        val left = h(i)(j - 1) - p.gapPenalty
+        val diag = if (dL != null) dV else h(i - 1)(j - 1) - GapPenalty
+        val up = h(i - 1)(j) - GapPenalty
+        val left = h(i)(j - 1) - GapPenalty
         var v = 0.0; var d: Byte = 0
         if (diag > v) {
           v = diag; d = 1
@@ -205,7 +173,7 @@ object SmithWaterman {
           val (si, sj) = (math.max(bsi(ci)(cj), 1), math.max(bsj(ci)(cj), 1))
           if (lbl(ci)(cj) != null)
             anchors = Anchor(ci - 1, cj - 1, lbl(ci)(cj),
-              weight(lbl(ci)(cj), p), si, sj) :: anchors
+              weight(lbl(ci)(cj)), si, sj) :: anchors
           ci -= si; cj -= sj
         case 2 => ci -= 1
         case 3 => cj -= 1

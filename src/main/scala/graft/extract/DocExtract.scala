@@ -2,7 +2,7 @@ package graft.extract
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.align.Grid
+import graft.align.{Grid, GridCol}
 import graft.model.{Pattern, SentenceAnnots}
 import graft.nlp.{AhoCorasick, Annotate, GazEntry, Gazetteer}
 
@@ -74,8 +74,7 @@ object DocExtract {
   /** A hand-seeded two-slot relation pattern: gazetteer `:subject` immediately before
     * the trigger token, `:target` immediately after — minimal-span ⇒ single tokens. */
   def relationPattern(trigger: String, pred: String): Pattern =
-    Pattern(1L,
-      Seq(Grid.Subject, s":token|string|${PageKernel.lowered(trigger)}", Grid.Target),
+    Pattern(1L, Seq(Grid.Subject, triggerLabel(trigger), Grid.Target),
       annotType = pred, profileType = 0, group = "seed",
       score = 1.0, truePos = 0, falsePos = 0, rows = 0)
 
@@ -194,6 +193,21 @@ object DocExtract {
     spark.createDataFrame(rows.toSeq.asJava, df.schema)
   }
 
+  /** The grid label of the token `trigger`. */
+  private def triggerLabel(trigger: String): String =
+    s":token|string|${PageKernel.lowered(trigger)}"
+
+  /** The gazetteer-keyword label of the statistics entry points' `kws`. */
+  private val KwLabel = ":lookup|majortype|kw"
+
+  /** The columns after each `trigger` column of `s`'s grid, nearest first: the
+    * statistics entry points read their gold and predicted spans from these. */
+  private def afterTrigger(s: SentenceAnnots, trigger: String): Iterator[IndexedSeq[GridCol]] = {
+    val label = triggerLabel(trigger)
+    val cols = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots).cols
+    cols.indices.iterator.filter(cols(_).has(label)).map(i => cols.drop(i + 1))
+  }
+
   /**
    * (context × target) pair statistics over a documents table — the oracle-checkable
    * entry point for the pair model (the reference's `final` table,
@@ -212,16 +226,12 @@ object DocExtract {
       import graft.learn.{LearnKernel, PatternStats}
       import spark.implicits._
       val pred = s"after_$trigger"
-      val ctx = Pattern(1L, Seq(s":token|string|${PageKernel.lowered(trigger)}", Grid.Target),
-        pred, 0, "seed", 1.0, 0, 0, 0)
-      val tKw = Pattern(11L, Seq(":lookup|majortype|kw"), pred, 1, "seed", 1.0, 0, 0, 0)
+      val ctx = triggerPattern(trigger).copy(annotType = pred)
+      val tKw = Pattern(11L, Seq(KwLabel), pred, 1, "seed", 1.0, 0, 0, 0)
       val tWord = Pattern(12L, Seq(":token|kind|word"), pred, 1, "seed", 1.0, 0, 0, 0)
-      val triggerLabel = s":token|string|${PageKernel.lowered(trigger)}"
       val gold = sents.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        grid.cols.sliding(2).collect {
-          case Seq(a, b) if a.has(triggerLabel) && b.has(":lookup|majortype|kw") =>
-            (s.url, pred, b.begin, b.end)
+        afterTrigger(s, trigger).collect {
+          case b +: _ if b.has(KwLabel) => (s.url, pred, b.begin, b.end)
         }
       }.toDF("url", "annotType", "begin", "end")
       val cfg = PatternStats.Config(evalTolerance = 0)
@@ -245,12 +255,9 @@ object DocExtract {
       import graft.learn.ValueProbs
       import spark.implicits._
       val pred = s"after_$trigger"
-      val triggerLabel = s":token|string|${PageKernel.lowered(trigger)}"
       val gold = sents.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        grid.cols.sliding(2).collect {
-          case Seq(a, b) if a.has(triggerLabel) && b.has(":lookup|majortype|kw") =>
-            (s.url, pred, b.text)
+        afterTrigger(s, trigger).collect {
+          case b +: _ if b.has(KwLabel) => (s.url, pred, b.text)
         }
       }.toDF("url", "annotType", "value")
       ValueProbs.compute(sents, gold, ValueProbs.Config())
@@ -277,24 +284,15 @@ object DocExtract {
       val tokens = sents.flatMap(s =>
           s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
         .toDF("url", "begin", "end")
-      val triggerLabel = s":token|string|${PageKernel.lowered(trigger)}"
-      val kwLabel = ":lookup|majortype|kw"
       val predicted = sents.flatMap { s =>
-        val grid = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots)
-        grid.cols.sliding(2).collect {
-          case Seq(a, b) if a.has(triggerLabel) && b.text.length > 4 =>
-            (s.url, pred, b.begin, b.end)
+        afterTrigger(s, trigger).collect {
+          case b +: _ if b.text.length > 4 => (s.url, pred, b.begin, b.end)
         }
       }.toDF("url", "annotType", "begin", "end")
       val gold = sents.flatMap { s =>
-        val cols = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots).cols
-        (0 until cols.size - 1).flatMap { i =>
-          val (a, b) = (cols(i), cols(i + 1))
-          if (a.has(triggerLabel) && b.has(kwLabel)) {
-            val end = if (i + 2 < cols.size && cols(i + 2).has(kwLabel)) cols(i + 2).end
-                      else b.end
-            Some((s.url, pred, b.begin, end))
-          } else None
+        afterTrigger(s, trigger).collect {
+          case b +: rest if b.has(KwLabel) =>
+            (s.url, pred, b.begin, rest.headOption.filter(_.has(KwLabel)).fold(b.end)(_.end))
         }
       }.toDF("url", "annotType", "begin", "end")
       graft.learn.Eval.score(predicted, gold, tokens, tolerance = 0)
@@ -303,7 +301,7 @@ object DocExtract {
   /** A hand-seeded single-anchor pattern: ":token|string|<trigger>" followed by a
     * one-token `:target` (minimal-span rule ⇒ exactly the next token). */
   def triggerPattern(trigger: String): Pattern =
-    Pattern(1L, Seq(s":token|string|${PageKernel.lowered(trigger)}", Grid.Target),
+    Pattern(1L, Seq(triggerLabel(trigger), Grid.Target),
       annotType = s"follows_$trigger", profileType = 0, group = "seed",
       score = 1.0, truePos = 0, falsePos = 0, rows = 0)
 

@@ -34,7 +34,7 @@ object Extract {
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(finalPatterns))
     sentences.flatMap { s =>
       PageKernel.matchableGrid(s).toVector.flatMap { grid =>
-        PatternMatcher.matchAllCascaded(grid, idxB.value, prm).map { h =>
+        PatternMatcher.matchAll(grid, idxB.value, prm).map { h =>
           Mention(s.url, h.pattern.annotType, h.targetBegin, h.targetEnd,
             PatternMatcher.trimTrailingPunct(h.value), h.pattern.profileId,
             h.pattern.score)
@@ -83,7 +83,7 @@ object Extract {
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(relPatterns))
     sentences.flatMap { s =>
       PageKernel.matchableGrid(s).toVector.flatMap { grid =>
-        PatternMatcher.matchAllCascaded(grid, idxB.value, prm)
+        PatternMatcher.matchAll(grid, idxB.value, prm)
           .filter(_.subjBegin >= 0)
           .map { h =>
             Triple(h.subjValue, h.pattern.annotType,
@@ -104,8 +104,7 @@ object Extract {
    */
   def mentionsPaired(sentences: Dataset[SentenceAnnots], contextPatterns: Seq[Pattern],
       targetPatterns: Seq[Pattern], allowedPairs: Map[(Long, Long), Double],
-      prm: PatternMatcher.Params = PatternMatcher.Params(),
-      excludedPairs: Set[(Long, Long)] = Set.empty)(
+      prm: PatternMatcher.Params = PatternMatcher.Params())(
       implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(contextPatterns))
@@ -113,7 +112,7 @@ object Extract {
     val pairsB = spark.sparkContext.broadcast(allowedPairs)
     sentences.flatMap { s =>
       PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairMentions(s, grid,
-        idxB.value, tgtB.value, pairsB.value, prm, excludedPairs))
+        idxB.value, tgtB.value, pairsB.value, prm))
     }
   }
 
@@ -122,8 +121,7 @@ object Extract {
   def relationTriplesPaired(sentences: Dataset[SentenceAnnots],
       relPatterns: Seq[Pattern], targetPatterns: Seq[Pattern],
       allowedPairs: Map[(Long, Long), Double],
-      prm: PatternMatcher.Params = PatternMatcher.Params(),
-      excludedPairs: Set[(Long, Long)] = Set.empty)(
+      prm: PatternMatcher.Params = PatternMatcher.Params())(
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(relPatterns))
@@ -131,7 +129,7 @@ object Extract {
     val pairsB = spark.sparkContext.broadcast(allowedPairs)
     sentences.flatMap { s =>
       PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairRelations(s, grid,
-        idxB.value, tgtB.value, pairsB.value, prm, excludedPairs))
+        idxB.value, tgtB.value, pairsB.value, prm))
     }
   }
 
@@ -201,8 +199,8 @@ object Extract {
 
   /**
    * Resolve subjects sentence-locally and emit raw triples. Entity Lookups (majorType
-   * == subjectMajorType) that precede the mention in the same sentence provide the
-   * subject; otherwise the url host does.
+   * "entity") that precede the mention in the same sentence provide the subject;
+   * otherwise the url host does.
    *
    * Scale shape: one cogroup of mentions and subject spans on url — ONLY the (small)
    * mention and subject rows shuffle, and the per-page argmin runs in memory
@@ -213,13 +211,11 @@ object Extract {
    * reference's own bound.
    */
   def triples(sentences: Dataset[SentenceAnnots], ms: Dataset[Mention],
-      subjectMajorType: String = "entity",
       provenance: String = graft.model.Provenance.Auto)(
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     val subjects = sentences.flatMap { s =>
-      s.annots.filter(a => a.annotType == "Lookup" &&
-          a.features.getOrElse("majorType", "") == subjectMajorType)
+      s.annots.filter(PageKernel.Subjects.isSubject)
         .map(a => (s.url, s.sentBegin, s.sentEnd, a.begin, a.end, a.value))
     }
     ms.groupByKey(_.url).cogroup(subjects.groupByKey(_._1)) { (url, mIt, sIt) =>

@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.unsafe.types.UTF8String
 import graft.align.Grid
 import graft.mention.Sentences
-import graft.model.{Mention, Pattern, Provenance, SentenceAnnots, Triple}
+import graft.model.{Annotation, Mention, Pattern, Provenance, SentenceAnnots, Triple}
 import graft.nlp.{AhoCorasick, Annotate, Gazetteer}
 
 /**
@@ -23,6 +23,9 @@ import graft.nlp.{AhoCorasick, Annotate, Gazetteer}
  *  - all-caps sentences skip both pattern passes;
  *  - the dictionary pass (trusted prior values, every occurrence) is neither vetoed
  *    nor skipped on all-caps sentences.
+ * Both pattern passes are one [[PatternMatcher.matchPairs]] call: a single pass (the
+ * reference's cascade re-insertion is not carried), a pattern tried only when every
+ * literal occurs, and a span overlapping an accepted one dropped.
  * Per page: the same-span dedup winner, the W4 adjacent merge, and sentence-local
  * subject resolution against entity Lookups.
  *
@@ -64,7 +67,7 @@ final class PageKernel(
       cands ++= dictionary.mentions(s)
     }
     val mentions = PageKernel.mergeAdjacent(PageKernel.dedupMentions(cands))
-    val subjects = PageKernel.Subjects(url, sents, "entity")
+    val subjects = PageKernel.Subjects(url, sents)
     mentions.map(subjects.resolve(_)) ++ rel.result()
   }
 }
@@ -98,18 +101,16 @@ object PageKernel {
 
   private def pairHits(grid: Grid, index: PatternMatcher.Index,
       targets: Map[String, IndexedSeq[PatternMatcher.Compiled]],
-      pairs: Map[(Long, Long), Double], prm: PatternMatcher.Params,
-      excludedPairs: Set[(Long, Long)]): Vector[PatternMatcher.PairHit] =
-    PatternMatcher.matchPairsCascaded(grid, index, targets, prm,
-      allowedPairs = Some(pairs.keySet), excludedPairs = excludedPairs)
+      pairs: Map[(Long, Long), Double],
+      prm: PatternMatcher.Params): Vector[PatternMatcher.PairHit] =
+    PatternMatcher.matchPairs(grid, index, targets, prm, allowedPairs = Some(pairs.keySet))
 
   /** Pair-model single-slot mentions of one sentence, scored by the pair's precision
     * (see [[Extract.mentionsPaired]]). */
   def pairMentions(s: SentenceAnnots, grid: Grid, index: PatternMatcher.Index,
       targets: Map[String, IndexedSeq[PatternMatcher.Compiled]],
-      pairs: Map[(Long, Long), Double], prm: PatternMatcher.Params,
-      excludedPairs: Set[(Long, Long)] = Set.empty): Vector[Mention] =
-    pairHits(grid, index, targets, pairs, prm, excludedPairs).filter(_.subjBegin < 0)
+      pairs: Map[(Long, Long), Double], prm: PatternMatcher.Params): Vector[Mention] =
+    pairHits(grid, index, targets, pairs, prm).filter(_.subjBegin < 0)
       .map { h =>
         Mention(s.url, h.context.annotType, h.targetBegin, h.targetEnd,
           PatternMatcher.trimTrailingPunct(h.value), h.context.profileId,
@@ -120,9 +121,8 @@ object PageKernel {
     * [[Extract.relationTriplesPaired]]). */
   def pairRelations(s: SentenceAnnots, grid: Grid, index: PatternMatcher.Index,
       targets: Map[String, IndexedSeq[PatternMatcher.Compiled]],
-      pairs: Map[(Long, Long), Double], prm: PatternMatcher.Params,
-      excludedPairs: Set[(Long, Long)] = Set.empty): Vector[Triple] =
-    pairHits(grid, index, targets, pairs, prm, excludedPairs).filter(_.subjBegin >= 0)
+      pairs: Map[(Long, Long), Double], prm: PatternMatcher.Params): Vector[Triple] =
+    pairHits(grid, index, targets, pairs, prm).filter(_.subjBegin >= 0)
       .map { h =>
         Triple(h.subjValue, h.context.annotType,
           PatternMatcher.trimTrailingPunct(h.value),
@@ -260,12 +260,14 @@ object PageKernel {
 
   object Subjects {
     /** From one page's sentences (ascending begin). */
-    def apply(url: String, sents: Seq[SentenceAnnots],
-        subjectMajorType: String): Subjects =
+    def apply(url: String, sents: Seq[SentenceAnnots]): Subjects =
       of(url, sents.map(s => (s.sentBegin, s.sentEnd,
-        s.annots.iterator.filter(a => a.annotType == "Lookup" &&
-            a.features.getOrElse("majorType", "") == subjectMajorType)
+        s.annots.iterator.filter(isSubject)
           .map(a => (a.begin, a.end, a.value)).toArray)))
+
+    /** Is `a` a subject candidate: an entity Lookup? */
+    private[extract] def isSubject(a: Annotation): Boolean =
+      a.annotType == "Lookup" && a.features.getOrElse("majorType", "") == "entity"
 
     /** From one page's (sentBegin, sentEnd, subjBegin, subjEnd, subjValue) rows, in
       * sentence then annotation order. */

@@ -22,30 +22,16 @@ import graft.model.Pattern
  */
 object PatternMatcher {
 
-  /** @param cascadeRounds extraction fixpoint bound: accepted targets are re-inserted
-    *        into the grid as annotation labels and matching repeats, so patterns may
-    *        reference earlier extractions (ref ProfileMatcher.java:773-820, do-while
-    *        :205-848). 1 = single pass (no cascade).
-    * @param maxMissedLiterals the reference's LENIENT mode (candidate gate
-    *        `hits >= size - maxGaps - 3`, ProfileInvertedIndex.java:308-333, with the
-    *        aligner tolerating unmatched pattern tokens inside `matchCoords >=
-    *        gridSize - maxGaps`, MSAUtils.java:471): up to N literal elements may go
-    *        unmatched — skipped outright or consuming one non-matching column — and
-    *        the inverted index forwards candidates missing up to N literals. At least
-    *        one literal must still match. 0 (default) = strict exact matching.
-    * @param containmentSuppression W3 suppression rule: false (default) drops a hit
-    *        whose target span OVERLAPS an accepted one; true replays the reference's
-    *        exact rule — drop only when the span is CONTAINED in an accepted span
-    *        (ref targetRangeList, /root/reference/src/msa/ProfileMatcher.java:705-730),
-    *        so partially-overlapping staggered hits survive. */
-  final case class Params(maxGapSpan: Int = 3, maxTargetLen: Int = 5, maxGridLen: Int = 300,
-      cascadeRounds: Int = 1, maxMissedLiterals: Int = 0,
-      containmentSuppression: Boolean = false)
+  /** @param maxGapSpan most columns one `:gap` may skip
+    * @param maxTargetLen most columns the `:target` slot may consume */
+  final case class Params(maxGapSpan: Int = 3, maxTargetLen: Int = 5)
 
-  /** W3 suppression predicate between an accepted span [ab,ae) and a new span [b,e). */
-  private def collides(prm: Params, ab: Int, ae: Int, b: Int, e: Int): Boolean =
-    if (prm.containmentSuppression) ab <= b && ae >= e
-    else ab < e && ae > b
+  /** Sentences longer than this many grid columns are not matched (ref maxGridLen,
+    * ProfileMatcher.java:32,121). */
+  private val MaxGridLen = 300
+
+  /** W3 suppression predicate: does the new span [b,e) overlap the accepted [ab,ae)? */
+  private def collides(ab: Int, ae: Int, b: Int, e: Int): Boolean = ab < e && ae > b
 
   final case class Compiled(pattern: Pattern, elems: Vector[String], literals: Vector[String])
 
@@ -84,11 +70,7 @@ object PatternMatcher {
       * grids can skip the chunking pass entirely (its labels could never match). */
     lazy val needsSyntax: Boolean = PatternMatcher.needsSyntax(compiled)
 
-    /** @param missSlack lenient-mode slack: forward candidates missing up to this
-      *        many literals (ref `hits >= size − maxGaps − 3`,
-      *        ProfileInvertedIndex.java:308-333), floored at one present literal so
-      *        literal-free candidacy stays impossible. */
-    def candidates(labels: Set[String], missSlack: Int = 0): Vector[Compiled] = {
+    def candidates(labels: Set[String]): Vector[Compiled] = {
       val counts = new Array[Int](compiled.size)
       labels.foreach { l =>
         postings.get(l).foreach(_.foreach(i => counts(i) += 1))
@@ -96,7 +78,7 @@ object PatternMatcher {
       val out = Vector.newBuilder[Compiled]
       var i = 0
       while (i < counts.length) {
-        if (required(i) > 0 && counts(i) >= math.max(1, required(i) - missSlack))
+        if (required(i) > 0 && counts(i) >= required(i))
           out += compiled(i)
         i += 1
       }
@@ -125,7 +107,7 @@ object PatternMatcher {
       minimalTarget: Boolean = true): Vector[Span] = {
     val cols = grid.cols
     val n = cols.size
-    if (n > prm.maxGridLen) return Vector.empty // ref maxGridLen cap, ProfileMatcher.java:32,121
+    if (n > MaxGridLen) return Vector.empty
     val results = mutable.LinkedHashSet.empty[Span]
 
     def realToken(t: Int): Boolean =
@@ -133,14 +115,11 @@ object PatternMatcher {
     def hasLookup(t: Int): Boolean =
       cols(t).labels.exists(_.startsWith(":lookup|"))
 
-    // backtracking: place elems(k) starting at column index ci.
-    // `missed` = lenient-mode budget of skippable literals left; `lits` = literals
-    // actually matched so far (≥1 required at completion when the pattern has any)
+    // backtracking: place elems(k) starting at column index ci
     def place(k: Int, ci: Int, mustBeAdjacent: Boolean,
-        tb: Int, te: Int, sb: Int, se: Int,
-        missed: Int = prm.maxMissedLiterals, lits: Int = 0): Unit = {
+        tb: Int, te: Int, sb: Int, se: Int): Unit = {
       if (k == c.elems.length) {
-        if (tb >= 0 && (c.literals.isEmpty || lits > 0)) results += Span(tb, te, sb, se)
+        if (tb >= 0) results += Span(tb, te, sb, se)
         return
       }
       val elem = c.elems(k)
@@ -149,7 +128,7 @@ object PatternMatcher {
         // time; precision is enforced downstream by the stats gate)
         var skip = 0
         while (skip <= prm.maxGapSpan && ci + skip <= n) {
-          place(k + 1, ci + skip, mustBeAdjacent = true, tb, te, sb, se, missed, lits)
+          place(k + 1, ci + skip, mustBeAdjacent = true, tb, te, sb, se)
           skip += 1
         }
         // note: the skipped columns start at ci; next element must start at ci+skip
@@ -173,9 +152,9 @@ object PatternMatcher {
               val (b, e) = (cols(s).begin, cols(s + len - 1).end)
               if (isSubj) {
                 if (grid.lookupSpans.contains((b, e)))
-                  place(k + 1, s + len, mustBeAdjacent = true, tb, te, b, e, missed, lits)
+                  place(k + 1, s + len, mustBeAdjacent = true, tb, te, b, e)
               }
-              else place(k + 1, s + len, mustBeAdjacent = true, b, e, sb, se, missed, lits)
+              else place(k + 1, s + len, mustBeAdjacent = true, b, e, sb, se)
             }
             len += 1
           }
@@ -187,23 +166,15 @@ object PatternMatcher {
         // multi-token entity (induction and extraction agree on element granularity)
         if (mustBeAdjacent) {
           if (ci < n) anchoredSpans(cols(ci), elem, n - ci).foreach(sp =>
-            place(k + 1, ci + sp, mustBeAdjacent = true, tb, te, sb, se, missed, lits + 1))
+            place(k + 1, ci + sp, mustBeAdjacent = true, tb, te, sb, se))
         } else {
           // first literal: try every start column
           var s = ci
           while (s < n) {
             anchoredSpans(cols(s), elem, n - s).foreach(sp =>
-              place(k + 1, s + sp, mustBeAdjacent = true, tb, te, sb, se, missed, lits + 1))
+              place(k + 1, s + sp, mustBeAdjacent = true, tb, te, sb, se))
             s += 1
           }
-        }
-        // lenient mode: this literal may go unmatched — skipped outright, or
-        // consuming one non-matching column (ref alignment gaps inside
-        // `matchCoords >= gridSize − maxGaps`, MSAUtils.java:471)
-        if (missed > 0) {
-          place(k + 1, ci, mustBeAdjacent, tb, te, sb, se, missed - 1, lits)
-          if (mustBeAdjacent && ci < n)
-            place(k + 1, ci + 1, mustBeAdjacent = true, tb, te, sb, se, missed - 1, lits)
         }
       }
     }
@@ -267,18 +238,13 @@ object PatternMatcher {
    *
    * @param allowedPairs extraction-time per-pair gate (the `final` table read); None =
    *        all pairs (stats-collection mode).
-   * @param excludedPairs standing per-pair EXCLUSION set — the reference's `filter`
-   *        table (/root/reference/sql/ie-mysql.sql:16-20, read
-   *        src/msa/ProfileReader.java:411-437): a pair listed here never matches, even
-   *        when allowed/high-precision.
    * @param suppressOverlaps drop hits whose target span overlaps an accepted one
    *        (longest-context-first priority) — extraction mode; stats mode passes false.
    */
   def matchPairs(grid: Grid, ctxIndex: Index, targetsByType: Map[String, IndexedSeq[Compiled]],
       prm: Params = Params(), allowedPairs: Option[Set[(Long, Long)]] = None,
-      suppressOverlaps: Boolean = true,
-      excludedPairs: Set[(Long, Long)] = Set.empty): Vector[PairHit] = {
-    val cands = ctxIndex.candidates(grid.labelSet, prm.maxMissedLiterals)
+      suppressOverlaps: Boolean = true): Vector[PairHit] = {
+    val cands = ctxIndex.candidates(grid.labelSet)
     val cols = grid.cols
     val accepted = mutable.ArrayBuffer.empty[PairHit]
     val seen = mutable.HashSet.empty[(Long, Long, Int, Int)]
@@ -294,11 +260,10 @@ object PatternMatcher {
             val until = cols.lastIndexWhere(c => c.end == s.te && c.end > c.begin) + 1
             if (from >= 0 && until > from) targets.foreach { tc =>
               val pairKey = (c.pattern.profileId, tc.pattern.profileId)
-              val allowed = allowedPairs.forall(_.contains(pairKey)) &&
-                !excludedPairs.contains(pairKey)
-              if (allowed && targetMatches(grid, from, until, tc, prm)) {
+              if (allowedPairs.forall(_.contains(pairKey)) &&
+                  targetMatches(grid, from, until, tc, prm)) {
                 val overlaps = suppressOverlaps &&
-                  accepted.exists(h => collides(prm, h.targetBegin, h.targetEnd, s.tb, s.te))
+                  accepted.exists(h => collides(h.targetBegin, h.targetEnd, s.tb, s.te))
                 val key = (pairKey._1, pairKey._2, s.tb, s.te)
                 if (!overlaps && !seen.contains(key)) {
                   seen += key
@@ -317,11 +282,11 @@ object PatternMatcher {
 
   /**
    * Match a full (indexed) pattern set against one grid with overlap suppression:
-   * patterns tried longest-first; a hit whose target span is contained within an
-   * already-accepted hit's span is dropped (ref ProfileMatcher.java:705-730).
+   * patterns tried longest-first; a hit whose target span overlaps an already-accepted
+   * hit's span is dropped (ref ProfileMatcher.java:705-730 drops only a contained one).
    */
   def matchAll(grid: Grid, index: Index, prm: Params = Params()): Vector[Hit] = {
-    val cands = index.candidates(grid.labelSet, prm.maxMissedLiterals)
+    val cands = index.candidates(grid.labelSet)
     val accepted = mutable.ArrayBuffer.empty[Hit]
     cands.foreach { c =>
       matchOneFull(grid, c, prm)
@@ -329,9 +294,8 @@ object PatternMatcher {
         .foreach { s =>
           // drop any hit colliding with an already-accepted span: higher-priority
           // (longer) patterns own their sites (ref targetRangeList,
-          // ProfileMatcher.java:527-540); collision = overlap by default, exact
-          // containment in reference-faithful mode (prm.containmentSuppression)
-          if (!accepted.exists(h => collides(prm, h.targetBegin, h.targetEnd, s.tb, s.te))) {
+          // ProfileMatcher.java:527-540)
+          if (!accepted.exists(h => collides(h.targetBegin, h.targetEnd, s.tb, s.te))) {
             val value = coveredText(grid, s.tb, s.te)
             val subjValue = if (s.sb >= 0) coveredText(grid, s.sb, s.se) else ""
             accepted += Hit(c.pattern, s.tb, s.te, value, s.sb, s.se, subjValue)
@@ -339,88 +303,6 @@ object PatternMatcher {
         }
     }
     accepted.toVector
-  }
-
-  /** Re-insert accepted target spans as annotation labels (`:` + annotType, the same
-    * label Grid.build gives any non-Lookup annotation type) onto the covered columns —
-    * the cascade step (ref ProfileMatcher.java:773-820). */
-  def insertTargets(g: Grid, spans: Seq[(String, Int, Int)]): Grid =
-    if (spans.isEmpty) g
-    else g.copy(cols = g.cols.map { c =>
-      val add = spans.collect {
-        case (t, b, e) if b <= c.begin && e >= c.end && c.end > c.begin =>
-          ":" + PageKernel.lowered(t)
-      }.distinct.filterNot(c.has)
-      if (add.isEmpty) c
-      else c.copy(labels = c.labels ++ add,
-        // keep the span tracks parallel: cascade-inserted labels are per-column
-        spans = if (c.spans == null) null
-                else c.spans ++ Array.fill(add.size)(1),
-        offs = if (c.offs == null) null
-               else c.offs ++ Array.fill(add.size)(0))
-    })
-
-  /**
-   * Cascaded extraction: match, re-insert each accepted target as a grid annotation,
-   * and repeat until fixpoint (bounded by prm.cascadeRounds) — the reference's
-   * extraction-mode do-while (/root/reference/src/msa/ProfileMatcher.java:205-848,
-   * re-insert :773-820). Patterns referencing `:` + annotType labels fire on later
-   * rounds once an earlier pattern has extracted that type. Hits are deduped across
-   * rounds by (profile, span); overlap suppression applies within a round only (an
-   * inserted target MUST remain matchable by cascade consumers).
-   */
-  def matchAllCascaded(grid: Grid, index: Index, prm: Params = Params()): Vector[Hit] = {
-    var g = grid
-    val all = mutable.LinkedHashMap.empty[(Long, Int, Int), Hit]
-    val maxRounds = math.max(1, prm.cascadeRounds)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      changed = false
-      val fresh = matchAll(g, index, prm)
-        .filterNot(h => all.contains((h.pattern.profileId, h.targetBegin, h.targetEnd)))
-      if (fresh.nonEmpty) {
-        fresh.foreach(h => all((h.pattern.profileId, h.targetBegin, h.targetEnd)) = h)
-        round += 1
-        // rebuilding the grid is pointless when no further round will run
-        if (round < maxRounds) {
-          g = insertTargets(g, fresh.map(h =>
-            (h.pattern.annotType, h.targetBegin, h.targetEnd)))
-          changed = true
-        }
-      } else round += 1
-    }
-    all.values.toVector
-  }
-
-  /** Pair-model variant of [[matchAllCascaded]]. */
-  def matchPairsCascaded(grid: Grid, ctxIndex: Index,
-      targetsByType: Map[String, IndexedSeq[Compiled]], prm: Params = Params(),
-      allowedPairs: Option[Set[(Long, Long)]] = None,
-      excludedPairs: Set[(Long, Long)] = Set.empty): Vector[PairHit] = {
-    var g = grid
-    val all = mutable.LinkedHashMap.empty[(Long, Long, Int, Int), PairHit]
-    val maxRounds = math.max(1, prm.cascadeRounds)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      changed = false
-      val fresh = matchPairs(g, ctxIndex, targetsByType, prm, allowedPairs,
-          excludedPairs = excludedPairs)
-        .filterNot(h => all.contains(
-          (h.context.profileId, h.target.profileId, h.targetBegin, h.targetEnd)))
-      if (fresh.nonEmpty) {
-        fresh.foreach(h => all(
-          (h.context.profileId, h.target.profileId, h.targetBegin, h.targetEnd)) = h)
-        round += 1
-        if (round < maxRounds) {
-          g = insertTargets(g, fresh.map(h =>
-            (h.context.annotType, h.targetBegin, h.targetEnd)))
-          changed = true
-        }
-      } else round += 1
-    }
-    all.values.toVector
   }
 
   private def coveredText(grid: Grid, b: Int, e: Int): String =

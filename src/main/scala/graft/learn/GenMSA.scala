@@ -9,7 +9,7 @@ import graft.model.{Pattern, SentenceAnnots}
  *
  * The Spark shape of the reference's GenMSA/GenMSADriver
  * (/root/reference/src/msa/GenMSA.java:387-618, GenMSADriver.java:417-821): sentences
- * containing a gold target span of type T are target-centred and trimmed (±trimSize,
+ * containing a gold target span of type T are target-centred and trimmed (±10 columns,
  * ref GenAnnotationGrid.java:376-396), grouped into blocks of `blockSize` sentences
  * (ref msaBlockSize=20, config/ie.properties:106 — cross-block pairs intentionally never
  * align, exactly the reference's semantics, GenMSADriver.java:539-586), each block
@@ -24,19 +24,16 @@ import graft.model.{Pattern, SentenceAnnots}
  */
 object GenMSA {
 
-  final case class Config(
-      blockSize: Int = 20,
-      trimSize: Int = 10,
-      minRows: Int = 2,
-      gates: MSA.Gates = MSA.Gates(),
-      // target profiles are short (often one anchor like ":number"), so their gates
-      // are looser than the context gates
-      targetGates: MSA.Gates = MSA.Gates(maxGaps = 1, minAnchors = 1),
-      // also learn UNtrimmed full-sentence context profiles (the reference's
-      // profile_type 3, ref GenMSADriver.java:929) — higher precision, lower recall;
-      // they match like type-0 contexts and share the pair gates
-      fullSentence: Boolean = false,
-      swParams: SmithWaterman.Params = SmithWaterman.Params())
+  final case class Config(blockSize: Int = 20, minRows: Int = 2)
+
+  /** Context grids keep this many columns on each side of the target. */
+  private val TrimSize = 10
+
+  private val ContextGates = MSA.Gates()
+
+  /** Target profiles are short (often one anchor like ":number"), so their gates are
+    * looser than the context gates. */
+  private val TargetGates = MSA.Gates(maxGaps = 1, minAnchors = 1)
 
   /**
    * Learn patterns from sentences whose annotations include gold target spans with
@@ -59,7 +56,7 @@ object GenMSA {
         LearnKernel.blocks(it.map(_._2).toVector, cfg.blockSize).map(b => (t, b))
       }
       .repartition(spark.sparkContext.defaultParallelism)
-      .flatMap { case (t, block) => alignBlock(t, block.toVector, goldProvenances, cfg) }
+      .flatMap { case (t, block) => alignBlock(t, block.toVector, goldProvenances) }
       .groupByKey(identity).count()
       .flatMap { case ((t, toks, pType), rows) =>
         LearnKernel.pattern(t, toks, pType, rows, cfg.minRows)
@@ -91,9 +88,11 @@ object GenMSA {
    *  - target profiles (profileType 1): the gold target spans THEMSELVES as mini-grids
    *    aligned all-pairs — the generalized token-sequence shape of the target (e.g.
    *    [":number"] for year targets), later paired with context profiles at match time.
+   * The reference's untrimmed full-sentence contexts (profile_type 3,
+   * GenMSADriver.java:929) are not learned.
    */
   def alignBlock(annotType: String, sents: Vector[SentenceAnnots],
-      goldProvenances: Set[String], cfg: Config): Vector[(String, Seq[String], Int)] = {
+      goldProvenances: Set[String]): Vector[(String, Seq[String], Int)] = {
     val goldSpans = sents.map { s =>
       s -> s.annots
         .filter(a => goldProvenances(a.provenance) && a.annotType == annotType)
@@ -101,7 +100,7 @@ object GenMSA {
     }
     val ctxGrids = goldSpans.flatMap { case (s, targets) =>
       val g = Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots, targets)
-      Grid.trimAroundTarget(g, cfg.trimSize)
+      Grid.trimAroundTarget(g, TrimSize)
     }
     // target mini-grids: only the columns inside each gold span, no sentinels
     val tgtGrids = goldSpans.flatMap { case (s, targets) =>
@@ -118,7 +117,7 @@ object GenMSA {
       while (i < grids.length) {
         var j = i + 1
         while (j < grids.length) {
-          val al = SmithWaterman.align(grids(i), grids(j), cfg.swParams)
+          val al = SmithWaterman.align(grids(i), grids(j))
           MSA.toPattern(al, gates, requireTarget).foreach { toks =>
             out += ((annotType, toks, pType))
           }
@@ -127,14 +126,8 @@ object GenMSA {
         i += 1
       }
     }
-    allPairs(ctxGrids, cfg.gates, requireTarget = true, pType = 0)
-    allPairs(tgtGrids, cfg.targetGates, requireTarget = false, pType = 1)
-    if (cfg.fullSentence) {
-      val fullGrids = goldSpans.collect { case (s, targets) if targets.nonEmpty =>
-        Grid.build(s.url, s.sentBegin, s.sentEnd, s.annots, targets)
-      }
-      allPairs(fullGrids, cfg.gates, requireTarget = true, pType = 3)
-    }
+    allPairs(ctxGrids, ContextGates, requireTarget = true, pType = 0)
+    allPairs(tgtGrids, TargetGates, requireTarget = false, pType = 1)
     out.result()
   }
 }

@@ -67,7 +67,7 @@ object LearnKernel {
       byType.getOrElseUpdate(t, mutable.ArrayBuffer.empty) += s))
     val rows = mutable.HashMap.empty[(String, Seq[String], Int), Long]
     for ((t, ss) <- byType; block <- blocks(ss.toSeq, cfg.blockSize);
-         aligned <- GenMSA.alignBlock(t, block, goldProvenances, cfg))
+         aligned <- GenMSA.alignBlock(t, block, goldProvenances))
       rows(aligned) = rows.getOrElse(aligned, 0L) + 1
     rows.iterator.flatMap { case ((t, toks, pType), n) =>
       pattern(t, toks, pType, n, cfg.minRows)
@@ -88,12 +88,11 @@ object LearnKernel {
     * [[PatternMatcher.matchPairs]] hit without overlap suppression (the reference
     * computes precision before overlap filtering). */
   def sentenceMatches(s: SentenceAnnots, index: PatternMatcher.Index,
-      targets: Map[String, IndexedSeq[PatternMatcher.Compiled]], prm: PatternMatcher.Params,
-      allowedPairs: Option[Set[(Long, Long)]] = None,
-      excludedPairs: Set[(Long, Long)] = Set.empty): Iterator[PatternMatch] =
+      targets: Map[String, IndexedSeq[PatternMatcher.Compiled]],
+      prm: PatternMatcher.Params): Iterator[PatternMatch] =
     PageKernel.matchableGrid(s).iterator.flatMap { grid =>
-      PatternMatcher.matchPairs(grid, index, targets, prm, allowedPairs = allowedPairs,
-        suppressOverlaps = false, excludedPairs = excludedPairs).iterator.map { h =>
+      PatternMatcher.matchPairs(grid, index, targets, prm,
+        suppressOverlaps = false).iterator.map { h =>
         PatternMatch(h.context.profileId, h.target.profileId, s.url, h.targetBegin,
           h.targetEnd, PatternMatcher.trimTrailingPunct(h.value))
       }
@@ -164,11 +163,9 @@ object LearnKernel {
   }
 
   /** The promotion gate (ref ProfileReader.readFinal, ProfileReader.java:257-279):
-    * precision ≥ posThreshold and total ≥ minCount, and not a standing exclusion (the
-    * reference's `filter` table, ProfileReader.java:411-437). */
-  def kept(pair: (Long, Long), total: Long, prec: Double, cfg: PatternStats.Config,
-      excludedPairs: Set[(Long, Long)] = Set.empty): Boolean =
-    prec >= cfg.posThreshold && total >= cfg.minCount && !excludedPairs.contains(pair)
+    * precision ≥ posThreshold and total ≥ minCount. */
+  def kept(total: Long, prec: Double, cfg: PatternStats.Config): Boolean =
+    prec >= cfg.posThreshold && total >= cfg.minCount
 
   /** A3 active check: a context profile stays active when its best pair precision
     * reaches activeThreshold (ref BestPatterns.java:561-565,612-620). */
@@ -181,7 +178,7 @@ object LearnKernel {
     val activeIds = stats.groupMapReduce(_.profileId)(_.prec)(math.max)
       .collect { case (id, best) if active(best, cfg) => id }.toSet
     stats.collect {
-      case s if activeIds(s.profileId) && kept((s.profileId, s.targetId), s.total, s.prec, cfg) =>
+      case s if activeIds(s.profileId) && kept(s.total, s.prec, cfg) =>
         (s.profileId, s.targetId) -> s.prec
     }.toMap
   }
@@ -314,7 +311,7 @@ object LearnKernel {
     val subjects = mutable.HashMap.empty[String, PageKernel.Subjects]
     for ((src, prov) <- classes; a <- gold if a.provenance == src) yield {
       val subj = subjects.getOrElseUpdate(a.url, PageKernel.Subjects(a.url,
-        byUrl.getOrElse(a.url, Nil).sortBy(_.sentBegin), "entity"))
+        byUrl.getOrElse(a.url, Nil).sortBy(_.sentBegin)))
       subj.resolve(Mention(a.url, a.annotType, a.begin, a.end, a.value, -1L, a.score), prov)
     }
   }

@@ -44,21 +44,14 @@ object PatternStats {
    */
   def applyPatternsPaired(sentences: Dataset[SentenceAnnots],
       contextPatterns: Seq[Pattern], targetPatterns: Seq[Pattern],
-      cfg: Config = Config(), allowedPairs: Option[Set[(Long, Long)]] = None,
-      excludedPairs: Set[(Long, Long)] = Set.empty)(
-      implicit spark: SparkSession): Dataset[PatternMatch] = {
+      cfg: Config = Config())(implicit spark: SparkSession): Dataset[PatternMatch] = {
     import spark.implicits._
     val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(contextPatterns))
     val tgtB = spark.sparkContext.broadcast(PageKernel.compileTargets(targetPatterns))
-    val allowedB = spark.sparkContext.broadcast(allowedPairs)
-    val excludedB = spark.sparkContext.broadcast(excludedPairs)
     sentences.mapPartitions { it =>
       val index = idxB.value
       val targets = tgtB.value
-      val allowed = allowedB.value
-      val excluded = excludedB.value
-      it.flatMap(s => LearnKernel.sentenceMatches(s, index, targets, cfg.matcher, allowed,
-        excluded))
+      it.flatMap(s => LearnKernel.sentenceMatches(s, index, targets, cfg.matcher))
     }
   }
 
@@ -87,15 +80,10 @@ object PatternStats {
   }
 
   /** Pairs passing the promotion gate (ref ProfileReader.readFinal per-pair gates,
-    * /root/reference/src/msa/ProfileReader.java:257-279), minus any standing
-    * exclusions — the reference's `filter` table (sql/ie-mysql.sql:16-20, read
-    * ProfileReader.java:411-437): an excluded pair never promotes, whatever its
-    * precision. */
-  def keptPairs(pairStats: DataFrame, cfg: Config = Config(),
-      excludedPairs: Set[(Long, Long)] = Set.empty): DataFrame =
+    * /root/reference/src/msa/ProfileReader.java:257-279). */
+  def keptPairs(pairStats: DataFrame, cfg: Config = Config()): DataFrame =
     pairStats.filter { (r: Row) =>
-      LearnKernel.kept((r.getAs[Long]("profileId"), r.getAs[Long]("targetId")),
-        r.getAs[Long]("total"), r.getAs[Double]("prec"), cfg, excludedPairs)
+      LearnKernel.kept(r.getAs[Long]("total"), r.getAs[Double]("prec"), cfg)
     }
 
   /** A3 profile-active check: context profiles where some target combo reaches

@@ -21,7 +21,7 @@ import graft.model.Annotation
  *   PP  = PREP NP              a preposition directly followed by an NP chunk
  *
  * Labels reach grids as `:syntaxtreenode|cat|np` (Grid.build), so learned profiles may
- * anchor on phrase structure and the MSA maxSyntax/maxPhrase gates become live.
+ * anchor on phrase structure.
  */
 object Chunker {
 

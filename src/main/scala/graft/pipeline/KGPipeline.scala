@@ -156,7 +156,7 @@ object KGPipeline {
     // subsumption filter (ref BestPatterns.readProfiles): drop context profiles whose
     // token sequence contains a shorter surviving profile - redundant at match time
     val ctxPatterns = GenMSA.subsumptionFilter(
-      learned.filter(p => p.profileType == 0 || p.profileType == 3))
+      learned.filter(_.profileType == 0))
     val tgtPatterns = learned.filter(_.profileType == 1)
 
     // 4. per-PAIR precision gates against the gold slice (ref `final` table +

@@ -54,7 +54,6 @@ object StreamExtract {
     * table. Jobs run [[graft.extract.PageKernel.extract]]. */
   def extractPage(url: String, text: String, gaz: Gazetteer,
       index: PatternMatcher.Index, prm: PatternMatcher.Params = PatternMatcher.Params(),
-      subjectMajorType: String = "entity",
       relIndex: PatternMatcher.Index = StreamExtract.EmptyIndex): Vector[Triple] = {
     // chunking costs a per-page scan; skip it unless some pattern can match its labels
     val annots = Annotate.annotateOne(url, text, gaz,
@@ -87,7 +86,7 @@ object StreamExtract {
 
     // W4 adjacent merge and sentence-local subject resolution, shared with the batch
     // kernel
-    val subjects = PageKernel.Subjects(url, sents, subjectMajorType)
+    val subjects = PageKernel.Subjects(url, sents)
     val resolved = PageKernel.mergeAdjacent(mentions)
       .sortBy(m => (m.annotType, m.begin, m.end)).map(subjects.resolve(_))
     resolved ++ relTriples

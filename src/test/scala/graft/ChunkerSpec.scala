@@ -87,14 +87,4 @@ class ChunkerSpec extends AnyFunSuite with SparkTest {
     assert(got.exists(m => m.value == "2004" && m.annotType == "year"),
       s"extraction failed: ${got.toSeq}")
   }
-
-  test("maxSyntax gate bounds syntax-only anchors when configured") {
-    import graft.align.{MSA, SmithWaterman}
-    val al = SmithWaterman.Alignment(10.0, Vector(
-      SmithWaterman.Anchor(0, 0, ":syntaxtreenode|cat|np", 1.5),
-      SmithWaterman.Anchor(1, 1, Grid.Target, 1e6)))
-    assert(MSA.toPattern(al, MSA.Gates(minAnchors = 1)).isDefined)
-    assert(MSA.toPattern(al, MSA.Gates(minAnchors = 1, maxSyntax = 0)).isEmpty)
-    assert(MSA.toPattern(al, MSA.Gates(minAnchors = 1, maxPhrase = 0)).isEmpty)
-  }
 }

@@ -109,7 +109,7 @@ class LearnKernelSpec extends AnyFunSuite with SparkTest {
     val (sents, golds) = LearnedModel.slice
     val learned = LearnKernel.patterns(sents, Gold, GenMSA.Config())
     val ctx = GenMSA.subsumptionFilter(
-      learned.filter(p => p.profileType == 0 || p.profileType == 3))
+      learned.filter(_.profileType == 0))
     val stats = assertPairStatsAgree(sents, golds, ctx, learned.filter(_.profileType == 1),
       learned, StatsCfg)
     assert(stats.nonEmpty && LearnKernel.allowedPairs(stats, StatsCfg).nonEmpty)

@@ -39,7 +39,7 @@ object LearnOracle {
       .groupByKey { case (t, _, b) => (t, b) }
       .flatMapGroups { (key: (String, Int), it: Iterator[(String, SentenceAnnots, Int)]) =>
         val sents = it.map(_._2).toVector.sortBy(s => (s.url, s.sentBegin))
-        GenMSA.alignBlock(key._1, sents, goldProvenances, cfg).iterator
+        GenMSA.alignBlock(key._1, sents, goldProvenances).iterator
       }
       .toDF("annotType", "toks", "profileType")
     rawPatterns

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.learn.{GenMSA, PatternStats}
+import graft.learn.GenMSA
 import graft.model.Pattern
 
 /** Learning-stage post-processing: subsumption filter, pair gates, value priors. */
@@ -26,17 +26,6 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     val gapped = pat(2, "T", 3, 0,
       ":token|string|a", ":token|string|x", ":token|string|b")
     assert(GenMSA.subsumptionFilter(Seq(a, gapped)).map(_.profileId).toSet === Set(1L, 2L))
-  }
-
-  test("keptPairs: a standing exclusion beats the promotion gate") {
-    import spark.implicits._
-    val stats = Seq(
-      (1L, 11L, 10L, 0L, 10L, 1.0),  // perfect precision — but excluded
-      (1L, 12L, 10L, 0L, 10L, 1.0))
-      .toDF("profileId", "targetId", "tp", "fp", "total", "prec")
-    val kept = PatternStats.keptPairs(stats, PatternStats.Config(),
-      excludedPairs = Set((1L, 11L))).collect()
-    assert(kept.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 12L)))
   }
 
   test("value-prob ladder: trusted prior, veto, and neutral-when-rare") {
@@ -167,28 +156,5 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     val got = graft.learn.PatternStats.snapGoldToTokens(gold, tokens).collect()
       .map(r => (r.getAs[Int]("begin"), r.getAs[Int]("end"))).toSet
     assert(got === Set((0, 9), (20, 25))) // no-token span passes through
-  }
-
-  test("fullSentence mode also learns untrimmed profile_type-3 context profiles") {
-    import spark.implicits._
-    val texts = Seq(
-      "prefix words here then Acme was founded in 1959 closing tail words",
-      "prefix words here then Umbrella was founded in 1970 closing tail words")
-    val sents = texts.zipWithIndex.map { case (t, i) =>
-      val b = t.indexOf("19")
-      val annots = graft.nlp.Tokenizer.annotate(s"u$i", t) :+
-        graft.model.Annotation(s"u$i", 999, "founded-year", b, b + 4,
-          t.substring(b, b + 4), Map.empty, "gold", 1.0)
-      graft.model.SentenceAnnots(s"u$i", 0, t.length, annots)
-    }
-    val ds = spark.createDataset(sents)
-    val cfg = graft.learn.GenMSA.Config(trimSize = 2, minRows = 1, fullSentence = true)
-    val learned = graft.learn.GenMSA.learn(ds, Set("gold"), cfg).collect()
-    val types = learned.map(_.profileType).toSet
-    assert(types.contains(0) && types.contains(3), s"types=$types")
-    // the type-3 profile covers more context columns than the trimmed type-0 one
-    val max0 = learned.filter(_.profileType == 0).map(_.toks.size).max
-    val max3 = learned.filter(_.profileType == 3).map(_.toks.size).max
-    assert(max3 > max0, s"full-sentence $max3 should exceed trimmed $max0")
   }
 }

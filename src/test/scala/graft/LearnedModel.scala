@@ -71,7 +71,7 @@ object LearnedModel {
     val patterns = GenMSA.learn(ts, Set("gold"))
     val learned = patterns.collect().toSeq
     val ctx = GenMSA.subsumptionFilter(
-      learned.filter(p => p.profileType == 0 || p.profileType == 3))
+      learned.filter(_.profileType == 0))
     val tgt = learned.filter(_.profileType == 1)
     val tokenSpans = ts.flatMap(s =>
         s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))

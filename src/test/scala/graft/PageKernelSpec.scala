@@ -104,7 +104,7 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
     val sents = Seq(SentenceAnnots("https://h/p", 0, 40, Seq(lookup(30, 34, "Near"))),
       SentenceAnnots("https://h/p", 22, 30, Seq(lookup(24, 26, "Mid"))),
       SentenceAnnots("https://h/p", 32, 50, Seq(lookup(40, 45, "After"))))
-    val subjects = PageKernel.Subjects("https://h/p", sents, "entity")
+    val subjects = PageKernel.Subjects("https://h/p", sents)
     def subj(b: Int) = subjects.resolve(Mention("https://h/p", "t", b, b + 1, "v", 1L, 1.0)).subj
     assert(subj(35) === "Near") // in the first and third sentences, not the second
     assert(subj(27) === "Mid") // in the first two

@@ -108,97 +108,7 @@ class PatternMatcherSpec extends AnyFunSuite {
     assert(raw.map(_.value) === Vector("1997"))
   }
 
-  test("cascaded extraction: pattern B fires only after pattern A's target inserted") {
-    val g = gridOf("founded in 1999 by Acme")
-    val a = Pattern(1, Vector(":token|string|in", Grid.Target), "year", 0, "g", 1, 0, 0, 1)
-    // B references A's extraction via the inserted ":year" label
-    val b = Pattern(2, Vector(":year", ":token|string|by", Grid.Target),
-      "founder", 0, "g", 1, 0, 0, 1)
-    val idx = PatternMatcher.buildIndex(Seq(a, b))
-    // single pass: only A fires (no :year label exists yet)
-    val single = PatternMatcher.matchAllCascaded(g, idx,
-      PatternMatcher.Params(cascadeRounds = 1))
-    assert(single.map(_.pattern.annotType).toSet === Set("year"))
-    // cascade: round 2 sees the inserted :year and B fires on "Acme"
-    val casc = PatternMatcher.matchAllCascaded(g, idx,
-      PatternMatcher.Params(cascadeRounds = 3))
-    assert(casc.map(h => (h.pattern.annotType, h.value)).toSet ===
-      Set(("year", "1999"), ("founder", "Acme")))
-  }
-
-  test("cascaded pair matching reaches fixpoint and dedups across rounds") {
-    val g = gridOf("founded in 1999 by Acme")
-    val a = Pattern(1, Vector(":token|string|in", Grid.Target), "year", 0, "g", 1, 0, 0, 1)
-    val b = Pattern(2, Vector(":year", ":token|string|by", Grid.Target),
-      "founder", 0, "g", 1, 0, 0, 1)
-    val tNum = Pattern(11, Vector(":number"), "year", 1, "g", 1, 0, 0, 1)
-    val tCap = Pattern(12, Vector(":token|orth|upperinitial"), "founder", 1, "g", 1, 0, 0, 1)
-    val idx = PatternMatcher.buildIndex(Seq(a, b))
-    val targets = Map(
-      "year" -> IndexedSeq(PatternMatcher.compile(tNum)),
-      "founder" -> IndexedSeq(PatternMatcher.compile(tCap)))
-    val hits = PatternMatcher.matchPairsCascaded(g, idx, targets,
-      PatternMatcher.Params(cascadeRounds = 4))
-    assert(hits.map(h => (h.context.annotType, h.value)).toSet ===
-      Set(("year", "1999"), ("founder", "Acme")))
-    assert(hits.size === 2, "cross-round dedup failed")
-  }
-
-  test("lenient mode: a missing literal is tolerated within the miss budget") {
-    // pattern expects "was officially founded in" but the sentence omits "officially"
-    val p = pat(1, ":token|string|was", ":token|string|officially",
-      ":token|string|founded", ":token|string|in", Grid.Target)
-    val g = gridOf("Acme was founded in 1997")
-    val c = PatternMatcher.compile(p)
-    // strict: no match — recall 0 on this site
-    assert(spans(g, c, PatternMatcher.Params()).isEmpty)
-    // lenient budget 1: literal skipped (deletion), target extracted — the recall the
-    // reference's hits >= size - maxGaps - 3 gate buys
-    val hits = spans(g, c,
-      PatternMatcher.Params(maxMissedLiterals = 1))
-    assert(hits.contains((20, 24)))
-    // substitution variant: a different word in the pattern's slot position
-    val gSub = gridOf("Acme was quietly founded in 1997")
-    assert(spans(gSub, c, PatternMatcher.Params()).isEmpty)
-    assert(spans(gSub, c,
-      PatternMatcher.Params(maxMissedLiterals = 1)).contains((28, 32)))
-  }
-
-  test("lenient mode: index forwards candidates missing a literal; never literal-free") {
-    val p = pat(1, ":token|string|zzz", ":token|string|founded",
-      ":token|string|in", Grid.Target)
-    val g = gridOf("Acme was founded in 1997")
-    val idx = PatternMatcher.buildIndex(Seq(p))
-    assert(idx.candidates(g.labelSet).isEmpty)            // strict: zzz absent
-    assert(idx.candidates(g.labelSet, missSlack = 1).size === 1)
-    // all literals missing stays non-candidate even with slack (floor at 1 present)
-    val gNone = gridOf("other words entirely here")
-    assert(idx.candidates(gNone.labelSet, missSlack = 2).isEmpty)
-    // and matchAll under the lenient budget extracts end-to-end
-    val hits = PatternMatcher.matchAll(g, idx,
-      PatternMatcher.Params(maxMissedLiterals = 1))
-    assert(hits.exists(_.value == "1997"))
-  }
-
-  test("pair exclusion list: an excluded high-precision pair never matches") {
-    // the reference's `filter` table (sql/ie-mysql.sql:16-20): standing exclusions
-    // beat every other gate, including explicit allow-listing
-    val ctx = pat(1, ":token|string|founded", ":token|string|in", Grid.Target)
-    val tgt = Pattern(11L, Vector(":number"), "T", 1, "g", 1.0, 0, 0, 1)
-    val g = gridOf("Acme was founded in 1997")
-    val idx = PatternMatcher.buildIndex(Seq(ctx))
-    val tgts = Map("T" -> IndexedSeq(PatternMatcher.compile(tgt)))
-    val open = PatternMatcher.matchPairs(g, idx, tgts)
-    assert(open.exists(_.value == "1997"))
-    val excluded = PatternMatcher.matchPairs(g, idx, tgts,
-      allowedPairs = Some(Set((1L, 11L))), excludedPairs = Set((1L, 11L)))
-    assert(excluded.isEmpty)
-    val cascadeExcluded = PatternMatcher.matchPairsCascaded(g, idx, tgts,
-      excludedPairs = Set((1L, 11L)))
-    assert(cascadeExcluded.isEmpty)
-  }
-
-  test("W3 containment mode keeps staggered overlaps; overlap mode drops them") {
+  test("pair matching drops a staggered span overlapping an accepted one") {
     // two contexts produce staggered spans sharing one token: "b c" and "c d"
     val g = gridOf("x a b c d y")
     val ctx1 = pat(1, ":token|string|a", Grid.Target)
@@ -207,19 +117,14 @@ class PatternMatcherSpec extends AnyFunSuite {
       "T", 1, "g", 1.0, 0, 0, 1)
     val idx = PatternMatcher.buildIndex(Seq(ctx1, ctx2))
     val targets = Map("T" -> IndexedSeq(PatternMatcher.compile(tWW)))
-    // default (overlap) rule: the second staggered span collides and is dropped
+    // the second staggered span collides and is dropped
     assert(PatternMatcher.matchPairs(g, idx, targets).size === 1)
-    // reference rule (containment only, ProfileMatcher.java:705-730): both survive
-    val both = PatternMatcher.matchPairs(g, idx, targets,
-      PatternMatcher.Params(containmentSuppression = true))
-    assert(both.map(_.value).toSet === Set("b c", "c d"))
-    // …but a strictly CONTAINED span is still suppressed in containment mode
+    // a strictly CONTAINED span is suppressed too
     val long = pat(3, ":token|string|founded", ":token|string|in", Grid.Target)
     val short = pat(4, ":token|string|in", Grid.Target)
     val idx2 = PatternMatcher.buildIndex(Seq(long, short))
     val g2 = gridOf("Acme was founded in 1997")
-    val hits2 = PatternMatcher.matchAll(g2, idx2,
-      PatternMatcher.Params(containmentSuppression = true))
+    val hits2 = PatternMatcher.matchAll(g2, idx2)
     assert(hits2.size === 1 && hits2.head.pattern.profileId === 3)
   }
 
