@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
  * Reads `<sfDir>/documents.parquet`; the eval set for decontamination is a
  * deterministic slice of the corpus itself (doc_id % 97 == 0 → guaranteed shingle
  * overlap, so the decontamination stage demonstrably removes rows). With a 4th arg
- * `stageDir`, runs the RESUMABLE path — each stage checkpoints per-partition
- * lineage + counters and a re-submitted run resumes at its first incomplete stage.
+ * `stageDir`, runs the RESUMABLE path — each stage commits a record of the rows its
+ * write counted, and a re-submitted run resumes at its first incomplete stage.
  *
  * Prints one JSON line with per-stage surviving-row counts and wall time.
  */

@@ -17,10 +17,10 @@ import org.apache.spark.sql.SparkSession
  * With a 4th arg `stageDir`, runs the RESUMABLE production path instead
  * ([[graft.pipeline.KGPipeline.runCheckpointed]]): the raw_triples stage (learning
  * runs inside it) materializes through [[graft.runtime.StageCheckpoint]] under
- * stageDir with per-partition lineage + counters, and the output commit is keyed by
- * the run's fingerprint (nPages and the training size): a re-submission over an
- * output its fingerprint completely committed returns without work, a resumed one
- * rewrites only the buckets it has not committed, and one with another nPages
+ * stageDir with a commit record of the rows its write counted, and the output commit
+ * is keyed by the run's fingerprint (nPages and the training size): a re-submission
+ * over an output its fingerprint completely committed returns without work, a resumed
+ * one rewrites only the buckets it has not committed, and one with another nPages
  * replaces the table — the north rule's long-corpus spark-submit shape.
  */
 object RunKG {
@@ -34,7 +34,7 @@ object RunKG {
     import spark.implicits._
 
     // live counters off the listener bus (Dataset.observe — zero extra jobs); the
-    // persisted per-partition lineage lives in the checkpoint tables
+    // durable record is the commit's per-bucket `_checkpoints` table
     val metrics = new graft.runtime.MetricsCollector(spark)
     val t0 = System.nanoTime()
     val startedAt = new java.sql.Timestamp(System.currentTimeMillis())
@@ -59,8 +59,8 @@ object RunKG {
       max(col("completed_at") >= lit(startedAt))).head()
     val rows = fin.getLong(0)
     // On a fully-resumed run no bucket was rewritten this invocation, the observe
-    // node never executes (documented Metrics contract) and the metric can never
-    // arrive — don't stall the full await timeout waiting for it.
+    // node never executes (documented MetricsCollector contract) and the metric can
+    // never arrive — don't stall the full await timeout waiting for it.
     val wroteThisRun = !fin.isNullAt(1) && fin.getBoolean(1)
     val sec = (System.nanoTime() - t0) / 1e9
     val mode = if (stageDir.isDefined) "kg-checkpointed" else "kg"

@@ -88,16 +88,21 @@ object Grid {
   private val TokCategoryPfx = ":token|category|"
   private val TokKindPfx = ":token|kind|"
 
+  /** A sentence's grid holds its first this-many tokens, so a long sentence is learnt
+    * and matched on its head, at bounded cost. The reference skips a longer sentence
+    * instead (ProfileMatcher.java:32,121). */
+  private val MaxTokens = 300
+
   /**
    * Build the grid for one sentence from its annotations. Token annotations define the
-   * columns; Lookup/Number/target annotations stack labels onto every column whose token
-   * lies inside their span.
+   * columns (the first [[MaxTokens]], plus the two sentinels); Lookup/Number/target
+   * annotations stack labels onto every column whose token lies inside their span.
    *
    * @param targetSpans spans to label `:target` (training time: gold spans).
    */
   def build(url: String, sentBegin: Int, sentEnd: Int, annots: Seq[Annotation],
-      targetSpans: Seq[(Int, Int)] = Nil, maxGridLen: Int = 300): Grid = {
-    val tokens = annots.filter(_.annotType == "Token").sortBy(_.begin).take(maxGridLen)
+      targetSpans: Seq[(Int, Int)] = Nil): Grid = {
+    val tokens = annots.filter(_.annotType == "Token").sortBy(_.begin).take(MaxTokens)
       .toIndexedSeq
     val others = annots.filter(a => a.annotType != "Token" && a.annotType != "Sentence")
     // column range [lo, hi] of each covering span (covered tokens are contiguous)

@@ -30,7 +30,7 @@ import graft.text.TextAnalysis
  *
  * [[runCheckpointed]] materializes every stage through [[StageCheckpoint]] — the
  * north-rule resumable shape: a re-submitted run resumes at its first incomplete
- * stage, and per-partition lineage + counters stay queryable per stage.
+ * stage, and each stage's commit record (the rows its write counted) stays readable.
  */
 object CuratePipeline {
 
@@ -128,10 +128,10 @@ object CuratePipeline {
       evalSet, cfg)), cfg)
 
   /**
-   * Resumable production path: every stage materializes under `stageDir` with
-   * per-partition lineage + counters; a re-submitted run with the same
+   * Resumable production path: every stage materializes under `stageDir` with a
+   * commit record of the rows its write counted; a re-submitted run with the same
    * (inputFingerprint, config) resumes at its first incomplete stage. Returns the
-   * curated corpus; `cps.lineage("c5_mix")` etc. expose the per-stage counters.
+   * curated corpus; `cps.lineage("c5_mix")` etc. read the per-stage records.
    */
   def runCheckpointed(docs: DataFrame, evalSet: DataFrame, cfg: Config,
       stageDir: String, inputFingerprint: String)(

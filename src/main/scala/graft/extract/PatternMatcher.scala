@@ -26,10 +26,6 @@ object PatternMatcher {
     * @param maxTargetLen most columns the `:target` slot may consume */
   final case class Params(maxGapSpan: Int = 3, maxTargetLen: Int = 5)
 
-  /** Sentences longer than this many grid columns are not matched (ref maxGridLen,
-    * ProfileMatcher.java:32,121). */
-  private val MaxGridLen = 300
-
   /** W3 suppression predicate: does the new span [b,e) overlap the accepted [ab,ae)? */
   private def collides(ab: Int, ae: Int, b: Int, e: Int): Boolean = ab < e && ae > b
 
@@ -107,7 +103,6 @@ object PatternMatcher {
       minimalTarget: Boolean = true): Vector[Span] = {
     val cols = grid.cols
     val n = cols.size
-    if (n > MaxGridLen) return Vector.empty
     val results = mutable.LinkedHashSet.empty[Span]
 
     def realToken(t: Int): Boolean =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.PageKernel
 import graft.model.Page
@@ -27,20 +27,14 @@ object ExtractJob {
       implicit spark: SparkSession): Result = {
     val out = KGPipeline.pageTriples(pages, kernel).toDF()
       .dropDuplicates("subj", "pred", "obj", "url", "begin")
-    // count + order-insensitive hash ride the WRITE itself via Dataset.observe —
-    // zero extra jobs, zero read-back scan (the job used to re-read the parquet it
-    // just wrote only to aggregate identity, a whole extra job inside every timed
-    // scaling window)
-    val collector = new graft.runtime.MetricsCollector(spark)
-    try {
-      graft.runtime.Metrics.observed(out, "extract_job_identity",
-          count(lit(1)).as("triples"),
-          coalesce(expr("bit_xor(xxhash64(subj, pred, obj, url, begin, end))"),
-            lit(0L)).as("hash"))
-        .write.mode("overwrite").parquet(outPath)
-      val m = collector.await("extract_job_identity", timeoutMs = 60000L)
-        .getOrElse(sys.error("extract_job identity metrics were not delivered"))
-      Result(m("triples").asInstanceOf[Long], m("hash").asInstanceOf[Long])
-    } finally collector.close()
+    // count + order-insensitive hash ride the WRITE itself via Dataset.observe: no
+    // extra job and no read-back scan inside the timed scaling window
+    val identity = Observation("extract_job_identity")
+    out.observe(identity, count(lit(1)).as("triples"),
+        coalesce(expr("bit_xor(xxhash64(subj, pred, obj, url, begin, end))"),
+          lit(0L)).as("hash"))
+      .write.mode("overwrite").parquet(outPath)
+    val m = identity.get
+    Result(m("triples").asInstanceOf[Long], m("hash").asInstanceOf[Long])
   }
 }

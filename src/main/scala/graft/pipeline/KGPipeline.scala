@@ -226,7 +226,7 @@ object KGPipeline {
 
   /**
    * Fully resumable variant, the production `spark-submit` path for long corpus runs
-   * (north rule: resumable from checkpoint with per-partition lineage + metrics),
+   * (north rule: resumable from checkpoint with lineage + metrics),
    * keyed by the caller's `fingerprint` (input + config identity):
    *  - a re-submission whose output this fingerprint has completely committed (the
    *    commit's completion record, each listed bucket still holding its data
@@ -234,10 +234,11 @@ object KGPipeline {
    *    lineage at once: it reads no page, no gold row and no stage, and runs no link,
    *    CC or dedup;
    *  - otherwise the one `raw_triples` stage materializes through
-   *    [[graft.runtime.StageCheckpoint]] with per-partition lineage (resumed when this
-   *    fingerprint committed it), and [[Materialize.writeResumable]] rewrites only the
-   *    buckets whose lineage this fingerprint did not write, replacing the whole table
-   *    when it wrote none — so facts another fingerprint committed never survive.
+   *    [[graft.runtime.StageCheckpoint]] with a commit record of the rows its write
+   *    counted (resumed when this fingerprint committed it), and
+   *    [[Materialize.writeResumable]] rewrites only the buckets whose lineage this
+   *    fingerprint did not write, replacing the whole table when it wrote none — so
+   *    facts another fingerprint committed never survive.
    * Learning runs inside the `raw_triples` stage: a crash inside the corpus pass
    * re-learns on the driver (seconds) before re-running the pass, which it had to redo
    * anyway, and no learned table is checkpointed. Learning, gating and the corpus pass

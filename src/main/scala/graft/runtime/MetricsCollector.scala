@@ -4,21 +4,23 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
- * Live job counters via `Dataset.observe` (north rule: "checkpoints per-partition
- * lineage AND metrics" — [[StageCheckpoint]] persists the lineage tables; this surface
- * adds the in-flight counters a cluster operator watches while the job runs).
+ * Live job counters via `Dataset.observe`, collected by name for a whole session: the
+ * in-flight counters a cluster operator watches while the job runs (the commit
+ * records of [[StageCheckpoint]] and [[graft.sink.Materialize]] are the durable
+ * record). Code that reads back the count of its own write uses an
+ * `org.apache.spark.sql.Observation` instead; this collector serves counters attached
+ * by name deep inside a job, such as [[graft.pipeline.KGPipeline.CanonicalMetric]].
  *
  * `observe` metrics are computed BY THE RUNNING QUERY itself — accumulator-style,
  * piggybacked on the rows the job already processes — so unlike a `count()` they cost
  * zero extra jobs, zero extra scans, and work identically on a 1000-executor cluster
  * (partial aggregates merge on the driver). Constraints inherited from Spark:
  * aggregate expressions only, no distinct aggregates (use approx_count_distinct).
- *
  * The reference keeps equivalent counters in its status tables, polled over JDBC
  * (/root/reference/src/msa/IEDriver.java status machine); here they stream off the
  * listener bus with no store round-trip.
@@ -27,27 +29,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * adaptive plan no longer contains the CollectMetrics node reports nothing — notably
  * a fully-resumed [[graft.sink.Materialize.writeResumable]] (no pending buckets),
  * where AQE's empty-relation propagation collapses the pending-bucket probe to
- * EmptyRelation. Zero work → zero counters; the persisted checkpoint/lineage tables
- * remain the durable record (MetricsSpec pins this contract).
- */
-object Metrics {
-
-  /** Attach named observed metrics to a dataset (type-preserving). The metrics fire
-    * on every action that executes this node and are delivered to any registered
-    * [[MetricsCollector]]. */
-  def observed[T](ds: Dataset[T], name: String, first: Column, rest: Column*): Dataset[T] =
-    ds.observe(name, first, rest: _*)
-}
-
-/**
- * Collects every observed metric of a session: registers as a
- * [[QueryExecutionListener]] and keeps, per observation name, the latest metric row
- * plus how many actions fired it (a multi-action pipeline executes a shared stage
- * more than once unless it is checkpointed — the firing count makes that visible,
- * which is itself a useful recompute diagnostic).
+ * EmptyRelation. Zero work → zero counters (MetricsSpec pins this contract).
  *
- * Listener delivery is asynchronous (Spark posts on the listener bus);
- * [[await]] polls until an expected observation arrives or the timeout elapses.
+ * As a [[QueryExecutionListener]] it keeps, per observation name, the latest metric
+ * row plus how many actions fired it (a multi-action pipeline executes a shared stage
+ * more than once unless it is checkpointed — the firing count makes that visible).
+ * Delivery is asynchronous (Spark posts on the listener bus); [[await]] polls until
+ * an expected observation arrives or the timeout elapses.
  */
 final class MetricsCollector(spark: SparkSession) extends QueryExecutionListener {
 

@@ -1,12 +1,10 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Triple
+import graft.util.Fs
 
 /**
  * Triple materialization: dedup + partitioned, idempotent, resumable write — the
@@ -48,7 +46,7 @@ object Materialize {
     * Dataset.observe when the caller names an observation — zero extra jobs; read
     * back through [[graft.runtime.MetricsCollector]]. */
   private def withCounters(df: DataFrame, name: Option[String]): DataFrame =
-    name.fold(df)(n => graft.runtime.Metrics.observed(df, n,
+    name.fold(df)(n => df.observe(n,
       count(lit(1)).as("triples"),
       approx_count_distinct(col("subj")).as("subjects_approx"),
       approx_count_distinct(col("url")).as("docs_approx"),
@@ -225,7 +223,7 @@ object Materialize {
     todo.foreach { df =>
       // the lineage that no longer holds goes BEFORE the data it describes: a crash
       // mid-write leaves nothing trusted over rewritten data
-      if (replace) delete(checkpoints) else delete(s"$checkpoints/$CompletionRecord")
+      Fs.delete(if (replace) checkpoints else s"$checkpoints/$CompletionRecord")
       df.write.mode("overwrite")
         .option("partitionOverwriteMode", if (replace) "static" else "dynamic")
         .partitionBy("bucket").parquet(path)
@@ -246,7 +244,7 @@ object Materialize {
     * resume) reads as empty: a transient FS error or corrupt checkpoint file must
     * PROPAGATE, not masquerade as "nothing completed". */
   private def lineageView(checkpoints: String)(implicit spark: SparkSession): DataFrame =
-    if (graft.util.Fs.parquetDataExists(checkpoints)) {
+    if (Fs.parquetDataExists(checkpoints)) {
       val rest = LineageSchema.fieldNames.toSeq.filterNot(_ == "bucket")
       spark.read.schema(LineageSchema).parquet(checkpoints).groupBy(col("bucket"))
         .agg(max_by(struct(rest.map(col): _*), col("completed_at")).as("w"))
@@ -261,7 +259,7 @@ object Materialize {
     * instead of it. ≤ nBuckets FS probes. */
   private def trustedBuckets(checkpointPath: String, dataPath: String,
       fingerprint: Option[String])(implicit spark: SparkSession): Seq[Int] =
-    if (!graft.util.Fs.parquetDataExists(checkpointPath)) Nil
+    if (!Fs.parquetDataExists(checkpointPath)) Nil
     else {
       // a few rows per commit — driver-safe
       val rows = spark.read.schema(LineageSchema).parquet(checkpointPath)
@@ -269,54 +267,30 @@ object Materialize {
         .collect().toSeq
       rows.groupBy(_.getInt(0)).collect {
         case (b, rs) if Option(rs.maxBy(_.getLong(2)).getString(1)) == fingerprint &&
-            graft.util.Fs.parquetDataExists(s"$dataPath/bucket=$b") => b
+            Fs.parquetDataExists(s"$dataPath/bucket=$b") => b
       }.toSeq
     }
 
   /** The buckets whose `bucket=N` partition is under `dataPath`, sorted: one listing
     * of ≤ nBuckets entries. */
-  private def bucketPartitions(dataPath: String)(implicit spark: SparkSession): Seq[Int] = {
-    val (fs, p) = fsPath(dataPath)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
+  private def bucketPartitions(dataPath: String)(implicit spark: SparkSession): Seq[Int] =
+    Fs.childNames(dataPath).collect {
       case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt
     }.sorted
-  }
 
   /** The (fingerprint, buckets) of the completion record under `checkpoints`, if
     * any. */
   private def completionRecord(checkpoints: String)(
-      implicit spark: SparkSession): Option[(String, Seq[Int])] = {
-    val (fs, p) = fsPath(s"$checkpoints/$CompletionRecord")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      implicit spark: SparkSession): Option[(String, Seq[Int])] =
+    Fs.readRecord(s"$checkpoints/$CompletionRecord").map { text =>
       val nl = text.indexOf('\n')
-      Some(text.substring(nl + 1) ->
-        text.substring(0, nl).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
+      text.substring(nl + 1) ->
+        text.substring(0, nl).split(',').filter(_.nonEmpty).map(_.toInt).toSeq
     }
-  }
 
-  /** Writes the completion record whole: to a `_` temp file, then renamed. */
+  /** Writes the completion record whole ([[Fs.writeRecord]]). */
   private def writeCompletionRecord(checkpoints: String, fingerprint: String,
-      buckets: Seq[Int])(implicit spark: SparkSession): Unit = {
-    val (fs, p) = fsPath(s"$checkpoints/$CompletionRecord")
-    val tmp = new Path(s"$checkpoints/$CompletionRecord.inprogress")
-    val out = fs.create(tmp, true)
-    try out.write((buckets.mkString(",") + "\n" + fingerprint).getBytes(UTF_8))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p)) throw new java.io.IOException(s"cannot commit $p")
-  }
-
-  private def delete(path: String)(implicit spark: SparkSession): Unit = {
-    val (fs, p) = fsPath(path)
-    fs.delete(p, true)
-  }
-
-  private def fsPath(path: String)(implicit spark: SparkSession): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+      buckets: Seq[Int])(implicit spark: SparkSession): Unit =
+    Fs.writeRecord(s"$checkpoints/$CompletionRecord",
+      buckets.mkString(",") + "\n" + fingerprint)
 }

@@ -67,7 +67,8 @@ class CuratePipelineSpec extends AnyFunSuite with SparkTest {
       // c1/c2 are keyed by (input, config); c3 onward also carry the eval identity
       val expected = if (s == "c1_quality" || s == "c2_dedup") fp else fpEval
       assert(cps.wouldResume(s, expected), s"stage $s did not commit")
-      assert(cps.lineage(s).columns.contains("rows_total"))
+      assert(cps.lineage(s).exists(l => l.fingerprint == expected && l.rowsTotal >= 0L),
+        s"stage $s has no commit record")
     }
     val second = CuratePipeline.runCheckpointed(fixture, evalSet, cfg, dir, "fix1")(spark)
       .collect().map(_.getAs[Long]("doc_id")).toSet

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.runtime.{Metrics, MetricsCollector}
+import graft.runtime.MetricsCollector
 
 class MetricsSpec extends AnyFunSuite with SparkTest {
 
@@ -11,8 +11,7 @@ class MetricsSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val mc = new MetricsCollector(spark)
     try {
-      val df = Metrics.observed(
-        (1L to 100L).toDF("x"), "m.basic",
+      val df = (1L to 100L).toDF("x").observe("m.basic",
         count(lit(1)).as("rows"), sum(col("x")).as("sum_x"), min(col("x")).as("min_x"))
       df.filter(col("x") > 10).collect() // filter ABOVE observe: counters see all rows
       val m = mc.await("m.basic").getOrElse(fail("metric never arrived"))
@@ -26,8 +25,8 @@ class MetricsSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val mc = new MetricsCollector(spark)
     try {
-      val df = Metrics.observed((1L to 50L).toDF("x"), "m.cached",
-        count(lit(1)).as("rows")).persist()
+      val df = (1L to 50L).toDF("x").observe("m.cached", count(lit(1)).as("rows"))
+        .persist()
       try {
         df.count() // materializes the cache; observe fires with 50
         df.groupBy().sum("x").collect() // cache-served action

@@ -48,6 +48,17 @@ class PatternMatcherSpec extends AnyFunSuite {
     assert(hits === Vector((9, 19))) // exactly "John Smith"
   }
 
+  test("a long sentence matches on its first 300 tokens only") {
+    val toks = Array.fill(400)("a")
+    toks(100) = "word"; toks(101) = "1997"
+    toks(350) = "word"; toks(351) = "1998"
+    val text = toks.mkString(" ")
+    val hits = spans(gridOf(text),
+      PatternMatcher.compile(pat(1, ":token|string|word", Grid.Target)))
+    assert(hits.exists(_._1 == text.indexOf("1997")), "the hit inside the cap must match")
+    assert(hits.forall(_._1 < text.indexOf("1998")), "the hit past the cap must not")
+  }
+
   test("inverted index prunes patterns with absent literals") {
     val ps = Seq(
       pat(1, ":token|string|founded", Grid.Target),

@@ -22,12 +22,29 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(cp.wouldResume("s1", "fp-A") && !cp.wouldResume("s1", "fp-B"))
     cp.materialize("s1", "fp-B")(stage)
     assert(computed === 2, "changed fingerprint must recompute")
-    val lin = cp.lineage("s1").collect()
-    assert(lin.map(_.getAs[Long]("rows")).sum === 2)
-    assert(lin.forall(_.getAs[String]("fingerprint") == "fp-B"))
-    // stage counters: every lineage row carries the stage total and a wall-clock
-    assert(lin.forall(_.getAs[Long]("rows_total") === 2L))
-    assert(lin.forall(_.getAs[Long]("wall_ms") >= 0L))
+    val lin = cp.lineage("s1").getOrElse(fail("s1 has no commit record"))
+    // the record carries the rows its write counted, the fingerprint and a wall-clock
+    assert(lin.rowsTotal === 2L && lin.fingerprint === "fp-B" && lin.stage === "s1")
+    assert(lin.wallMs >= 0L)
+    assert(lin.schema.fieldNames.toSeq === Seq("k", "v"))
+  }
+
+  test("a fresh materialize starts at most 1 Spark job; a resumed one starts none") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val cp = graft.runtime.StageCheckpoint(tmp())
+    // a narrow 4-partition input: its write is the one job the stage itself needs
+    val data = spark.range(0, 500, 1, 4)
+      .select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
+    val (_, fresh) = SparkTestBase.jobsStarted("stage-fresh") {
+      cp.materialize("s1", "fp-A")(data)
+    }
+    assert(fresh <= 1, s"a fresh materialize started $fresh Spark jobs")
+    val (resumed, again) = SparkTestBase.jobsStarted("stage-resumed") {
+      cp.materialize("s1", "fp-A")(sys.error("a resumed stage must not recompute"))
+    }
+    assert(again === 0, s"a resumed materialize started $again Spark jobs")
+    assert(cp.lineage("s1").map(_.rowsTotal) === Some(500L))
+    assert(resumed.count() === 500)
   }
 
   test("an EMPTY stage output still commits its fingerprint and resumes") {
@@ -37,13 +54,13 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     def stage = { computed += 1; Seq.empty[(Int, String)].toDF("k", "v") }
     val r1 = cp.materialize("s_empty", "fp-A")(stage)
     assert(r1.count() === 0 && computed === 1)
-    // without the sentinel lineage row, an empty stage's fingerprint never reads back
-    // and every resume recomputes the stage and everything downstream
+    // an empty stage's record must read back, or every resume recomputes the stage
+    // and everything downstream
     val r2 = cp.materialize("s_empty", "fp-A")(stage)
     assert(computed === 1, "empty stage must resume, not recompute")
     assert(r2.count() === 0 && r2.columns.toSeq == Seq("k", "v"))
-    val lin = cp.lineage("s_empty").collect()
-    assert(lin.length === 1 && lin.head.getAs[Long]("rows_total") === 0L)
+    val lin = cp.lineage("s_empty").getOrElse(fail("s_empty has no commit record"))
+    assert(lin.rowsTotal === 0L && lin.fingerprint === "fp-A")
   }
 
   test("a committed stage whose data directory is gone recomputes") {
@@ -67,18 +84,18 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(cp.wouldResume("s1", "fp-A"))
   }
 
-  test("committedFingerprint: absent lineage reads as None; corrupt lineage propagates") {
+  test("lineage: absent record reads as None; corrupt record propagates") {
     val cp = graft.runtime.StageCheckpoint(tmp())
-    assert(cp.committedFingerprint("never_ran").isEmpty)
-    // a lineage dir with a corrupt parquet file is NOT the legitimate empty state —
+    assert(cp.lineage("never_ran").isEmpty)
+    // a lineage dir with a corrupt commit record is NOT the legitimate empty state —
     // the read failure must propagate, not silently force a recompute
     val base = tmp()
     val cp2 = graft.runtime.StageCheckpoint(base)
     val linDir = java.nio.file.Paths.get(base, "s9__lineage")
     java.nio.file.Files.createDirectories(linDir)
-    java.nio.file.Files.write(linDir.resolve("part-00000.parquet"),
-      "not a parquet file".getBytes)
-    assertThrows[Exception](cp2.committedFingerprint("s9"))
+    java.nio.file.Files.write(linDir.resolve("_COMMITTED"), "not a record".getBytes)
+    assertThrows[Exception](cp2.lineage("s9"))
+    assertThrows[Exception](cp2.wouldResume("s9", "fp-A"))
   }
 
   test("a crashed rewrite under a new fingerprint leaves the stage to recompute") {
