@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
  * Usage: RunKG [nPages] [outDir] [cores] [stageDir]
  * Synthesizes the deterministic corpus (seed 42), runs the full pipeline
  * (annotate → learn → gate → extract → link → canonicalize), materializes
- * 16-bucket subject-partitioned triples + checkpoints under outDir (a full write: a
- * previous table there is replaced), prints one JSON metrics line. The job takes no
+ * 16-bucket subject-partitioned triples under outDir and their commit record under
+ * `<outDir>_checkpoints` (a full write: a previous table there is replaced), prints
+ * one JSON metrics line. The job takes no
  * configuration beyond these arguments: KGPipeline fixes the learning configs and
  * the bucket count.
  *
@@ -34,7 +35,7 @@ object RunKG {
     import spark.implicits._
 
     // live counters off the listener bus (Dataset.observe — zero extra jobs); the
-    // durable record is the commit's per-bucket `_checkpoints` table
+    // durable record is the commit's per-bucket record, returned as `cps`
     val metrics = new graft.runtime.MetricsCollector(spark)
     val t0 = System.nanoTime()
     val startedAt = new java.sql.Timestamp(System.currentTimeMillis())

@@ -29,7 +29,7 @@ import graft.sink.Materialize
  *                sentence-local subject resolution) → raw triples; the model is
  *                broadcast
  *              ─ link + CC: blocking-join edges, large-star/small-star canonicalization
- *              ─ materialize: dedup, subject-bucketed partitioned write + checkpoints
+ *              ─ materialize: dedup, subject-bucketed partitioned write + its record
  *
  * The corpus pass does not shuffle before link: every extraction step is local to a
  * page (the reference's per-document AutoAnnotate → PopulateFrame), so no annotation,
@@ -217,8 +217,8 @@ object KGPipeline {
     * through a [[graft.runtime.MetricsCollector]]. */
   val CanonicalMetric = "graft.kg.canonical"
 
-  /** Run + materialize to a 16-bucket subject-partitioned parquet table with
-    * checkpoints. */
+  /** Run + materialize to a 16-bucket subject-partitioned parquet table with its
+    * commit record. */
   def runAndWrite(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
       outPath: String)(implicit spark: SparkSession): DataFrame =
     Materialize.write(run(pages, goldAnnots, gaz).canonical, outPath, Buckets,
@@ -229,16 +229,16 @@ object KGPipeline {
    * (north rule: resumable from checkpoint with lineage + metrics),
    * keyed by the caller's `fingerprint` (input + config identity):
    *  - a re-submission whose output this fingerprint has completely committed (the
-   *    commit's completion record, each listed bucket still holding its data
-   *    partition and a lineage row of this fingerprint) returns the latest-per-bucket
-   *    lineage at once: it reads no page, no gold row and no stage, and runs no link,
-   *    CC or dedup;
+   *    commit record carries it and each bucket it lists still holds its data
+   *    partition) returns the record's per-bucket lineage at once: it reads no page,
+   *    no gold row and no stage, runs no link, CC or dedup, and starts no Spark job;
    *  - otherwise the one `raw_triples` stage materializes through
    *    [[graft.runtime.StageCheckpoint]] with a commit record of the rows its write
    *    counted (resumed when this fingerprint committed it), and
-   *    [[Materialize.writeResumable]] rewrites only the buckets whose lineage this
-   *    fingerprint did not write, replacing the whole table when it wrote none — so
-   *    facts another fingerprint committed never survive.
+   *    [[Materialize.writeResumable]] rewrites only the buckets of this
+   *    fingerprint's record whose data has gone, replacing the whole table when the
+   *    record is another fingerprint's (or missing) — so facts another fingerprint
+   *    committed never survive.
    * Learning runs inside the `raw_triples` stage: a crash inside the corpus pass
    * re-learns on the driver (seconds) before re-running the pass, which it had to redo
    * anyway, and no learned table is checkpointed. Learning, gating and the corpus pass

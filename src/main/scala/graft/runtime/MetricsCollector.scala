@@ -25,11 +25,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * (/root/reference/src/msa/IEDriver.java status machine); here they stream off the
  * listener bus with no store round-trip.
  *
- * Semantics: live counters measure work PERFORMED by this run. A query whose final
- * adaptive plan no longer contains the CollectMetrics node reports nothing — notably
- * a fully-resumed [[graft.sink.Materialize.writeResumable]] (no pending buckets),
- * where AQE's empty-relation propagation collapses the pending-bucket probe to
- * EmptyRelation. Zero work → zero counters (MetricsSpec pins this contract).
+ * Semantics: live counters measure work PERFORMED by this run. A fully-resumed
+ * [[graft.sink.Materialize.writeResumable]] (no lost bucket) starts no query, so the
+ * counters it names never fire; its commit record holds the counts. Zero work → zero
+ * counters (MetricsSpec pins this contract).
  *
  * As a [[QueryExecutionListener]] it keeps, per observation name, the latest metric
  * row plus how many actions fired it (a multi-action pipeline executes a shared stage

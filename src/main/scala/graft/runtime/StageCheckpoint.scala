@@ -1,6 +1,5 @@
 package graft.runtime
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -72,10 +71,9 @@ final class StageCheckpoint(base: String)(implicit spark: SparkSession) {
 }
 
 object StageCheckpoint {
-  def apply(base: String)(implicit spark: SparkSession): StageCheckpoint = {
-    Files.createDirectories(Paths.get(base))
+  /** A missing `base` reads as "no stage ran"; the first stage write creates it. */
+  def apply(base: String)(implicit spark: SparkSession): StageCheckpoint =
     new StageCheckpoint(base)
-  }
 
   /** A stage's commit record: `rowsTotal` is the count its data write observed,
     * `completedAt` epoch milliseconds. */

@@ -1,6 +1,7 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Triple
@@ -17,12 +18,14 @@ import graft.util.Fs
  * idempotent per bucket via dynamic partition overwrite (the parquet stand-in for
  * Iceberg's overwritePartitions; no Iceberg runtime ships in this sandbox).
  *
- * A `_checkpoints` side table records (bucket, rows, hash, stage, time, fingerprint):
- * a resumed run anti-joins completed buckets and rewrites only the rest —
- * per-partition lineage + metrics per the north rule. A resume trusts only the rows
- * its own fingerprint (or, without one, no fingerprint) wrote; a fingerprinted commit,
- * once complete, leaves a completion record there ([[committedLineage]]) that lets a
- * re-submission skip the job.
+ * Each commit writes the data, then one record file, `<path>_checkpoints/_LINEAGE`,
+ * written whole: per non-empty bucket the rows and the hash its data write observed
+ * (one `observe` on the written DataFrame, no second pass) and when it completed,
+ * then the commit's fingerprint — the same whole-file commit
+ * [[graft.runtime.StageCheckpoint]] leaves for a stage. A resumed run trusts the
+ * buckets of a record its own fingerprint (or, without one, no fingerprint) wrote
+ * and rewrites only those whose data has gone; a re-submission over a complete record
+ * ([[committedLineage]]) skips the job.
  *
  * The store is a plain directory (hive layout readable by any engine, no manifest
  * indirection) and this object is its only commit path: the job has one writer that
@@ -64,31 +67,47 @@ object Materialize {
       observeName)
   }
 
-  /** Per-bucket lineage of a bucketed write, stamped with the stage that wrote it and
-    * when: (bucket, rows_out, output_hash, stage, completed_at). `output_hash` is the
-    * order-insensitive identity of the bucket's facts: bit_xor of
-    * xxhash64(subj, pred, obj), 0 when empty. */
-  private def bucketLineage(bucketed: DataFrame, stage: String): DataFrame =
-    bucketed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("rows_out"),
-        coalesce(expr("bit_xor(xxhash64(subj, pred, obj))"), lit(0L)).as("output_hash"))
-      .withColumn("stage", lit(stage)).withColumn("completed_at", current_timestamp())
-
-  /** Schema of the `_checkpoints` table. Reads name it, so probing the table starts no
-    * schema-inference job; rows written without a fingerprint carry null. */
+  /** Columns of the lineage a commit returns, one row per committed bucket; a commit
+    * without a fingerprint returns null in `fingerprint`. */
   private val LineageSchema = StructType(Seq(StructField("bucket", IntegerType),
     StructField("rows_out", LongType), StructField("output_hash", LongType),
     StructField("stage", StringType), StructField("completed_at", TimestampType),
     StructField("fingerprint", StringType)))
 
-  /** The completion record a fingerprinted commit leaves under `_checkpoints` (a `_`
-    * file, so parquet readers skip it): the buckets it covers on the first line, then
-    * the fingerprint. */
-  private val CompletionRecord = "_COMMITTED"
+  /** A committed bucket as its write observed it: `rows` and `hash` (bit_xor of
+    * xxhash64(subj, pred, obj), the order-insensitive identity of its facts), and
+    * when it completed, in epoch ms. */
+  private final case class Committed(bucket: Int, rows: Long, hash: Long,
+      completedAt: Long)
+
+  /** The commit record, written whole after the data ([[Fs.writeRecord]]): the count
+    * of committed buckets, one `bucket,rows,hash,completedAt` line per non-empty
+    * bucket, then the fingerprint (`""` without one) on the last line, so any string
+    * round-trips. */
+  private def recordPath(path: String) = s"${path}_checkpoints/_LINEAGE"
+
+  private def render(buckets: Seq[Committed], fingerprint: String): String =
+    (buckets.size.toString +: buckets.map(b =>
+      s"${b.bucket},${b.rows},${b.hash},${b.completedAt}") :+ fingerprint).mkString("\n")
+
+  /** The (buckets, fingerprint) of the record under `path`, if any; a corrupt record
+    * throws. */
+  private def readRecord(path: String)(
+      implicit spark: SparkSession): Option[(Seq[Committed], String)] =
+    Fs.readRecord(recordPath(path)).map { text =>
+      val nl = text.indexOf('\n')
+      val n = text.substring(0, nl).toInt
+      val lines = text.substring(nl + 1).split("\n", n + 1)
+      lines.take(n).toSeq.map(_.split(',') match {
+        case Array(b, r, h, at) => Committed(b.toInt, r.toLong, h.toLong, at.toLong)
+        case _ => throw new java.io.IOException(s"corrupt commit record of $path")
+      }) -> lines(n)
+    }
 
   /** Full write: every bucket of `triples` replaces the table at `path` (buckets
-    * the new set does not touch are gone too), and its lineage replaces the
-    * `_checkpoints` table, which is dropped before the data write. */
+    * the new set does not touch are gone too), and its commit record replaces the
+    * old one, which is dropped before the data write. Returns the record's lineage,
+    * one row per non-empty bucket. */
   def write(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
@@ -158,139 +177,101 @@ object Materialize {
   }
 
   /**
-   * Resumable write: consult the checkpoint table and (re)write ONLY buckets that have
-   * no completed checkpoint row — the north rule's "resumable from checkpoint with
-   * per-partition lineage": a crashed run leaves complete buckets' data + checkpoint
-   * rows intact; the resumed run overwrites just the missing partitions (dynamic
-   * partition overwrite, the parquet stand-in for Iceberg overwritePartitions) and
-   * appends their lineage rows. Idempotent: a second resume with a complete checkpoint
-   * table writes nothing. Only lineage rows written without a fingerprint are
-   * trusted: a table a fingerprinted commit wrote is replaced as [[write]] does.
+   * Resumable write: consult the commit record and (re)write ONLY the buckets it
+   * cannot vouch for — the north rule's "resumable from checkpoint with per-partition
+   * lineage". A record lists the buckets its commit wrote; a bucket whose partition has
+   * since lost its data is rewritten alone (dynamic partition overwrite, the parquet
+   * stand-in for Iceberg overwritePartitions) and the record rewritten after it.
+   * Idempotent: a re-run over a complete record writes nothing and starts no Spark
+   * job. It is keyed by what wrote the record, not by the triples: only a record
+   * written without a fingerprint is trusted, so a table a fingerprinted commit wrote
+   * is replaced as [[write]] does.
    */
   def writeResumable(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
     commit(triples, path, nBuckets, observeName, resume = true, fingerprint = None)
 
-  /** [[writeResumable]] keyed by the run's `fingerprint`: every lineage row records
-    * it, and only buckets whose latest row it wrote are trusted. A commit that trusts
-    * none replaces the table as [[write]] does, so facts another fingerprint committed
-    * never survive. Its last step writes the completion record [[committedLineage]]
-    * checks. */
+  /** [[writeResumable]] keyed by the run's `fingerprint`: the record carries it, and
+    * its buckets are trusted only by a commit of the same fingerprint. A commit that
+    * trusts none replaces the table as [[write]] does, so facts another fingerprint
+    * committed never survive. */
   private[graft] def writeResumable(triples: Dataset[Triple], path: String,
       nBuckets: Int, observeName: Option[String], fingerprint: String)(
       implicit spark: SparkSession): DataFrame =
     commit(triples, path, nBuckets, observeName, resume = true, Some(fingerprint))
 
-  /** The latest-per-bucket lineage of a table `fingerprint` has completely committed:
-    * its completion record names `fingerprint`, and every bucket it lists still has
-    * its data partition and a latest lineage row of `fingerprint`. None otherwise.
-    * Starts one small Spark job (the lineage probe); the view it returns is lazy. */
+  /** The lineage of a table `fingerprint` has completely committed: its record
+    * carries `fingerprint` and every bucket it lists still has its data. None
+    * otherwise. A read of the record and ≤ nBuckets file probes; no Spark job. */
   private[graft] def committedLineage(path: String, fingerprint: String)(
-      implicit spark: SparkSession): Option[DataFrame] = {
-    val checkpoints = path + "_checkpoints"
-    completionRecord(checkpoints).collect {
-      case (fp, buckets) if fp == fingerprint &&
-          buckets.toSet.subsetOf(trustedBuckets(checkpoints, path, Some(fp)).toSet) =>
-        lineageView(checkpoints)
-    }
-  }
+      implicit spark: SparkSession): Option[DataFrame] =
+    recorded(path, fingerprint).collect { case (kept, Nil) =>
+      lineageOf(kept, Some(fingerprint)) }
 
-  /** The one plain-layout commit. A full write and a resume differ only in which
-    * buckets they write and whether the lineage is replaced or appended to; a resume
-    * that trusts no bucket replaces, as a full write does. Returns the latest lineage
-    * row per bucket. */
+  /** The one commit. A full write and a resume differ only in which buckets they
+    * write; a resume that trusts no bucket replaces, as a full write does. Returns the
+    * record's lineage. */
   private def commit(triples: Dataset[Triple], path: String, nBuckets: Int,
       observeName: Option[String], resume: Boolean, fingerprint: Option[String])(
       implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val checkpoints = path + "_checkpoints"
-    // counters observe the FULL canonical set (before the pending-bucket filter), so
-    // a resumed run still reports what the job represents, not just what it rewrote.
-    // persist: the bucketed result feeds the data write and the lineage aggregate;
-    // without it the whole upstream pipeline recomputes per action
-    val all = bucketed(triples, nBuckets, observeName)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trusted = if (resume) trustedBuckets(checkpoints, path, fingerprint) else Nil
-    val replace = trusted.isEmpty
-    // a replace writes every bucket: no pending-bucket job
-    val pending = if (replace) Nil
-      else all.select(col("bucket")).distinct()
-        .join(trusted.toDF("bucket"), Seq("bucket"), "left_anti")
-        .collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows
-    val todo = if (replace) Some(all) else if (pending.isEmpty) None
-      else Some(all.filter(col("bucket").isin(pending.map(Integer.valueOf): _*)))
-    todo.foreach { df =>
-      // the lineage that no longer holds goes BEFORE the data it describes: a crash
-      // mid-write leaves nothing trusted over rewritten data
-      Fs.delete(if (replace) checkpoints else s"$checkpoints/$CompletionRecord")
-      df.write.mode("overwrite")
-        .option("partitionOverwriteMode", if (replace) "static" else "dynamic")
-        .partitionBy("bucket").parquet(path)
-      bucketLineage(df, "materialize")
-        .withColumn("fingerprint", lit(fingerprint.orNull).cast(StringType))
-        .write.mode(if (replace) "overwrite" else "append").parquet(checkpoints)
-    }
-    // a replace lists the buckets its static overwrite left under `path`
-    fingerprint.foreach(fp => writeCompletionRecord(checkpoints, fp,
-      if (replace) bucketPartitions(path) else (trusted ++ pending).distinct.sorted))
-    all.unpersist()
-    lineageView(checkpoints)
+    val fp = fingerprint.getOrElse("")
+    val (kept, lost) = (if (resume) recorded(path, fp) else None).getOrElse((Nil, Nil))
+    // counters observe the FULL canonical set (before the lost-bucket filter), so a
+    // resumed run still reports what the job represents, not just what it rewrote
+    def all = bucketed(triples, nBuckets, observeName)
+    val committed =
+      if (kept.isEmpty) {
+        // the record that no longer holds goes BEFORE the data it describes: a crash
+        // mid-write leaves nothing trusted over rewritten data
+        Fs.delete(path + "_checkpoints")
+        Some(written(all, path, nBuckets, "static"))
+      } else if (lost.isEmpty) None
+      // the record stays during the rewrite: each partition lands by one rename, so
+      // after a crash a lost bucket is either still missing or complete
+      else Some(kept ++ written(all.filter(col("bucket").isin(lost: _*)), path,
+        nBuckets, "dynamic"))
+    committed.foreach(bs =>
+      Fs.writeRecord(recordPath(path), render(bs.sortBy(_.bucket), fp)))
+    lineageOf(committed.getOrElse(kept), fingerprint)
   }
 
-  /** The FILE is append-only lineage on resume (a re-verified bucket appends a fresh
-    * row); the view is one row per bucket — the latest — so downstream sums never
-    * double-count a rewritten bucket. Only a never-written table (an EMPTY first
-    * resume) reads as empty: a transient FS error or corrupt checkpoint file must
-    * PROPAGATE, not masquerade as "nothing completed". */
-  private def lineageView(checkpoints: String)(implicit spark: SparkSession): DataFrame =
-    if (Fs.parquetDataExists(checkpoints)) {
-      val rest = LineageSchema.fieldNames.toSeq.filterNot(_ == "bucket")
-      spark.read.schema(LineageSchema).parquet(checkpoints).groupBy(col("bucket"))
-        .agg(max_by(struct(rest.map(col): _*), col("completed_at")).as("w"))
-        .select(col("bucket") +: rest.map(c => col(s"w.$c").as(c)): _*)
-    } else spark.createDataFrame(java.util.Collections.emptyList[Row](), LineageSchema)
+  /** Writes `df` partitioned by bucket under `path` and returns, per non-empty bucket,
+    * what the write itself observed: 2 × nBuckets aggregates in one `observe`. */
+  private def written(df: DataFrame, path: String, nBuckets: Int, overwrite: String)(
+      implicit spark: SparkSession): Seq[Committed] = {
+    val counts = Observation()
+    val factHash = xxhash64(col("subj"), col("pred"), col("obj"))
+    val aggs = (0 until nBuckets).flatMap { b =>
+      val in = col("bucket") === b
+      Seq(count(when(in, 1)).as(s"rows_$b"),
+        coalesce(bit_xor(when(in, factHash)), lit(0L)).as(s"hash_$b"))
+    }
+    df.observe(counts, aggs.head, aggs.tail: _*).write.mode("overwrite")
+      .option("partitionOverwriteMode", overwrite).partitionBy("bucket").parquet(path)
+    val metrics = counts.get
+    def metric(name: String) = metrics.getOrElse(name,
+      sys.error(s"commit of $path: $name not observed")).asInstanceOf[Long]
+    val at = System.currentTimeMillis()
+    (0 until nBuckets).map(b => Committed(b, metric(s"rows_$b"), metric(s"hash_$b"), at))
+      .filter(_.rows > 0)
+  }
 
-  /** Buckets a resume trusts: those whose latest lineage row `fingerprint` wrote (with
-    * None, a row written without one) and whose data partition under `dataPath` is
-    * still there. A bucket whose data VANISHED (external deletion, FS loss — the
-    * lineage row is written after the data, so a crash can't produce this) is not
-    * trusted: the lineage is trusted only as far as the data it describes, never
-    * instead of it. ≤ nBuckets FS probes. */
-  private def trustedBuckets(checkpointPath: String, dataPath: String,
-      fingerprint: Option[String])(implicit spark: SparkSession): Seq[Int] =
-    if (!Fs.parquetDataExists(checkpointPath)) Nil
-    else {
-      // a few rows per commit — driver-safe
-      val rows = spark.read.schema(LineageSchema).parquet(checkpointPath)
-        .select(col("bucket"), col("fingerprint"), unix_micros(col("completed_at")))
-        .collect().toSeq
-      rows.groupBy(_.getInt(0)).collect {
-        case (b, rs) if Option(rs.maxBy(_.getLong(2)).getString(1)) == fingerprint &&
-            Fs.parquetDataExists(s"$dataPath/bucket=$b") => b
-      }.toSeq
+  /** The record's buckets under `path` when it carries `fingerprint`, split into those
+    * whose partition still has data (trusted) and the numbers of the others (lost);
+    * None without such a record. The record is trusted only as far as the data it
+    * describes, never instead of it. ≤ nBuckets file probes. */
+  private def recorded(path: String, fingerprint: String)(
+      implicit spark: SparkSession): Option[(Seq[Committed], Seq[Int])] =
+    readRecord(path).collect { case (buckets, fp) if fp == fingerprint =>
+      val (kept, lost) =
+        buckets.partition(b => Fs.parquetDataExists(s"$path/bucket=${b.bucket}"))
+      (kept, lost.map(_.bucket))
     }
 
-  /** The buckets whose `bucket=N` partition is under `dataPath`, sorted: one listing
-    * of ≤ nBuckets entries. */
-  private def bucketPartitions(dataPath: String)(implicit spark: SparkSession): Seq[Int] =
-    Fs.childNames(dataPath).collect {
-      case n if n.startsWith("bucket=") => n.stripPrefix("bucket=").toInt
-    }.sorted
-
-  /** The (fingerprint, buckets) of the completion record under `checkpoints`, if
-    * any. */
-  private def completionRecord(checkpoints: String)(
-      implicit spark: SparkSession): Option[(String, Seq[Int])] =
-    Fs.readRecord(s"$checkpoints/$CompletionRecord").map { text =>
-      val nl = text.indexOf('\n')
-      text.substring(nl + 1) ->
-        text.substring(0, nl).split(',').filter(_.nonEmpty).map(_.toInt).toSeq
-    }
-
-  /** Writes the completion record whole ([[Fs.writeRecord]]). */
-  private def writeCompletionRecord(checkpoints: String, fingerprint: String,
-      buckets: Seq[Int])(implicit spark: SparkSession): Unit =
-    Fs.writeRecord(s"$checkpoints/$CompletionRecord",
-      buckets.mkString(",") + "\n" + fingerprint)
+  /** The lineage of `buckets` as a local relation: collecting it starts no job. */
+  private def lineageOf(buckets: Seq[Committed], fingerprint: Option[String])(
+      implicit spark: SparkSession): DataFrame =
+    spark.createDataFrame(buckets.map(b => Row(b.bucket, b.rows, b.hash, "materialize",
+      new java.sql.Timestamp(b.completedAt), fingerprint.orNull)).asJava, LineageSchema)
 }

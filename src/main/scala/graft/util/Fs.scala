@@ -34,8 +34,8 @@ object Fs {
   }
 
   /** Writes a commit record whole: to a `.inprogress` temp file beside it, then
-    * renamed over the old one. Commit records (`Materialize`'s and
-    * `StageCheckpoint`'s `_COMMITTED`) are written after the data they vouch for. */
+    * renamed over the old one. Commit records (`Materialize`'s `_LINEAGE`
+    * and `StageCheckpoint`'s `_COMMITTED`) are written after the data they vouch for. */
   def writeRecord(path: String, text: String)(implicit spark: SparkSession): Unit = {
     val (fs, p) = fsPath(path)
     val tmp = new Path(s"$path.inprogress")
@@ -49,12 +49,6 @@ object Fs {
   def delete(path: String)(implicit spark: SparkSession): Unit = {
     val (fs, p) = fsPath(path)
     fs.delete(p, true)
-  }
-
-  /** The names of the entries directly under `path`; Nil when it does not exist. */
-  def childNames(path: String)(implicit spark: SparkSession): Seq[String] = {
-    val (fs, p) = fsPath(path)
-    if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.map(_.getPath.getName)
   }
 
   private def fsPath(path: String)(implicit spark: SparkSession): (FileSystem, Path) = {

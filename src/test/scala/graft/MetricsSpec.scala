@@ -61,10 +61,10 @@ class MetricsSpec extends AnyFunSuite with SparkTest {
         graft.model.Triple("s2", "p", "o2", "u2", 0, 1, 1L, 1.0, "auto")))
       graft.sink.Materialize.writeResumable(ts, s"$out/t", 4, Some("m.fresh"))
       assert(mc.await("m.fresh").exists(_("triples") == 2L))
-      // fully-resumed run: nothing pending → AQE collapses the probe query to
-      // EmptyRelation and NO counters fire (documented contract: live counters
-      // measure work performed; zero work → zero counters). The persisted
-      // checkpoint lineage is the durable record and must still carry the counts.
+      // fully-resumed run: nothing lost → the commit starts no query and NO counters
+      // fire (documented contract: live counters measure work performed; zero work →
+      // zero counters). The commit record is the durable one and must still carry
+      // the counts.
       val cps = graft.sink.Materialize.writeResumable(ts, s"$out/t", 4, Some("m.resumed"))
       assert(mc.await("m.resumed", 3000L).isEmpty)
       assert(cps.agg(sum("rows_out")).head.getLong(0) == 2L)

@@ -117,12 +117,8 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     val total = spark.read.parquet(path).count()
     assert(total === 200)
 
-    // simulate a crash that lost 3 buckets' checkpoints (their data gone too)
+    // 3 buckets' data is lost; the record, written whole, still lists them
     val lost = Seq(1, 4, 6)
-    val cpPath = path + "_checkpoints"
-    val kept = spark.read.parquet(cpPath).filter(!col("bucket").isin(lost: _*))
-      .persist(); kept.count()
-    kept.write.mode("overwrite").parquet(cpPath); kept.unpersist()
     lost.foreach { b =>
       val d = new java.io.File(s"$path/bucket=$b")
       if (d.exists()) { d.listFiles().foreach(_.delete()); d.delete() }
@@ -134,10 +130,10 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
       new java.io.File(s"$path/bucket=$b").listFiles().map(f => f.getName -> f.lastModified).toMap
     val committed = (0 until nB).filterNot(lost.contains)
     val before = committed.map(bucketFiles)
-    Materialize.writeResumable(triples, path, nB)
+    val cps2 = Materialize.writeResumable(triples, path, nB)
     assert(committed.map(bucketFiles) === before, "a committed bucket was rewritten")
     assert(spark.read.parquet(path).count() === 200)
-    assert(spark.read.parquet(cpPath).count() === nB)
+    assert(cps2.count() === nB)
 
     // idempotent: a third call with a complete checkpoint table writes nothing new
     val mtimes = new java.io.File(path).listFiles().map(f => f.getName -> f.lastModified).toMap
@@ -178,10 +174,9 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(spark.read.parquet(path).count() < 200)
     val cps = Materialize.writeResumable(triples, path, nB)
     assert(spark.read.parquet(path).count() === 200, "vanished bucket not rewritten")
-    // returned view: ONE row per bucket (no double count); file keeps the audit trail
+    // returned view: ONE row per bucket (no double count)
     assert(cps.count() === nB)
     assert(cps.agg(org.apache.spark.sql.functions.sum("rows_out")).head.getLong(0) === 200L)
-    assert(spark.read.parquet(path + "_checkpoints").count() === nB + 1)
   }
 
   test("write: a rewrite with fewer buckets leaves exactly the new table") {
@@ -197,7 +192,10 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     val cps = Materialize.write(triples(1), path, 16)
     assert(facts() === Set(("subj0", "p", "o0")), "buckets of the first write survived")
     assert(cps.count() === 1L)
-    assert(spark.read.parquet(path + "_checkpoints").count() === 1L)
+    // the record lists the one bucket the second write committed
+    val recorded = Materialize.committedLineage(path, "")
+      .map(_.collect().map(_.getInt(0)).toSeq)
+    assert(recorded === Some(cps.collect().map(_.getInt(0)).toSeq))
   }
 
   test("a fresh fingerprinted writeResumable starts as many Spark jobs as write") {
@@ -216,5 +214,94 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     val cps = Materialize.committedLineage(s"$dir/resumable", "fp-a")
     assert(cps.map(_.count()) === Some(nB.toLong))
     assert(spark.read.parquet(s"$dir/resumable").count() === 200)
+  }
+
+  test("a fresh write starts at most 3 Spark jobs; a complete re-run of writeResumable " +
+      "starts no Spark job and rewrites no file") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val triples = spark.createDataset((0 until 3000).map(i =>
+      Triple(s"subj$i", "p", s"o$i", s"https://x/$i", 0, 1, 1L, 1.0)))
+    val (_, fresh) = SparkTestBase.jobsStarted("ss.fresh") {
+      Materialize.write(triples, s"$dir/plain", 16).collect() }
+    assert(fresh <= 3, s"a fresh write started $fresh Spark jobs")
+
+    val path = s"$dir/resumable"
+    val first = Materialize.writeResumable(triples, path, 16).collect().toSeq
+    def files(root: String): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(root)).map(f => f.getPath -> f.lastModified).toMap
+    }
+    val before = files(dir)
+    val (again, jobs) = SparkTestBase.jobsStarted("ss.rerun") {
+      Materialize.writeResumable(triples, path, 16).collect().toSeq }
+    assert(jobs === 0, s"a complete re-run started $jobs Spark jobs")
+    assert(files(dir) === before, "a complete re-run rewrote a file")
+    assert(again === first)
+  }
+
+  /** (bucket, rows, hash) per bucket of the table at `path`, from its data. */
+  private def oracle(path: String): Set[(Int, Long, Long)] =
+    spark.read.parquet(path).groupBy(col("bucket"))
+      .agg(count(lit(1)), expr("bit_xor(xxhash64(subj, pred, obj))")).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+
+  private def lineage(cps: org.apache.spark.sql.DataFrame): Set[(Int, Long, Long)] =
+    cps.select("bucket", "rows_out", "output_hash").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("the returned lineage equals a groupBy oracle over the committed data, for a " +
+      "replace and for a vanished-bucket resume") {
+    import spark.implicits._
+    val path = tmpDir() + "/triples"
+    val triples = spark.createDataset((0 until 500).map(i =>
+      Triple(s"subj${i % 97}", s"p${i % 3}", s"o$i", s"https://x/$i", 0, 1, 1L, 1.0)))
+    val nB = 8
+    val replaced = Materialize.writeResumable(triples, path, nB, None, "fp-a")
+    assert(lineage(replaced) === oracle(path))
+    assert(lineage(replaced).size === nB)
+
+    val victim = new java.io.File(path).list().filter(_.startsWith("bucket=")).min
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$path/$victim"))
+    val resumed = Materialize.writeResumable(triples, path, nB, None, "fp-a")
+    assert(lineage(resumed) === oracle(path))
+    assert(lineage(resumed) === lineage(replaced))
+    // only the rewritten bucket completed in the resume
+    val at = resumed.collect().map(r => r.getInt(0) -> r.getTimestamp(4)).toMap
+    val before = replaced.collect().map(r => r.getInt(0) -> r.getTimestamp(4)).toMap
+    assert(at.filter { case (b, t) => t != before(b) }.keySet ===
+      Set(victim.stripPrefix("bucket=").toInt))
+  }
+
+  test("an output in the older layout (a parquet _checkpoints table and a _COMMITTED " +
+      "record) is replaced once and never trusted") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val path = s"$dir/triples"
+    def facts(obj: String) = spark.createDataset((0 until 200).map(i =>
+      Triple(s"subj$i", "p", s"$obj$i", s"https://x/$i", 0, 1, 1L, 1.0)))
+    def back(p: String) = spark.read.parquet(p).select("subj", "pred", "obj")
+      .as[(String, String, String)].collect().toSet
+    val nB = 8
+    // the older layout: stale data, a parquet lineage table whose rows claim every
+    // bucket for fp-a, and a completion record naming fp-a
+    Materialize.write(facts("stale"), path, nB)
+    val checkpoints = path + "_checkpoints"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(checkpoints))
+    (0 until nB).map(b => (b, 25L, 0L, "materialize",
+        new java.sql.Timestamp(0L), "fp-a"))
+      .toDF("bucket", "rows_out", "output_hash", "stage", "completed_at", "fingerprint")
+      .write.parquet(checkpoints)
+    java.nio.file.Files.write(java.nio.file.Paths.get(checkpoints, "_COMMITTED"),
+      ((0 until nB).mkString(",") + "\nfp-a").getBytes)
+    assert(Materialize.committedLineage(path, "fp-a").isEmpty)
+
+    val cps = Materialize.writeResumable(facts("new"), path, nB, None, "fp-a")
+    Materialize.write(facts("new"), s"$dir/fresh", nB)
+    assert(back(path) === back(s"$dir/fresh"), "the older layout's facts survived")
+    assert(lineage(cps) === oracle(path))
+    assert(!new java.io.File(checkpoints).list().exists(_.endsWith(".parquet")))
+    assert(Materialize.committedLineage(path, "fp-a").map(lineage) === Some(lineage(cps)))
   }
 }
