@@ -103,10 +103,10 @@ object Bench {
       implicit val s: SparkSession = graft.util.Sessions.local(highCores, "graft-bench")
       import s.implicits._
       val train = graft.testgen.CorpusGen.pages(200)
-      val kernel = graft.pipeline.KGPipeline.run(
+      val kernel = graft.pipeline.KGPipeline.learnedKernel(
         s.createDataset(train.map(_.page)),
         s.createDataset(train.flatMap(graft.testgen.CorpusGen.goldAnnotations)),
-        graft.testgen.CorpusGen.gazetteer).kernel
+        graft.testgen.CorpusGen.gazetteer)
       s.stop()
       val p = java.nio.file.Files.createTempFile("graft_bench_kernel", ".bin")
       p.toFile.deleteOnExit() // the children read it; nothing reads it after this JVM

@@ -49,10 +49,10 @@ object ScalingRun {
         // sample-scale by design — extraction is the corpus-scale path)
         import spark.implicits._
         val train = testgen.CorpusGen.pages(200)
-        pipeline.KGPipeline.run(
+        pipeline.KGPipeline.learnedKernel(
           spark.createDataset(train.map(_.page)),
           spark.createDataset(train.flatMap(testgen.CorpusGen.goldAnnotations)),
-          testgen.CorpusGen.gazetteer).kernel
+          testgen.CorpusGen.gazetteer)
     }
 
     val pages = testgen.CorpusGen.pagesDS(nPages, partitions = 128)

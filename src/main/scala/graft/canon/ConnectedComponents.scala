@@ -3,6 +3,8 @@ package graft.canon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.learn.LearnKernel.Utf8Order
+
 /**
  * Connected components on a DataFrame edge list via alternating large-star / small-star
  * operations (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
@@ -146,8 +148,10 @@ object ConnectedComponents {
   }
 
   /** Driver/task-local union-find with union-by-min and path compression: the root
-    * of every tree is the smallest node of its component at all times. */
-  private[canon] def localComponents(
+    * of every tree is the smallest node of its component at all times, in Spark's
+    * string order (UTF-8 bytes, as [[run]]'s `min`/`least`), so both paths pick the
+    * same representative. */
+  private[graft] def localComponents(
       it: Iterator[(String, String)]): Iterator[(String, String)] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
@@ -163,7 +167,7 @@ object ConnectedComponents {
       if (u != v) {
         val (ru, rv) = (find(u), find(v))
         if (ru != rv) {
-          if (ru < rv) parent(rv) = ru else parent(ru) = rv
+          if (Utf8Order.lt(ru, rv)) parent(rv) = ru else parent(ru) = rv
         }
       }
     }

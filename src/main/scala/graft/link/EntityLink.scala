@@ -1,17 +1,23 @@
 package graft.link
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.{HexFormat, Locale}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.learn.LearnKernel.Utf8Order
 
 /**
  * Entity linking: blocking + Jaccard candidate scoring.
  *
- * The scale-first analog of the reference's value-probability dictionary pass and
- * duplicate propagation (/root/reference/src/msa/AutoAnnotateNER.java:2294-2535,
- * src/msa/pipeline/AnnotateDuplicate.java:106-270): distinct surface forms are grouped
- * into blocks by a cheap deterministic key, candidate pairs are generated ONLY within a
- * block (never a global cross join), and pairs at token-Jaccard ≥ τ become link edges
- * for connected-components canonicalization.
+ * The analog of the reference's duplicate propagation
+ * (src/msa/pipeline/AnnotateDuplicate.java:106-270 of the reference), which merges
+ * duplicate entities with a plain single-threaded walk: distinct surface forms are
+ * grouped into blocks by a cheap deterministic key, candidate pairs are generated ONLY
+ * within a block (never a global cross join), and pairs at token-Jaccard ≥ τ become
+ * link edges for connected-components canonicalization.
  *
  * Two blocking FAMILIES are unioned (every form lands in one block per family), so a
  * form silently dropped from an over-cap block in one family can still pair through
@@ -24,9 +30,16 @@ import org.apache.spark.sql.functions._
  *    INDEPENDENT of first-char/length agreement.
  * A per-block candidate cap (analogous to the reference's per-doc count cap 50,
  * BestPatterns.java:441-443) bounds the quadratic blow-up on mega-blocks — and per
- * the no-silent-caps rule the dropped-per-block counts are LOGGED at call time and
- * exposed relationally via [[blockAudit]]; AQE skew-join splitting handles residual
- * imbalance. Pairs surfacing in both families are deduplicated before scoring output.
+ * the no-silent-caps rule the dropped form slots are LOGGED at call time and exposed
+ * relationally via [[blockAudit]]. Pairs surfacing in both families are deduplicated.
+ *
+ * The Jaccard link has one implementation, [[jaccardLinks]]: plain Scala over the
+ * distinct forms, which the KG job runs on the driver (its subject forms are few;
+ * [[graft.pipeline.KGPipeline]] bounds them). It normalizes, orders and hashes as the
+ * Spark builtins do (`lower` + `regexp_replace` + `trim`, strings in UTF-8 byte order,
+ * `md5` hex), so its edges equal a relational block self-join's. [[candidateEdges]] is
+ * its DataFrame face. The embedding-scored variant [[candidateEdgesEmbedding]]
+ * (battery q43) stays relational over [[blocked]] and [[cap]].
  */
 object EntityLink {
 
@@ -39,11 +52,10 @@ object EntityLink {
     concat(lit("a:"), substring(norm, 1, 1), lit(":"), size(toks)),
     concat(lit("m:"), array_min(transform(toks, t => substring(md5(t), 1, 12)))))
 
-  /** Normalized + exploded-by-family blocking relation shared by both scorers. */
-  private def blocked(forms: DataFrame): DataFrame =
+  /** Normalized + exploded-by-family blocking relation (form, norm, toks, block). */
+  private[graft] def blocked(forms: DataFrame): DataFrame =
     forms
-      // builtin (codegen) normalization — this runs over every distinct subject form
-      // at canonicalization time, so no Scala UDF in the path
+      // builtin (codegen) normalization, no Scala UDF in the path
       .withColumn("norm", trim(regexp_replace(lower(col("form")), "[^a-z0-9]+", " ")))
       .filter(length(col("norm")) > 0)
       .withColumn("toks", array_distinct(split(col("norm"), " ")))
@@ -51,7 +63,7 @@ object EntityLink {
 
   /** Per-block cap (mega-entity guard); tie-break on the unique form so colliding
     * normalized forms keep a parallelism-invariant winner set. */
-  private def cap(blockedForms: DataFrame, maxBlockSize: Int): DataFrame =
+  private[graft] def cap(blockedForms: DataFrame, maxBlockSize: Int): DataFrame =
     blockedForms
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("block")
@@ -69,40 +81,93 @@ object EntityLink {
       .filter(col("n_forms") > maxBlockSize)
       .withColumn("n_dropped", col("n_forms") - maxBlockSize)
 
-  /** Eager one-job drop counter (tiny aggregate over distinct forms) — logged per the
-    * no-silent-caps rule; recall loss must never be invisible. */
+  /** Logs what the block cap dropped, per the no-silent-caps rule: recall loss must
+    * never be invisible. */
+  private def logCapDrops(who: String, droppedSlots: Long, overCapBlocks: Long,
+      maxBlockSize: Int): Unit =
+    if (overCapBlocks > 0)
+      log.warn(s"$who: block cap $maxBlockSize dropped $droppedSlots form slots " +
+        s"across $overCapBlocks over-cap blocks (recall loss — see blockAudit)")
+    else log.info(s"$who: no blocks over cap $maxBlockSize")
+
+  /** Eager one-job drop counter (tiny aggregate over distinct forms). */
   private def logDrops(who: String, blockedForms: DataFrame, maxBlockSize: Int): Unit = {
     val r = blockedForms.groupBy("block").agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBlockSize)
       .agg(coalesce(sum(col("n") - maxBlockSize), lit(0L)), count(lit(1))).head()
-    if (r.getLong(1) > 0)
-      log.warn(s"$who: block cap $maxBlockSize dropped ${r.getLong(0)} form slots " +
-        s"across ${r.getLong(1)} over-cap blocks (recall loss — see blockAudit)")
-    else log.info(s"$who: no blocks over cap $maxBlockSize")
+    logCapDrops(who, r.getLong(0), r.getLong(1), maxBlockSize)
+  }
+
+  /** Spark's `trim(regexp_replace(lower(form), "[^a-z0-9]+", " "))`, lowered with
+    * `Locale.ROOT` so no host's default locale changes a form (Spark's own `lower`
+    * follows it on non-ASCII text: under `tr` it maps U+0130 to a plain i). */
+  private def normalize(form: String): String =
+    form.toLowerCase(Locale.ROOT).replaceAll("[^a-z0-9]+", " ").trim
+
+  /** A form as blocking and scoring read it: distinct tokens in first-seen order. */
+  private final class Normed(val form: String, val norm: String, val toks: Array[String]) {
+    val tokSet: Set[String] = toks.toSet
+    /** Spark's `a:` and `m:` keys; `md5` is lowercase hex, `substring` 1-based. */
+    def blockKeys: Seq[String] = Seq(s"a:${norm.substring(0, 1)}:${toks.length}",
+      "m:" + toks.map(t => HexFormat.of().formatHex(
+        MessageDigest.getInstance("MD5").digest(t.getBytes(UTF_8))).substring(0, 12)).min)
+  }
+
+  /** The edge of two forms of one block, oriented `src < dst`, when their token
+    * Jaccard reaches `minJaccard`. */
+  private def edge(a: Normed, b: Normed,
+      minJaccard: Double): Option[(String, String, Double)] = {
+    val inter = a.toks.count(b.tokSet)
+    val jaccard = inter.toDouble / (a.toks.length + b.toks.length - inter)
+    if (jaccard < minJaccard) None
+    else if (Utf8Order.lt(a.form, b.form)) Some((a.form, b.form, jaccard))
+    else Some((b.form, a.form, jaccard))
+  }
+
+  /** What linking a set of forms yields: the edges `(src, dst, jaccard)` sorted by
+    * `(src, dst)` in UTF-8 byte order, and what the block cap dropped. */
+  final case class Links(edges: Seq[(String, String, Double)], droppedSlots: Long,
+      overCapBlocks: Long)
+
+  /**
+   * The Jaccard link kernel over surface forms, plain Scala. Null forms and forms whose
+   * normalized text is empty are dropped. Each block keeps its first `maxBlockSize`
+   * forms in (norm, form) order; the dropped slots are logged. Two forms of one block
+   * are an edge when the Jaccard of their distinct token sets is at least `minJaccard`;
+   * a pair both families find is one edge.
+   */
+  def jaccardLinks(forms: Iterable[String], minJaccard: Double,
+      maxBlockSize: Int = 1000): Links = {
+    val normed = forms.iterator.filter(_ != null).distinct.flatMap { f =>
+      val norm = normalize(f)
+      if (norm.isEmpty) None else Some(new Normed(f, norm, norm.split(" ").distinct))
+    }.toVector
+    val blocks = normed.flatMap(f => f.blockKeys.map(_ -> f)).groupMap(_._1)(_._2).values
+    val dropped = blocks.collect { case b if b.size > maxBlockSize => b.size - maxBlockSize }
+    val (droppedSlots, overCapBlocks) = (dropped.map(_.toLong).sum, dropped.size.toLong)
+    logCapDrops("jaccardLinks", droppedSlots, overCapBlocks, maxBlockSize)
+    val byText = Ordering.Tuple2(Utf8Order, Utf8Order)
+    val edges = blocks.iterator.flatMap { block =>
+      val kept = block.sortBy(f => (f.norm, f.form))(byText).take(maxBlockSize)
+      kept.indices.iterator.flatMap(i =>
+        (i + 1 until kept.size).iterator.flatMap(j => edge(kept(i), kept(j), minJaccard)))
+    }.toSet
+    Links(edges.toSeq.sortBy(e => (e._1, e._2))(byText), droppedSlots, overCapBlocks)
   }
 
   /**
-   * @param forms DataFrame with a single column `form` (distinct surface forms).
-   * @return edges (src, dst) with jaccard ≥ minJaccard, src < dst lexicographically,
-   *         deduplicated across blocking families.
+   * [[jaccardLinks]] as a DataFrame: collects the distinct forms to the driver and links
+   * them there.
+   *
+   * @param forms DataFrame with a single column `form` (surface forms).
+   * @return edges (src, dst, jaccard) with jaccard ≥ minJaccard, src < dst in UTF-8 byte
+   *         order, deduplicated across blocking families; a local relation.
    */
   def candidateEdges(forms: DataFrame, minJaccard: Double = 0.5,
       maxBlockSize: Int = 1000)(implicit spark: SparkSession): DataFrame = {
-    val normed = blocked(forms.select(col("form")).distinct())
-    logDrops("candidateEdges", normed, maxBlockSize)
-    val capped = cap(normed, maxBlockSize)
-    val a = capped.select(col("form").as("src"), col("toks").as("ta"), col("block"))
-    val b = capped.select(col("form").as("dst"), col("toks").as("tb"), col("block"))
-    a.join(b, Seq("block"))
-      .filter(col("src") < col("dst"))
-      .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
-      .withColumn("uni", size(array_union(col("ta"), col("tb"))))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .filter(col("jaccard") >= minJaccard)
-      // the same pair may surface through both families — jaccard is a pure function
-      // of the pair, so plain distinct dedupes exactly
-      .select("src", "dst", "jaccard")
-      .distinct()
+    import spark.implicits._
+    val distinctForms = forms.select(col("form")).distinct().as[String].collect()
+    jaccardLinks(distinctForms, minJaccard, maxBlockSize).edges.toDF("src", "dst", "jaccard")
   }
 
   /**

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -28,7 +29,12 @@ import graft.sink.Materialize
  *                matching, prior veto, dictionary pass, same-span dedup, W4 merge,
  *                sentence-local subject resolution) → raw triples; the model is
  *                broadcast
- *              ─ link + CC: blocking-join edges, large-star/small-star canonicalization
+ *   subjects   ─ ONE job: the distinct subject forms, pulled to the driver (bounded by
+ *                MaxLinkForms, loud when over)
+ *              ─ link + CC, on the driver: [[graft.link.EntityLink.jaccardLinks]] edges,
+ *                union-find components; a subject in a component becomes its
+ *                smallest form, by a narrow map with the map broadcast (no edge: the
+ *                raw triples pass through untouched)
  *              ─ materialize: dedup, subject-bucketed partitioned write + its record
  *
  * The corpus pass does not shuffle before link: every extraction step is local to a
@@ -37,7 +43,10 @@ import graft.sink.Materialize
  * touches the validated slice, and runs as plain Scala over it — exactly the
  * reference's design: learning single-threaded on status-1 docs, extraction on
  * status-0 (SURVEY.md §7.4.2). Between the slice's collect and the corpus pass [[run]]
- * starts no Spark job.
+ * starts no Spark job. Canonicalization follows the same design (the reference merges
+ * duplicates with a plain walk, AnnotateDuplicate.java:106-270): the job has few
+ * distinct subjects, so it links them on the driver, with no join, window, persist
+ * or checkpoint.
  *
  * [[run]] and [[runCheckpointed]] share one body: learn → gate, the corpus pass and
  * canonicalization. They differ only in whether the `raw_triples` stage is
@@ -46,9 +55,6 @@ import graft.sink.Materialize
  * configs, training gold of provenance `gold`, 16 output buckets.
  */
 object KGPipeline {
-
-  /** The learned page kernel and the canonical triples it yields over the corpus. */
-  final case class Result(kernel: PageKernel, canonical: Dataset[Triple])
 
   /** Subject buckets of the committed triple table. */
   private val Buckets = 16
@@ -62,33 +68,54 @@ object KGPipeline {
     * read rather than exhausting the driver. */
   private val MaxTrainingPages = 5000
 
+  /** Most distinct subject forms canonicalization links on the driver. At the limit,
+    * on 2–4-token names over a Zipf vocabulary, linking peaks at about 0.3 GB of heap
+    * (it completes under -Xmx256m) and about 12 s on one core, most of it in the
+    * capped 1,000-form blocks. A corpus with more distinct subjects fails the job after
+    * the corpus pass rather than exhausting the driver. */
+  private val MaxLinkForms = 200000
+
   /** Fails loudly when a training slice of `pages` pages exceeds `limit`. */
   private[graft] def checkSliceSize(pages: Int, limit: Int = MaxTrainingPages): Unit =
     if (pages > limit) throw new IllegalArgumentException(
       s"training slice of $pages pages exceeds the limit of $limit pages: learning " +
         "collects the validated slice to the driver, so train on a smaller gold sample")
 
+  /** Fails loudly when more than `limit` distinct subject forms were collected. */
+  private[graft] def checkFormCount(forms: Int, limit: Int = MaxLinkForms): Unit =
+    if (forms > limit) throw new IllegalArgumentException(
+      s"$forms or more distinct subject forms exceed the limit of $limit forms: " +
+        "canonicalization links the subject forms on the driver")
+
   /**
+   * The canonical triples of the corpus.
+   *
    * @param pages      full corpus
    * @param goldAnnots gold target-span annotations for the training slice
    * @param gaz        gazetteer for Lookup annotations (broadcast)
    */
   def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
-      implicit spark: SparkSession): Result = {
-    val (rawTriples, kernel) = extracted(pages, goldAnnots, gaz, checkpoint = None)
-    // rawTriples feeds both the CC edge derivation and the final canonical output —
-    // persist it or every downstream action recomputes the whole extraction
-    Result(kernel(), canonicalOf(rawTriples.persist(MEMORY_AND_DISK)))
+      implicit spark: SparkSession): Dataset[Triple] =
+    // the forms aggregate and the write both read the raw triples: persisted, the
+    // aggregate is the corpus pass and the write reads the cache
+    canonicalOf(extracted(pages, goldAnnots, gaz, checkpoint = None)
+      .persist(MEMORY_AND_DISK))
+
+  /** The page kernel learned on the gold slice (learn → gate): collects the training
+    * slice and starts no job over the corpus. */
+  def learnedKernel(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
+      implicit spark: SparkSession): PageKernel = {
+    val train = new TrainingSlice(pages, goldAnnots, gaz)
+    kernelOf(learn(train), train, gaz)
   }
 
   /** Learn → gate → corpus pass, the body both entry points share; a `checkpoint`
     * materializes the one `raw_triples` stage. Learning runs lazily inside that stage:
     * a resumed `raw_triples` stage collects no training slice, builds no kernel and
-    * annotates nothing. Returns the raw triples and the page kernel, built on first
-    * use. */
+    * annotates nothing. */
   private def extracted(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer, checkpoint: Option[(StageCheckpoint, String)])(
-      implicit spark: SparkSession): (DataFrame, () => PageKernel) = {
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val train = new TrainingSlice(pages, goldAnnots, gaz)
 
@@ -105,9 +132,9 @@ object KGPipeline {
     // precedence dedup. Resolved on the driver over the collected slice.
     def rawTriples = pageTriples(pages, kernel).unionByName(
       LearnKernel.goldTriples(train.sents, train.gold, GoldClasses).toDS()).toDF()
-    (checkpoint.fold(rawTriples) { case (cp, fingerprint) =>
+    checkpoint.fold(rawTriples) { case (cp, fingerprint) =>
       cp.materialize("raw_triples", fingerprint)(rawTriples)
-    }, () => kernel)
+    }
   }
 
   /** The corpus pass every batch job runs: ONE narrow mapPartitions, each page read
@@ -168,21 +195,41 @@ object KGPipeline {
     Learned(tgtPatterns, allowedPairs, gated(ctxPatterns, allowedPairs))
   }
 
-  /** Canonicalize subjects: blocking-join edges + connected components; a subject in
-    * a component is replaced by the component's representative. */
-  private def canonicalOf(rawTriples: DataFrame)(
+  /** Canonicalize subjects on the driver: the distinct subject forms (one Spark job),
+    * their Jaccard links and union-find components; a subject in a component becomes
+    * its smallest form (UTF-8 byte order). Without an edge the raw triples pass
+    * through untouched; otherwise a narrow map rewrites `subj` from the broadcast
+    * form → representative map. */
+  private[graft] def canonicalOf(rawTriples: DataFrame)(
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
-    val forms = rawTriples.select($"subj".as("form"))
-    val edges = EntityLink.candidateEdges(forms, minJaccard = 0.6)
-      .select($"src", $"dst")
-    val comp = ConnectedComponents.runAdaptive(edges)
-    rawTriples
-      .join(comp, rawTriples("subj") === comp("node"), "left")
-      .withColumn("subj2", coalesce(col("component"), col("subj")))
-      .select(col("subj2").as("subj"), col("pred"), col("obj"), col("url"),
-        col("begin"), col("end"), col("profileId"), col("score"), col("provenance"))
-      .as[Triple]
+    val forms = subjectForms(rawTriples, MaxLinkForms + 1)
+    checkFormCount(forms.size)
+    val edges = EntityLink.jaccardLinks(forms, minJaccard = 0.6).edges
+    val representative = ConnectedComponents.localComponents(
+      edges.iterator.map(e => (e._1, e._2))).filter { case (f, rep) => f != rep }.toMap
+    val triples = rawTriples.as[Triple]
+    if (representative.isEmpty) triples
+    else {
+      val repB = spark.sparkContext.broadcast(representative)
+      triples.map(t => repB.value.get(t.subj).fold(t)(rep => t.copy(subj = rep)))
+    }
+  }
+
+  /** Up to `limit` distinct non-null subject forms of `rawTriples`, in ONE Spark job:
+    * each task collects its partition's forms and the driver merges each task's as
+    * its result arrives, so neither holds more than `limit`. */
+  private def subjectForms(rawTriples: DataFrame, limit: Int)(
+      implicit spark: SparkSession): collection.Set[String] = {
+    import spark.implicits._
+    def merge(acc: mutable.HashSet[String], forms: mutable.HashSet[String]) = {
+      val it = forms.iterator
+      while (acc.size < limit && it.hasNext) acc += it.next()
+      acc
+    }
+    rawTriples.select($"subj").filter($"subj".isNotNull).as[String].rdd
+      .aggregate(mutable.HashSet.empty[String])(
+        (acc, f) => if (acc.size < limit) acc += f else acc, merge)
   }
 
   /** Context patterns that keep at least one gated pair, scored with their best
@@ -221,7 +268,7 @@ object KGPipeline {
     * commit record. */
   def runAndWrite(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
       outPath: String)(implicit spark: SparkSession): DataFrame =
-    Materialize.write(run(pages, goldAnnots, gaz).canonical, outPath, Buckets,
+    Materialize.write(run(pages, goldAnnots, gaz), outPath, Buckets,
       Some(CanonicalMetric))
 
   /**
@@ -248,7 +295,7 @@ object KGPipeline {
       gaz: Gazetteer, stageDir: String, fingerprint: String, outPath: String)(
       implicit spark: SparkSession): DataFrame =
     Materialize.committedLineage(outPath, fingerprint).getOrElse {
-      val (rawTriples, _) = extracted(pages, goldAnnots, gaz,
+      val rawTriples = extracted(pages, goldAnnots, gaz,
         Some((StageCheckpoint(stageDir), fingerprint)))
       Materialize.writeResumable(canonicalOf(rawTriples), outPath, Buckets,
         Some(CanonicalMetric), fingerprint)

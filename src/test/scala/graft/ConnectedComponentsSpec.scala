@@ -40,7 +40,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val edges = Seq(
       ("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("s", "s"),
-      ("q", "p"), ("p", "a"), ("m", "m2"), ("m2", "m")
+      ("q", "p"), ("p", "a"), ("m", "m2"), ("m2", "m"),
+      // U+FFFD < U+1F600 in Spark's UTF-8 byte order, the reverse in UTF-16 units
+      ("\uFFFD", "\uD83D\uDE00")
     ).toDF("src", "dst")
     val dist = ConnectedComponents.run(edges)
       .as[(String, String)].collect().toMap

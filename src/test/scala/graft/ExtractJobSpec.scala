@@ -14,8 +14,8 @@ import graft.testgen.CorpusGen
 
 /**
  * The scaling gate's invariant, on the job it times: `ExtractJob` with a kernel
- * learned by `KGPipeline.run` writes the same mention-level triples, and the same
- * (count, hash), whatever the input partitioning; and those rows are exactly the
+ * learned by `KGPipeline.learnedKernel` writes the same mention-level triples, and the
+ * same (count, hash), whatever the input partitioning; and those rows are exactly the
  * kernel's own output per page, deduped on the mention site.
  */
 class ExtractJobSpec extends AnyFunSuite with SparkTest {
@@ -32,9 +32,9 @@ class ExtractJobSpec extends AnyFunSuite with SparkTest {
   private lazy val kernel: PageKernel = {
     import spark.implicits._
     val train = CorpusGen.pages(30)
-    KGPipeline.run(spark.createDataset(train.map(_.page)),
+    KGPipeline.learnedKernel(spark.createDataset(train.map(_.page)),
       spark.createDataset(train.flatMap(CorpusGen.goldAnnotations)),
-      CorpusGen.gazetteer).kernel
+      CorpusGen.gazetteer)
   }
 
   private def run(partitions: Int): (ExtractJob.Result, String) = {

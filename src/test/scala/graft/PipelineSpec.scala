@@ -18,15 +18,16 @@ class PipelineSpec extends AnyFunSuite with SparkTest {
     val pages = spark.createDataset(all.map(_.page))
     val goldAnnots = spark.createDataset(train.flatMap(CorpusGen.goldAnnotations))
 
-    val r = KGPipeline.run(pages, goldAnnots, CorpusGen.gazetteer)(spark)
+    val kernel = KGPipeline.learnedKernel(pages, goldAnnots, CorpusGen.gazetteer)(spark)
 
     // a dictionary triple has profileId -2: any other comes from a pattern
     val patternTriples = all.flatMap(gp => graft.nlp.Annotate.pageText(gp.page).toSeq
-      .flatMap(r.kernel.extract(gp.page.url, _))).count(_.profileId != -2L)
+      .flatMap(kernel.extract(gp.page.url, _))).count(_.profileId != -2L)
     assert(patternTriples > 0, "no patterns survived the precision gate")
 
     val goldTriples = all.flatMap(_.gold).map(t => (t.subj, t.pred, t.obj)).toSet
-    val got = r.canonical.collect().map(t => (t.subj, t.pred, t.obj)).toSet
+    val got = KGPipeline.run(pages, goldAnnots, CorpusGen.gazetteer)(spark).collect()
+      .map(t => (t.subj, t.pred, t.obj)).toSet
 
     val tp = got.intersect(goldTriples).size.toDouble
     val prec = if (got.isEmpty) 0.0 else tp / got.size
