@@ -20,8 +20,8 @@ import org.apache.spark.sql.SparkSession
  * runs inside it) materializes through [[graft.runtime.StageCheckpoint]] under
  * stageDir with a commit record of the rows its write counted, and the output commit
  * is keyed by the run's fingerprint (nPages and the training size): a re-submission
- * over an output its fingerprint completely committed returns without work, a resumed
- * one rewrites only the buckets it has not committed, and one with another nPages
+ * over an output its fingerprint completely committed returns without work; any other
+ * run (a crashed or partly lost commit, or another nPages) resumes its stage and
  * replaces the table — the north rule's long-corpus spark-submit shape.
  */
 object RunKG {

@@ -36,10 +36,11 @@ import graft.learn.LearnKernel.Utf8Order
  * The Jaccard link has one implementation, [[jaccardLinks]]: plain Scala over the
  * distinct forms, which the KG job runs on the driver (its subject forms are few;
  * [[graft.pipeline.KGPipeline]] bounds them). It normalizes, orders and hashes as the
- * Spark builtins do (`lower` + `regexp_replace` + `trim`, strings in UTF-8 byte order,
- * `md5` hex), so its edges equal a relational block self-join's. [[candidateEdges]] is
- * its DataFrame face. The embedding-scored variant [[candidateEdgesEmbedding]]
- * (battery q43) stays relational over [[blocked]] and [[cap]].
+ * Spark builtins of [[blocked]] do (a locale-free lowercase, strings in UTF-8 byte
+ * order, `md5` hex), so its edges equal a relational block self-join's.
+ * [[candidateEdges]] is its DataFrame face. The embedding-scored variant
+ * [[candidateEdgesEmbedding]] (battery q43) stays relational over [[blocked]] and
+ * [[cap]].
  */
 object EntityLink {
 
@@ -52,11 +53,20 @@ object EntityLink {
     concat(lit("a:"), substring(norm, 1, 1), lit(":"), size(toks)),
     concat(lit("m:"), array_min(transform(toks, t => substring(md5(t), 1, 12)))))
 
+  /** The normalized form: [[normalize]] as builtins (codegen, no Scala UDF), free of
+    * the JVM default locale that Spark's `lower` follows on non-ASCII text. Outside
+    * ASCII only U+0130 (to i + U+0307) and U+212A (to k) lower under `Locale.ROOT` to
+    * anything in `[a-z0-9]`, so those two and the ASCII capitals are mapped by hand
+    * and every other character becomes a separator either way. */
+  private def normalized(form: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    trim(regexp_replace(translate(regexp_replace(form, "\u0130", "i "),
+      "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u212A", "abcdefghijklmnopqrstuvwxyzk"),
+      "[^a-z0-9]+", " "))
+
   /** Normalized + exploded-by-family blocking relation (form, norm, toks, block). */
   private[graft] def blocked(forms: DataFrame): DataFrame =
     forms
-      // builtin (codegen) normalization, no Scala UDF in the path
-      .withColumn("norm", trim(regexp_replace(lower(col("form")), "[^a-z0-9]+", " ")))
+      .withColumn("norm", normalized(col("form")))
       .filter(length(col("norm")) > 0)
       .withColumn("toks", array_distinct(split(col("norm"), " ")))
       .withColumn("block", explode(blockKeys(col("norm"), col("toks"))))
@@ -98,9 +108,8 @@ object EntityLink {
     logCapDrops(who, r.getLong(0), r.getLong(1), maxBlockSize)
   }
 
-  /** Spark's `trim(regexp_replace(lower(form), "[^a-z0-9]+", " "))`, lowered with
-    * `Locale.ROOT` so no host's default locale changes a form (Spark's own `lower`
-    * follows it on non-ASCII text: under `tr` it maps U+0130 to a plain i). */
+  /** A form lowered with `Locale.ROOT` (so no host's default locale changes it), every
+    * run outside `[a-z0-9]` a single space, trimmed: the value of [[normalized]]. */
   private def normalize(form: String): String =
     form.toLowerCase(Locale.ROOT).replaceAll("[^a-z0-9]+", " ").trim
 

@@ -1,33 +1,19 @@
 package graft.mention
 
-import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.{Annotation, SentenceAnnots}
 
 /**
- * Group annotations into sentence units — the reference's per-sentence annotation query
- * (interval containment `a.start >= s.start and a.start < s.end`,
- * /root/reference/src/msa/db/MySQLDBInterface.java:136-138) realized as one pass:
- * annotations are already co-located per url, so a single groupByKey(url) + in-group
- * interval sweep replaces millions of per-sentence JDBC round trips. One shuffle on url,
- * then linear in-group work; url is a high-cardinality key so partitions stay balanced
- * (a url's group is one page's annotations — hot DOMAINS don't concentrate here, and a
- * pathological mega-page is a single group by semantic necessity). Keyed stages where a
- * genuinely hot key must be split use [[graft.scale.Skew]] salted agg/join;
- * AQE skew splitting handles residual runtime imbalance.
+ * Group one page's annotations into sentence units — the reference's per-sentence
+ * annotation query (interval containment `a.start >= s.start and a.start < s.end`,
+ * ref src/msa/db/MySQLDBInterface.java:136-138) realized as one in-page
+ * interval sweep instead of per-sentence JDBC round trips. Every caller groups a page
+ * in the task that annotated it ([[graft.nlp.Annotate.annotateSentences]], the page
+ * kernel), so no annotation row is shuffled.
  *
  * Sentences overrunning into later annotations are merged with following sentences,
  * mirroring ref GenSentences.java:351-366.
  */
 object Sentences {
-
-  def fromAnnotations(annots: Dataset[Annotation])(
-      implicit spark: SparkSession): Dataset[SentenceAnnots] = {
-    import spark.implicits._
-    annots.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val all = it.toVector
-      group(url, all)
-    }
-  }
 
   /** Pure in-group sentence assignment (unit-testable). */
   def group(url: String, all: Vector[Annotation]): Vector[SentenceAnnots] = {

@@ -32,26 +32,11 @@ object Annotate {
       .toDF("url", "text").as[(String, String)]
   }
 
-  /** Full annotation pass. Gazetteer is broadcast once (north-rule "automata broadcast
-    * to executors"); per-page work is independent → embarrassingly parallel. */
-  def annotate(pages: Dataset[Page], gaz: Gazetteer)(
-      implicit spark: SparkSession): Dataset[Annotation] = {
-    import spark.implicits._
-    val gazB = spark.sparkContext.broadcast(gaz)
-    extractText(pages).mapPartitions { it =>
-      val g = gazB.value
-      it.flatMap { case (url, text) => annotateOne(url, text, g) }
-    }
-  }
-
   /**
    * Fused page → sentence pass: extract+normalize, tokenize, gazetteer, AND sentence
    * grouping in ONE narrow stage. A page's annotations are born co-located in its
-   * task, so grouping them into sentences here avoids re-shuffling the entire
-   * annotation set on url — at corpus scale that shuffle (annotations are ~10× the
-   * text bytes) was the single biggest exchange in the pipeline. Use
-   * [[graft.mention.Sentences.fromAnnotations]] only when annotations arrive from an
-   * external table (e.g. resumed from the annotation sink) rather than this pass.
+   * task, so they are grouped into sentences there ([[graft.mention.Sentences.group]])
+   * and no annotation row is shuffled.
    *
    * @param extraByUrl additional per-url annotations (e.g. the gold spans of the
    *        validated training slice — small and broadcastable by design) merged in

@@ -50,8 +50,8 @@ import graft.sink.Materialize
  *
  * [[run]] and [[runCheckpointed]] share one body: learn → gate, the corpus pass and
  * canonicalization. They differ only in whether the `raw_triples` stage is
- * checkpointed and in the final write (`Materialize.write`, or `writeResumable` keyed
- * by the run's fingerprint). The job has no knobs: default MSA, stats and prior
+ * checkpointed and in whether the final write (`Materialize`'s one commit) carries the
+ * run's fingerprint. The job has no knobs: default MSA, stats and prior
  * configs, training gold of provenance `gold`, 16 output buckets.
  */
 object KGPipeline {
@@ -96,10 +96,13 @@ object KGPipeline {
    */
   def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
       implicit spark: SparkSession): Dataset[Triple] =
-    // the forms aggregate and the write both read the raw triples: persisted, the
-    // aggregate is the corpus pass and the write reads the cache
-    canonicalOf(extracted(pages, goldAnnots, gaz, checkpoint = None)
-      .persist(MEMORY_AND_DISK))
+    canonicalOf(persistedRaw(pages, goldAnnots, gaz))
+
+  /** The raw triples of [[run]], persisted: the forms aggregate and the write both read
+    * them, so the aggregate is the corpus pass and the write reads the cache. */
+  private def persistedRaw(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
+      gaz: Gazetteer)(implicit spark: SparkSession): DataFrame =
+    extracted(pages, goldAnnots, gaz, checkpoint = None).persist(MEMORY_AND_DISK)
 
   /** The page kernel learned on the gold slice (learn → gate): collects the training
     * slice and starts no job over the corpus. */
@@ -265,11 +268,14 @@ object KGPipeline {
   val CanonicalMetric = "graft.kg.canonical"
 
   /** Run + materialize to a 16-bucket subject-partitioned parquet table with its
-    * commit record. */
+    * commit record. The persisted raw triples are released once the write returns:
+    * the lineage it returns is a local relation. */
   def runAndWrite(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
-      outPath: String)(implicit spark: SparkSession): DataFrame =
-    Materialize.write(run(pages, goldAnnots, gaz), outPath, Buckets,
-      Some(CanonicalMetric))
+      outPath: String)(implicit spark: SparkSession): DataFrame = {
+    val raw = persistedRaw(pages, goldAnnots, gaz)
+    try Materialize.write(canonicalOf(raw), outPath, Buckets, Some(CanonicalMetric))
+    finally raw.unpersist()
+  }
 
   /**
    * Fully resumable variant, the production `spark-submit` path for long corpus runs
@@ -281,11 +287,12 @@ object KGPipeline {
    *    no gold row and no stage, runs no link, CC or dedup, and starts no Spark job;
    *  - otherwise the one `raw_triples` stage materializes through
    *    [[graft.runtime.StageCheckpoint]] with a commit record of the rows its write
-   *    counted (resumed when this fingerprint committed it), and
-   *    [[Materialize.writeResumable]] rewrites only the buckets of this
-   *    fingerprint's record whose data has gone, replacing the whole table when the
-   *    record is another fingerprint's (or missing) — so facts another fingerprint
-   *    committed never survive.
+   *    counted (resumed when this fingerprint committed it), and the commit replaces
+   *    the whole table with a record carrying `fingerprint` — whether the old record
+   *    is missing, another fingerprint's or lists a bucket whose data has gone — so
+   *    facts another fingerprint committed never survive. A record is trusted whole
+   *    or not at all, so a crash and a lost bucket resume through the commit a fresh
+   *    run makes.
    * Learning runs inside the `raw_triples` stage: a crash inside the corpus pass
    * re-learns on the driver (seconds) before re-running the pass, which it had to redo
    * anyway, and no learned table is checkpointed. Learning, gating and the corpus pass
@@ -297,7 +304,7 @@ object KGPipeline {
     Materialize.committedLineage(outPath, fingerprint).getOrElse {
       val rawTriples = extracted(pages, goldAnnots, gaz,
         Some((StageCheckpoint(stageDir), fingerprint)))
-      Materialize.writeResumable(canonicalOf(rawTriples), outPath, Buckets,
-        Some(CanonicalMetric), fingerprint)
+      Materialize.replace(canonicalOf(rawTriples), outPath, Buckets,
+        Some(CanonicalMetric), Some(fingerprint))
     }
 }

@@ -13,8 +13,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * in-flight counters a cluster operator watches while the job runs (the commit
  * records of [[StageCheckpoint]] and [[graft.sink.Materialize]] are the durable
  * record). Code that reads back the count of its own write uses an
- * `org.apache.spark.sql.Observation` instead; this collector serves counters attached
- * by name deep inside a job, such as [[graft.pipeline.KGPipeline.CanonicalMetric]].
+ * `org.apache.spark.sql.Observation`; this collector receives every named observation
+ * of a session, such as the commit's one `Observation`, which
+ * [[graft.sink.Materialize]] names [[graft.pipeline.KGPipeline.CanonicalMetric]] in the
+ * KG job.
  *
  * `observe` metrics are computed BY THE RUNNING QUERY itself — accumulator-style,
  * piggybacked on the rows the job already processes — so unlike a `count()` they cost
@@ -25,10 +27,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * (/root/reference/src/msa/IEDriver.java status machine); here they stream off the
  * listener bus with no store round-trip.
  *
- * Semantics: live counters measure work PERFORMED by this run. A fully-resumed
- * [[graft.sink.Materialize.writeResumable]] (no lost bucket) starts no query, so the
- * counters it names never fire; its commit record holds the counts. Zero work → zero
- * counters (MetricsSpec pins this contract).
+ * Semantics: live counters measure work PERFORMED by this run. A
+ * [[graft.sink.Materialize.writeResumable]] over a complete record starts no query, so
+ * the counters it names never fire; its commit record holds the counts. Zero work →
+ * zero counters (MetricsSpec pins this contract).
  *
  * As a [[QueryExecutionListener]] it keeps, per observation name, the latest metric
  * row plus how many actions fired it (a multi-action pipeline executes a shared stage

@@ -14,23 +14,24 @@ import graft.util.Fs
  * (sql/utilities-sqlserver.sql:1-2) re-expressed for Spark.
  *
  * Output layout: parquet partitioned by `bucket = pmod(xxhash64(subj), nBuckets)` —
- * subject-bucketed so downstream per-entity reads prune partitions, and writes are
- * idempotent per bucket via dynamic partition overwrite (the parquet stand-in for
- * Iceberg's overwritePartitions; no Iceberg runtime ships in this sandbox).
+ * subject-bucketed so downstream per-entity reads prune partitions. Every commit
+ * replaces the whole table in one static overwrite.
  *
- * Each commit writes the data, then one record file, `<path>_checkpoints/_LINEAGE`,
- * written whole: per non-empty bucket the rows and the hash its data write observed
- * (one `observe` on the written DataFrame, no second pass) and when it completed,
- * then the commit's fingerprint — the same whole-file commit
- * [[graft.runtime.StageCheckpoint]] leaves for a stage. A resumed run trusts the
- * buckets of a record its own fingerprint (or, without one, no fingerprint) wrote
- * and rewrites only those whose data has gone; a re-submission over a complete record
- * ([[committedLineage]]) skips the job.
+ * Each commit drops the old record, writes the data, then one record file,
+ * `<path>_checkpoints/_LINEAGE`, written whole: per non-empty bucket the rows and the
+ * hash its data write observed (one `observe` on the written DataFrame, which also
+ * carries the job's live counters; no second pass) and when it completed, then the
+ * commit's fingerprint — the same whole-file commit [[graft.runtime.StageCheckpoint]]
+ * leaves for a stage, under the same rule: a record is trusted whole or not at all. A
+ * resumable commit over a complete record (its fingerprint, or without one no
+ * fingerprint, and every bucket it lists still has data) returns the record's lineage
+ * and writes nothing ([[committedLineage]]); any other record is replaced with its
+ * table, so a lost bucket costs what a crashed commit costs.
  *
  * The store is a plain directory (hive layout readable by any engine, no manifest
  * indirection) and this object is its only commit path: the job has one writer that
- * never appends, reads no older version, and rewrites every bucket it commits in
- * full, so a bucket never accumulates files to compact.
+ * never appends, reads no older version, and rewrites every bucket in full, so a
+ * bucket never accumulates files to compact.
  */
 object Materialize {
 
@@ -45,26 +46,14 @@ object Materialize {
       when(col("provenance") === p, lit(r)).otherwise(acc)
     }
 
-  /** Live counters over the FINAL (post-dedup) triple set, attached via
-    * Dataset.observe when the caller names an observation — zero extra jobs; read
-    * back through [[graft.runtime.MetricsCollector]]. */
-  private def withCounters(df: DataFrame, name: Option[String]): DataFrame =
-    name.fold(df)(n => df.observe(n,
-      count(lit(1)).as("triples"),
-      approx_count_distinct(col("subj")).as("subjects_approx"),
-      approx_count_distinct(col("url")).as("docs_approx"),
-      min(col("score")).as("min_score")))
-
-  /** The bucket kernel: site precedence dedup, graph dedup, the bucket column
-    * `pmod(xxhash64(subj), nBuckets)`, then (when named) the observed counters. Two
-    * aligned shuffles: the site pass is url-keyed, the graph pass subj-keyed — both
-    * reduce before the exchange. */
-  private def bucketed(triples: Dataset[Triple], nBuckets: Int,
-      observeName: Option[String])(implicit spark: SparkSession): DataFrame = {
+  /** The bucket kernel: site precedence dedup, graph dedup, then the bucket column
+    * `pmod(xxhash64(subj), nBuckets)`. Two aligned shuffles: the site pass is
+    * url-keyed, the graph pass subj-keyed — both reduce before the exchange. */
+  private def bucketed(triples: Dataset[Triple], nBuckets: Int)(
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    withCounters(dedup(dedupPrecedence(triples.toDF()).as[Triple]).toDF()
-      .withColumn("bucket", pmod(xxhash64(col("subj")), lit(nBuckets)).cast("int")),
-      observeName)
+    dedup(dedupPrecedence(triples.toDF()).as[Triple]).toDF()
+      .withColumn("bucket", pmod(xxhash64(col("subj")), lit(nBuckets)).cast("int"))
   }
 
   /** Columns of the lineage a commit returns, one row per committed bucket; a commit
@@ -106,12 +95,11 @@ object Materialize {
 
   /** Full write: every bucket of `triples` replaces the table at `path` (buckets
     * the new set does not touch are gone too), and its commit record replaces the
-    * old one, which is dropped before the data write. Returns the record's lineage,
-    * one row per non-empty bucket. */
+    * old one. Returns the record's lineage, one row per non-empty bucket. */
   def write(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
-    commit(triples, path, nBuckets, observeName, resume = false, fingerprint = None)
+    replace(triples, path, nBuckets, observeName, fingerprint = None)
 
   /** Order-insensitive dedup: one row per (subj, pred, obj); the surviving evidence
     * row is picked ATOMICALLY (one ordered struct — strongest provenance first, then
@@ -177,78 +165,58 @@ object Materialize {
   }
 
   /**
-   * Resumable write: consult the commit record and (re)write ONLY the buckets it
-   * cannot vouch for — the north rule's "resumable from checkpoint with per-partition
-   * lineage". A record lists the buckets its commit wrote; a bucket whose partition has
-   * since lost its data is rewritten alone (dynamic partition overwrite, the parquet
-   * stand-in for Iceberg overwritePartitions) and the record rewritten after it.
-   * Idempotent: a re-run over a complete record writes nothing and starts no Spark
-   * job. It is keyed by what wrote the record, not by the triples: only a record
-   * written without a fingerprint is trusted, so a table a fingerprinted commit wrote
-   * is replaced as [[write]] does.
+   * Resumable write — the north rule's "resumable from checkpoint with per-partition
+   * lineage". Over a complete record written without a fingerprint it returns that
+   * record's lineage, writes nothing and starts no Spark job; otherwise it replaces
+   * the table as [[write]] does. It is keyed by what wrote the record, not by the
+   * triples: a table a fingerprinted commit wrote is replaced.
    */
   def writeResumable(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
       implicit spark: SparkSession): DataFrame =
-    commit(triples, path, nBuckets, observeName, resume = true, fingerprint = None)
-
-  /** [[writeResumable]] keyed by the run's `fingerprint`: the record carries it, and
-    * its buckets are trusted only by a commit of the same fingerprint. A commit that
-    * trusts none replaces the table as [[write]] does, so facts another fingerprint
-    * committed never survive. */
-  private[graft] def writeResumable(triples: Dataset[Triple], path: String,
-      nBuckets: Int, observeName: Option[String], fingerprint: String)(
-      implicit spark: SparkSession): DataFrame =
-    commit(triples, path, nBuckets, observeName, resume = true, Some(fingerprint))
+    recorded(path, "").map(lineageOf(_, None))
+      .getOrElse(replace(triples, path, nBuckets, observeName, fingerprint = None))
 
   /** The lineage of a table `fingerprint` has completely committed: its record
     * carries `fingerprint` and every bucket it lists still has its data. None
     * otherwise. A read of the record and ≤ nBuckets file probes; no Spark job. */
   private[graft] def committedLineage(path: String, fingerprint: String)(
       implicit spark: SparkSession): Option[DataFrame] =
-    recorded(path, fingerprint).collect { case (kept, Nil) =>
-      lineageOf(kept, Some(fingerprint)) }
+    recorded(path, fingerprint).map(lineageOf(_, Some(fingerprint)))
 
-  /** The one commit. A full write and a resume differ only in which buckets they
-    * write; a resume that trusts no bucket replaces, as a full write does. Returns the
-    * record's lineage. */
-  private def commit(triples: Dataset[Triple], path: String, nBuckets: Int,
-      observeName: Option[String], resume: Boolean, fingerprint: Option[String])(
+  /** The one commit: drops the record, writes every bucket of `triples` in one static
+    * overwrite of the table at `path`, then writes the record carrying `fingerprint`
+    * (`""` without one). Returns the record's lineage. */
+  private[graft] def replace(triples: Dataset[Triple], path: String, nBuckets: Int,
+      observeName: Option[String], fingerprint: Option[String])(
       implicit spark: SparkSession): DataFrame = {
-    val fp = fingerprint.getOrElse("")
-    val (kept, lost) = (if (resume) recorded(path, fp) else None).getOrElse((Nil, Nil))
-    // counters observe the FULL canonical set (before the lost-bucket filter), so a
-    // resumed run still reports what the job represents, not just what it rewrote
-    def all = bucketed(triples, nBuckets, observeName)
-    val committed =
-      if (kept.isEmpty) {
-        // the record that no longer holds goes BEFORE the data it describes: a crash
-        // mid-write leaves nothing trusted over rewritten data
-        Fs.delete(path + "_checkpoints")
-        Some(written(all, path, nBuckets, "static"))
-      } else if (lost.isEmpty) None
-      // the record stays during the rewrite: each partition lands by one rename, so
-      // after a crash a lost bucket is either still missing or complete
-      else Some(kept ++ written(all.filter(col("bucket").isin(lost: _*)), path,
-        nBuckets, "dynamic"))
-    committed.foreach(bs =>
-      Fs.writeRecord(recordPath(path), render(bs.sortBy(_.bucket), fp)))
-    lineageOf(committed.getOrElse(kept), fingerprint)
+    // the record goes BEFORE the data it describes: a crash mid-write leaves nothing
+    // trusted over rewritten data
+    Fs.delete(path + "_checkpoints")
+    val committed = written(bucketed(triples, nBuckets), path, nBuckets, observeName)
+    Fs.writeRecord(recordPath(path), render(committed, fingerprint.getOrElse("")))
+    lineageOf(committed, fingerprint)
   }
 
-  /** Writes `df` partitioned by bucket under `path` and returns, per non-empty bucket,
-    * what the write itself observed: 2 × nBuckets aggregates in one `observe`. */
-  private def written(df: DataFrame, path: String, nBuckets: Int, overwrite: String)(
-      implicit spark: SparkSession): Seq[Committed] = {
-    val counts = Observation()
+  /** Writes `df` partitioned by bucket over the table at `path` and returns, per
+    * non-empty bucket, what the write itself observed: 2 × nBuckets aggregates in one
+    * `Observation`, named `observeName` when given (so a
+    * [[graft.runtime.MetricsCollector]] receives it), which also carries the live
+    * counters over the whole written set: `triples`, `subjects_approx`, `docs_approx`
+    * and `min_score`. */
+  private def written(df: DataFrame, path: String, nBuckets: Int,
+      observeName: Option[String])(implicit spark: SparkSession): Seq[Committed] = {
+    val counts = observeName.fold(Observation())(Observation(_))
     val factHash = xxhash64(col("subj"), col("pred"), col("obj"))
-    val aggs = (0 until nBuckets).flatMap { b =>
+    val perBucket = (0 until nBuckets).flatMap { b =>
       val in = col("bucket") === b
       Seq(count(when(in, 1)).as(s"rows_$b"),
         coalesce(bit_xor(when(in, factHash)), lit(0L)).as(s"hash_$b"))
     }
-    df.observe(counts, aggs.head, aggs.tail: _*).write.mode("overwrite")
-      .option("partitionOverwriteMode", overwrite).partitionBy("bucket").parquet(path)
+    val live = Seq(approx_count_distinct(col("subj")).as("subjects_approx"),
+      approx_count_distinct(col("url")).as("docs_approx"), min(col("score")).as("min_score"))
+    df.observe(counts, count(lit(1)).as("triples"), live ++ perBucket: _*)
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
     val metrics = counts.get
     def metric(name: String) = metrics.getOrElse(name,
       sys.error(s"commit of $path: $name not observed")).asInstanceOf[Long]
@@ -257,17 +225,14 @@ object Materialize {
       .filter(_.rows > 0)
   }
 
-  /** The record's buckets under `path` when it carries `fingerprint`, split into those
-    * whose partition still has data (trusted) and the numbers of the others (lost);
-    * None without such a record. The record is trusted only as far as the data it
-    * describes, never instead of it. ≤ nBuckets file probes. */
+  /** The buckets of the record under `path` when it is complete: it carries
+    * `fingerprint` and every bucket it lists still has data. None otherwise: the
+    * record is trusted whole or not at all, and only as far as the data it describes,
+    * never instead of it. ≤ nBuckets file probes. */
   private def recorded(path: String, fingerprint: String)(
-      implicit spark: SparkSession): Option[(Seq[Committed], Seq[Int])] =
-    readRecord(path).collect { case (buckets, fp) if fp == fingerprint =>
-      val (kept, lost) =
-        buckets.partition(b => Fs.parquetDataExists(s"$path/bucket=${b.bucket}"))
-      (kept, lost.map(_.bucket))
-    }
+      implicit spark: SparkSession): Option[Seq[Committed]] =
+    readRecord(path).collect { case (buckets, fp) if fp == fingerprint &&
+        buckets.forall(b => Fs.parquetDataExists(s"$path/bucket=${b.bucket}")) => buckets }
 
   /** The lineage of `buckets` as a local relation: collecting it starts no job. */
   private def lineageOf(buckets: Seq[Committed], fingerprint: Option[String])(

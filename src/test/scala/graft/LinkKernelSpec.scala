@@ -64,19 +64,31 @@ class LinkKernelSpec extends AnyFunSuite with SparkTest {
       "zulu international"))), links.edges)
   }
 
-  test("a Turkish default locale changes no normalized form, edge or component") {
-    val dotted = Seq("\u0130zmir Port", "izmir port", "IZMIR PORT")
-    val rootLinks = EntityLink.jaccardLinks(dotted, minJaccard = 0.6)
+  /** Runs `body` under the JVM default locale `tag`. */
+  private def underLocale[T](tag: String)(body: => T): T = {
     val saved = java.util.Locale.getDefault
-    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
-    try {
-      // under "tr" a default-locale lowercase maps I to dotless ı
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag(tag))
+    try body finally java.util.Locale.setDefault(saved)
+  }
+
+  test("a Turkish default locale changes no normalized form, edge or component") {
+    val dotted = Seq("\u0130zmir Port", "izmir port", "IZMIR PORT", "i\u0307zmir port")
+    val rootLinks = parity(dotted)
+    underLocale("tr") {
+      // under "tr" a default-locale lowercase maps I to dotless ı and U+0130 to plain i
       val links = parity(Seq("TITAN", "Titan", "TITAN LINE", "titan line"))
       assert(links.edges.map(e => (e._1, e._2)).contains(("TITAN", "Titan")))
-      // Spark's `lower` maps U+0130 to plain i under "tr" (not to i + U+0307 as under
-      // any other locale), so here the kernel is compared with itself, not with Spark
-      assert(EntityLink.jaccardLinks(dotted, minJaccard = 0.6) === rootLinks)
-    } finally java.util.Locale.setDefault(saved)
+      assert(parity(dotted) === rootLinks)
+    }
+  }
+
+  test("a Lithuanian default locale changes no normalized form, edge or component") {
+    // under "lt" a default-locale lowercase keeps the dot of an accented I: Ì lowers to
+    // i + U+0307 + U+0300, under any other locale to ì
+    val accented = Seq("\u00CCzmir Port", "\u00CDzmir port", "\u0128zmir port",
+      "izmir port", "zmir port")
+    val rootLinks = parity(accented)
+    underLocale("lt")(assert(parity(accented) === rootLinks))
   }
 
   test("U+0130, U+212A and the supplementary plane normalize and order as Spark does") {

@@ -76,6 +76,28 @@ class MetricsSpec extends AnyFunSuite with SparkTest {
 
   test("kg write path reports canonical-triple counters") {
     import spark.implicits._
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    // every node of an executed plan: AQE plans, query stages and command plans included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => (p.children ++ p.innerChildren.collect { case c: SparkPlan => c })
+        .flatMap(nodes)
+    })
+    // the executed plan of every data write, kept off the listener bus
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        val plan = nodes(qe.executedPlan)
+        if (plan.exists(_.isInstanceOf[DataWritingCommandExec])) writes.add(plan)
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     val mc = new MetricsCollector(spark)
     val out = java.nio.file.Files.createTempDirectory("metrics_kg").toString
     try {
@@ -83,15 +105,23 @@ class MetricsSpec extends AnyFunSuite with SparkTest {
       val pages = graft.testgen.CorpusGen.pagesDS(nPages, partitions = 4)
       val gold = spark.createDataset(graft.testgen.CorpusGen.pages(10)
         .flatMap(graft.testgen.CorpusGen.goldAnnotations))
-      graft.pipeline.KGPipeline.runAndWrite(pages, gold,
+      val cps = graft.pipeline.KGPipeline.runAndWrite(pages, gold,
         graft.testgen.CorpusGen.gazetteer, s"$out/triples")
       val m = mc.await(graft.pipeline.KGPipeline.CanonicalMetric)
         .getOrElse(fail("canonical metric never arrived"))
       val written = spark.read.parquet(s"$out/triples").count()
       assert(m("triples") == written, s"snapshot: ${mc.snapshot}")
+      assert(m("triples") == cps.agg(sum("rows_out")).head.getLong(0))
       assert(m("docs_approx").asInstanceOf[Long] > 0L)
+      // one observation per commit write: the live counters ride the lineage's
+      val deadline = System.nanoTime() + 10000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(writes.size === 1, s"data writes: $writes")
+      assert(writes.peek().count(_.isInstanceOf[CollectMetricsExec]) === 1,
+        writes.peek().head)
     } finally {
       mc.close()
+      spark.listenerManager.unregister(listener)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     }
   }

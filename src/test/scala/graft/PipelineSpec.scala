@@ -59,6 +59,20 @@ class PipelineSpec extends AnyFunSuite with SparkTest {
     assert(rows(s"$dir/checkpointed") === plain)
   }
 
+  test("runAndWrite leaves no persisted data set behind") {
+    import spark.implicits._
+    val all = CorpusGen.pages(40)
+    val pages = spark.createDataset(all.map(_.page))
+    val goldAnnots = spark.createDataset(all.take(10).flatMap(CorpusGen.goldAnnotations))
+    val dir = java.nio.file.Files.createTempDirectory("graft_unpersist").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cps = KGPipeline.runAndWrite(pages, goldAnnots, CorpusGen.gazetteer, s"$dir/out")(
+      spark)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    // the returned lineage is a local relation: it reads nothing released
+    assert(cps.count() > 0)
+  }
+
   test("byte-identity: per-url normalized text hashes are frozen (golden)") {
     val p = CorpusGen.pages(3)
     val hashes = p.map(gp => graft.ingest.Normalize.sha256(

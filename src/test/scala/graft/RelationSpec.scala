@@ -81,8 +81,8 @@ class RelationSpec extends AnyFunSuite with SparkTest {
     import spark.implicits._
     val gen = graft.testgen.CorpusGen.pages(30)
     val pages = spark.createDataset(gen.map(_.page))
-    val annots = graft.nlp.Annotate.annotate(pages, graft.testgen.CorpusGen.gazetteer)
-    val sents = graft.mention.Sentences.fromAnnotations(annots)
+    val sents = graft.nlp.Annotate.annotateSentences(pages,
+      graft.testgen.CorpusGen.gazetteer)
     val p = relPat(Grid.Subject, ":token|string|was", ":token|string|founded",
       ":token|string|in", Grid.Target)
     val triples = Extract.relationTriples(sents, Seq(p)).collect()

@@ -243,17 +243,22 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     val (stageDir, outDir) = (tmp(), tmp() + "/triples")
     val (pages, gold) = corpus(60)
     val fp = "corpus-60-v1"
-    graft.pipeline.KGPipeline.runCheckpointed(
-      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    def completed(lineage: org.apache.spark.sql.DataFrame) =
+      lineage.collect().map(r => r.getInt(0) -> r.getTimestamp(4)).toMap
+    val firstAt = completed(graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir))
     val first = facts(outDir)
     val victim = new java.io.File(outDir).list().filter(_.startsWith("bucket=")).min
     rmrf(s"$outDir/$victim")
     assert(facts(outDir) !== first)
 
-    graft.pipeline.KGPipeline.runCheckpointed(
-      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    val at = completed(graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir))
     assert(new java.io.File(s"$outDir/$victim").isDirectory, s"$victim was not rewritten")
     assert(facts(outDir) === first, "the re-submission must commit the first run's facts")
+    // the record is trusted whole or not at all: the re-submission replaces the table
+    assert(at.keySet === firstAt.keySet)
+    assert(at.forall { case (b, t) => t.after(firstAt(b)) }, s"$firstAt -> $at")
   }
 
   test("runCheckpointed: a re-submission under a new fingerprint commits only its own " +

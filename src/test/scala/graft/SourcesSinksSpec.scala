@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model.Triple
 import graft.sink.Materialize
@@ -105,9 +106,10 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(cps.columns.contains("bucket") && cps.columns.contains("output_hash"))
   }
 
-  test("resumable materialize: only pending buckets are written on resume") {
+  test("resumable materialize: a resume over lost buckets rewrites every bucket") {
     import spark.implicits._
-    val path = tmpDir() + "/triples"
+    val dir = tmpDir()
+    val path = dir + "/triples"
     val triples = spark.createDataset((0 until 200).map(i =>
       Triple(s"subj$i", "p", s"o$i", s"https://x/$i", 0, 1, 1L, 1.0)))
     val nB = 8
@@ -116,6 +118,8 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(cps1.count() === nB)
     val total = spark.read.parquet(path).count()
     assert(total === 200)
+    val firstTimes = recordTimes(path)
+    assert(firstTimes.keySet === (0 until nB).toSet)
 
     // 3 buckets' data is lost; the record, written whole, still lists them
     val lost = Seq(1, 4, 6)
@@ -125,15 +129,15 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     }
     assert(spark.read.parquet(path).count() < 200)
 
-    // resume: exactly the lost buckets are rewritten, the committed ones keep their files
-    def bucketFiles(b: Int): Map[String, Long] =
-      new java.io.File(s"$path/bucket=$b").listFiles().map(f => f.getName -> f.lastModified).toMap
-    val committed = (0 until nB).filterNot(lost.contains)
-    val before = committed.map(bucketFiles)
+    // the record is trusted whole or not at all: the resume replaces the table, so
+    // every record line gets a new completion time
     val cps2 = Materialize.writeResumable(triples, path, nB)
-    assert(committed.map(bucketFiles) === before, "a committed bucket was rewritten")
+    val times = recordTimes(path)
+    assert(times.keySet === firstTimes.keySet)
+    assert(times.forall { case (b, at) => at > firstTimes(b) }, s"$firstTimes -> $times")
+    assert(committedFacts(path) === triples.collect().map(t => (t.subj, t.pred, t.obj)).toSet)
     assert(spark.read.parquet(path).count() === 200)
-    assert(cps2.count() === nB)
+    assert(lineage(cps2) === lineage(Materialize.write(triples, s"$dir/fresh", nB)))
 
     // idempotent: a third call with a complete checkpoint table writes nothing new
     val mtimes = new java.io.File(path).listFiles().map(f => f.getName -> f.lastModified).toMap
@@ -148,7 +152,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     def facts(obj: String) = spark.createDataset((0 until 200).map(i =>
       Triple(s"subj$i", "p", s"$obj$i", s"https://x/$i", 0, 1, 1L, 1.0)))
     val nB = 8
-    Materialize.writeResumable(facts("a"), path, nB, None, "fp-a")
+    resumable(facts("a"), path, nB, "fp-a")
     assert(Materialize.committedLineage(path, "fp-a").isDefined)
     // every bucket holds a lineage row, but fp-a wrote it: none may be trusted here
     Materialize.writeResumable(facts("b"), path, nB)
@@ -206,10 +210,10 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     val nB = 8
     val (_, plain) = SparkTestBase.jobsStarted("ss.write") {
       Materialize.write(triples, s"$dir/plain", nB) }
-    val (_, resumable) = SparkTestBase.jobsStarted("ss.resumable") {
-      Materialize.writeResumable(triples, s"$dir/resumable", nB, None, "fp-a") }
+    val (_, fingerprinted) = SparkTestBase.jobsStarted("ss.resumable") {
+      resumable(triples, s"$dir/resumable", nB, "fp-a") }
     // the replace writes every bucket: it needs no pending-bucket job
-    assert(resumable === plain)
+    assert(fingerprinted === plain)
     // its completion record lists every bucket the replace wrote
     val cps = Materialize.committedLineage(s"$dir/resumable", "fp-a")
     assert(cps.map(_.count()) === Some(nB.toLong))
@@ -241,13 +245,33 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(again === first)
   }
 
+  /** The fingerprinted resumable commit `KGPipeline.runCheckpointed` makes: the
+    * lineage of a complete record of `fp`, else a replace carrying `fp`. */
+  private def resumable(triples: Dataset[Triple], path: String, nB: Int,
+      fp: String): DataFrame =
+    Materialize.committedLineage(path, fp)
+      .getOrElse(Materialize.replace(triples, path, nB, None, Some(fp)))
+
+  /** The (subj, pred, obj) facts of the table at `path`. */
+  private def committedFacts(path: String): Set[(String, String, String)] =
+    spark.read.parquet(path).select("subj", "pred", "obj").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+
+  /** Completion time (epoch ms) per bucket line of the commit record under `path`. */
+  private def recordTimes(path: String): Map[Int, Long] = {
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"${path}_checkpoints/_LINEAGE")).toArray(Array.empty[String])
+    lines.slice(1, 1 + lines(0).toInt).map(_.split(','))
+      .map(f => f(0).toInt -> f(3).toLong).toMap
+  }
+
   /** (bucket, rows, hash) per bucket of the table at `path`, from its data. */
   private def oracle(path: String): Set[(Int, Long, Long)] =
     spark.read.parquet(path).groupBy(col("bucket"))
       .agg(count(lit(1)), expr("bit_xor(xxhash64(subj, pred, obj))")).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
 
-  private def lineage(cps: org.apache.spark.sql.DataFrame): Set[(Int, Long, Long)] =
+  private def lineage(cps: DataFrame): Set[(Int, Long, Long)] =
     cps.select("bucket", "rows_out", "output_hash").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
 
@@ -258,20 +282,20 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     val triples = spark.createDataset((0 until 500).map(i =>
       Triple(s"subj${i % 97}", s"p${i % 3}", s"o$i", s"https://x/$i", 0, 1, 1L, 1.0)))
     val nB = 8
-    val replaced = Materialize.writeResumable(triples, path, nB, None, "fp-a")
+    val replaced = resumable(triples, path, nB, "fp-a")
     assert(lineage(replaced) === oracle(path))
     assert(lineage(replaced).size === nB)
 
     val victim = new java.io.File(path).list().filter(_.startsWith("bucket=")).min
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$path/$victim"))
-    val resumed = Materialize.writeResumable(triples, path, nB, None, "fp-a")
+    val resumed = resumable(triples, path, nB, "fp-a")
     assert(lineage(resumed) === oracle(path))
     assert(lineage(resumed) === lineage(replaced))
-    // only the rewritten bucket completed in the resume
+    // the record is trusted whole or not at all: every bucket completed in the resume
     val at = resumed.collect().map(r => r.getInt(0) -> r.getTimestamp(4)).toMap
     val before = replaced.collect().map(r => r.getInt(0) -> r.getTimestamp(4)).toMap
-    assert(at.filter { case (b, t) => t != before(b) }.keySet ===
-      Set(victim.stripPrefix("bucket=").toInt))
+    assert(at.keySet === before.keySet)
+    assert(at.forall { case (b, t) => t.after(before(b)) }, s"$before -> $at")
   }
 
   test("an output in the older layout (a parquet _checkpoints table and a _COMMITTED " +
@@ -297,7 +321,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
       ((0 until nB).mkString(",") + "\nfp-a").getBytes)
     assert(Materialize.committedLineage(path, "fp-a").isEmpty)
 
-    val cps = Materialize.writeResumable(facts("new"), path, nB, None, "fp-a")
+    val cps = resumable(facts("new"), path, nB, "fp-a")
     Materialize.write(facts("new"), s"$dir/fresh", nB)
     assert(back(path) === back(s"$dir/fresh"), "the older layout's facts survived")
     assert(lineage(cps) === oracle(path))

@@ -66,8 +66,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val pages = spark.createDataset(gen.map(_.page))
 
     // batch path (joins + windows), with the plain/relation pattern split
-    val annots = graft.nlp.Annotate.annotate(pages, CorpusGen.gazetteer)
-    val sents = graft.mention.Sentences.fromAnnotations(annots)
+    val sents = graft.nlp.Annotate.annotateSentences(pages, CorpusGen.gazetteer)
     val upgraded = seedPatterns.map(p => p -> Extract.toRelationPattern(p))
     val plain = upgraded.collect { case (p, None) => p }
     val rel = upgraded.collect { case (_, Some(r)) => r }
