@@ -10,10 +10,11 @@ import org.apache.spark.sql.SparkSession
  * Synthesizes the deterministic corpus (seed 42), runs the full pipeline
  * (annotate → learn → gate → extract → link → canonicalize), materializes
  * 16-bucket subject-partitioned triples under outDir and their commit record under
- * `<outDir>_checkpoints` (a full write: a previous table there is replaced), prints
- * one JSON metrics line. The job takes no
- * configuration beyond these arguments: KGPipeline fixes the learning configs and
- * the bucket count.
+ * `<outDir>_checkpoints` (a full write: a previous table there is replaced), then
+ * prints one JSON metrics line read from that commit record: the committed triples
+ * and, under `observed`, the counters the commit's write observed. Reading them starts
+ * no Spark job. The job takes no configuration beyond these arguments: KGPipeline
+ * fixes the learning configs and the bucket count.
  *
  * With a 4th arg `stageDir`, runs the RESUMABLE production path instead
  * ([[graft.pipeline.KGPipeline.runCheckpointed]]): the raw_triples stage (learning
@@ -22,7 +23,9 @@ import org.apache.spark.sql.SparkSession
  * is keyed by the run's fingerprint (nPages and the training size): a re-submission
  * over an output its fingerprint completely committed returns without work; any other
  * run (a crashed or partly lost commit, or another nPages) resumes its stage and
- * replaces the table — the north rule's long-corpus spark-submit shape.
+ * replaces the table — the north rule's long-corpus spark-submit shape. A
+ * re-submission prints the counters its record holds, the same as the run that
+ * committed it.
  */
 object RunKG {
   def main(args: Array[String]): Unit = {
@@ -34,18 +37,14 @@ object RunKG {
     implicit val spark: SparkSession = graft.util.Sessions.local(cores, "graft-kg")
     import spark.implicits._
 
-    // live counters off the listener bus (Dataset.observe — zero extra jobs); the
-    // durable record is the commit's per-bucket record, returned as `cps`
-    val metrics = new graft.runtime.MetricsCollector(spark)
     val t0 = System.nanoTime()
-    val startedAt = new java.sql.Timestamp(System.currentTimeMillis())
     val nTrain = math.min(nPages / 4, 200)
     // corpus generated on executors (no driver materialization, no input shuffle)
     val pages = graft.testgen.CorpusGen.pagesDS(nPages, partitions = cores * 4)
     val goldAnnots = spark.createDataset(graft.testgen.CorpusGen.pages(nTrain)
       .flatMap(graft.testgen.CorpusGen.goldAnnotations))
 
-    val cps = stageDir match {
+    stageDir match {
       case Some(sd) =>
         // fingerprint = the full input/config identity of this synthetic run
         graft.pipeline.KGPipeline.runCheckpointed(
@@ -55,26 +54,16 @@ object RunKG {
         graft.pipeline.KGPipeline.runAndWrite(
           pages, goldAnnots, graft.testgen.CorpusGen.gazetteer, outDir)
     }
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max, sum}
-    val fin = cps.agg(coalesce(sum("rows_out"), lit(0L)),
-      max(col("completed_at") >= lit(startedAt))).head()
-    val rows = fin.getLong(0)
-    // On a fully-resumed run no bucket was rewritten this invocation, the observe
-    // node never executes (documented MetricsCollector contract) and the metric can
-    // never arrive — don't stall the full await timeout waiting for it.
-    val wroteThisRun = !fin.isNullAt(1) && fin.getBoolean(1)
+    // the commit's counters, read from its record: a file read, no Spark job
+    val rec = graft.sink.Materialize.record(outDir)
+      .getOrElse(sys.error(s"no commit record under $outDir"))
     val sec = (System.nanoTime() - t0) / 1e9
     val mode = if (stageDir.isDefined) "kg-checkpointed" else "kg"
-    val live = (if (wroteThisRun)
-        metrics.await(graft.pipeline.KGPipeline.CanonicalMetric, 15000L)
-      else None)
-      .map(m => s""","observed":{"triples":${m("triples")},""" +
-        s""""subjects_approx":${m("subjects_approx")},""" +
-        s""""docs_approx":${m("docs_approx")}}""")
-      .getOrElse("")
+    val rows = rec.triples
     println(f"""{"job":"$mode","pages":$nPages,"triples":$rows,"sec":$sec%.2f,""" +
       f""""docs_per_sec":${nPages / sec}%.1f,"triples_per_sec":${rows / sec}%.1f,"cores":$cores""" +
-      live + "}")
+      s""","observed":{"triples":$rows,"subjects_approx":${rec.subjectsApprox},""" +
+      s""""docs_approx":${rec.docsApprox}}}""")
     spark.stop()
   }
 }

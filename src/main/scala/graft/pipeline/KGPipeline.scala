@@ -42,14 +42,14 @@ import graft.sink.Materialize
  * sentence or mention row leaves the task that read its page. Learning only ever
  * touches the validated slice, and runs as plain Scala over it — exactly the
  * reference's design: learning single-threaded on status-1 docs, extraction on
- * status-0 (SURVEY.md §7.4.2). Between the slice's collect and the corpus pass [[run]]
- * starts no Spark job. Canonicalization follows the same design (the reference merges
- * duplicates with a plain walk, AnnotateDuplicate.java:106-270): the job has few
- * distinct subjects, so it links them on the driver, with no join, window, persist
- * or checkpoint.
+ * status-0 (SURVEY.md §7.4.2). Between the slice's collect and the corpus pass neither
+ * entry point starts a Spark job. Canonicalization follows the same design (the
+ * reference merges duplicates with a plain walk, AnnotateDuplicate.java:106-270): the
+ * job has few distinct subjects, so it links them on the driver, with no join, window,
+ * persist or checkpoint.
  *
- * [[run]] and [[runCheckpointed]] share one body: learn → gate, the corpus pass and
- * canonicalization. They differ only in whether the `raw_triples` stage is
+ * [[runAndWrite]] and [[runCheckpointed]] share one body: learn → gate, the corpus
+ * pass and canonicalization. They differ only in whether the `raw_triples` stage is
  * checkpointed and in whether the final write (`Materialize`'s one commit) carries the
  * run's fingerprint. The job has no knobs: default MSA, stats and prior
  * configs, training gold of provenance `gold`, 16 output buckets.
@@ -66,43 +66,28 @@ object KGPipeline {
   /** Most training pages (distinct gold urls) the driver collects and learns on. The
     * validated slice is small by design; a larger one fails the job before any page is
     * read rather than exhausting the driver. */
-  private val MaxTrainingPages = 5000
+  private[graft] val MaxTrainingPages = 5000
 
   /** Most distinct subject forms canonicalization links on the driver. At the limit,
     * on 2–4-token names over a Zipf vocabulary, linking peaks at about 0.3 GB of heap
     * (it completes under -Xmx256m) and about 12 s on one core, most of it in the
     * capped 1,000-form blocks. A corpus with more distinct subjects fails the job after
     * the corpus pass rather than exhausting the driver. */
-  private val MaxLinkForms = 200000
+  private[graft] val MaxLinkForms = 200000
 
-  /** Fails loudly when a training slice of `pages` pages exceeds `limit`. */
-  private[graft] def checkSliceSize(pages: Int, limit: Int = MaxTrainingPages): Unit =
-    if (pages > limit) throw new IllegalArgumentException(
-      s"training slice of $pages pages exceeds the limit of $limit pages: learning " +
-        "collects the validated slice to the driver, so train on a smaller gold sample")
+  /** Fails loudly when a training slice of `pages` pages exceeds [[MaxTrainingPages]]. */
+  private[graft] def checkSliceSize(pages: Int): Unit =
+    if (pages > MaxTrainingPages) throw new IllegalArgumentException(
+      s"training slice of $pages pages exceeds the limit of $MaxTrainingPages pages: " +
+        "learning collects the validated slice to the driver, so train on a smaller " +
+        "gold sample")
 
-  /** Fails loudly when more than `limit` distinct subject forms were collected. */
-  private[graft] def checkFormCount(forms: Int, limit: Int = MaxLinkForms): Unit =
-    if (forms > limit) throw new IllegalArgumentException(
-      s"$forms or more distinct subject forms exceed the limit of $limit forms: " +
+  /** Fails loudly when more than [[MaxLinkForms]] distinct subject forms were
+    * collected. */
+  private[graft] def checkFormCount(forms: Int): Unit =
+    if (forms > MaxLinkForms) throw new IllegalArgumentException(
+      s"$forms or more distinct subject forms exceed the limit of $MaxLinkForms forms: " +
         "canonicalization links the subject forms on the driver")
-
-  /**
-   * The canonical triples of the corpus.
-   *
-   * @param pages      full corpus
-   * @param goldAnnots gold target-span annotations for the training slice
-   * @param gaz        gazetteer for Lookup annotations (broadcast)
-   */
-  def run(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer)(
-      implicit spark: SparkSession): Dataset[Triple] =
-    canonicalOf(persistedRaw(pages, goldAnnots, gaz))
-
-  /** The raw triples of [[run]], persisted: the forms aggregate and the write both read
-    * them, so the aggregate is the corpus pass and the write reads the cache. */
-  private def persistedRaw(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
-      gaz: Gazetteer)(implicit spark: SparkSession): DataFrame =
-    extracted(pages, goldAnnots, gaz, checkpoint = None).persist(MEMORY_AND_DISK)
 
   /** The page kernel learned on the gold slice (learn → gate): collects the training
     * slice and starts no job over the corpus. */
@@ -262,17 +247,19 @@ object KGPipeline {
       dictEntries, gaz, StatsCfg.matcher)
   }
 
-  /** Observed-metric name of the canonical-triple counters attached by the write
-    * paths (post-dedup — counts what lands in the output table); read it back
-    * through a [[graft.runtime.MetricsCollector]]. */
+  /** Name of the `Observation` of the KG commit write (post-dedup — it counts what
+    * lands in the output table). Its counters are kept in the commit record, read
+    * back with [[Materialize.record]]. */
   val CanonicalMetric = "graft.kg.canonical"
 
-  /** Run + materialize to a 16-bucket subject-partitioned parquet table with its
-    * commit record. The persisted raw triples are released once the write returns:
-    * the lineage it returns is a local relation. */
+  /** The canonical triples of the corpus, materialized to a 16-bucket
+    * subject-partitioned parquet table with its commit record. The raw triples are
+    * persisted while the forms aggregate and the write both read them (so the
+    * aggregate is the corpus pass and the write reads the cache), and released once
+    * the write returns: the lineage it returns is a local relation. */
   def runAndWrite(pages: Dataset[Page], goldAnnots: Dataset[Annotation], gaz: Gazetteer,
       outPath: String)(implicit spark: SparkSession): DataFrame = {
-    val raw = persistedRaw(pages, goldAnnots, gaz)
+    val raw = extracted(pages, goldAnnots, gaz, checkpoint = None).persist(MEMORY_AND_DISK)
     try Materialize.write(canonicalOf(raw), outPath, Buckets, Some(CanonicalMetric))
     finally raw.unpersist()
   }
@@ -284,7 +271,9 @@ object KGPipeline {
    *  - a re-submission whose output this fingerprint has completely committed (the
    *    commit record carries it and each bucket it lists still holds its data
    *    partition) returns the record's per-bucket lineage at once: it reads no page,
-   *    no gold row and no stage, runs no link, CC or dedup, and starts no Spark job;
+   *    no gold row and no stage, runs no link, CC or dedup, and starts no Spark job
+   *    (the record still holds the counters of the commit that wrote it,
+   *    [[Materialize.record]]);
    *  - otherwise the one `raw_triples` stage materializes through
    *    [[graft.runtime.StageCheckpoint]] with a commit record of the rows its write
    *    counted (resumed when this fingerprint committed it), and the commit replaces
@@ -296,7 +285,8 @@ object KGPipeline {
    * Learning runs inside the `raw_triples` stage: a crash inside the corpus pass
    * re-learns on the driver (seconds) before re-running the pass, which it had to redo
    * anyway, and no learned table is checkpointed. Learning, gating and the corpus pass
-   * are [[run]]'s: `raw_triples` checkpoints exactly the raw triples `run` computes.
+   * are [[runAndWrite]]'s: `raw_triples` checkpoints exactly the raw triples
+   * `runAndWrite` computes.
    */
   def runCheckpointed(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer, stageDir: String, fingerprint: String, outPath: String)(

@@ -18,15 +18,18 @@ import graft.util.Fs
  * replaces the whole table in one static overwrite.
  *
  * Each commit drops the old record, writes the data, then one record file,
- * `<path>_checkpoints/_LINEAGE`, written whole: per non-empty bucket the rows and the
- * hash its data write observed (one `observe` on the written DataFrame, which also
- * carries the job's live counters; no second pass) and when it completed, then the
- * commit's fingerprint — the same whole-file commit [[graft.runtime.StageCheckpoint]]
- * leaves for a stage, under the same rule: a record is trusted whole or not at all. A
- * resumable commit over a complete record (its fingerprint, or without one no
- * fingerprint, and every bucket it lists still has data) returns the record's lineage
- * and writes nothing ([[committedLineage]]); any other record is replaced with its
- * table, so a lost bucket costs what a crashed commit costs.
+ * `<path>_checkpoints/_RECORD`, written whole: per non-empty bucket the rows and the
+ * hash its data write observed (one `observe` on the written DataFrame; no second
+ * pass), then the commit's completion time and its approximate distinct subject and
+ * document counts, then its fingerprint — the same whole-file commit
+ * [[graft.runtime.StageCheckpoint]] leaves for a stage, under the same rule: a record
+ * is trusted whole or not at all. The record is the one place a commit's numbers live
+ * ([[record]] reads them back, with no Spark job). A resumable commit over a complete
+ * record (its fingerprint, or without one no fingerprint, and every bucket it lists
+ * still has data) returns the record's lineage and writes nothing
+ * ([[committedLineage]]); any other record is replaced with its table, so a lost
+ * bucket costs what a crashed commit costs. An older record file (`_LINEAGE`) is not
+ * read: such an output has no record and its first commit replaces it.
  *
  * The store is a plain directory (hive layout readable by any engine, no manifest
  * indirection) and this object is its only commit path: the job has one writer that
@@ -64,33 +67,43 @@ object Materialize {
     StructField("fingerprint", StringType)))
 
   /** A committed bucket as its write observed it: `rows` and `hash` (bit_xor of
-    * xxhash64(subj, pred, obj), the order-insensitive identity of its facts), and
-    * when it completed, in epoch ms. */
-  private final case class Committed(bucket: Int, rows: Long, hash: Long,
-      completedAt: Long)
+    * xxhash64(subj, pred, obj), the order-insensitive identity of its facts). */
+  private[graft] final case class Bucket(bucket: Int, rows: Long, hash: Long)
 
-  /** The commit record, written whole after the data ([[Fs.writeRecord]]): the count
-    * of committed buckets, one `bucket,rows,hash,completedAt` line per non-empty
-    * bucket, then the fingerprint (`""` without one) on the last line, so any string
-    * round-trips. */
-  private def recordPath(path: String) = s"${path}_checkpoints/_LINEAGE"
+  /** A commit record: the non-empty buckets, when the commit completed (epoch ms), the
+    * approximate distinct subjects and documents its write observed, and the
+    * fingerprint (`""` without one). */
+  private[graft] final case class Record(buckets: Seq[Bucket], completedAt: Long,
+      subjectsApprox: Long, docsApprox: Long, fingerprint: String) {
+    /** The committed facts: the sum of the bucket rows. */
+    def triples: Long = buckets.map(_.rows).sum
+  }
 
-  private def render(buckets: Seq[Committed], fingerprint: String): String =
-    (buckets.size.toString +: buckets.map(b =>
-      s"${b.bucket},${b.rows},${b.hash},${b.completedAt}") :+ fingerprint).mkString("\n")
+  /** The record file, written whole after the data ([[Fs.writeRecord]]): the count
+    * of committed buckets, one `bucket,rows,hash` line per non-empty bucket, one
+    * `completedAt,subjectsApprox,docsApprox` line, then the fingerprint on the last
+    * line, so any string round-trips. */
+  private def recordPath(path: String) = s"${path}_checkpoints/_RECORD"
 
-  /** The (buckets, fingerprint) of the record under `path`, if any; a corrupt record
-    * throws. */
-  private def readRecord(path: String)(
-      implicit spark: SparkSession): Option[(Seq[Committed], String)] =
+  private def render(r: Record): String =
+    ((r.buckets.size.toString +: r.buckets.map(b => s"${b.bucket},${b.rows},${b.hash}")) ++
+      Seq(s"${r.completedAt},${r.subjectsApprox},${r.docsApprox}", r.fingerprint))
+      .mkString("\n")
+
+  /** The record of the commit under `path`, if any; a corrupt record throws. A file
+    * read and no Spark job. */
+  private[graft] def record(path: String)(implicit spark: SparkSession): Option[Record] =
     Fs.readRecord(recordPath(path)).map { text =>
+      def longs(line: String): (Long, Long, Long) = line.split(',').map(_.toLong) match {
+        case Array(a, b, c) => (a, b, c)
+        case _ => throw new java.io.IOException(s"corrupt commit record of $path")
+      }
       val nl = text.indexOf('\n')
       val n = text.substring(0, nl).toInt
-      val lines = text.substring(nl + 1).split("\n", n + 1)
-      lines.take(n).toSeq.map(_.split(',') match {
-        case Array(b, r, h, at) => Committed(b.toInt, r.toLong, h.toLong, at.toLong)
-        case _ => throw new java.io.IOException(s"corrupt commit record of $path")
-      }) -> lines(n)
+      val lines = text.substring(nl + 1).split("\n", n + 2)
+      val (at, subjects, docs) = longs(lines(n))
+      Record(lines.take(n).toSeq.map(longs).map { case (b, r, h) => Bucket(b.toInt, r, h) },
+        at, subjects, docs, lines(n + 1))
     }
 
   /** Full write: every bucket of `triples` replaces the table at `path` (buckets
@@ -167,9 +180,11 @@ object Materialize {
   /**
    * Resumable write — the north rule's "resumable from checkpoint with per-partition
    * lineage". Over a complete record written without a fingerprint it returns that
-   * record's lineage, writes nothing and starts no Spark job; otherwise it replaces
-   * the table as [[write]] does. It is keyed by what wrote the record, not by the
-   * triples: a table a fingerprinted commit wrote is replaced.
+   * record's lineage, writes nothing and starts no Spark job, and the record keeps the
+   * counters of the commit that wrote it ([[record]]); otherwise it replaces the table
+   * as [[write]] does. It is keyed by what wrote the record, not by the triples: a
+   * table a fingerprinted commit wrote is replaced. `observeName` names the commit
+   * write's `Observation`.
    */
   def writeResumable(triples: Dataset[Triple], path: String, nBuckets: Int = 16,
       observeName: Option[String] = None)(
@@ -193,19 +208,19 @@ object Materialize {
     // the record goes BEFORE the data it describes: a crash mid-write leaves nothing
     // trusted over rewritten data
     Fs.delete(path + "_checkpoints")
-    val committed = written(bucketed(triples, nBuckets), path, nBuckets, observeName)
-    Fs.writeRecord(recordPath(path), render(committed, fingerprint.getOrElse("")))
+    val committed = written(bucketed(triples, nBuckets), path, nBuckets, observeName,
+      fingerprint.getOrElse(""))
+    Fs.writeRecord(recordPath(path), render(committed))
     lineageOf(committed, fingerprint)
   }
 
-  /** Writes `df` partitioned by bucket over the table at `path` and returns, per
-    * non-empty bucket, what the write itself observed: 2 × nBuckets aggregates in one
-    * `Observation`, named `observeName` when given (so a
-    * [[graft.runtime.MetricsCollector]] receives it), which also carries the live
-    * counters over the whole written set: `triples`, `subjects_approx`, `docs_approx`
-    * and `min_score`. */
+  /** Writes `df` partitioned by bucket over the table at `path` and returns the record
+    * of what the write itself observed, in one `Observation` (named `observeName` when
+    * given): per bucket its rows and hash (2 × nBuckets aggregates), and over the
+    * whole written set the approximate distinct subjects and documents. */
   private def written(df: DataFrame, path: String, nBuckets: Int,
-      observeName: Option[String])(implicit spark: SparkSession): Seq[Committed] = {
+      observeName: Option[String], fingerprint: String)(
+      implicit spark: SparkSession): Record = {
     val counts = observeName.fold(Observation())(Observation(_))
     val factHash = xxhash64(col("subj"), col("pred"), col("obj"))
     val perBucket = (0 until nBuckets).flatMap { b =>
@@ -213,30 +228,32 @@ object Materialize {
       Seq(count(when(in, 1)).as(s"rows_$b"),
         coalesce(bit_xor(when(in, factHash)), lit(0L)).as(s"hash_$b"))
     }
-    val live = Seq(approx_count_distinct(col("subj")).as("subjects_approx"),
-      approx_count_distinct(col("url")).as("docs_approx"), min(col("score")).as("min_score"))
-    df.observe(counts, count(lit(1)).as("triples"), live ++ perBucket: _*)
+    df.observe(counts, approx_count_distinct(col("subj")).as("subjects_approx"),
+        approx_count_distinct(col("url")).as("docs_approx") +: perBucket: _*)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     val metrics = counts.get
     def metric(name: String) = metrics.getOrElse(name,
       sys.error(s"commit of $path: $name not observed")).asInstanceOf[Long]
-    val at = System.currentTimeMillis()
-    (0 until nBuckets).map(b => Committed(b, metric(s"rows_$b"), metric(s"hash_$b"), at))
-      .filter(_.rows > 0)
+    Record((0 until nBuckets).map(b => Bucket(b, metric(s"rows_$b"), metric(s"hash_$b")))
+      .filter(_.rows > 0), System.currentTimeMillis(), metric("subjects_approx"),
+      metric("docs_approx"), fingerprint)
   }
 
-  /** The buckets of the record under `path` when it is complete: it carries
-    * `fingerprint` and every bucket it lists still has data. None otherwise: the
-    * record is trusted whole or not at all, and only as far as the data it describes,
-    * never instead of it. ≤ nBuckets file probes. */
+  /** The record under `path` when it is complete: it carries `fingerprint` and every
+    * bucket it lists still has data. None otherwise: the record is trusted whole or
+    * not at all, and only as far as the data it describes, never instead of it.
+    * ≤ nBuckets file probes. */
   private def recorded(path: String, fingerprint: String)(
-      implicit spark: SparkSession): Option[Seq[Committed]] =
-    readRecord(path).collect { case (buckets, fp) if fp == fingerprint &&
-        buckets.forall(b => Fs.parquetDataExists(s"$path/bucket=${b.bucket}")) => buckets }
+      implicit spark: SparkSession): Option[Record] =
+    record(path).filter(r => r.fingerprint == fingerprint &&
+      r.buckets.forall(b => Fs.parquetDataExists(s"$path/bucket=${b.bucket}")))
 
-  /** The lineage of `buckets` as a local relation: collecting it starts no job. */
-  private def lineageOf(buckets: Seq[Committed], fingerprint: Option[String])(
-      implicit spark: SparkSession): DataFrame =
-    spark.createDataFrame(buckets.map(b => Row(b.bucket, b.rows, b.hash, "materialize",
-      new java.sql.Timestamp(b.completedAt), fingerprint.orNull)).asJava, LineageSchema)
+  /** The lineage of record `r` as a local relation, one row per bucket, each at the
+    * commit's completion time: collecting it starts no job. */
+  private def lineageOf(r: Record, fingerprint: Option[String])(
+      implicit spark: SparkSession): DataFrame = {
+    val at = new java.sql.Timestamp(r.completedAt)
+    spark.createDataFrame(r.buckets.map(b => Row(b.bucket, b.rows, b.hash, "materialize",
+      at, fingerprint.orNull)).asJava, LineageSchema)
+  }
 }

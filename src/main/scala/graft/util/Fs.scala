@@ -34,7 +34,7 @@ object Fs {
   }
 
   /** Writes a commit record whole: to a `.inprogress` temp file beside it, then
-    * renamed over the old one. Commit records (`Materialize`'s `_LINEAGE`
+    * renamed over the old one. Commit records (`Materialize`'s `_RECORD`
     * and `StageCheckpoint`'s `_COMMITTED`) are written after the data they vouch for. */
   def writeRecord(path: String, text: String)(implicit spark: SparkSession): Unit = {
     val (fs, p) = fsPath(path)

@@ -210,9 +210,10 @@ class LearnKernelSpec extends AnyFunSuite with SparkTest {
   }
 
   test("the training slice bound fails loudly, naming the limit and the slice size") {
-    KGPipeline.checkSliceSize(5, limit = 5)
-    val e = intercept[IllegalArgumentException](KGPipeline.checkSliceSize(6, limit = 5))
-    assert(e.getMessage.contains("6 pages") && e.getMessage.contains("limit of 5"),
-      e.getMessage)
+    val limit = KGPipeline.MaxTrainingPages
+    KGPipeline.checkSliceSize(limit)
+    val e = intercept[IllegalArgumentException](KGPipeline.checkSliceSize(limit + 1))
+    assert(e.getMessage.contains(s"${limit + 1} pages") &&
+      e.getMessage.contains(s"limit of $limit pages"), e.getMessage)
   }
 }

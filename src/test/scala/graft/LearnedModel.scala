@@ -56,11 +56,11 @@ object LearnedModel {
   }
 
   /** Model learned on [[slice]] through the public Dataset operators (wrappers over the
-    * [[graft.learn.LearnKernel]] functions `KGPipeline.run` calls), plus hand-set
-    * parts: two seeded relation patterns, a veto on a city the patterns extract, and
-    * dictionary entries that hit pattern sites (score ties broken on profileId), the
-    * vetoed city (the dictionary pass is not vetoed) and adjacent filler words (W4
-    * merges). Learned once per test JVM. */
+    * [[graft.learn.LearnKernel]] functions `KGPipeline.runAndWrite` calls), plus
+    * hand-set parts: two seeded relation patterns, a veto on a city the patterns
+    * extract, and dictionary entries that hit pattern sites (score ties broken on
+    * profileId), the vetoed city (the dictionary pass is not vetoed) and adjacent
+    * filler words (W4 merges). Learned once per test JVM. */
   lazy val model: LearnedModel = {
     implicit val spark: SparkSession = SparkTestBase.spark
     import spark.implicits._

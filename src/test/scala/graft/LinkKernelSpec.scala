@@ -123,10 +123,11 @@ class LinkKernelSpec extends AnyFunSuite with SparkTest {
   }
 
   test("more distinct subject forms than the limit fail loudly") {
-    KGPipeline.checkFormCount(5, limit = 5)
-    val e = intercept[IllegalArgumentException](KGPipeline.checkFormCount(6, limit = 5))
-    assert(e.getMessage.contains("6 or more") && e.getMessage.contains("limit of 5"),
-      e.getMessage)
+    val limit = KGPipeline.MaxLinkForms
+    KGPipeline.checkFormCount(limit)
+    val e = intercept[IllegalArgumentException](KGPipeline.checkFormCount(limit + 1))
+    assert(e.getMessage.contains(s"${limit + 1} or more") &&
+      e.getMessage.contains(s"limit of $limit forms"), e.getMessage)
   }
 }
 

@@ -26,8 +26,10 @@ class PipelineSpec extends AnyFunSuite with SparkTest {
     assert(patternTriples > 0, "no patterns survived the precision gate")
 
     val goldTriples = all.flatMap(_.gold).map(t => (t.subj, t.pred, t.obj)).toSet
-    val got = KGPipeline.run(pages, goldAnnots, CorpusGen.gazetteer)(spark).collect()
-      .map(t => (t.subj, t.pred, t.obj)).toSet
+    val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString + "/triples"
+    KGPipeline.runAndWrite(pages, goldAnnots, CorpusGen.gazetteer, out)(spark)
+    val got = spark.read.parquet(out).select("subj", "pred", "obj")
+      .as[(String, String, String)].collect().toSet
 
     val tp = got.intersect(goldTriples).size.toDouble
     val prec = if (got.isEmpty) 0.0 else tp / got.size

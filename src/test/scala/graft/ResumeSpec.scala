@@ -238,6 +238,27 @@ class ResumeSpec extends AnyFunSuite with SparkTest {
     assert(again === first, "the lineage rows must be the first run's")
   }
 
+  test("runCheckpointed: a committed re-submission and the read of its counters start " +
+      "no Spark job and report the fresh run's counters") {
+    val (stageDir, outDir) = (tmp(), tmp() + "/triples")
+    val (pages, gold) = corpus(60)
+    val fp = "corpus-60-v1"
+    graft.pipeline.KGPipeline.runCheckpointed(
+      pages, gold, CorpusGen.gazetteer, stageDir, fp, outDir)
+    val fresh = graft.sink.Materialize.record(outDir).getOrElse(fail("no commit record"))
+    assert(fresh.triples === spark.read.parquet(outDir).count())
+    assert(fresh.subjectsApprox > 0L && fresh.docsApprox > 0L)
+
+    val (noPages, noGold) = unreadable(pages, gold)
+    val (again, jobs) = SparkTestBase.jobsStarted("resume-counters") {
+      graft.pipeline.KGPipeline.runCheckpointed(
+        noPages, noGold, CorpusGen.gazetteer, stageDir, fp, outDir)
+      graft.sink.Materialize.record(outDir)
+    }
+    assert(jobs === 0, s"a committed re-submission and its counters started $jobs jobs")
+    assert(again === Some(fresh), "the re-submission must report the fresh run's counters")
+  }
+
   test("runCheckpointed: a bucket partition deleted after completion is rewritten on " +
       "re-submission") {
     val (stageDir, outDir) = (tmp(), tmp() + "/triples")

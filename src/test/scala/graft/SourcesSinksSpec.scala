@@ -118,8 +118,8 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(cps1.count() === nB)
     val total = spark.read.parquet(path).count()
     assert(total === 200)
-    val firstTimes = recordTimes(path)
-    assert(firstTimes.keySet === (0 until nB).toSet)
+    val (firstBuckets, firstAt) = recordTime(path)
+    assert(firstBuckets === (0 until nB).toSet)
 
     // 3 buckets' data is lost; the record, written whole, still lists them
     val lost = Seq(1, 4, 6)
@@ -130,11 +130,11 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     assert(spark.read.parquet(path).count() < 200)
 
     // the record is trusted whole or not at all: the resume replaces the table, so
-    // every record line gets a new completion time
+    // the record lists every bucket again under a new commit time
     val cps2 = Materialize.writeResumable(triples, path, nB)
-    val times = recordTimes(path)
-    assert(times.keySet === firstTimes.keySet)
-    assert(times.forall { case (b, at) => at > firstTimes(b) }, s"$firstTimes -> $times")
+    val (buckets, at) = recordTime(path)
+    assert(buckets === firstBuckets)
+    assert(at > firstAt, s"$firstAt -> $at")
     assert(committedFacts(path) === triples.collect().map(t => (t.subj, t.pred, t.obj)).toSet)
     assert(spark.read.parquet(path).count() === 200)
     assert(lineage(cps2) === lineage(Materialize.write(triples, s"$dir/fresh", nB)))
@@ -257,12 +257,11 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
     spark.read.parquet(path).select("subj", "pred", "obj").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
 
-  /** Completion time (epoch ms) per bucket line of the commit record under `path`. */
-  private def recordTimes(path: String): Map[Int, Long] = {
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(s"${path}_checkpoints/_LINEAGE")).toArray(Array.empty[String])
-    lines.slice(1, 1 + lines(0).toInt).map(_.split(','))
-      .map(f => f(0).toInt -> f(3).toLong).toMap
+  /** The buckets the commit record under `path` lists and its one commit time (epoch
+    * ms). */
+  private def recordTime(path: String): (Set[Int], Long) = {
+    val r = Materialize.record(path).getOrElse(fail(s"no commit record under $path"))
+    (r.buckets.map(_.bucket).toSet, r.completedAt)
   }
 
   /** (bucket, rows, hash) per bucket of the table at `path`, from its data. */
@@ -302,30 +301,47 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
       "record) is replaced once and never trusted") {
     import spark.implicits._
     val dir = tmpDir()
-    val path = s"$dir/triples"
     def facts(obj: String) = spark.createDataset((0 until 200).map(i =>
       Triple(s"subj$i", "p", s"$obj$i", s"https://x/$i", 0, 1, 1L, 1.0)))
     def back(p: String) = spark.read.parquet(p).select("subj", "pred", "obj")
       .as[(String, String, String)].collect().toSet
     val nB = 8
-    // the older layout: stale data, a parquet lineage table whose rows claim every
-    // bucket for fp-a, and a completion record naming fp-a
-    Materialize.write(facts("stale"), path, nB)
-    val checkpoints = path + "_checkpoints"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(checkpoints))
-    (0 until nB).map(b => (b, 25L, 0L, "materialize",
-        new java.sql.Timestamp(0L), "fp-a"))
-      .toDF("bucket", "rows_out", "output_hash", "stage", "completed_at", "fingerprint")
-      .write.parquet(checkpoints)
-    java.nio.file.Files.write(java.nio.file.Paths.get(checkpoints, "_COMMITTED"),
-      ((0 until nB).mkString(",") + "\nfp-a").getBytes)
-    assert(Materialize.committedLineage(path, "fp-a").isEmpty)
-
-    val cps = resumable(facts("new"), path, nB, "fp-a")
     Materialize.write(facts("new"), s"$dir/fresh", nB)
-    assert(back(path) === back(s"$dir/fresh"), "the older layout's facts survived")
-    assert(lineage(cps) === oracle(path))
-    assert(!new java.io.File(checkpoints).list().exists(_.endsWith(".parquet")))
-    assert(Materialize.committedLineage(path, "fp-a").map(lineage) === Some(lineage(cps)))
+    // each older layout over stale data, every one claiming every bucket for fp-a: a
+    // parquet lineage table with a completion record, and a `_LINEAGE` record (one
+    // `bucket,rows,hash,completedAt` line per bucket, then the fingerprint)
+    val layouts = Seq[String => Unit](
+      checkpoints => {
+        (0 until nB).map(b => (b, 25L, 0L, "materialize",
+            new java.sql.Timestamp(0L), "fp-a"))
+          .toDF("bucket", "rows_out", "output_hash", "stage", "completed_at", "fingerprint")
+          .write.parquet(checkpoints)
+        java.nio.file.Files.write(java.nio.file.Paths.get(checkpoints, "_COMMITTED"),
+          ((0 until nB).mkString(",") + "\nfp-a").getBytes)
+      },
+      checkpoints => {
+        val stale = oracle(checkpoints.stripSuffix("_checkpoints")).toSeq.sorted
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(checkpoints))
+        java.nio.file.Files.write(java.nio.file.Paths.get(checkpoints, "_LINEAGE"),
+          (stale.size.toString +: stale.map { case (b, rows, hash) => s"$b,$rows,$hash,0" }
+            :+ "fp-a").mkString("\n").getBytes)
+      })
+    layouts.zipWithIndex.foreach { case (layout, i) =>
+      val path = s"$dir/triples$i"
+      val checkpoints = path + "_checkpoints"
+      Materialize.write(facts("stale"), path, nB)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(checkpoints))
+      layout(checkpoints)
+      // neither trusted nor thrown on: an older layout has no record
+      assert(Materialize.committedLineage(path, "fp-a").isEmpty, s"layout $i trusted")
+
+      val cps = resumable(facts("new"), path, nB, "fp-a")
+      assert(back(path) === back(s"$dir/fresh"), s"layout $i: the older facts survived")
+      assert(lineage(cps) === oracle(path))
+      assert(new java.io.File(checkpoints).list().toSet.filterNot(_.endsWith(".crc")) ===
+        Set("_RECORD"), s"layout $i left files behind")
+      // replaced once: the next commit trusts the new record
+      assert(Materialize.committedLineage(path, "fp-a").map(lineage) === Some(lineage(cps)))
+    }
   }
 }
