@@ -61,8 +61,7 @@ object Bench {
         }
         (name, (System.nanoTime() - t0) / 1e9, fp)
       } finally {
-        graft.extract.DocExtract.clearSentenceCache()
-        SparkEntry.clearKgTriplesCache()
+        SparkEntry.clearFixtures()
         spark.stop()
       }
     }

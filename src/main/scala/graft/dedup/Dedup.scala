@@ -29,18 +29,6 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     call_function("word_shingles", text, lit(n))
 
-  /** The pure-builtin formulation (no session extensions needed); semantically
-    * identical to [[shingles]] — kept for extension-less sessions and as the
-    * cross-checked reference in DedupSpec. */
-  def shinglesHof(text: Column, n: Int): Column = {
-    val toks = filter(split(lower(trim(text)), "\\s+"), t => length(t) > 0)
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-    array_distinct(grams)
-  }
-
   /**
    * Exact dedup by content hash. Returns one row per distinct content:
    * (keep_id = min id, dup_count). One shuffle, map-side partial agg.
@@ -87,16 +75,11 @@ object Dedup {
    * computable in any SQL engine with md5 — used by the DuckDB oracle), deterministic,
    * and collision behavior matches numeric minhash for dedup purposes.
    * Uses the native codegen expression `minhash_md5` (one pass, reused digest) — the
-   * builtin formulation ([[minhashSigHof]]) runs numHashes interpreted passes per row.
+   * builtin formulation (DedupSpec's parity oracle) runs numHashes interpreted passes
+   * per row.
    */
   def minhashSig(sh: Column, numHashes: Int): Column =
     call_function("minhash_md5", sh, lit(numHashes))
-
-  /** Pure-builtin minhash (no session extensions); cross-checked in DedupSpec. */
-  def minhashSigHof(sh: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(sh, g => md5(concat(lit(i.toString), lit(":"), g))))
-    }: _*)
 
   /**
    * MinHash-LSH near-dup candidate pairs: signature of numHashes minhashes split into
@@ -226,8 +209,7 @@ object Dedup {
    * ([[graft.functions.SimhashMd5]]): one JIT-compiled pass per document — no token
    * explosion, no aggregate, ZERO shuffle. Docs with zero tokens (or null text) keep
    * signature 0. Bit-identical to the explode + 60-bit-sum aggregate formulation
-   * (kept below as [[simhashAgg]] for parity testing and for sessions without
-   * GraftExtensions).
+   * (DedupSpec's parity oracle).
    */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("id"),
@@ -235,27 +217,6 @@ object Dedup {
         call_function("simhash_md5",
           filter(split(lower(trim(col(textCol))), "\\s+"), t => length(t) > 0)),
         lit(0L)).as("simhash"))
-
-  /** Aggregate formulation of [[simhash]] (explode → md5 per token → one groupBy with
-    * 60 codegen'd bit-count sums; the shuffle carries docs × 61 longs). Same result,
-    * one shuffle — the no-extensions fallback and the kernel's parity oracle. */
-  def simhashAgg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("id"),
-        explode(filter(split(lower(trim(col(textCol))), "\\s+"),
-          t => length(t) > 0)).as("tok"))
-      .select(col("id"),
-        conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("h"))
-    val bitSums = (0 until SimhashBits).map(b =>
-      sum(shiftright(col("h"), b).bitwiseAND(1L)).as(s"c$b"))
-    val agg = toks.groupBy("id")
-      .agg(count(lit(1)).as("n"), bitSums: _*)
-    val sig = (0 until SimhashBits).map(b =>
-      when(col(s"c$b") * 2L > col("n"), lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _) // disjoint bits: + == bitwise OR
-    val sigs = agg.select(col("id"), sig.as("simhash0"))
-    df.select(col(idCol).as("id")).join(sigs, Seq("id"), "left")
-      .select(col("id"), coalesce(col("simhash0"), lit(0L)).as("simhash"))
-  }
 
   /** SimHash near-dup candidates: split the 60-bit fingerprint into 4 15-bit bands;
     * pairs sharing any band are candidates; verify by Hamming distance <= maxHamming. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.align.{Grid, GridCol}
 import graft.model.{Pattern, SentenceAnnots}
-import graft.nlp.{AhoCorasick, Annotate, GazEntry, Gazetteer}
+import graft.nlp.{Annotate, GazEntry, Gazetteer}
 
 /**
  * Document-table front doors for the extraction kernels: run the real broadcast
@@ -14,7 +14,9 @@ import graft.nlp.{AhoCorasick, Annotate, GazEntry, Gazetteer}
  *
  * Scale shape: dictionary/pattern sets are broadcast (small side), documents stream
  * through one narrow mapPartitions stage; the only shuffle is the final groupBy on the
- * (tiny) result.
+ * (tiny) result. Every entry point returns its plan as built: this object holds no
+ * state or cache and collects nothing to the driver (the priors' vocabulary counts in
+ * [[graft.learn.ValueProbs]] aside).
  */
 object DocExtract {
 
@@ -25,9 +27,7 @@ object DocExtract {
    *
    * Runs on the NATIVE codegen expression `ahocorasick_matches`
    * ([[graft.functions.AhoCorasickMatches]]): the automaton is compiled at plan time
-   * and the scan→explode→aggregate pipeline stays inside whole-stage codegen — the
-   * faster successor of the broadcast-closure formulation (still available as
-   * [[mentionCountsClosure]] for sessions without GraftExtensions).
+   * and the scan→explode→aggregate pipeline stays inside whole-stage codegen.
    */
   def mentionCounts(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String])(implicit spark: SparkSession): DataFrame =
@@ -37,30 +37,6 @@ object DocExtract {
       .groupBy(col("m.term").as("term"))
       .agg(countDistinct("id").as("n_docs"), count(lit(1)).as("n_occ"))
       .select("term", "n_docs", "n_occ")
-
-  /** Broadcast-closure variant of [[mentionCounts]] (no session extensions needed). */
-  def mentionCountsClosure(docs: DataFrame, idCol: String, textCol: String,
-      terms: Seq[String])(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val termsIdx = terms.toIndexedSeq
-    val acB = spark.sparkContext.broadcast(
-      AhoCorasick.build(termsIdx.map(t => PageKernel.lowered(t).split("\\s+").toSeq)))
-    val hits = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val ac = acB.value
-        it.flatMap { case (id, text) =>
-          val toks = graft.nlp.Tokenizer.scan(text)
-          val stream = toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
-          ac.findAll(stream).map { case (_, _, dictId) => (id, dictId) }
-        }
-      }.toDF("id", "dict_id")
-    hits.groupBy("dict_id")
-      .agg(countDistinct("id").as("n_docs"), count(lit(1)).as("n_occ"))
-      .withColumn("term",
-        element_at(array(termsIdx.map(lit): _*), col("dict_id") + 1))
-      .select("term", "n_docs", "n_occ")
-  }
 
   /** One document's sentences: its text normalized, annotated and grouped under the
     * url `synth://doc/<id>` (none when the text fails the normalize gate). */
@@ -109,9 +85,10 @@ object DocExtract {
   /**
    * Shared annotate→sentence pass for the documents-table statistics entry points:
    * normalize → tokenize → keyword gazetteer → sentence grouping, ONE narrow stage
-   * (no shuffle). [[pairStats]]/[[valuePriors]]/[[evalScores]] all consume exactly
-   * this sentence set; building it once (and optionally caching it across the three)
-   * replaces the three independent annotate passes each entry point used to run.
+   * (no shuffle). [[pairStats]]/[[valuePriors]]/[[evalScores]] take this sentence set
+   * as built; `kws` become `:lookup|majortype|kw` labels, the keywords their gold spans
+   * are read from. A caller that runs several of them shares one set and owns its
+   * lifetime (the q30–q32 battery fixture in [[graft.SparkEntry]]).
    */
   def sentences(docs: DataFrame, idCol: String, textCol: String, kws: Seq[String])(
       implicit spark: SparkSession): Dataset[SentenceAnnots] = {
@@ -126,71 +103,6 @@ object DocExtract {
         // labels could never match, so skip the per-doc chunk scan
         it.flatMap { case (id, text) => docSentences(id, text, g, withChunks = false) }
       }
-  }
-
-  /** Session-scoped cache of persisted sentence sets, keyed by the caller (e.g.
-    * "sfdir|kws"): lets a battery of statistics queries over the same corpus share ONE
-    * annotate pass. Entries stay persisted until [[clearSentenceCache]] — callers that
-    * run a battery (Verify/Bench mains) clear it on exit so no cached RDD outlives
-    * the run. */
-  private val sentCache =
-    scala.collection.concurrent.TrieMap.empty[String, Dataset[SentenceAnnots]]
-
-  def clearSentenceCache(): Unit = {
-    sentCache.values.foreach(_.unpersist(blocking = false))
-    sentCache.clear()
-  }
-
-  /** Test-only visibility: the number of live shared sentence passes (PlansSpec pins
-    * that a q30→q32 battery computes the annotate pass ONCE, not per query). */
-  private[graft] def sentenceCacheSize: Int = sentCache.size
-
-  /**
-   * Run `f` over the (persisted) sentence pass and return its result DETACHED: the
-   * result is computed eagerly and re-created as a local relation, so the sentence
-   * cache never leaks through returned lineage and uncached runs can unpersist in
-   * `finally`. Sound here because every consumer returns a BOUNDED result (pair
-   * stats, prior tables, score rollups — never corpus-sized).
-   */
-  private def withSentences(docs: DataFrame, idCol: String, textCol: String,
-      kws: Seq[String], cacheKey: Option[String])(
-      f: Dataset[SentenceAnnots] => DataFrame)(implicit spark: SparkSession): DataFrame =
-    cacheKey match {
-      case Some(k) =>
-        // scope the entry to THIS SparkSession (applicationId): a cached Dataset must
-        // never be served to a different/restarted session, where its plan is dead
-        val key = spark.sparkContext.applicationId + "|" + k
-        val sents = sentCache.getOrElseUpdate(key,
-          sentences(docs, idCol, textCol, kws)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        detach(f(sents))
-      case None =>
-        val sents = sentences(docs, idCol, textCol, kws)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try detach(f(sents)) finally sents.unpersist(blocking = false)
-    }
-
-  /** Default ceiling for [[detach]] — overridable per session via the
-    * `graft.detach.maxRows` conf (tests shrink it; a deliberate large consumer can
-    * raise it, which is an explicit opt-in, never a silent driver-OOM). */
-  private[graft] val DetachMaxRowsDefault: Long = 4L * 1000 * 1000
-
-  private def detach(df: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    // Every withSentences consumer returns a BOUNDED result (pair stats, priors,
-    // score rollups) — make that contract enforceable: pull at most bound+1 rows
-    // (limit-pushdown, so an over-bound consumer stops after bound+1 rows instead
-    // of materializing the full result) and fail fast with a clear message rather
-    // than silently OOM-ing the driver on a future corpus-sized consumer.
-    val bound = spark.conf.getOption("graft.detach.maxRows")
-      .map(_.toLong).getOrElse(DetachMaxRowsDefault)
-    val rows = df.limit((bound + 1).min(Int.MaxValue.toLong).toInt).collect()
-    require(rows.length <= bound,
-      s"DocExtract.detach: consumer produced more than $bound rows — the " +
-        "bounded-result contract of withSentences is violated; materialize this " +
-        "consumer to storage (sink.Materialize) or raise graft.detach.maxRows " +
-        "explicitly instead of collecting a corpus-sized result to the driver")
-    spark.createDataFrame(rows.toSeq.asJava, df.schema)
   }
 
   /** The grid label of the token `trigger`. */
@@ -214,89 +126,85 @@ object DocExtract {
    * /root/reference/sql/ie-mysql.sql:24-33, written src/msa/BestPatterns.java:515-609):
    * one seeded context pattern (trigger + `:target`) crossed with two seeded target
    * profiles — a gazetteer-keyword target (`:lookup|majortype|kw`) and a generic word
-   * target (`:token|kind|word`). Gold spans are derived deterministically (the token
-   * after the trigger when it is a gazetteer keyword), so per-pair tp/fp/precision is
-   * exactly replayable in SQL. Returns (profile_id, target_id, tp, fp, total, prec_bp)
-   * with the reference's per-doc cap 50 and neg-only −1 correction.
+   * target (`:token|kind|word`), over the keyword-annotated [[sentences]]. Gold spans
+   * are derived deterministically (the token after the trigger when it is a keyword),
+   * so per-pair tp/fp/precision is exactly replayable in SQL. Returns (profile_id,
+   * target_id, tp, fp, total, prec_bp) with the reference's per-doc cap 50 and
+   * neg-only −1 correction.
    */
-  def pairStats(docs: DataFrame, idCol: String, textCol: String, trigger: String,
-      kws: Seq[String], cacheKey: Option[String] = None)(
-      implicit spark: SparkSession): DataFrame =
-    withSentences(docs, idCol, textCol, kws, cacheKey) { sents =>
-      import graft.learn.{LearnKernel, PatternStats}
-      import spark.implicits._
-      val pred = s"after_$trigger"
-      val ctx = triggerPattern(trigger).copy(annotType = pred)
-      val tKw = Pattern(11L, Seq(KwLabel), pred, 1, "seed", 1.0, 0, 0, 0)
-      val tWord = Pattern(12L, Seq(":token|kind|word"), pred, 1, "seed", 1.0, 0, 0, 0)
-      val gold = sents.flatMap { s =>
-        afterTrigger(s, trigger).collect {
-          case b +: _ if b.has(KwLabel) => (s.url, pred, b.begin, b.end)
-        }
-      }.toDF("url", "annotType", "begin", "end")
-      val cfg = PatternStats.Config(evalTolerance = 0)
-      val matches = PatternStats.applyPatternsPaired(sents, Seq(ctx), Seq(tKw, tWord), cfg)
-      PatternStats.scorePairs(matches, gold, spark.createDataset(Seq(ctx, tKw, tWord)), cfg)
-        .as[LearnKernel.PairStat]
-        .map(st => (st.profileId, st.targetId, st.tp, st.fp, st.total,
-          LearnKernel.precisionBp(st.tp, st.fp)))
-        .toDF("profile_id", "target_id", "tp", "fp", "total", "prec_bp")
-    }
+  def pairStats(sents: Dataset[SentenceAnnots], trigger: String)(
+      implicit spark: SparkSession): DataFrame = {
+    import graft.learn.{LearnKernel, PatternStats}
+    import spark.implicits._
+    val pred = s"after_$trigger"
+    val ctx = triggerPattern(trigger).copy(annotType = pred)
+    val tKw = Pattern(11L, Seq(KwLabel), pred, 1, "seed", 1.0, 0, 0, 0)
+    val tWord = Pattern(12L, Seq(":token|kind|word"), pred, 1, "seed", 1.0, 0, 0, 0)
+    val gold = sents.flatMap { s =>
+      afterTrigger(s, trigger).collect {
+        case b +: _ if b.has(KwLabel) => (s.url, pred, b.begin, b.end)
+      }
+    }.toDF("url", "annotType", "begin", "end")
+    val cfg = PatternStats.Config(evalTolerance = 0)
+    val matches = PatternStats.applyPatternsPaired(sents, Seq(ctx), Seq(tKw, tWord), cfg)
+    PatternStats.scorePairs(matches, gold, spark.createDataset(Seq(ctx, tKw, tWord)), cfg)
+      .as[LearnKernel.PairStat]
+      .map(st => (st.profileId, st.targetId, st.tp, st.fp, st.total,
+        LearnKernel.precisionBp(st.tp, st.fp)))
+      .toDF("profile_id", "target_id", "tp", "fp", "total", "prec_bp")
+  }
 
   /**
    * A6 value-probability priors over a documents table — oracle-checkable entry point
    * for [[graft.learn.ValueProbs]]: gold = the token after `trigger` when it is one of
-   * `kws`; prior = the {prob·10000, −1, 0} ladder of P(occurrence is gold) per value.
+   * the keywords of [[sentences]]; prior = the {prob·10000, −1, 0} ladder of
+   * P(occurrence is gold) per value.
    */
-  def valuePriors(docs: DataFrame, idCol: String, textCol: String, trigger: String,
-      kws: Seq[String], cacheKey: Option[String] = None)(
-      implicit spark: SparkSession): DataFrame =
-    withSentences(docs, idCol, textCol, kws, cacheKey) { sents =>
-      import graft.learn.ValueProbs
-      import spark.implicits._
-      val pred = s"after_$trigger"
-      val gold = sents.flatMap { s =>
-        afterTrigger(s, trigger).collect {
-          case b +: _ if b.has(KwLabel) => (s.url, pred, b.text)
-        }
-      }.toDF("url", "annotType", "value")
-      ValueProbs.compute(sents, gold, ValueProbs.Config())
-    }
+  def valuePriors(sents: Dataset[SentenceAnnots], trigger: String)(
+      implicit spark: SparkSession): DataFrame = {
+    import graft.learn.ValueProbs
+    import spark.implicits._
+    val pred = s"after_$trigger"
+    val gold = sents.flatMap { s =>
+      afterTrigger(s, trigger).collect {
+        case b +: _ if b.has(KwLabel) => (s.url, pred, b.text)
+      }
+    }.toDF("url", "annotType", "value")
+    ValueProbs.compute(sents, gold, ValueProbs.Config())
+  }
 
   /**
    * Eval-scorer entry point with a SQL twin: predicted = the token after `trigger`
    * when longer than 4 chars (always a single token); gold = the token after `trigger`
-   * when it is one of `kws`, EXTENDED over the following token when that is also a
-   * keyword — so the corpus yields genuinely multi-token gold spans. Predictions thus
-   * contain false positives (long non-keywords), false negatives (short keywords like
-   * "join"), and partial overlaps (a single-token prediction against a two-token gold
-   * span) — the case where entity-level counts (exact-span: a miss) and token-level
-   * counts (per-token-unit: a partial hit) MUST diverge, exercising both scoring arms
-   * of [[graft.learn.Eval.score]] distinctly. Returns its full (annot_type × level)
-   * table.
+   * when it is one of the keywords of [[sentences]], EXTENDED over the following token
+   * when that is also a keyword — so the corpus yields genuinely multi-token gold
+   * spans. Predictions thus contain false positives (long non-keywords), false
+   * negatives (short keywords like "join"), and partial overlaps (a single-token
+   * prediction against a two-token gold span) — the case where entity-level counts
+   * (exact-span: a miss) and token-level counts (per-token-unit: a partial hit) MUST
+   * diverge, exercising both scoring arms of [[graft.learn.Eval.score]] distinctly.
+   * Returns its full (annot_type × level) table.
    */
-  def evalScores(docs: DataFrame, idCol: String, textCol: String, trigger: String,
-      kws: Seq[String], cacheKey: Option[String] = None)(
-      implicit spark: SparkSession): DataFrame =
-    withSentences(docs, idCol, textCol, kws, cacheKey) { sents =>
-      import spark.implicits._
-      val pred = s"after_$trigger"
-      val tokens = sents.flatMap(s =>
-          s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
-        .toDF("url", "begin", "end")
-      val predicted = sents.flatMap { s =>
-        afterTrigger(s, trigger).collect {
-          case b +: _ if b.text.length > 4 => (s.url, pred, b.begin, b.end)
-        }
-      }.toDF("url", "annotType", "begin", "end")
-      val gold = sents.flatMap { s =>
-        afterTrigger(s, trigger).collect {
-          case b +: rest if b.has(KwLabel) =>
-            (s.url, pred, b.begin, rest.headOption.filter(_.has(KwLabel)).fold(b.end)(_.end))
-        }
-      }.toDF("url", "annotType", "begin", "end")
-      graft.learn.Eval.score(predicted, gold, tokens, tolerance = 0)
-    }
+  def evalScores(sents: Dataset[SentenceAnnots], trigger: String)(
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val pred = s"after_$trigger"
+    val tokens = sents.flatMap(s =>
+        s.annots.filter(_.annotType == "Token").map(a => (a.url, a.begin, a.end)))
+      .toDF("url", "begin", "end")
+    val predicted = sents.flatMap { s =>
+      afterTrigger(s, trigger).collect {
+        case b +: _ if b.text.length > 4 => (s.url, pred, b.begin, b.end)
+      }
+    }.toDF("url", "annotType", "begin", "end")
+    val gold = sents.flatMap { s =>
+      afterTrigger(s, trigger).collect {
+        case b +: rest if b.has(KwLabel) =>
+          (s.url, pred, b.begin, rest.headOption.filter(_.has(KwLabel)).fold(b.end)(_.end))
+      }
+    }.toDF("url", "annotType", "begin", "end")
+    graft.learn.Eval.score(predicted, gold, tokens, tolerance = 0)
+  }
 
   /** A hand-seeded single-anchor pattern: ":token|string|<trigger>" followed by a
     * one-token `:target` (minimal-span rule ⇒ exactly the next token). */

@@ -26,23 +26,6 @@ import graft.model.{Mention, Pattern, SentenceAnnots, Triple}
  */
 object Extract {
 
-  /** Extract typed mentions from all sentences with the broadcast final pattern set. */
-  def mentions(sentences: Dataset[SentenceAnnots], finalPatterns: Seq[Pattern],
-      prm: PatternMatcher.Params = PatternMatcher.Params())(
-      implicit spark: SparkSession): Dataset[Mention] = {
-    import spark.implicits._
-    val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(finalPatterns))
-    sentences.flatMap { s =>
-      PageKernel.matchableGrid(s).toVector.flatMap { grid =>
-        PatternMatcher.matchAll(grid, idxB.value, prm).map { h =>
-          Mention(s.url, h.pattern.annotType, h.targetBegin, h.targetEnd,
-            PatternMatcher.trimTrailingPunct(h.value), h.pattern.profileId,
-            h.pattern.score)
-        }
-      }
-    }
-  }
-
   /**
    * W4 adjacent-entity merge (sessionization): mentions of the same type in the same
    * page whose spans touch (gap ≤ 1 char) merge into one mention spanning both
@@ -70,32 +53,6 @@ object Extract {
   }
 
   /**
-   * Two-slot relation extraction: patterns containing a `:subject` slot bind BOTH
-   * spans in one match, so the triple is emitted directly — no nearest-entity
-   * resolution. A Spark-side extension beyond the reference (whose subjects come from
-   * the frame-instance join, /root/reference/src/msa/PopulateFrame.java:336-376);
-   * precision behavior is governed by the same stats gate as single-slot patterns.
-   */
-  def relationTriples(sentences: Dataset[SentenceAnnots], relPatterns: Seq[Pattern],
-      prm: PatternMatcher.Params = PatternMatcher.Params())(
-      implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(relPatterns))
-    sentences.flatMap { s =>
-      PageKernel.matchableGrid(s).toVector.flatMap { grid =>
-        PatternMatcher.matchAll(grid, idxB.value, prm)
-          .filter(_.subjBegin >= 0)
-          .map { h =>
-            Triple(h.subjValue, h.pattern.annotType,
-              PatternMatcher.trimTrailingPunct(h.value),
-              s.url, h.targetBegin, h.targetEnd, h.pattern.profileId, h.pattern.score,
-              graft.model.Provenance.Auto)
-          }
-      }
-    }
-  }
-
-  /**
    * Pair-model extraction (the reference's AutoAnnotate with ProfileReader.readFinal
    * per-pair gates): context patterns enumerate candidate spans, target profiles decide
    * the extent, and only (context, target) pairs in `allowedPairs` (pair → precision)
@@ -116,8 +73,9 @@ object Extract {
     }
   }
 
-  /** Pair-model two-slot relation extraction (see [[mentionsPaired]] /
-    * [[relationTriples]]). */
+  /** Pair-model two-slot relation extraction (see [[mentionsPaired]]): patterns with a
+    * `:subject` slot bind BOTH spans in one match, so the triple is emitted directly —
+    * no nearest-entity resolution. */
   def relationTriplesPaired(sentences: Dataset[SentenceAnnots],
       relPatterns: Seq[Pattern], targetPatterns: Seq[Pattern],
       allowedPairs: Map[(Long, Long), Double],

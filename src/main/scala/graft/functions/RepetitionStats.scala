@@ -14,11 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * repeated n-gram of the lowercased whitespace-split text — the per-document inputs
  * of the Gopher repetition quality metrics, in ONE JIT-compiled pass.
  *
- * Replaces the explode → groupBy(doc, gram) → groupBy(doc) formulation
- * ([[graft.text.TextAnalysis.repetitionAgg]], kept as the no-extensions fallback and
- * parity oracle): that shape shuffles ~tokens× the corpus twice; this kernel is a
- * narrow map — at 100 TB it runs at scan speed. Texts with fewer than n tokens
- * return (0, 0, 0).
+ * Replaces the explode → groupBy(doc, gram) → groupBy(doc) formulation (kept as
+ * FunctionsSpec's parity oracle): that shape shuffles ~tokens× the corpus twice; this
+ * kernel is a narrow map — at 100 TB it runs at scan speed. Texts with fewer than n
+ * tokens return (0, 0, 0).
  *
  * `n` must be a foldable integer literal. Registered by [[GraftExtensions]].
  */

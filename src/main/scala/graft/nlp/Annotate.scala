@@ -65,12 +65,11 @@ object Annotate {
     * reproduces the chunker-less grids). */
   def annotateOne(url: String, text: String, gaz: Gazetteer,
       withChunks: Boolean = true): Vector[Annotation] = {
-    val base = Tokenizer.annotate(url, text)
     val toks = Tokenizer.scan(text)
+    val base = Tokenizer.annotate(url, text, toks)
     val lookups = gaz.annotate(url, text, toks, firstId = base.length)
     val chunks =
-      if (withChunks)
-        Chunker.annotate(url, text, firstId = base.length + lookups.length, toks = toks)
+      if (withChunks) Chunker.annotate(url, text, base.length + lookups.length, toks)
       else Vector.empty
     base ++ lookups ++ chunks
   }

@@ -82,16 +82,14 @@ object Chunker {
     out.result()
   }
 
-  /** SyntaxTreeNode annotations for one page's normalized text.
-    * @param toks pre-scanned tokens (pass them to avoid re-tokenizing on hot paths) */
+  /** SyntaxTreeNode annotations for one page's normalized text, over its token scan
+    * `toks` (`Tokenizer.scan(text)`). */
   def annotate(url: String, text: String, firstId: Int,
-      toks: IndexedSeq[Tokenizer.Tok] = null): Vector[Annotation] = {
-    val ts = if (toks == null) Tokenizer.scan(text) else toks
-    chunk(ts, text).zipWithIndex.map { case (c, k) =>
-      val b = ts(c.from).begin
-      val e = ts(c.until - 1).end
+      toks: IndexedSeq[Tokenizer.Tok]): Vector[Annotation] =
+    chunk(toks, text).zipWithIndex.map { case (c, k) =>
+      val b = toks(c.from).begin
+      val e = toks(c.until - 1).end
       Annotation(url, firstId + k, "SyntaxTreeNode", b, e,
         text.substring(b, math.min(e, b + 500)), Map("cat" -> c.cat), "chunker", 1.0)
     }
-  }
 }

@@ -113,11 +113,14 @@ object Tokenizer {
   }
 
   /**
-   * Produce Token / Number / Sentence annotations for one page's normalized text.
-   * Annotation ids are per-doc sequential from 0 in document order — deterministic,
-   * replacing the reference's max+1 allocation (src/msa/AutoAnnotate.java:360-361).
+   * Produce Token / Number / Sentence annotations for one page's normalized text from
+   * its token scan `toks` (`scan(text)`, which the caller shares with the gazetteer and
+   * the chunker). Annotation ids are per-doc sequential from 0 in document order —
+   * deterministic, replacing the reference's max+1 allocation
+   * (src/msa/AutoAnnotate.java:360-361).
    */
-  def annotate(url: String, text: String, provenance: String = "tokenize"): Vector[Annotation] = {
+  def annotate(url: String, text: String, toks: IndexedSeq[Tok]): Vector[Annotation] = {
+    val provenance = "tokenize"
     val out = Vector.newBuilder[Annotation]
     var id = 0
     sentences(text).foreach { case (b, e) =>
@@ -125,7 +128,7 @@ object Tokenizer {
         Map.empty, provenance, 1.0)
       id += 1
     }
-    scan(text).foreach { t =>
+    toks.foreach { t =>
       // value + features capped at 500 chars (P4, ref GateBatch.java:555-558) —
       // pathological unbroken runs would otherwise bloat every downstream row
       val v = safeValue(text, t.begin, t.end)

@@ -33,12 +33,6 @@ object Similarity {
     * the aggregate/zip_with formulation on equal-length vectors, ~10× throughput). */
   def qdot(a: Column, b: Column): Column = call_function("qdot_i64", a, b)
 
-  /** Pure-builtin formulations (cross-checked in SimilaritySpec). */
-  def quantizeHof(v: Column): Column =
-    transform(v, x => round(x.cast("double") * 1000d).cast("long"))
-  def qdotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** Squared L2 norm of a quantized vector (integer, exact). */
   def qnorm2(v: Column): Column = qdot(v, v)
 
@@ -58,29 +52,11 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d): ±1 from
-    * the low bit of the first hex char of md5("{seed}:{p}:{d}") — engine-portable
-    * (the DuckDB oracle replays the identical signs). */
-  private def planeSign(p: Int, d: Column, seed: Int): Column =
-    when(substring(md5(concat_ws(":", lit(seed), lit(p), d.cast("string"))), 1, 1)
-      .isin("1", "3", "5", "7", "9", "b", "d", "f"), lit(1L)).otherwise(lit(-1L))
-
   /** LSH bucket signature: `planes` sign bits of the quantized vector against
     * deterministic ±1 hyperplanes, packed into a long. Native single-pass kernel
     * (graft.functions.LshBucketExpr, codegen'd, sign table cached per JVM). */
   def lshBucket(qv: Column, planes: Int, seed: Int = 42): Column =
     call_function("lsh_bucket", qv, lit(planes), lit(seed))
-
-  /** Pure-builtin formulation of [[lshBucket]] (no session extensions); bit-identical —
-    * cross-checked in SimilaritySpec. Interpreted per element; the native kernel is the
-    * hot path. */
-  def lshBucketHof(qv: Column, planes: Int, seed: Int = 42): Column =
-    (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(qv, sequence(lit(0), size(qv) - 1), (x, d) => x * planeSign(p, d, seed)),
-        lit(0L), (acc, x) => acc + x)
-      when(proj > 0, lit(1L) * (1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /**
    * LSH-bucketed ANN: score only same-bucket pairs. With `tables` independent hash

@@ -41,8 +41,7 @@ object Materialize {
   /** Provenance precedence (lower = stronger): human-validated beats auto,
     * ref src/msa/PopulateFrame.java:168-192; unlisted provenances rank weakest. */
   private val ProvenanceRank: Map[String, Int] =
-    Map(graft.model.Provenance.Gold -> 0, graft.model.Provenance.Propagated -> 1,
-      graft.model.Provenance.Auto -> 2)
+    Map(graft.model.Provenance.Gold -> 0, graft.model.Provenance.Auto -> 1)
 
   private def rank: Column =
     ProvenanceRank.foldLeft(lit(Int.MaxValue)) { case (acc, (p, r)) =>

@@ -49,9 +49,10 @@ object StreamExtract {
   /** Unpaired per-page extraction (annotate → sentences → `matchAll` → W4 adjacent
     * merge → sentence-local subject resolution, plus direct two-slot relation
     * matches): no pair gate, no prior veto, no dictionary pass. No job runs it; it is
-    * the per-page mirror of Extract.mentions/mergeAdjacent/triples ∪
-    * Extract.relationTriples, kept for that parity test and the benchmark's kernel
-    * table. Jobs run [[graft.extract.PageKernel.extract]]. */
+    * the per-page mirror of StreamingSpec's Dataset formulation (RelationSpec's
+    * mentions, Extract.mergeAdjacent/triples ∪ RelationSpec's relationTriples), kept
+    * for that parity test and the benchmark's kernel table. Jobs run
+    * [[graft.extract.PageKernel.extract]]. */
   def extractPage(url: String, text: String, gaz: Gazetteer,
       index: PatternMatcher.Index, prm: PatternMatcher.Params = PatternMatcher.Params(),
       relIndex: PatternMatcher.Index = StreamExtract.EmptyIndex): Vector[Triple] = {
@@ -67,7 +68,7 @@ object StreamExtract {
     val grids = sents.flatMap(s => PageKernel.matchableGrid(s).map((s, _)))
 
     // two-slot relation patterns: subject bound by the match, emitted directly
-    // (local mirror of Extract.relationTriples)
+    // (local mirror of RelationSpec.relationTriples)
     val relTriples = grids.flatMap { case (s, grid) =>
       PatternMatcher.matchAll(grid, relIndex, prm)
         .filter(_.subjBegin >= 0)

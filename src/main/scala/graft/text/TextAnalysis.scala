@@ -128,8 +128,8 @@ object TextAnalysis {
    * Runs on the NATIVE codegen kernel `repetition_stats`
    * ([[graft.functions.RepetitionStats]]): one JIT-compiled pass per document — no
    * gram explosion, ZERO shuffle; at 100 TB this is a narrow map at scan speed.
-   * Bit-identical to the explode + two keyed aggregations formulation (kept below as
-   * [[repetitionAgg]] for parity testing and sessions without GraftExtensions).
+   * Bit-identical to the explode + two keyed aggregations formulation (FunctionsSpec's
+   * parity oracle).
    */
   def repetition(df: DataFrame, idCol: String, textCol: String, n: Int = 2): DataFrame =
     df.select(col(idCol).as("doc_id"),
@@ -139,26 +139,6 @@ object TextAnalysis {
         col("r.n_distinct").as("n_distinct"), col("r.top_cnt").as("top_cnt"))
       .withColumn("dup_bp",
         floor((col("n_grams") - col("n_distinct")) * 10000L / col("n_grams")))
-
-  /** Pure-builtin formulation of [[repetition]] (no session extensions): explode to
-    * (doc, gram) rows, then two keyed aggregations — the first on (doc_id, gram) with
-    * map-side partial aggregation, the second on doc_id. No window, no driver funnel;
-    * skew bounded because the key includes doc_id. Same result — the kernel's parity
-    * oracle. */
-  def repetitionAgg(df: DataFrame, idCol: String, textCol: String, n: Int = 2): DataFrame = {
-    val toks = wsTokens(lower(col(textCol)))
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-    df.select(col(idCol).as("doc_id"), explode(grams).as("g"))
-      .groupBy("doc_id", "g").agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id")
-      .agg(sum("cnt").as("n_grams"), count(lit(1)).as("n_distinct"),
-        max("cnt").as("top_cnt"))
-      .withColumn("dup_bp",
-        floor((col("n_grams") - col("n_distinct")) * 10000L / col("n_grams")))
-  }
 
   /** PII patterns for pre-training scrubbing (RE2-safe — no lookarounds — so the
     * DuckDB oracle replays them verbatim). Order matters: emails first (their local

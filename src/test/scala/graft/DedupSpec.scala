@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
@@ -18,7 +19,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
   test("word_shingles == HOF shingles formulation, element order included") {
     val native = docs.select(col("doc_id"), Dedup.shingles(col("text"), 4).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val hof = docs.select(col("doc_id"), Dedup.shinglesHof(col("text"), 4).as("sh"))
+    val hof = docs.select(col("doc_id"), DedupSpec.shinglesHof(col("text"), 4).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(native.keySet === hof.keySet)
     native.keySet.foreach { k =>
@@ -33,7 +34,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       .filter(size(col("sh")) > 0)
     val native = sh.select(col("doc_id"), Dedup.minhashSig(col("sh"), 8).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val hof = sh.select(col("doc_id"), Dedup.minhashSigHof(col("sh"), 8).as("sig"))
+    val hof = sh.select(col("doc_id"), DedupSpec.minhashSigHof(col("sh"), 8).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(native === hof)
   }
@@ -104,9 +105,50 @@ class DedupSpec extends AnyFunSuite with SparkTest {
       (6L, "single")).toDF("id", "text")
     val kernel = Dedup.simhash(df, "id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val agg = Dedup.simhashAgg(df, "id", "text").collect()
+    val agg = DedupSpec.simhashAgg(df, "id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kernel === agg)
     assert(kernel(4L) === 0L && kernel(5L) === 0L)
+  }
+}
+
+/** The pure-builtin formulations of the dedup kernels: their parity oracles. */
+object DedupSpec {
+
+  /** `Dedup.shingles` as higher-order functions (interpreted, an array copy per
+    * slice): deduplicated word n-grams in first-occurrence order. */
+  def shinglesHof(text: Column, n: Int): Column = {
+    val toks = filter(split(lower(trim(text)), "\\s+"), t => length(t) > 0)
+    val grams = when(size(toks) >= n,
+      transform(sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+    array_distinct(grams)
+  }
+
+  /** `Dedup.minhashSig` as `numHashes` interpreted passes per row. */
+  def minhashSigHof(sh: Column, numHashes: Int): Column =
+    array((0 until numHashes).map { i =>
+      array_min(transform(sh, g => md5(concat(lit(i.toString), lit(":"), g))))
+    }: _*)
+
+  /** `Dedup.simhash` as an aggregate: explode → md5 per token → one groupBy with 60
+    * bit-count sums, left-joined back so zero-token docs keep signature 0. */
+  def simhashAgg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val toks = df.select(col(idCol).as("id"),
+        explode(filter(split(lower(trim(col(textCol))), "\\s+"),
+          t => length(t) > 0)).as("tok"))
+      .select(col("id"),
+        conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("h"))
+    val bitSums = (0 until Dedup.SimhashBits).map(b =>
+      sum(shiftright(col("h"), b).bitwiseAND(1L)).as(s"c$b"))
+    val agg = toks.groupBy("id")
+      .agg(count(lit(1)).as("n"), bitSums: _*)
+    val sig = (0 until Dedup.SimhashBits).map(b =>
+      when(col(s"c$b") * 2L > col("n"), lit(1L << b)).otherwise(lit(0L)))
+      .reduce(_ + _) // disjoint bits: + == bitwise OR
+    val sigs = agg.select(col("id"), sig.as("simhash0"))
+    df.select(col(idCol).as("id")).join(sigs, Seq("id"), "left")
+      .select(col("id"), coalesce(col("simhash0"), lit(0L)).as("simhash"))
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.extract.PageKernel
+import graft.nlp.{AhoCorasick, Tokenizer}
 
 /** Native Catalyst expression `ahocorasick_matches` (codegen gazetteer). */
 class FunctionsSpec extends AnyFunSuite with SparkTest {
@@ -36,7 +39,7 @@ class FunctionsSpec extends AnyFunSuite with SparkTest {
     val terms = Seq("founded", "headquartered in", "people", "acme corp")
     val native = graft.extract.DocExtract.mentionCounts(df, "doc_id", "text", terms)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val closure = graft.extract.DocExtract.mentionCountsClosure(df, "doc_id", "text", terms)
+    val closure = FunctionsSpec.mentionCountsClosure(df, "doc_id", "text", terms)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(native === closure)
     assert(native.nonEmpty)
@@ -113,7 +116,7 @@ class FunctionsSpec extends AnyFunSuite with SparkTest {
       spark.conf.set("spark.sql.codegen.fallback", prevFallback)
       spark.conf.set("spark.sql.codegen.factoryMode", prevProjFactory)
     }
-    val agg = graft.text.TextAnalysis.repetitionAgg(docs, "doc_id", "text", n = 2)
+    val agg = FunctionsSpec.repetitionAgg(docs, "doc_id", "text", n = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
     assert(kernel === agg)
@@ -133,5 +136,52 @@ class FunctionsSpec extends AnyFunSuite with SparkTest {
         .collect()
     }
     assert(err.getMessage.toLowerCase.contains("foldable"))
+  }
+}
+
+object FunctionsSpec {
+
+  /** Broadcast-closure formulation of `DocExtract.mentionCounts`: the automaton is
+    * broadcast and matched over each document's lowercased token stream, then one
+    * aggregate. The native kernel's parity oracle. */
+  def mentionCountsClosure(docs: DataFrame, idCol: String, textCol: String,
+      terms: Seq[String])(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val termsIdx = terms.toIndexedSeq
+    val acB = spark.sparkContext.broadcast(
+      AhoCorasick.build(termsIdx.map(t => PageKernel.lowered(t).split("\\s+").toSeq)))
+    val hits = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        val ac = acB.value
+        it.flatMap { case (id, text) =>
+          val toks = Tokenizer.scan(text)
+          val stream = toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
+          ac.findAll(stream).map { case (_, _, dictId) => (id, dictId) }
+        }
+      }.toDF("id", "dict_id")
+    hits.groupBy("dict_id")
+      .agg(countDistinct("id").as("n_docs"), count(lit(1)).as("n_occ"))
+      .withColumn("term",
+        element_at(array(termsIdx.map(lit): _*), col("dict_id") + 1))
+      .select("term", "n_docs", "n_occ")
+  }
+
+  /** Builtin formulation of `TextAnalysis.repetition`: explode to (doc, gram) rows,
+    * then two keyed aggregations — on (doc_id, gram), then on doc_id. The
+    * `repetition_stats` kernel's parity oracle. */
+  def repetitionAgg(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    val toks = graft.text.TextAnalysis.wsTokens(lower(col(textCol)))
+    val grams = when(size(toks) >= n,
+      transform(sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+    df.select(col(idCol).as("doc_id"), explode(grams).as("g"))
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("cnt"))
+      .groupBy("doc_id")
+      .agg(sum("cnt").as("n_grams"), count(lit(1)).as("n_distinct"),
+        max("cnt").as("top_cnt"))
+      .withColumn("dup_bp",
+        floor((col("n_grams") - col("n_distinct")) * 10000L / col("n_grams")))
   }
 }

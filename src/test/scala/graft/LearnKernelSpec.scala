@@ -194,7 +194,8 @@ class LearnKernelSpec extends AnyFunSuite with SparkTest {
   }
 
   test("value priors: occ < gold is neutral, an empty vocabulary, ties cut in UTF-8 order") {
-    val toks = graft.nlp.Tokenizer.annotate("u", "new york new york new york")
+    val text = "new york new york new york"
+    val toks = graft.nlp.Tokenizer.annotate("u", text, graft.nlp.Tokenizer.scan(text))
       .filter(_.annotType == "Token")
     val sents = Seq(SentenceAnnots("u", 0, 26, toks))
     // "new-york" never occurs as one token sequence: neutral, not a minted 1.0;

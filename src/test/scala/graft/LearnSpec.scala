@@ -38,7 +38,8 @@ class LearnSpec extends AnyFunSuite with SparkTest {
       "paris weather in may or may not", "rare word here")
     val sents = spark.createDataset(texts.zipWithIndex.map { case (t, i) =>
       graft.model.SentenceAnnots(s"u$i", 0, t.length,
-        graft.nlp.Tokenizer.annotate(s"u$i", t).filter(_.annotType == "Token"))
+        graft.nlp.Tokenizer.annotate(s"u$i", t, graft.nlp.Tokenizer.scan(t))
+          .filter(_.annotType == "Token"))
     })
     val gold = Seq(
       ("city", "paris"), ("city", "paris"), ("city", "paris"), ("city", "paris"),
@@ -56,7 +57,8 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     val texts = Seq("aa bb cc aa bb aa")
     val sents = spark.createDataset(texts.zipWithIndex.map { case (t, i) =>
       graft.model.SentenceAnnots(s"u$i", 0, t.length,
-        graft.nlp.Tokenizer.annotate(s"u$i", t).filter(_.annotType == "Token"))
+        graft.nlp.Tokenizer.annotate(s"u$i", t, graft.nlp.Tokenizer.scan(t))
+          .filter(_.annotType == "Token"))
     })
     // gold counts: aa=3, bb=2, cc=1 → cap 2 keeps aa, bb; cc is dropped (logged)
     val gold = Seq.fill(3)(("t", "aa")) ++ Seq.fill(2)(("t", "bb")) :+ (("t", "cc"))
@@ -72,8 +74,9 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     // automaton entry that never matches the stream → occurrence count 0. The old
     // clamp turned that into total=gold → a minted trusted prior of 1.0 for exactly
     // the value whose measurement failed; it must be neutral (0) instead.
+    val text = "new york new york new york"
     val sents = spark.createDataset(Seq(graft.model.SentenceAnnots("u1", 0, 30,
-      graft.nlp.Tokenizer.annotate("u1", "new york new york new york")
+      graft.nlp.Tokenizer.annotate("u1", text, graft.nlp.Tokenizer.scan(text))
         .filter(_.annotType == "Token"))))
     val gold = Seq.fill(3)(("city", "new-york")).toDF("annotType", "value")
     val row = graft.learn.ValueProbs.compute(sents, gold).collect().head
@@ -89,7 +92,8 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     try {
       val text = "TITAN TITAN TITAN TITAN"
       val sent = graft.model.SentenceAnnots("u", 0, text.length,
-        graft.nlp.Tokenizer.annotate("u", text).filter(_.annotType == "Token"))
+        graft.nlp.Tokenizer.annotate("u", text, graft.nlp.Tokenizer.scan(text))
+          .filter(_.annotType == "Token"))
       val gold = Seq.fill(4)(("ship", "TITAN"))
       val row = graft.learn.ValueProbs.compute(spark.createDataset(Seq(sent)),
         gold.toDF("annotType", "value")).collect().head
@@ -112,8 +116,9 @@ class LearnSpec extends AnyFunSuite with SparkTest {
     val kept = graft.extract.Extract.applyPriors(ms, veto).collect()
     assert(kept.map(_.annotType).toSeq === Seq("city"))
 
+    val text = "we love paris today"
     val sents = spark.createDataset(Seq(graft.model.SentenceAnnots("u2", 0, 20,
-      graft.nlp.Tokenizer.annotate("u2", "we love paris today")
+      graft.nlp.Tokenizer.annotate("u2", text, graft.nlp.Tokenizer.scan(text))
         .filter(_.annotType == "Token"))))
     val dict = graft.extract.Extract.dictionaryMentions(sents,
       Seq(("city", "paris", 10000L))).collect()

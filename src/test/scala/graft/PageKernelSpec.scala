@@ -147,7 +147,7 @@ class PageKernelSpec extends AnyFunSuite with SparkTest {
     java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
     try {
       val text = "TITAN sails"
-      val annots = graft.nlp.Tokenizer.annotate("u", text)
+      val annots = graft.nlp.Tokenizer.annotate("u", text, graft.nlp.Tokenizer.scan(text))
       val grid = graft.align.Grid.build("u", 0, text.length, annots)
       assert(grid.labelSet.contains(":token|string|titan"), grid.labelSet)
       val gaz = graft.nlp.Gazetteer.build(Seq(graft.nlp.GazEntry("titan", "ship", "ship")))

@@ -9,7 +9,7 @@ import graft.nlp.Tokenizer
 class PatternMatcherSpec extends AnyFunSuite {
 
   private def gridOf(text: String): Grid = {
-    val anns = Tokenizer.annotate("u", text)
+    val anns = Tokenizer.annotate("u", text, Tokenizer.scan(text))
     Grid.build("u", 0, text.length, anns.filter(_.annotType != "Sentence"))
   }
 

@@ -19,11 +19,9 @@ class PlansSpec extends AnyFunSuite with SparkTest {
 
   private val dir = "/root/testdata/sf0.001"
 
-  // the three statistics queries return eagerly-computed local relations (no plan to
-  // guard, and building them runs the full extraction pipeline); q28 executes its CC
-  // iterations at build time. Their component plans are guarded via q19/q27/q30 specs.
-  private val skip = Set("q28_cc_neardup", "q44_dedup_canon", "q30_pair_stats",
-    "q31_value_priors", "q32_eval_scores")
+  // q31's priors collect their vocabulary counts at build time, and q28/q44 execute
+  // their CC iterations there; their component plans are guarded via q19/q27/q30.
+  private val skip = Set("q28_cc_neardup", "q44_dedup_canon", "q31_value_priors")
 
   // q22 is the DELIBERATE broadcast brute-force baseline (query side broadcast against
   // every embedding row); q36's corpus×centroid product is the IVF coarse-quantizer
@@ -37,7 +35,7 @@ class PlansSpec extends AnyFunSuite with SparkTest {
     df(name).queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   test("every query plan: no unpartitioned window, no condition-less join") {
-    SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).foreach { name =>
+    try SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).foreach { name =>
       val plan = df(name).queryExecution.optimizedPlan
       plan.collect { case w: LWindow => w }.foreach { w =>
         assert(w.partitionSpec.nonEmpty,
@@ -50,7 +48,7 @@ class PlansSpec extends AnyFunSuite with SparkTest {
           assert(j.condition.nonEmpty,
             s"$name: condition-less join — a cartesian product at corpus scale")
         }
-    }
+    } finally SparkEntry.clearFixtures()
   }
 
   test("q01: filter + projection reach the parquet scan") {
@@ -246,17 +244,15 @@ class PlansSpec extends AnyFunSuite with SparkTest {
   }
 
   test("q30→q32: the statistics battery shares ONE persisted sentence pass") {
-    // q30/q32 execute eagerly at build (detached results) — their cost shape is the
-    // shared annotate fixture: building both must create exactly one cache entry
-    // (one persisted sentence Dataset), not one per query.
-    graft.extract.DocExtract.clearSentenceCache()
+    // q30 and q32 are plans over SparkEntry's sentence fixture: building both must
+    // create exactly one fixture (one persisted sentence Dataset), not one per query
+    SparkEntry.clearFixtures()
     try {
       df("q30_pair_stats")
-      assert(graft.extract.DocExtract.sentenceCacheSize === 1,
-        "q30 did not register the shared sentence pass")
+      assert(SparkEntry.fixtureCount === 1, "q30 did not register the shared sentence pass")
       df("q32_eval_scores")
-      assert(graft.extract.DocExtract.sentenceCacheSize === 1,
+      assert(SparkEntry.fixtureCount === 1,
         "q32 re-derived the sentence pass instead of reusing q30's fixture")
-    } finally graft.extract.DocExtract.clearSentenceCache()
+    } finally SparkEntry.clearFixtures()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.align.Grid
-import graft.extract.{DocExtract, Extract, PatternMatcher}
+import graft.extract.{DocExtract, Extract, PageKernel, PatternMatcher}
 import graft.model.{Mention, Pattern, SentenceAnnots, Triple}
 import graft.nlp.{GazEntry, Gazetteer, Tokenizer}
 
@@ -16,8 +16,9 @@ class RelationSpec extends AnyFunSuite with SparkTest {
     GazEntry("acme corp", "entity", "org"), GazEntry("globex", "entity", "org")))
 
   private def gridOf(text: String): Grid = {
-    val anns = Tokenizer.annotate("u", text)
-    val lookups = gaz.annotate("u", text, Tokenizer.scan(text), firstId = anns.length)
+    val toks = Tokenizer.scan(text)
+    val anns = Tokenizer.annotate("u", text, toks)
+    val lookups = gaz.annotate("u", text, toks, firstId = anns.length)
     Grid.build("u", 0, text.length, (anns ++ lookups).filter(_.annotType != "Sentence"))
   }
 
@@ -85,7 +86,7 @@ class RelationSpec extends AnyFunSuite with SparkTest {
       graft.testgen.CorpusGen.gazetteer)
     val p = relPat(Grid.Subject, ":token|string|was", ":token|string|founded",
       ":token|string|in", Grid.Target)
-    val triples = Extract.relationTriples(sents, Seq(p)).collect()
+    val triples = RelationSpec.relationTriples(sents, Seq(p)).collect()
     assert(triples.nonEmpty)
     // every emitted subject must be one of the corpus entities; object a year
     val entities = graft.testgen.CorpusGen.entities.toSet
@@ -100,29 +101,59 @@ class RelationSpec extends AnyFunSuite with SparkTest {
     assert(got.subsetOf(gold), s"extra: ${got -- gold}")
   }
 
-  test("detach fails fast when a consumer exceeds the bounded-result contract") {
+  test("pairStats over a direct sentence pass persists nothing") {
     import spark.implicits._
     val docs = Seq(
       (1L, "please merge alpha now"),
       (2L, "please merge beta now")).toDF("doc_id", "text")
-    // pairStats emits one row per (context, target) pair — 2 rows here; with the
-    // bound forced to 1 the driver-side materialization must abort with a clear
-    // message instead of collecting an over-bound result
-    spark.conf.set("graft.detach.maxRows", "1")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        DocExtract.pairStats(docs, "doc_id", "text", "merge", Seq("alpha", "beta"))
-      }
-      assert(ex.getMessage.contains("bounded-result contract"), ex.getMessage)
-    } finally spark.conf.unset("graft.detach.maxRows")
-    // the same consumer under the default bound succeeds
-    val ok = DocExtract.pairStats(docs, "doc_id", "text", "merge",
-      Seq("alpha", "beta"))
-    assert(ok.count() >= 2)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val stats = DocExtract.pairStats(
+      DocExtract.sentences(docs, "doc_id", "text", Seq("alpha", "beta")), "merge")
+    // one row per (context, target) pair
+    assert(stats.count() >= 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 }
 
 object RelationSpec {
+
+  /** Unpaired mention extraction: every pattern hit of the broadcast pattern set
+    * becomes a mention. With [[relationTriples]], the Dataset formulation that
+    * StreamingSpec checks `StreamExtract.extractPage` against. */
+  def mentions(sentences: Dataset[SentenceAnnots], patterns: Seq[Pattern])(
+      implicit spark: SparkSession): Dataset[Mention] = {
+    import spark.implicits._
+    val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(patterns))
+    sentences.flatMap { s =>
+      PageKernel.matchableGrid(s).toVector.flatMap { grid =>
+        PatternMatcher.matchAll(grid, idxB.value).map { h =>
+          Mention(s.url, h.pattern.annotType, h.targetBegin, h.targetEnd,
+            PatternMatcher.trimTrailingPunct(h.value), h.pattern.profileId,
+            h.pattern.score)
+        }
+      }
+    }
+  }
+
+  /** Unpaired two-slot relation extraction: patterns with a `:subject` slot bind both
+    * spans in one match, so each hit is emitted as a triple directly. */
+  def relationTriples(sentences: Dataset[SentenceAnnots], relPatterns: Seq[Pattern])(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    val idxB = spark.sparkContext.broadcast(PatternMatcher.buildIndex(relPatterns))
+    sentences.flatMap { s =>
+      PageKernel.matchableGrid(s).toVector.flatMap { grid =>
+        PatternMatcher.matchAll(grid, idxB.value)
+          .filter(_.subjBegin >= 0)
+          .map { h =>
+            Triple(h.subjValue, h.pattern.annotType,
+              PatternMatcher.trimTrailingPunct(h.value),
+              s.url, h.targetBegin, h.targetEnd, h.pattern.profileId, h.pattern.score,
+              graft.model.Provenance.Auto)
+          }
+      }
+    }
+  }
 
   /** Join+window formulation of `Extract.triples`: the parity oracle of its cogroup
     * subject resolution. It shuffles the mention × subject product. */

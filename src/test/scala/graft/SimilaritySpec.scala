@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 
@@ -21,7 +22,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     Seq(vecs, edge).foreach { df =>
       val native = df.select(col("id"), Similarity.quantize(col("vec")).as("q"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val hof = df.select(col("id"), Similarity.quantizeHof(col("vec")).as("q"))
+      val hof = df.select(col("id"), SimilaritySpec.quantizeHof(col("vec")).as("q"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(native === hof)
     }
@@ -32,7 +33,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val pairs = q.as("a").crossJoin(q.as("b"))
       .filter(col("a.id") < col("b.id")).limit(200)
     val native = pairs.select(Similarity.qdot(col("a.qv"), col("b.qv"))).collect().map(_.getLong(0))
-    val hof = pairs.select(Similarity.qdotHof(col("a.qv"), col("b.qv"))).collect().map(_.getLong(0))
+    val hof = pairs.select(SimilaritySpec.qdotHof(col("a.qv"), col("b.qv")))
+      .collect().map(_.getLong(0))
     assert(native.toSeq === hof.toSeq)
   }
 
@@ -58,7 +60,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     for ((planes, seed) <- Seq((8, 1000), (4, 2003), (6, 42))) {
       val native = q.select(col("id"), Similarity.lshBucket(col("qv"), planes, seed))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val hof = q.select(col("id"), Similarity.lshBucketHof(col("qv"), planes, seed))
+      val hof = q.select(col("id"), SimilaritySpec.lshBucketHof(col("qv"), planes, seed))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(native === hof, s"planes=$planes seed=$seed")
       assert(native.values.toSet.size > 1, "degenerate bucketing")
@@ -108,4 +110,29 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val recall = exact.intersect(approx).size.toDouble / exact.size
     assert(recall >= 0.6, f"ANN recall $recall%.2f too low")
   }
+}
+
+/** The pure-builtin formulations of the vector kernels: their parity oracles. */
+object SimilaritySpec {
+
+  def quantizeHof(v: Column): Column =
+    transform(v, x => round(x.cast("double") * 1000d).cast("long"))
+
+  def qdotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+
+  /** Hyperplane component for (plane p, dim d): ±1 from the low bit of the first hex
+    * char of md5("{seed}:{p}:{d}"), as the DuckDB oracle replays it. */
+  private def planeSign(p: Int, d: Column, seed: Int): Column =
+    when(substring(md5(concat_ws(":", lit(seed), lit(p), d.cast("string"))), 1, 1)
+      .isin("1", "3", "5", "7", "9", "b", "d", "f"), lit(1L)).otherwise(lit(-1L))
+
+  /** `Similarity.lshBucket` interpreted per element: one sign bit per plane. */
+  def lshBucketHof(qv: Column, planes: Int, seed: Int): Column =
+    (0 until planes).map { p =>
+      val proj = aggregate(
+        zip_with(qv, sequence(lit(0), size(qv) - 1), (x, d) => x * planeSign(p, d, seed)),
+        lit(0L), (acc, x) => acc + x)
+      when(proj > 0, lit(1L) * (1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
 }

@@ -10,7 +10,7 @@ import graft.nlp.Tokenizer
 class SmithWatermanSpec extends AnyFunSuite {
 
   private def gridOf(text: String, target: String): Grid = {
-    val anns = Tokenizer.annotate("u", text)
+    val anns = Tokenizer.annotate("u", text, Tokenizer.scan(text))
     val b = text.indexOf(target)
     Grid.build("u", 0, text.length, anns.filter(_.annotType != "Sentence"),
       Seq((b, b + target.length)))
@@ -59,7 +59,8 @@ class SmithWatermanSpec extends AnyFunSuite {
   //  columns 1-3 aligned as ONE element)
 
   private def gridWithLookup(text: String, entity: String, major: String): Grid = {
-    val anns = Tokenizer.annotate("u", text).filter(_.annotType != "Sentence")
+    val anns = Tokenizer.annotate("u", text, Tokenizer.scan(text))
+      .filter(_.annotType != "Sentence")
     val b = text.indexOf(entity)
     val lk = graft.model.Annotation("u", 900, "Lookup", b, b + entity.length, entity,
       Map("majorType" -> major), "gaz", 1.0)

@@ -15,7 +15,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTest {
   test("P4: annotation value capped at 500 chars (ref GateBatch value cap)") {
     val long = "x" * 1200
     assert(graft.nlp.Tokenizer.safeValue(long, 0, 1200).length === 500)
-    val annots = graft.nlp.Tokenizer.annotate("u", long)
+    val annots = graft.nlp.Tokenizer.annotate("u", long, graft.nlp.Tokenizer.scan(long))
     assert(annots.filter(_.annotType == "Token").forall(_.value.length <= 500))
   }
 

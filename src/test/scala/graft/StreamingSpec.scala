@@ -71,8 +71,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val plain = upgraded.collect { case (p, None) => p }
     val rel = upgraded.collect { case (_, Some(r)) => r }
     assert(rel.nonEmpty, "parity test must exercise the relation path")
-    val batch = Extract.triples(sents, Extract.mergeAdjacent(Extract.mentions(sents, plain)))
-      .unionByName(Extract.relationTriples(sents, rel))
+    val batch = Extract.triples(sents,
+        Extract.mergeAdjacent(RelationSpec.mentions(sents, plain)))
+      .unionByName(RelationSpec.relationTriples(sents, rel))
       .collect().map(t => (t.subj, t.pred, t.obj, t.url, t.begin, t.end)).toSet
 
     val (index, relIndex) = (PatternMatcher.buildIndex(plain), PatternMatcher.buildIndex(rel))

@@ -25,7 +25,8 @@ class TokenizerSpec extends AnyFunSuite {
   }
 
   test("annotations carry orth features and per-doc sequential ids") {
-    val anns = Tokenizer.annotate("u", "IBM bought Acme.")
+    val text = "IBM bought Acme."
+    val anns = Tokenizer.annotate("u", text, Tokenizer.scan(text))
     val orths = anns.filter(_.annotType == "Token")
       .flatMap(a => a.features.get("orth"))
     assert(orths === Vector("allCaps", "lowercase", "upperInitial"))
@@ -36,8 +37,8 @@ class TokenizerSpec extends AnyFunSuite {
 
   test("offsets always within text, annotations deterministic") {
     val text = "a " * 100 + "end. 42"
-    val a1 = Tokenizer.annotate("u", text)
-    val a2 = Tokenizer.annotate("u", text)
+    val a1 = Tokenizer.annotate("u", text, Tokenizer.scan(text))
+    val a2 = Tokenizer.annotate("u", text, Tokenizer.scan(text))
     assert(a1 === a2)
     assert(a1.forall(a => a.begin >= 0 && a.end <= text.length && a.begin <= a.end))
   }

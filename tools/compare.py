@@ -25,6 +25,12 @@ def canon(df):
     return df
 
 fails = 0
+# an oracle with no output means its query threw (Verify writes no directory for a
+# failed query): that is a failure, never a skip
+for name in sorted(oracle):
+    if not os.path.isdir(f"{out_dir}/{name}"):
+        print(f"{name}: NO OUTPUT (the query failed or did not run)")
+        fails += 1
 for qdir in sorted(glob.glob(f"{out_dir}/q*")):
     name = os.path.basename(qdir)
     spark_df = duckdb.connect().execute(f"SELECT * FROM '{qdir}/*.parquet'").df()
