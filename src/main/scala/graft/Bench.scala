@@ -19,6 +19,26 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
+  /** Run-specific parts of a plan string: a lambda's class suffix and identity hash
+    * (`$$Lambda$4888/0x…@350a3df3`), any other identity hash (`@1b2c3d4e`), expression
+    * ids (`#123`, `#123L`) and exchange plan ids (`[plan_id=4687]`). */
+  private val RunSpecific = Seq(
+    """\$\$Lambda[$/\w]*(@[0-9a-f]+)?""".r -> "$$Lambda",
+    """@[0-9a-f]{4,}\b""".r -> "@",
+    """#\d+L?\b""".r -> "#",
+    """plan_id=\d+""".r -> "plan_id=")
+
+  /** md5-16hex of `df`'s canonicalized pre-execution physical plan with its
+    * run-specific parts stripped, so the same query planned twice, in one run or in
+    * two, gets one fingerprint. */
+  def planFingerprint(df: org.apache.spark.sql.DataFrame): String = {
+    val plan = RunSpecific.foldLeft(df.queryExecution.executedPlan.canonicalized.toString) {
+      case (p, (re, to)) => re.replaceAllIn(p, scala.util.matching.Regex.quoteReplacement(to))
+    }
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(plan.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -33,8 +53,7 @@ object Bench {
 
     // ---- phase 1: operator battery (skipped in scaling-only mode) ----
     val scalingOnly = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("scaling")
-    // (name, seconds, plan fingerprint): the fingerprint is md5-16hex of the
-    // CANONICALIZED pre-execution physical plan, so round-over-round plan
+    // (name, seconds, plan fingerprint): see planFingerprint; round-over-round plan
     // regressions (a lost broadcast, a new shuffle) are diffable straight from the
     // bench artifact — not only through PlansSpec.
     // local-iteration filter: SPARK_GRAFT_BENCH_QUERIES=q44_dedup_canon,q45_...
@@ -51,10 +70,9 @@ object Bench {
         // throws fails the bench: a timing of a failed query means nothing.
         val fp = try {
           val df = fn(spark, sfDir)
-          val planStr = df.queryExecution.executedPlan.canonicalized.toString
+          val planFp = planFingerprint(df)
           df.queryExecution.toRdd.count()
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(planStr.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+          planFp
         } catch {
           case e: Exception =>
             throw new RuntimeException(s"battery query $name failed: $e", e)

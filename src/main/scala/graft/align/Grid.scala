@@ -45,8 +45,6 @@ final case class GridCol(begin: Int, end: Int, labels: Array[String], text: Stri
 
 final case class Grid(url: String, sentBegin: Int, sentEnd: Int, cols: IndexedSeq[GridCol],
     lookupSpans: Set[(Int, Int)] = Set.empty) {
-  /** All distinct labels in this grid (for inverted-index candidate pruning). */
-  lazy val labelSet: Set[String] = cols.iterator.flatMap(_.labels).toSet
   def size: Int = cols.size
 }
 
@@ -80,18 +78,42 @@ object Grid {
     value
   }
 
-  /** Precomputed token-feature label prefixes — [[label]]'s constant-argument half,
-    * hoisted out of the per-token hot loop in [[build]]. */
-  private val TokStringPfx = ":token|string|"
-  private val TokRootPfx = ":token|root|"
-  private val TokOrthPfx = ":token|orth|"
-  private val TokCategoryPfx = ":token|category|"
-  private val TokKindPfx = ":token|kind|"
+  /** The token features a column's label tracks come from, most specific first; a
+    * track's label is its prefix + [[labelValue]] of the feature value. */
+  val TokenFeatures: Array[String] = Array("string", "root", "orth", "category", "kind")
+  private val TrackPrefixes: Array[String] = TokenFeatures.map(f => ":token|" + f + "|")
+
+  /** The label of track `k` for feature value `value`, memoized. The page kernel's scan
+    * shares one across a page's sentences, so a repeated token builds its labels once
+    * and the matcher hashes each label string once. Not thread-safe. */
+  private[graft] final class TrackLabels {
+    private val memo = Array.fill(TokenFeatures.length)(new java.util.HashMap[String, String])
+    def apply(k: Int, value: String): String = {
+      var l = memo(k).get(value)
+      if (l == null) { l = TrackPrefixes(k) + labelValue(value); memo(k).put(value, l) }
+      l
+    }
+  }
+
+  /** The labels a covering annotation stacks on every column it covers. */
+  def coverLabels(annotType: String, features: Map[String, String]): Array[String] =
+    annotType match {
+      case "Lookup" =>
+        val mt = features.getOrElse("minorType", "")
+        val major = label("lookup", "majortype", features.getOrElse("majorType", ""))
+        if (mt.nonEmpty) Array(major, label("lookup", "minortype", mt)) else Array(major)
+      case "Number" => Array(":number")
+      case "Date"   => Array(":date")
+      // parser/chunker phrase node: ":syntaxtreenode|cat|np" — the label shape the
+      // reference's syntax gates key on (MSAUtils.java:17-55)
+      case "SyntaxTreeNode" => Array(label("syntaxtreenode", "cat", features.getOrElse("cat", "")))
+      case other    => Array(":" + PageKernel.lowered(other))
+    }
 
   /** A sentence's grid holds its first this-many tokens, so a long sentence is learnt
     * and matched on its head, at bounded cost. The reference skips a longer sentence
     * instead (ProfileMatcher.java:32,121). */
-  private val MaxTokens = 300
+  val MaxTokens = 300
 
   /**
    * Build the grid for one sentence from its annotations. Token annotations define the
@@ -116,64 +138,113 @@ object Grid {
         Some((lo, hi))
       }
     }
-    val otherRanges = others.flatMap(a => colRange(a.begin, a.end).map(r => (a, r._1, r._2)))
-    val targetRanges = targetSpans.flatMap(s => colRange(s._1, s._2))
-    val cols = tokens.zipWithIndex.map { case (t, ci) =>
-      // (label, span, off) entries; exact duplicates collapse, but the same label from
-      // two OVERLAPPING annotations keeps both entries (different span/off).
-      // Flat parallel buffers with a linear dedup scan: this runs per token of every
-      // page — no boxed tuples or hash sets in the hot kernel (stacks are ≤~10 deep)
-      val lblB = new collection.mutable.ArrayBuffer[String](8)
-      val spnB = new collection.mutable.ArrayBuffer[Int](8)
-      val offB = new collection.mutable.ArrayBuffer[Int](8)
-      def add(l: String, lo: Int, hi: Int): Unit = {
-        val span = hi - lo + 1
-        val off = ci - lo
-        var i = 0
-        while (i < lblB.length) {
-          if (spnB(i) == span && offB(i) == off && lblB(i) == l) return
-          i += 1
-        }
-        lblB += l; spnB += span; offB += off
-      }
-      // token feature tracks, most specific first (prefixes precomputed — label()'s
-      // constant half would otherwise re-lowercase "token"/"string"/… per token)
-      t.features.get("string").foreach(v => add(TokStringPfx + labelValue(v), ci, ci))
-      t.features.get("root").foreach(v => add(TokRootPfx + labelValue(v), ci, ci))
-      t.features.get("orth").foreach(v => add(TokOrthPfx + labelValue(v), ci, ci))
-      t.features.get("category").foreach(v => add(TokCategoryPfx + labelValue(v), ci, ci))
-      t.features.get("kind").foreach(v => add(TokKindPfx + labelValue(v), ci, ci))
-      otherRanges.foreach { case (a, lo, hi) =>
-        if (lo <= ci && ci <= hi) {
-          a.annotType match {
-            case "Lookup" =>
-              add(label("lookup", "majortype", a.features.getOrElse("majorType", "")), lo, hi)
-              val mt = a.features.getOrElse("minorType", "")
-              if (mt.nonEmpty) add(label("lookup", "minortype", mt), lo, hi)
-            case "Number" => add(":number", lo, hi)
-            case "Date"   => add(":date", lo, hi)
-            case "SyntaxTreeNode" =>
-              // parser/chunker phrase node: ":syntaxtreenode|cat|np" — the label shape
-              // the reference's syntax gates key on (MSAUtils.java:17-55)
-              add(label("syntaxtreenode", "cat", a.features.getOrElse("cat", "")), lo, hi)
-            case other    => add(":" + PageKernel.lowered(other), lo, hi)
-          }
-        }
-      }
-      targetRanges.foreach { case (lo, hi) =>
-        if (lo <= ci && ci <= hi) add(Target, lo, hi)
-      }
-      GridCol(t.begin, t.end, lblB.toArray, t.value, spnB.toArray, offB.toArray)
-    }
-    val withSentinels =
-      GridCol(sentBegin, sentBegin, Array(Start)) +:
-      cols :+
-      GridCol(sentEnd, sentEnd, Array(End))
+    val cover = others.flatMap(a => colRange(a.begin, a.end)
+        .map(r => (r, coverLabels(a.annotType, a.features)))) ++
+      targetSpans.flatMap(s => colRange(s._1, s._2).map(r => (r, Array(Target))))
+    val features = tokens.flatMap(t => TokenFeatures.map(t.features.getOrElse(_, null)))
     // exact Lookup annotation extents: the `:subject` slot binds only spans that ARE
     // an entity mention (a run of adjacent distinct entities is not one subject)
     val lookupSpans = others.iterator.filter(_.annotType == "Lookup")
       .map(a => (a.begin, a.end)).toSet
-    Grid(url, sentBegin, sentEnd, withSentinels, lookupSpans)
+    assemble(url, sentBegin, sentEnd, tokens.map(_.begin).toArray, tokens.map(_.end).toArray,
+      tokens.map(_.value).toArray, 0, tokens.size, features.toArray, new TrackLabels,
+      cover.size, cover.map(_._1._1).toArray, cover.map(_._1._2).toArray,
+      cover.map(_._2).toArray, lookupSpans)
+  }
+
+  /**
+   * The one column assembly of a sentence grid, which [[build]] and the page kernel's
+   * token scan both call: `n` columns for tokens `from` until `from + n` of `begins`,
+   * `ends` and `texts`, plus the `:start`/`:end` sentinels.
+   *
+   * A column's entries, in order: its label tracks (`features(c * 5 + k)` is column
+   * `c`'s value of [[TokenFeatures]]`(k)`, null when absent; labelled through
+   * `trackLabels`), then the labels of each
+   * covering span `i < nCover` that covers it (columns `coverLo(i)` to `coverHi(i)`,
+   * labels `coverLabels(i)`), in span order. Each entry carries the span's column count
+   * and the column's offset inside it; an exact (label, span, offset) duplicate
+   * collapses, but the same label from two OVERLAPPING spans keeps both entries.
+   */
+  private[graft] def assemble(url: String, sentBegin: Int, sentEnd: Int,
+      begins: Array[Int], ends: Array[Int], texts: Array[String], from: Int, n: Int,
+      features: Array[String], trackLabels: TrackLabels, nCover: Int, coverLo: Array[Int],
+      coverHi: Array[Int], coverLabels: Array[Array[String]],
+      lookupSpans: Set[(Int, Int)]): Grid = {
+    val tracks = TokenFeatures.length
+    val size = new Array[Int](n)
+    var c = 0
+    while (c < n) {
+      var k = 0
+      while (k < tracks) { if (features(c * tracks + k) != null) size(c) += 1; k += 1 }
+      c += 1
+    }
+    var i = 0
+    while (i < nCover) {
+      c = coverLo(i)
+      while (c <= coverHi(i)) { size(c) += coverLabels(i).length; c += 1 }
+      i += 1
+    }
+    val labels = new Array[Array[String]](n)
+    val spans = new Array[Array[Int]](n)
+    val offs = new Array[Array[Int]](n)
+    c = 0
+    while (c < n) {
+      labels(c) = new Array[String](size(c))
+      spans(c) = new Array[Int](size(c))
+      offs(c) = new Array[Int](size(c))
+      size(c) = 0
+      c += 1
+    }
+    // flat per-column buffers with a linear dedup scan: stacks are ≤~10 deep
+    def add(c: Int, l: String, span: Int, off: Int): Unit = {
+      val ls = labels(c)
+      val ss = spans(c)
+      val os = offs(c)
+      var j = 0
+      while (j < size(c)) {
+        if (ss(j) == span && os(j) == off && ls(j) == l) return
+        j += 1
+      }
+      ls(size(c)) = l; ss(size(c)) = span; os(size(c)) = off
+      size(c) += 1
+    }
+    c = 0
+    while (c < n) {
+      var k = 0
+      while (k < tracks) {
+        val v = features(c * tracks + k)
+        if (v != null) add(c, trackLabels(k, v), 1, 0)
+        k += 1
+      }
+      c += 1
+    }
+    i = 0
+    while (i < nCover) {
+      val lo = coverLo(i)
+      val span = coverHi(i) - lo + 1
+      val ls = coverLabels(i)
+      c = lo
+      while (c <= coverHi(i)) {
+        var k = 0
+        while (k < ls.length) { add(c, ls(k), span, c - lo); k += 1 }
+        c += 1
+      }
+      i += 1
+    }
+    val cols = new Array[GridCol](n + 2)
+    cols(0) = GridCol(sentBegin, sentBegin, Array(Start))
+    c = 0
+    while (c < n) {
+      val m = size(c)
+      cols(c + 1) = if (m == labels(c).length)
+          GridCol(begins(from + c), ends(from + c), labels(c), texts(from + c), spans(c), offs(c))
+        else GridCol(begins(from + c), ends(from + c), java.util.Arrays.copyOf(labels(c), m),
+          texts(from + c), java.util.Arrays.copyOf(spans(c), m), java.util.Arrays.copyOf(offs(c), m))
+      c += 1
+    }
+    cols(n + 1) = GridCol(sentEnd, sentEnd, Array(End))
+    Grid(url, sentBegin, sentEnd, collection.immutable.ArraySeq.unsafeWrapArray(cols),
+      lookupSpans)
   }
 
   /** Trim a grid to ±trim columns around the (first) target column — the reference's

@@ -68,7 +68,7 @@ object Extract {
     val tgtB = spark.sparkContext.broadcast(PageKernel.compileTargets(targetPatterns))
     val pairsB = spark.sparkContext.broadcast(allowedPairs)
     sentences.flatMap { s =>
-      PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairMentions(s, grid,
+      PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairMentions(s.url, grid,
         idxB.value, tgtB.value, pairsB.value, prm))
     }
   }
@@ -86,7 +86,7 @@ object Extract {
     val tgtB = spark.sparkContext.broadcast(PageKernel.compileTargets(targetPatterns))
     val pairsB = spark.sparkContext.broadcast(allowedPairs)
     sentences.flatMap { s =>
-      PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairRelations(s, grid,
+      PageKernel.matchableGrid(s).toVector.flatMap(grid => PageKernel.pairRelations(s.url, grid,
         idxB.value, tgtB.value, pairsB.value, prm))
     }
   }
@@ -173,8 +173,8 @@ object Extract {
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
     val subjects = sentences.flatMap { s =>
-      s.annots.filter(PageKernel.Subjects.isSubject)
-        .map(a => (s.url, s.sentBegin, s.sentEnd, a.begin, a.end, a.value))
+      PageKernel.Subjects.entities(s.annots).toSeq
+        .map { case (b, e, v) => (s.url, s.sentBegin, s.sentEnd, b, e, v) }
     }
     ms.groupByKey(_.url).cogroup(subjects.groupByKey(_._1)) { (url, mIt, sIt) =>
       // nearest preceding wins, else first following (penalized), else host —

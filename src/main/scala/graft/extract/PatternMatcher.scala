@@ -53,12 +53,20 @@ object PatternMatcher {
     * of every sentence; the reference's index shares this property (a profile with no
     * indexable tokens cannot be posted). Property-tested in MatcherParitySpec. */
   final class Index(val compiled: IndexedSeq[Compiled]) extends Serializable {
-    private val postings: Map[String, Array[Int]] = {
-      val m = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
+    /** Each literal label's id, and the ordinals of the patterns it occurs in, by id. */
+    private val labelIds = new java.util.HashMap[String, Integer]
+    private val postings: Array[Array[Int]] = {
+      val m = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[Int]]
       compiled.zipWithIndex.foreach { case (c, i) =>
-        c.literals.distinct.foreach(l => m.getOrElseUpdate(l, mutable.ArrayBuffer.empty) += i)
+        c.literals.distinct.foreach { l =>
+          if (!labelIds.containsKey(l)) {
+            labelIds.put(l, m.size)
+            m += mutable.ArrayBuffer.empty
+          }
+          m(labelIds.get(l)) += i
+        }
       }
-      m.iterator.map { case (k, v) => (k, v.toArray) }.toMap
+      m.map(_.toArray).toArray
     }
     private val required: Array[Int] = compiled.map(_.literals.distinct.size).toArray
 
@@ -66,10 +74,22 @@ object PatternMatcher {
       * grids can skip the chunking pass entirely (its labels could never match). */
     lazy val needsSyntax: Boolean = PatternMatcher.needsSyntax(compiled)
 
-    def candidates(labels: Set[String]): Vector[Compiled] = {
+    /** The patterns every literal label of which occurs in `grid`, in index order. */
+    def candidates(grid: Grid): Vector[Compiled] = {
       val counts = new Array[Int](compiled.size)
-      labels.foreach { l =>
-        postings.get(l).foreach(_.foreach(i => counts(i) += 1))
+      val seen = new Array[Boolean](postings.length)
+      grid.cols.foreach { c =>
+        var k = 0
+        while (k < c.labels.length) {
+          val id = labelIds.get(c.labels(k))
+          if (id != null && !seen(id)) {
+            seen(id) = true
+            val ps = postings(id)
+            var j = 0
+            while (j < ps.length) { counts(ps(j)) += 1; j += 1 }
+          }
+          k += 1
+        }
       }
       val out = Vector.newBuilder[Compiled]
       var i = 0
@@ -239,12 +259,13 @@ object PatternMatcher {
   def matchPairs(grid: Grid, ctxIndex: Index, targetsByType: Map[String, IndexedSeq[Compiled]],
       prm: Params = Params(), allowedPairs: Option[Set[(Long, Long)]] = None,
       suppressOverlaps: Boolean = true): Vector[PairHit] = {
-    val cands = ctxIndex.candidates(grid.labelSet)
+    val cands = ctxIndex.candidates(grid)
     val cols = grid.cols
     val accepted = mutable.ArrayBuffer.empty[PairHit]
     val seen = mutable.HashSet.empty[(Long, Long, Int, Int)]
     cands.foreach { c =>
       val targets = targetsByType.getOrElse(c.pattern.annotType, IndexedSeq.empty)
+        .filter(tc => allowedPairs.forall(_.contains((c.pattern.profileId, tc.pattern.profileId))))
       if (targets.nonEmpty) {
         matchOneFull(grid, c, prm, minimalTarget = false)
           .sortBy(s => (s.tb, s.te - s.tb))
@@ -255,8 +276,7 @@ object PatternMatcher {
             val until = cols.lastIndexWhere(c => c.end == s.te && c.end > c.begin) + 1
             if (from >= 0 && until > from) targets.foreach { tc =>
               val pairKey = (c.pattern.profileId, tc.pattern.profileId)
-              if (allowedPairs.forall(_.contains(pairKey)) &&
-                  targetMatches(grid, from, until, tc, prm)) {
+              if (targetMatches(grid, from, until, tc, prm)) {
                 val overlaps = suppressOverlaps &&
                   accepted.exists(h => collides(h.targetBegin, h.targetEnd, s.tb, s.te))
                 val key = (pairKey._1, pairKey._2, s.tb, s.te)
@@ -281,7 +301,7 @@ object PatternMatcher {
    * hit's span is dropped (ref ProfileMatcher.java:705-730 drops only a contained one).
    */
   def matchAll(grid: Grid, index: Index, prm: Params = Params()): Vector[Hit] = {
-    val cands = index.candidates(grid.labelSet)
+    val cands = index.candidates(grid)
     val accepted = mutable.ArrayBuffer.empty[Hit]
     cands.foreach { c =>
       matchOneFull(grid, c, prm)

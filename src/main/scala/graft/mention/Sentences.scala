@@ -19,32 +19,8 @@ object Sentences {
   def group(url: String, all: Vector[Annotation]): Vector[SentenceAnnots] = {
     val sents = all.filter(_.annotType == "Sentence").sortBy(_.begin)
     val rest = all.filter(_.annotType != "Sentence").sortBy(a => (a.begin, a.end))
-    if (sents.isEmpty) return Vector.empty
-    // merge sentences whose span is overrun by a multi-token annotation
-    // (ref GenSentences.java:351-366). `rest` is sorted by begin, so the annotations
-    // beginning in [cb, ce) are one run of it: binary-search its start when a new
-    // sentence opens, then extend it as ce grows (cb is fixed within a merge)
-    val merged = Vector.newBuilder[(Int, Int)]
-    var cb = sents.head.begin
-    var ce = sents.head.end
-    var ri = firstAtOrAfter(rest, cb)
-    var runMaxEnd = ce
-    var i = 1
-    while (i < sents.length) {
-      while (ri < rest.length && rest(ri).begin < ce) {
-        runMaxEnd = math.max(runMaxEnd, rest(ri).end); ri += 1
-      }
-      val maxAnnotEnd = math.max(runMaxEnd, ce)
-      if (maxAnnotEnd > ce && sents(i).begin < maxAnnotEnd) {
-        ce = math.max(maxAnnotEnd, sents(i).end)
-      } else {
-        merged += ((cb, ce)); cb = sents(i).begin; ce = sents(i).end
-        ri = firstAtOrAfter(rest, cb); runMaxEnd = ce
-      }
-      i += 1
-    }
-    merged += ((cb, ce))
-    val spans = merged.result()
+    val spans = merge(sents.map(a => (a.begin, a.end)), rest.length, rest(_).begin,
+      rest(_).end)
     // interval sweep: both lists sorted by begin
     val out = Vector.newBuilder[SentenceAnnots]
     var ai = 0
@@ -60,14 +36,43 @@ object Sentences {
     out.result()
   }
 
-  /** Index of the first annotation of `sorted` (ascending begin) with begin ≥ `b`. */
-  private def firstAtOrAfter(sorted: Vector[Annotation], b: Int): Int = {
-    var lo = 0
-    var hi = sorted.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (sorted(mid).begin < b) lo = mid + 1 else hi = mid
+  /**
+   * The sentence spans of [[group]]: `sents` (ascending) with each sentence whose span
+   * is overrun by an annotation beginning inside it merged with the following
+   * sentences the annotation reaches (ref GenSentences.java:351-366). The `n`
+   * annotations are given by `begin(k)` and `end(k)`, ascending in begin.
+   */
+  def merge(sents: Seq[(Int, Int)], n: Int, begin: Int => Int,
+      end: Int => Int): Vector[(Int, Int)] = {
+    if (sents.isEmpty) return Vector.empty
+    // index of the first annotation with begin ≥ b
+    def firstAtOrAfter(b: Int): Int = {
+      var lo = 0
+      var hi = n
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (begin(mid) < b) lo = mid + 1 else hi = mid
+      }
+      lo
     }
-    lo
+    // the annotations beginning in [cb, ce) are one run: binary-search its start when a
+    // new sentence opens, then extend it as ce grows (cb is fixed within a merge)
+    val merged = Vector.newBuilder[(Int, Int)]
+    var (cb, ce) = sents.head
+    var ri = firstAtOrAfter(cb)
+    var runMaxEnd = ce
+    sents.iterator.drop(1).foreach { case (b, e) =>
+      while (ri < n && begin(ri) < ce) {
+        runMaxEnd = math.max(runMaxEnd, end(ri)); ri += 1
+      }
+      val maxAnnotEnd = math.max(runMaxEnd, ce)
+      if (maxAnnotEnd > ce && b < maxAnnotEnd) ce = math.max(maxAnnotEnd, e)
+      else {
+        merged += ((cb, ce)); cb = b; ce = e
+        ri = firstAtOrAfter(cb); runMaxEnd = ce
+      }
+    }
+    merged += ((cb, ce))
+    merged.result()
   }
 }

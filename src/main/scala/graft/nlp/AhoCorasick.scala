@@ -21,11 +21,15 @@ final class AhoCorasick private (
 ) extends Serializable {
 
   /** All matches as (startTokenIdx, endTokenIdxExclusive, dictId). */
-  def findAll(tokens: IndexedSeq[String]): Vector[(Int, Int, Int)] = {
+  def findAll(tokens: IndexedSeq[String]): Vector[(Int, Int, Int)] =
+    findAll(tokens, 0, tokens.length)
+
+  /** [[findAll]] over `tokens(from until until)`, with indices into `tokens`. */
+  def findAll(tokens: IndexedSeq[String], from: Int, until: Int): Vector[(Int, Int, Int)] = {
     val out = Vector.newBuilder[(Int, Int, Int)]
     var state = 0
-    var i = 0
-    while (i < tokens.length) {
+    var i = from
+    while (i < until) {
       val sym = tokens(i)
       var s = state
       while (s != 0 && !goto_(s).contains(sym)) s = fail(s)

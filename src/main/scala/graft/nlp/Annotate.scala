@@ -52,12 +52,17 @@ object Annotate {
     extractText(pages).mapPartitions { it =>
       val g = gazB.value
       val extra = extraB.value
-      it.flatMap { case (url, text) =>
-        val annots = annotateOne(url, text, g, withChunks) ++ extra.getOrElse(url, Nil)
-        graft.mention.Sentences.group(url, annots)
-      }
+      it.flatMap { case (url, text) => sentences(url, text, g, extra, withChunks) }
     }
   }
+
+  /** One page's sentences: [[annotateOne]] with `extraByUrl`'s annotations of the page
+    * merged in, grouped by [[graft.mention.Sentences.group]]. */
+  def sentences(url: String, text: String, gaz: Gazetteer,
+      extraByUrl: Map[String, Seq[Annotation]],
+      withChunks: Boolean): Vector[graft.model.SentenceAnnots] =
+    graft.mention.Sentences.group(url,
+      annotateOne(url, text, gaz, withChunks) ++ extraByUrl.getOrElse(url, Nil))
 
   /** Deterministic per-page annotation: tokens/sentences/numbers, gazetteer Lookups,
     * then shallow syntax chunks (NP/VP/PP SyntaxTreeNode annotations — the feeder for

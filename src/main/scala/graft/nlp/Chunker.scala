@@ -43,11 +43,16 @@ object Chunker {
   /** One chunk over token index range [from, until) with its category. */
   final case class Chunk(from: Int, until: Int, cat: String)
 
-  /** Chunk a token stream (lowercased token strings, word/number kinds only have
-    * content semantics; punctuation breaks every chunk). */
-  def chunk(toks: IndexedSeq[Tokenizer.Tok], text: String): Vector[Chunk] = {
-    val words: IndexedSeq[String] =
-      toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
+  /** The chunk categories [[chunk]] emits. */
+  val Cats: Seq[String] = Seq("np", "vp", "pp")
+
+  /** Chunk a token stream (word/number kinds only have content semantics; punctuation
+    * breaks every chunk). Chunks come in ascending `from`. */
+  def chunk(toks: IndexedSeq[Tokenizer.Tok], text: String): Vector[Chunk] =
+    chunk(toks, toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end))))
+
+  /** [[chunk]] over the page's lowered token strings `words`, parallel to `toks`. */
+  def chunk(toks: IndexedSeq[Tokenizer.Tok], words: IndexedSeq[String]): Vector[Chunk] = {
     val out = Vector.newBuilder[Chunk]
     val n = toks.size
     var i = 0

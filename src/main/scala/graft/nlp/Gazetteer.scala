@@ -1,5 +1,6 @@
 package graft.nlp
 
+import graft.align.Grid
 import graft.extract.PageKernel
 import graft.model.Annotation
 
@@ -24,7 +25,7 @@ final class Gazetteer private (
       firstId: Int, provenance: String = "gazetteer"): Vector[Annotation] = {
     val stream = toks.map(t => PageKernel.lowered(text.substring(t.begin, t.end)))
     var id = firstId
-    automaton.findAll(stream).map { case (s, e, dictId) =>
+    matches(stream).map { case (s, e, dictId) =>
       val entry = entries(dictId)
       val begin = toks(s).begin
       val end = toks(e - 1).end
@@ -35,6 +36,18 @@ final class Gazetteer private (
       a
     }
   }
+
+  /** Every entry occurrence in one page's lowered token stream, as (first token,
+    * last token exclusive, dictId), in the automaton's order. */
+  def matches(lowered: IndexedSeq[String]): Vector[(Int, Int, Int)] =
+    automaton.findAll(lowered)
+
+  def entry(dictId: Int): GazEntry = entries(dictId)
+
+  /** The grid labels of each entry's Lookups ([[Grid.coverLabels]]), by dictId. */
+  @transient private[graft] lazy val labels: IndexedSeq[Array[String]] =
+    entries.map(e => Grid.coverLabels("Lookup",
+      Map("majorType" -> e.majorType, "minorType" -> e.minorType)))
 }
 
 object Gazetteer {

@@ -44,7 +44,15 @@ object Tokenizer {
     toks.result()
   }
 
-  private def orth(s: String): String = {
+  /** The `orth` feature values, indexed by [[orthCode]]. */
+  private[graft] val OrthNames: Array[String] =
+    Array("other", "upperInitial", "allCaps", "lowercase", "mixedCaps")
+  private[graft] val AllCaps = 2
+
+  private def orth(s: String): String = OrthNames(orthCode(s))
+
+  /** The `orth` feature of a token, as an index into [[OrthNames]]. */
+  private[graft] def orthCode(s: String): Int = {
     // single pass, no intermediate strings (this runs once per word token of the
     // whole corpus): classify the letter subsequence by first-letter case + counts
     var nLetters = 0
@@ -62,11 +70,11 @@ object Tokenizer {
       }
       i += 1
     }
-    if (nLetters == 0) "other"
-    else if (nUpper == nLetters) if (nLetters == 1) "upperInitial" else "allCaps"
-    else if (nLower == nLetters) "lowercase"
-    else if (firstUpper && nUpper == 1 && nLower == nLetters - 1) "upperInitial"
-    else "mixedCaps"
+    if (nLetters == 0) 0
+    else if (nUpper == nLetters) if (nLetters == 1) 1 else AllCaps
+    else if (nLower == nLetters) 3
+    else if (firstUpper && nUpper == 1 && nLower == nLetters - 1) 1
+    else 4
   }
 
   /** `PageKernel.lowered(s)` with an allocation-free fast path for pure lowercase-ASCII

@@ -18,17 +18,19 @@ import graft.sink.Materialize
  * reference's IEDriver loop (/root/reference/src/msa/IEDriver.java:527-1363), with each
  * stage a declarative Dataset transformation instead of a JDBC status machine:
  *
- *   gold slice ─ ONE collect: the training pages annotated + sentence-grouped in one
- *                fused narrow stage, pulled to the driver (bounded by
- *                MaxTrainingPages, loud when over)
+ *   gold slice ─ ONE collect: the training pages' text, pulled to the driver
+ *                (bounded by MaxTrainingPages, loud when over) and there annotated
+ *                and sentence-grouped with the gold spans merged in
  *              ─ learn, on the driver ([[graft.learn.LearnKernel]]): blocked all-pairs
  *                MSA → patterns; match + per-pair precision gates → final patterns;
  *                value priors → veto table + dictionary entries; gold-span triples
- *   all pages  ─ ONE narrow mapPartitions per page: html→text → tokens + gazetteer
- *                Lookups → sentence grouping → [[graft.extract.PageKernel]] (pair
- *                matching, prior veto, dictionary pass, same-span dedup, W4 merge,
- *                sentence-local subject resolution) → raw triples; the model is
- *                broadcast
+ *   all pages  ─ ONE narrow mapPartitions per page: html→text → one token scan, the
+ *                gazetteer automaton (and the chunker, when a pattern needs syntax)
+ *                over its lowered stream → sentence spans and their grids built
+ *                from token indices, no annotation row → [[graft.extract.PageKernel]]
+ *                (pair matching, prior veto, dictionary pass, same-span dedup, W4
+ *                merge, sentence-local subject resolution) → raw triples; the model
+ *                is broadcast
  *   subjects   ─ ONE job: the distinct subject forms, pulled to the driver (bounded by
  *                MaxLinkForms, loud when over)
  *              ─ link + CC, on the driver: [[graft.link.EntityLink.jaccardLinks]] edges,
@@ -139,18 +141,20 @@ object KGPipeline {
     }
   }
 
-  /** The training slice, collected to the driver: the gold annotations, and the
-    * pages having them annotated and sentence-grouped with the gold spans merged in per
-    * page ([[Annotate.annotateSentences]], one narrow pass). Each is collected at most
-    * once and only when a stage computes: a fully resumed run reads nothing. */
+  /** The training slice, collected to the driver: the gold annotations, and the text
+    * of the pages having them ([[Annotate.extractText]], one narrow pass), annotated
+    * and sentence-grouped on the driver with the gold spans merged in per page
+    * ([[Annotate.sentences]]). Each is collected at most once and only when a stage
+    * computes: a fully resumed run reads nothing. */
   private final class TrainingSlice(pages: Dataset[Page], goldAnnots: Dataset[Annotation],
       gaz: Gazetteer)(implicit spark: SparkSession) {
     lazy val gold: Seq[Annotation] = goldAnnots.collect().toSeq
     lazy val sents: Seq[SentenceAnnots] = {
       val goldByUrl = gold.groupBy(_.url)
       checkSliceSize(goldByUrl.size)
-      Annotate.annotateSentences(pages.filter(col("url").isInCollection(goldByUrl.keys)),
-        gaz, goldByUrl).collect().toSeq
+      Annotate.extractText(pages.filter(col("url").isInCollection(goldByUrl.keys)))
+        .collect().toSeq
+        .flatMap { case (url, text) => Annotate.sentences(url, text, gaz, goldByUrl, withChunks = true) }
     }
   }
 
